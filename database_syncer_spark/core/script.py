@@ -7,8 +7,8 @@ INSERT re-emitted positionally (sync.py:69, :388-395).
 
 Spark-first differences:
 - statement text is built with built-in string expressions
-  (``format_string``/``concat_ws``) inside codegen — no Python in the row
-  path;
+  (``concat``/``concat_ws``) inside codegen — no Python in the row path —
+  written as SQL expression strings, one driver call per projection;
 - ordering is EXPLICIT (section rank, then PK) because dict insertion
   order does not survive a shuffle (SURVEY.md §2 ordering note);
 - the sink is a DataFrame of one ``statement`` string column, so at scale
@@ -18,43 +18,51 @@ Spark-first differences:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from database_syncer_spark.core.diff import CHANGE_TYPE, DELETE, INSERT, UPDATE
+from database_syncer_spark.core.sqlexpr import quote_ident, sql_string
 
 SECTION_RANK = {DELETE: 2, UPDATE: 3, INSERT: 4}  # DROP=0, CREATE=1 are DDL
 
+_QUOTE, _QUOTE2 = sql_string("'"), sql_string("''")
 
-def sql_literal(col: Column, dtype: T.DataType) -> Column:
-    """Render a typed column as a SQL literal string column (JVM-side)."""
+
+def sql_literal(name: str, dtype: T.DataType) -> str:
+    """SQL expression rendering column ``name`` of type ``dtype`` as a
+    SQL literal string (JVM-side): strings quoted with ``'`` doubled,
+    dates/timestamps quoted with 6-digit microseconds, booleans as
+    TRUE/FALSE, everything else cast to string, NULL as ``NULL``."""
+    c = quote_ident(name)
     if isinstance(dtype, T.StringType):
-        # F.replace is a literal substring swap (no Java regex compile /
+        # replace is a literal substring swap (no Java regex compile /
         # match per value — measurably cheaper than regexp_replace on
         # millions of rendered rows).
-        lit = F.concat(F.lit("'"), F.replace(col, F.lit("'"), F.lit("''")), F.lit("'"))
+        lit = f"concat({_QUOTE}, replace({c}, {_QUOTE}, {_QUOTE2}), {_QUOTE})"
     elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)):
-        lit = F.concat(F.lit("'"), F.date_format(col, "yyyy-MM-dd HH:mm:ss.SSSSSS"), F.lit("'"))
+        lit = (f"concat({_QUOTE}, date_format({c}, "
+               f"'yyyy-MM-dd HH:mm:ss.SSSSSS'), {_QUOTE})")
     elif isinstance(dtype, T.BooleanType):
-        lit = F.when(col, F.lit("TRUE")).otherwise(F.lit("FALSE"))
+        lit = f"CASE WHEN {c} THEN 'TRUE' WHEN NOT {c} THEN 'FALSE' END"
     else:
-        lit = col.cast("string")
-    return F.coalesce(lit, F.lit("NULL"))
-
-
-def _literal_map(df: DataFrame, cols: list[str]) -> dict[str, Column]:
-    dtypes = {f.name: f.dataType for f in df.schema.fields}
-    return {c: sql_literal(F.col(c), dtypes[c]) for c in cols}
+        lit = f"CAST({c} AS STRING)"
+    return f"coalesce({lit}, 'NULL')"
 
 
 def generate_sync_script(changes: DataFrame, table: str, pk_cols: list[str],
-                         ident_quote: str = "`") -> DataFrame:
-    """changes CDC DataFrame -> ordered DataFrame of SQL statement strings.
+                         ident_quote: str = "`",
+                         ordered: bool = True) -> DataFrame:
+    """changes CDC DataFrame -> DataFrame of SQL statement strings.
 
     Returns columns ``(section int, statement string)`` ordered by
     (section, pk) — apply order DELETE -> UPDATE -> INSERT, matching the
-    reference's script layout (sync.py:318-395).
+    reference's script layout (sync.py:318-395). ``ordered=False``
+    returns the same rows unsorted, with the PK as ``__k0, __k1, ...``
+    columns (``sort_statements`` orders them later), for callers that
+    sort a union of several tables' statements once
+    (``compare_sql_files``): Spark keeps a Sort below a Union even when a
+    Sort above it discards that order.
 
     ``ident_quote``: identifier quoting character — backtick (MySQL, the
     reference's dialect) by default; pass ``'"'`` for an ANSI script that
@@ -63,43 +71,44 @@ def generate_sync_script(changes: DataFrame, table: str, pk_cols: list[str],
     q = ident_quote
     value_cols = [c for c in changes.columns if c != CHANGE_TYPE]
     non_pk = [c for c in value_cols if c not in pk_cols]
-    lits = _literal_map(changes, value_cols)
+    dtypes = {f.name: f.dataType for f in changes.schema.fields}
+    lits = {c: sql_literal(c, dtypes[c]) for c in value_cols}
 
-    set_clause = F.concat_ws(
-        ", ", *[F.concat(F.lit(f"{q}{c}{q} = "), lits[c]) for c in non_pk]
-    )
-    where_clause = F.concat_ws(
-        " AND ", *[F.concat(F.lit(f"{q}{c}{q} = "), lits[c]) for c in pk_cols]
-    )
-    values_clause = F.concat_ws(", ", *[lits[c] for c in value_cols])
+    def joined(sep: str, parts: list[str]) -> str:
+        return f"concat_ws({', '.join([sql_string(sep), *parts])})"
 
+    def assignments(cols: list[str], sep: str) -> str:
+        return joined(sep, [f"concat({sql_string(f'{q}{c}{q} = ')}, {lits[c]})"
+                            for c in cols])
+
+    where_clause = assignments(pk_cols, " AND ")
+    ct = quote_ident(CHANGE_TYPE)
     stmt = (
-        F.when(
-            F.col(CHANGE_TYPE) == DELETE,
-            F.concat(F.lit(f"DELETE FROM {q}{table}{q} WHERE "), where_clause, F.lit(";")),
-        )
-        .when(
-            F.col(CHANGE_TYPE) == UPDATE,
-            F.concat(
-                F.lit(f"UPDATE {q}{table}{q} SET "), set_clause,
-                F.lit(" WHERE "), where_clause, F.lit(";"),
-            ),
-        )
-        .otherwise(
-            # Positional INSERT, as the reference re-emits it (sync.py:69).
-            F.concat(F.lit(f"INSERT INTO {q}{table}{q} VALUES ("), values_clause, F.lit(");")),
-        )
+        f"CASE {ct} "
+        f"WHEN '{DELETE}' THEN concat("
+        f"{sql_string(f'DELETE FROM {q}{table}{q} WHERE ')}, {where_clause}, ';') "
+        f"WHEN '{UPDATE}' THEN concat("
+        f"{sql_string(f'UPDATE {q}{table}{q} SET ')}, {assignments(non_pk, ', ')}, "
+        f"' WHERE ', {where_clause}, ';') "
+        # Positional INSERT, as the reference re-emits it (sync.py:69).
+        f"ELSE concat({sql_string(f'INSERT INTO {q}{table}{q} VALUES (')}, "
+        f"{joined(', ', [lits[c] for c in value_cols])}, ');') END"
     )
-    section = (
-        F.when(F.col(CHANGE_TYPE) == DELETE, F.lit(SECTION_RANK[DELETE]))
-        .when(F.col(CHANGE_TYPE) == UPDATE, F.lit(SECTION_RANK[UPDATE]))
-        .otherwise(F.lit(SECTION_RANK[INSERT]))
-    )
-    return (
-        changes.select(section.alias("section"), stmt.alias("statement"), *pk_cols)
-        .orderBy("section", *pk_cols)
-        .select("section", "statement")
-    )
+    section = (f"CASE {ct} WHEN '{DELETE}' THEN {SECTION_RANK[DELETE]} "
+               f"WHEN '{UPDATE}' THEN {SECTION_RANK[UPDATE]} "
+               f"ELSE {SECTION_RANK[INSERT]} END")
+    rows = changes.selectExpr(
+        f"{section} AS section", f"{stmt} AS statement",
+        *[f"{quote_ident(c)} AS __k{i}" for i, c in enumerate(pk_cols)])
+    return sort_statements(rows) if ordered else rows
+
+
+def sort_statements(rows: DataFrame) -> DataFrame:
+    """``generate_sync_script(..., ordered=False)`` rows -> the ordered
+    ``(section, statement)`` frame: sorted by section, then by the
+    ``__k<i>`` PK columns, which are then dropped."""
+    keys = [c for c in rows.columns if c.startswith("__k")]
+    return rows.orderBy("section", *keys).select("section", "statement")
 
 
 def ddl_statements(catalog: dict[str, list[str]],

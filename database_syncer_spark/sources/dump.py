@@ -35,6 +35,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from database_syncer_spark.core.sqlexpr import quote_ident, sql_string
+
 __all__ = [
     "TableSchema", "read_sql_dump", "read_dump_statements",
     "parse_create_table", "tokenize_insert_rows", "write_sql_dump",
@@ -1045,7 +1047,7 @@ def _read_dump_body(spark, stmts, cache_statements, tables, ignore_missing,
 
     create_stmts = [
         r.stmt for r in
-        stmts.where(F.upper(F.col("stmt")).startswith("CREATE TABLE")).collect()
+        stmts.where("startswith(upper(stmt), 'CREATE TABLE')").collect()
     ]
     schemas: dict[str, TableSchema] = {}
     for stmt in create_stmts:
@@ -1065,7 +1067,7 @@ def _read_dump_body(spark, stmts, cache_statements, tables, ignore_missing,
             stmts.unpersist()
         return {}, {}
 
-    inserts = stmts.where(F.upper(F.col("stmt")).startswith("INSERT INTO"))
+    inserts = stmts.where("startswith(upper(stmt), 'INSERT INTO')")
     if tables is not None:
         # Statement-level pushdown: keep only the requested tables'
         # INSERTs (anchored regex tolerant of keyword case, whitespace,
@@ -1094,14 +1096,15 @@ def _read_dump_body(spark, stmts, cache_statements, tables, ignore_missing,
         from pyspark import StorageLevel
 
         parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
+    # The positional cast is one SQL expression string per column: one
+    # driver call for the whole projection (see core/sqlexpr.py).
     out: dict[str, DataFrame] = {}
     for name, ts in schemas.items():
-        rows = parsed.where(F.col("table") == name)
-        cols = [F.col("seq_hi").alias("__seq_hi"), F.col("seq_lo").alias("__seq_lo")]
+        cols = ["seq_hi AS __seq_hi", "seq_lo AS __seq_lo"]
         for idx, (col, spark_t) in enumerate(ts.spark_types()):
-            raw = F.col("vals").getItem(idx)
-            cols.append(raw.alias(col) if not typed else raw.cast(spark_t).alias(col))
-        df = rows.select(*cols)
+            raw = f"vals[{idx}]" if not typed else f"CAST(vals[{idx}] AS {spark_t})"
+            cols.append(f"{raw} AS {quote_ident(col)}")
+        df = parsed.where(f"`table` = {sql_string(name)}").selectExpr(*cols)
         if dedup_pk and ts.pk_cols:
             df = dedup_last_wins(df, ts.pk_cols, ["__seq_hi", "__seq_lo"])
         if not keep_seq:
@@ -1168,8 +1171,8 @@ def write_sql_dump(df: DataFrame, table: str, pk_cols: list[str], path: str,
     from database_syncer_spark.core.script import sql_literal
 
     dtypes = {f.name: f.dataType for f in df.schema.fields}
-    lits = [sql_literal(F.col(c), dtypes[c]) for c in df.columns]
-    rendered = df.select(F.concat_ws(", ", *lits).alias("r"))
+    lits = [sql_literal(c, dtypes[c]) for c in df.columns]
+    rendered = df.selectExpr(f"concat_ws(', ', {', '.join(lits)}) AS r")
     col_list = (
         " (" + ", ".join(f"`{c}`" for c in df.columns) + ")"
         if complete_insert else ""
@@ -1246,38 +1249,57 @@ def compare_sql_files(spark: SparkSession, production_file: str,
     per-table changes DataFrames, catalog diff, and stats rows — the
     typed equivalent of the reference's ``differences`` dict
     (sync.py:236-243) — or None if an input file is missing
-    (sync.py:549-555)."""
+    (sync.py:549-555).
+
+    After the two DDL scans the whole sync is ONE Spark query, the
+    script write: every common table's unsorted statement rows are
+    unioned and sorted once, and the per-table INSERT/UPDATE/DELETE
+    counts (``table_stats``, equal to ``diff_stats`` of each table's
+    changes) are observed on that write rather than counted by a job
+    per table."""
     for f, label in ((production_file, "Production"), (backup_file, "Backup")):
         if not os.path.exists(f):
             if verbose:
                 print(f"{label} file not found: {f}")
             return None
 
-    changes, catalog, scripts, prod_schemas = sync_dumps(
-        spark, production_file, backup_file, tables=tables)
+    from functools import reduce
 
-    from database_syncer_spark.core.script import ddl_statements, write_script
+    from pyspark.sql import Observation
 
+    from database_syncer_spark.core.script import (SECTION_RANK, ddl_statements,
+                                                   write_script)
+
+    changes, catalog, statements, prod_schemas = _sync_plans(
+        spark, production_file, backup_file, tables)
     ddl = ddl_statements(
         catalog, {t: s.create_stmt + ";" for t, s in prod_schemas.items()})
-    combined = None
-    for name in catalog["common"]:
-        part = scripts[name].withColumn("__tbl", F.lit(name))
-        combined = part if combined is None else combined.unionByName(part)
-    stats: dict[str, dict[str, int]] = {}
-    for name, ch in changes.items():
-        from database_syncer_spark.core.diff import diff_stats
-
-        stats[name] = {r[0]: r[1] for r in diff_stats(ch).collect()}
-    if combined is not None:
+    common = catalog["common"]
+    stats: dict[str, dict[str, int]] = {name: {} for name in common}
+    if common:
+        combined = reduce(DataFrame.unionByName, [
+            statements[name].selectExpr(
+                "section", "statement", f"{sql_string(name)} AS __tbl")
+            for name in common])
+        cells = [(name, ct, f"count_if(__tbl = {sql_string(name)} "
+                            f"AND section = {rank})")
+                 for name in common for ct, rank in SECTION_RANK.items()]
+        observed = Observation()
         # statement text as the final sort key: deterministic output even
-        # though per-table PK rank was projected away upstream
+        # though per-table PK rank was projected away upstream. The
+        # counts are observed ABOVE the sort, so AQE's range-sampling
+        # job (which runs the plan below it) cannot count a row twice.
+        ordered = combined.orderBy("section", "__tbl", "statement").observe(
+            observed,
+            F.expr(f"array({', '.join(e for _, _, e in cells)}) AS n"))
         write_script(
-            combined.orderBy("section", "__tbl", "statement"),
-            output_file,
+            ordered, output_file,
             header="-- sync script: apply to backup to reach production state",
             ddl=ddl,
         )
+        for (name, ct, _), n in zip(cells, observed.get["n"]):
+            if n:
+                stats[name][ct] = n
     elif ddl:
         with open(output_file, "w", encoding="utf-8") as fh:
             fh.write("\n".join(["-- sync script"] + ddl) + "\n")
@@ -1350,7 +1372,8 @@ def sync_dumps(spark: SparkSession, prod_path: str, backup_path: str,
                tables: list[str] | None = None):
     """Diff two SQL dumps: the reference's whole pipeline
     (sync.py:522-625) on Spark. Returns (changes_per_table, catalog,
-    script_statements_per_table, prod_schemas).
+    script_statements_per_table, prod_schemas); each table's script is
+    ``generate_sync_script``'s (section, pk)-ordered statement frame.
 
     ``tables`` restricts the sync to the named tables (projection pushed
     into both dump reads — unrequested tables' DML is never tokenized).
@@ -1365,7 +1388,23 @@ def sync_dumps(spark: SparkSession, prod_path: str, backup_path: str,
     one computation (its table's diff), so caching them would only add
     a serialization pass. Sizes ``spark.sql.shuffle.partitions`` for the
     dump volume (session-level, stays in effect for the returned lazy
-    frames; see _size_shuffle_partitions)."""
+    frames; see _size_shuffle_partitions).
+
+    ``compare_sql_files`` shares the same per-table plans but skips the
+    per-table sort: it sorts the union of all tables' statements once."""
+    from database_syncer_spark.core.script import sort_statements
+
+    changes, catalog, statements, prod_schemas = _sync_plans(
+        spark, prod_path, backup_path, tables)
+    scripts = {name: sort_statements(rows)
+               for name, rows in statements.items()}
+    return changes, catalog, scripts, prod_schemas
+
+
+def _sync_plans(spark: SparkSession, prod_path: str, backup_path: str,
+                tables: list[str] | None):
+    """``sync_dumps`` with each table's statement rows UNSORTED
+    (``generate_sync_script(ordered=False)``)."""
     from pyspark import StorageLevel
 
     from database_syncer_spark.core.diff import catalog_diff, snapshot_diff_fused
@@ -1401,19 +1440,19 @@ def sync_dumps(spark: SparkSession, prod_path: str, backup_path: str,
         if nowhere:
             raise ValueError(f"tables in neither dump: {sorted(nowhere)}")
     catalog = catalog_diff(prod, backup)
-    changes, scripts = {}, {}
+    changes, statements = {}, {}
     for name in catalog["common"]:
         pk = prod_schemas[name].pk_cols
         ch = snapshot_diff_fused(prod[name], backup[name], pk).persist(
             StorageLevel.MEMORY_AND_DISK)
         changes[name] = ch
-        scripts[name] = generate_sync_script(ch, name, pk)
-    return changes, catalog, scripts, prod_schemas
+        statements[name] = generate_sync_script(ch, name, pk, ordered=False)
+    return changes, catalog, statements, prod_schemas
 
 
 def _sync_dumps_cross_dialect(spark, prod_path, backup_path, dialects,
                               tables):
-    """sync_dumps when at least one side is a PostgreSQL plain dump
+    """_sync_plans when at least one side is a PostgreSQL plain dump
     (auto-sniffed): each side reads through its dialect's reader into
     the SAME typed-DataFrame contract, then the shared diff/script core
     runs unchanged — dialect lives entirely at the source boundary.
@@ -1462,20 +1501,18 @@ def _sync_dumps_cross_dialect(spark, prod_path, backup_path, dialects,
         if nowhere:
             raise ValueError(f"tables in neither dump: {sorted(nowhere)}")
     catalog = catalog_diff(prod, backup)
-    changes, scripts = {}, {}
+    changes, statements = {}, {}
     for name in catalog["common"]:
         pk = prod_schemas[name].pk_cols
-        cols = [c for c in prod[name].columns
-                if c not in ("__seq_hi", "__seq_lo")]
-        p = prod[name].select(*cols)
+        p = prod[name]
         # cross-dialect type drift (e.g. mysql datetime -> timestamp vs
         # pg -> timestamp_ntz) must not classify every row as changed:
         # cast the backup to the prod side's exact column types.
-        p_types = dict(p.dtypes)
-        b = backup[name].select(
-            *[F.col(c).cast(p_types[c]).alias(c) for c in cols])
+        b = backup[name].selectExpr(
+            *[f"CAST({quote_ident(c)} AS {t}) AS {quote_ident(c)}"
+              for c, t in p.dtypes])
         ch = snapshot_diff(p, b, pk_cols=pk).persist(
             StorageLevel.MEMORY_AND_DISK)
         changes[name] = ch
-        scripts[name] = generate_sync_script(ch, name, pk)
-    return changes, catalog, scripts, prod_schemas
+        statements[name] = generate_sync_script(ch, name, pk, ordered=False)
+    return changes, catalog, statements, prod_schemas

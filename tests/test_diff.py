@@ -516,3 +516,150 @@ def test_materialize_script_size_gate(spark, sf_dir, tmp_path):
             open(big, encoding="utf-8") as fh_b:
         assert fh_s.read() == want
         assert fh_b.read() == want
+
+
+# --- rendering of names and values that need quoting ------------------------
+
+_QUOTING_SCHEMA = ("`id` int, `my col` string, `weird` string, `d` date, "
+                   "`ts` timestamp, `amt` decimal(10,2), `flag` boolean, "
+                   "`x` double, `__seq_hi` long, `__seq_lo` long")
+
+
+def _quoting_pair(spark, names: dict[str, str]):
+    """A prod/backup pair whose values need escaping (``'``, ``\\``,
+    ``''``, NULL, dates, decimals, booleans), with columns renamed by
+    ``names``."""
+    import datetime as dt
+    from decimal import Decimal as D
+
+    def rows(last):
+        return [
+            (1, "o'brien", "back\\slash", dt.date(2024, 1, 2),
+             dt.datetime(2024, 1, 2, 3, 4, 5, 678900), D("12.50"), True,
+             1.5, 0, 1),
+            (2, "two''quotes" if last else "two'quotes", None, None, None,
+             None, None, None, 0, 2),
+            (3, None, "a\\'b", dt.date(1999, 12, 31),
+             dt.datetime(1999, 12, 31, 23, 59, 59), D("-0.01"), not last,
+             -2.0, 0, 3),
+            (5, "new", "tab\there", dt.date(2000, 2, 29),
+             dt.datetime(2000, 2, 29), D("99999999.99"), True, 0.0, 0, 5)
+            if last else
+            (4, "gone 'x'", "\\\\", dt.date(2001, 1, 1),
+             dt.datetime(2001, 1, 1, 1, 1, 1), D("0.00"), False, None, 0, 4),
+        ]
+
+    def frame(last):
+        df = spark.createDataFrame(rows(last), _QUOTING_SCHEMA)
+        return df.toDF(*[names.get(c, c) for c in df.columns])
+
+    return frame(True), frame(False)
+
+
+_QUOTING_DIFF = [
+    ("2", "UPDATE", "two''quotes", "None", "None", "None", "None", "None",
+     "None"),
+    ("3", "UPDATE", "None", "a\\'b", "1999-12-31", "1999-12-31 23:59:59",
+     "-0.01", "False", "-2.0"),
+    ("4", "DELETE", "gone 'x'", "\\\\", "2001-01-01", "2001-01-01 01:01:01",
+     "0.00", "False", "None"),
+    ("5", "INSERT", "new", "tab\there", "2000-02-29", "2000-02-29 00:00:00",
+     "99999999.99", "True", "0.0"),
+]
+
+_QUOTING_SCRIPT = [
+    (2, "DELETE FROM `my `tbl` WHERE `id` = 4;"),
+    (3, "UPDATE `my `tbl` SET `my col` = 'two''''quotes', `weird` = NULL, "
+        "`d` = NULL, `ts` = NULL, `amt` = NULL, `flag` = NULL, `x` = NULL "
+        "WHERE `id` = 2;"),
+    (3, "UPDATE `my `tbl` SET `my col` = NULL, `weird` = 'a\\''b', "
+        "`d` = '1999-12-31 00:00:00.000000', "
+        "`ts` = '1999-12-31 23:59:59.000000', `amt` = -0.01, "
+        "`flag` = FALSE, `x` = -2.0 WHERE `id` = 3;"),
+    (4, "INSERT INTO `my `tbl` VALUES (5, 'new', 'tab\there', "
+        "'2000-02-29 00:00:00.000000', '2000-02-29 00:00:00.000000', "
+        "99999999.99, TRUE, 0.0);"),
+]
+
+_QUOTING_DUMP = (
+    "DROP TABLE IF EXISTS `my `tbl`;\n"
+    "CREATE TABLE `my `tbl` (\n"
+    "  `id` int(11) NOT NULL,\n"
+    "  `my col` varchar(255) DEFAULT NULL,\n"
+    "  `weird` varchar(255) DEFAULT NULL,\n"
+    "  `d` date DEFAULT NULL,\n"
+    "  `ts` datetime(6) DEFAULT NULL,\n"
+    "  `amt` decimal(10,2) DEFAULT NULL,\n"
+    "  `flag` tinyint(1) DEFAULT NULL,\n"
+    "  `x` double DEFAULT NULL,\n"
+    "  PRIMARY KEY (`id`)\n"
+    ") ENGINE=InnoDB DEFAULT CHARSET=utf8mb4;\n"
+    "\n"
+    "INSERT INTO `my `tbl` (`id`, `my col`, `weird`, `d`, `ts`, `amt`, "
+    "`flag`, `x`) VALUES\n"
+    "(1, 'o''brien', 'back\\slash', '2024-01-02 00:00:00.000000', "
+    "'2024-01-02 03:04:05.678900', 12.50, TRUE, 1.5),\n"
+    "(2, 'two''''quotes', NULL, NULL, NULL, NULL, NULL, NULL),\n"
+    "(3, NULL, 'a\\''b', '1999-12-31 00:00:00.000000', "
+    "'1999-12-31 23:59:59.000000', -0.01, FALSE, -2.0);\n"
+    "INSERT INTO `my `tbl` (`id`, `my col`, `weird`, `d`, `ts`, `amt`, "
+    "`flag`, `x`) VALUES\n"
+    "(5, 'new', 'tab\there', '2000-02-29 00:00:00.000000', "
+    "'2000-02-29 00:00:00.000000', 99999999.99, TRUE, 0.0);\n"
+)
+
+
+def _render_all(spark, tmp_path, names: dict[str, str]):
+    from database_syncer_spark.core.diff import snapshot_diff_fused
+    from database_syncer_spark.sources.dump import write_sql_dump
+
+    prod, backup = _quoting_pair(spark, names)
+    pk = [names.get("id", "id")]
+    changes = snapshot_diff_fused(prod, backup, pk)
+    diff = sorted(tuple(str(v) for v in r) for r in changes.collect())
+    script = [tuple(r) for r in
+              generate_sync_script(changes, "my `tbl", pk).collect()]
+    ansi = [r.statement for r in
+            generate_sync_script(changes, "t", pk, ident_quote='"').collect()]
+    path = str(tmp_path / "dump.sql")
+    write_sql_dump(prod.drop("__seq_hi", "__seq_lo").coalesce(1), "my `tbl",
+                   pk, path, rows_per_insert=3)
+    with open(path, encoding="utf-8") as fh:
+        return changes.columns, diff, script, ansi, fh.read()
+
+
+def test_rendering_of_values_that_need_quoting(spark, tmp_path):
+    """The diff, the sync script (both identifier quotes) and the dump
+    writer render quotes, backslashes, NULLs, dates, decimals and
+    booleans exactly as pinned. A NULL boolean renders as NULL (it once
+    rendered as FALSE)."""
+    columns, diff, script, ansi, dump = _render_all(spark, tmp_path, {})
+    assert columns == ["id", "change_type", "my col", "weird", "d", "ts",
+                       "amt", "flag", "x"]
+    assert diff == _QUOTING_DIFF
+    assert script == _QUOTING_SCRIPT
+    assert ansi == [s.replace("`my `tbl`", '"t"').replace("`", '"')
+                    for _, s in _QUOTING_SCRIPT]
+    assert dump == _QUOTING_DUMP
+
+
+def test_rendering_of_names_that_need_quoting(spark, tmp_path):
+    """Column names with a backtick or a space — the PK included — work in
+    the diff, the script and the dump writer, and render like any other
+    name."""
+    names = {"id": "the `id", "weird": "we`ird"}
+    columns, diff, script, ansi, dump = _render_all(spark, tmp_path, names)
+
+    def renamed(s: str, q: str = "`") -> str:
+        for old, new in names.items():
+            s = s.replace(f"{q}{old}{q}", f"{q}{new}{q}")
+        return s
+
+    assert columns == ["the `id", "change_type", "my col", "we`ird", "d",
+                       "ts", "amt", "flag", "x"]
+    assert diff == _QUOTING_DIFF
+    assert script == [(n, renamed(s)) for n, s in _QUOTING_SCRIPT]
+    assert ansi == [
+        renamed(s.replace("`my `tbl`", '"t"').replace("`", '"'), '"')
+        for _, s in _QUOTING_SCRIPT]
+    assert dump == renamed(_QUOTING_DUMP)

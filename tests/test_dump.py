@@ -372,6 +372,110 @@ def test_compare_sql_files_end_to_end(spark, tmp_path, capsys):
     assert "+1 ~1 -1" in capsys.readouterr().out
 
 
+def test_compare_sql_files_null_pk_row_in_both_dumps(spark, tmp_path):
+    """The same NULL-PK row in both dumps is two unrelated rows (the
+    NULL-PK contract, core/diff.py): the script DELETEs the backup's and
+    INSERTs the production one, and the stats count both."""
+    from database_syncer_spark import compare_sql_files
+
+    rows = "INSERT INTO `users` VALUES (NULL, 'ghost', 1.00), (1, 'a', 2.00);\n"
+    prod = _write(tmp_path, "prod.sql", USERS_DDL + rows)
+    backup = _write(tmp_path, "backup.sql", USERS_DDL + rows)
+    out = str(tmp_path / "out.sql")
+    result = compare_sql_files(spark, prod, backup, out, verbose=False)
+    assert result["table_stats"]["users"] == {"INSERT": 1, "DELETE": 1}
+    script = open(out).read().splitlines()
+    assert script[1:] == [
+        "DELETE FROM `users` WHERE `id` = NULL;",
+        "INSERT INTO `users` VALUES (NULL, 'ghost', 1.00);",
+    ]
+
+
+_PG_USERS = textwrap.dedent("""\
+    --
+    -- PostgreSQL database dump
+    --
+
+    CREATE TABLE public.users (
+        id bigint NOT NULL,
+        name text,
+        bal numeric(10,2)
+    );
+
+    COPY public.users (id, name, bal) FROM stdin;
+    1\talice\t10.50
+    2\tbob\t3.00
+    5\teve\t\\N
+    \\.
+
+    ALTER TABLE ONLY public.users
+        ADD CONSTRAINT users_pkey PRIMARY KEY (id);
+""")
+
+
+@pytest.mark.parametrize("case",
+                         ["mysql", "tables", "identical", "empty", "pg"])
+def test_compare_sql_files_stats_equal_diff_stats(spark, tmp_path,
+                                                  monkeypatch, case):
+    """``table_stats`` equals ``diff_stats`` of each returned table's
+    changes — for a table with zero changes, under a ``tables=``
+    projection, for identical dumps, for dumps with no rows and for a
+    pg/mysql pair — and the sync computes it without calling
+    ``diff_stats``."""
+    from database_syncer_spark import compare_sql_files
+    from database_syncer_spark.core import diff
+
+    items = textwrap.dedent("""\
+        CREATE TABLE `items` (
+          `sku` varchar(20) NOT NULL,
+          `qty` int(11) DEFAULT NULL,
+          PRIMARY KEY (`sku`)
+        ) ENGINE=InnoDB;
+        INSERT INTO `items` VALUES ('a', 1), ('b', 2);
+    """)
+    prod_users = ("INSERT INTO `users` VALUES (1,'alice',10.50),"
+                  "(2,'bob',3.00),(4,'dora',1.00);\n")
+    backup_users = ("INSERT INTO `users` VALUES (1,'alice',10.50),"
+                    "(2,'bob',9.99),(3,'carl',5.00);\n")
+    prod = USERS_DDL + prod_users + items
+    backup = USERS_DDL + backup_users + items
+    tables = None
+    if case == "tables":
+        tables = ["users"]
+    elif case == "identical":
+        backup = prod
+    elif case == "empty":
+        prod = backup = USERS_DDL + items.split("INSERT")[0]
+    elif case == "pg":
+        prod = _PG_USERS
+    p = _write(tmp_path, "prod.sql", prod)
+    b = _write(tmp_path, "backup.sql", backup)
+
+    real_diff_stats = diff.diff_stats
+
+    def no_diff_stats(changes):
+        raise AssertionError("the sync must not call diff_stats")
+
+    monkeypatch.setattr(diff, "diff_stats", no_diff_stats)
+    result = compare_sql_files(spark, p, b, str(tmp_path / "out.sql"),
+                               verbose=False, tables=tables)
+    monkeypatch.undo()
+
+    changes = result["changes"]
+    want_tables = {"users"} if case in ("tables", "pg") else {"users", "items"}
+    assert set(changes) == set(result["table_stats"]) == want_tables
+    for name, ch in changes.items():
+        want = {r[0]: r[1] for r in real_diff_stats(ch).collect()}
+        assert result["table_stats"][name] == want, name
+    if case in ("identical", "empty"):
+        assert result["table_stats"] == {"users": {}, "items": {}}
+    else:
+        assert result["table_stats"]["users"] == {
+            "INSERT": 1, "UPDATE": 1, "DELETE": 1}
+    if case == "mysql":
+        assert result["table_stats"]["items"] == {}
+
+
 def test_compare_sql_files_missing_input(spark, tmp_path):
     from database_syncer_spark import compare_sql_files
 

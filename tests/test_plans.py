@@ -663,3 +663,35 @@ def test_rolling_ingest_probes_stored_index_not_corpus(spark, sf_dir):
     assert "corpus_bands=bands0" in src, "day-1 probe lost the stored index"
     assert "corpus_bands=bands1" in src, "day-2 probe lost the grown index"
     assert "append_band_index" in src, "day-1 admissions no longer appended"
+
+
+def test_compare_sql_files_sorts_once(spark, tmp_path, monkeypatch):
+    """compare_sql_files' script write sorts the union of all tables'
+    statements exactly once: one range-partitioning exchange, none left
+    per table under the Union."""
+    from database_syncer_spark.core import script
+    from database_syncer_spark.sources.dump import compare_sql_files
+
+    ddl = ("CREATE TABLE `{t}` (`id` int(11) NOT NULL, `v` varchar(9), "
+           "PRIMARY KEY (`id`)) ENGINE=InnoDB;\n")
+    prod, backup = tmp_path / "prod.sql", tmp_path / "backup.sql"
+    prod.write_text("".join(
+        ddl.format(t=t) + f"INSERT INTO `{t}` VALUES (1,'a'),(2,'b');\n"
+        for t in ("t1", "t2", "t3")))
+    backup.write_text("".join(
+        ddl.format(t=t) + f"INSERT INTO `{t}` VALUES (1,'a'),(3,'c');\n"
+        for t in ("t1", "t2", "t3")))
+
+    plans = []
+    write_script = script.write_script
+
+    def capture(statements, *args, **kwargs):
+        plans.append(_plan(statements))
+        return write_script(statements, *args, **kwargs)
+
+    monkeypatch.setattr(script, "write_script", capture)
+    compare_sql_files(spark, str(prod), str(backup),
+                      str(tmp_path / "out.sql"), verbose=False)
+    [plan] = plans
+    assert "Union" in plan
+    assert len(re.findall(r"Exchange rangepartitioning", plan)) == 1, plan

@@ -12,10 +12,14 @@ Five strategies, each a distributed query shape that survives 100 TB:
   candidates, then exact hamming verify via xor+bit_count.
 - n-gram Jaccard: inverted-index join on shingles (|A∩B| by counting
   shared shingles) — exact, no LSH approximation, heavier shuffle.
-- embedding cosine: near-dup by vector similarity within blocking keys.
+- embedding cosine: hyperplane-LSH band rows shuffled once by (band,
+  bucket), then an exact cosine over every same-bucket pair inside its
+  partition.
 
-Everything is built-in expressions — xxhash64 / arrays / explode / joins —
-no Python in any row path.
+The text strategies are built-in expressions — xxhash64 / arrays /
+explode / joins. The embedding path's bucketing and verify are
+Arrow-batched numpy (``mapInArrow``); no strategy runs Python row at a
+time.
 """
 
 from __future__ import annotations
@@ -748,6 +752,9 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     per-round result is persisted so round N+1 doesn't recompute rounds
     1..N. At extreme scale the same loop with large-star/small-star
     rewrites converges in O(log n) — the shape here is the standard one.
+
+    An edge with a NULL endpoint links nothing and is dropped: NULL is
+    not a node id, so it never appears in the output.
     """
     from pyspark import StorageLevel
 
@@ -781,7 +788,8 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     # the new shape finishes in 27 s (9 iterations, 1 M edges,
     # depth 8).
     sym = (
-        edges.select(F.explode(F.array(
+        edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
+        .select(F.explode(F.array(
             F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
             F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
             F.struct(F.col(src).alias("a"), F.col(src).alias("b")),
@@ -796,8 +804,11 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # decimal(38,0): the sum of N doc_id-sized longs must not overflow
-    # under ANSI mode (2^63-scale ids x 10^10 rows ~ 10^29 << 10^38)
-    prev_sum = None
+    # under ANSI mode (2^63-scale ids x 10^10 rows ~ 10^29 << 10^38).
+    # "No previous sum" is its own sentinel: sum() over an empty label
+    # map is NULL (None), which must not read as "not summed yet".
+    no_sum = object()
+    prev_sum = no_sum
     cached = comp
     for it in range(max_iter):
         nxt = (
@@ -873,17 +884,35 @@ def _lsh_block_planes(corpus_n: int) -> int:
     return planes
 
 
+def _list_matrix(col, width: int):
+    """An Arrow ``list<...>`` column whose rows all hold ``width``
+    non-NULL values, as an n×width numpy matrix viewing the child
+    buffer in place (no per-row numpy objects). Anything else raises:
+    a ragged or NULL row would silently shift every later row."""
+    import pyarrow.compute as pc
+
+    flat = col.flatten()
+    if (col.null_count or flat.null_count
+            or pc.any(pc.not_equal(pc.list_value_length(col),
+                                   width)).as_py()):
+        raise ValueError(
+            f"expected non-NULL rows of exactly {width} non-NULL values")
+    return flat.to_numpy().reshape(len(col), width)
+
+
 def _lsh_bucket_vectors(embeddings: DataFrame, n_planes: int, n_tables: int,
                         dim: int) -> DataFrame:
-    """(vec_id, buckets array<long>[n_tables]) — every band's bucket id
-    in ONE row per vector; bucket t is that band's n_planes sign bits
-    against similarity.py's deterministic md5 hyperplanes. numpy per
-    batch: for each plane, (X * p).sum(axis=1) — the reduced axis has
-    fixed length dim, so numpy's pairwise summation gives every row the
-    SAME ieee result whatever the batch size (partition-count-
-    independent buckets)."""
+    """(vec_id, buckets array<long>[n_tables], embedding) — every band's
+    bucket id in ONE row per vector, with the embedding carried through
+    for the verify kernel; bucket t is that band's n_planes sign bits
+    against similarity.py's deterministic md5 hyperplanes. One
+    ``mapInArrow`` pass: the list<float> column is viewed as an n×dim
+    matrix (:func:`_list_matrix`), then for each plane
+    (X * p).sum(axis=1) — the reduced axis has fixed length dim, so
+    numpy's pairwise summation gives every row the SAME ieee result
+    whatever the batch size (partition-count-independent buckets)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from database_syncer_spark.pipeline import similarity as S
 
@@ -893,36 +922,40 @@ def _lsh_bucket_vectors(embeddings: DataFrame, n_planes: int, n_tables: int,
     weights = (1 << np.arange(n_planes, dtype=np.int64))
 
     def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            n = b.num_rows
+            if not n:
                 continue
-            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            bits = np.empty((len(pdf), len(flat)), dtype=np.int64)
+            X = _list_matrix(b.column("embedding"), dim).astype(np.float64)
+            bits = np.empty((n, len(flat)), dtype=np.int64)
             for j in range(len(flat)):
                 bits[:, j] = (X * flat[j]).sum(axis=1) > 0
-            buckets = bits.reshape(len(pdf), n_tables, n_planes) @ weights
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy(),
-                "buckets": list(buckets),
-            })
+            buckets = bits.reshape(n, n_tables, n_planes) @ weights
+            yield pa.RecordBatch.from_arrays(
+                [b.column("vec_id"),
+                 pa.ListArray.from_arrays(
+                     pa.array(np.arange(0, n * n_tables + 1, n_tables,
+                                        dtype=np.int32)),
+                     pa.array(buckets.ravel())),
+                 b.column("embedding")],
+                ["vec_id", "buckets", "embedding"])
 
-    return embeddings.select("vec_id", "embedding").mapInPandas(
-        gen, "vec_id long, buckets array<long>")
+    return embeddings.select("vec_id", "embedding").mapInArrow(
+        gen, "vec_id long, buckets array<long>, embedding array<float>")
 
 
 def _lsh_band_rows(bucketed: DataFrame) -> DataFrame:
-    """Explode a bucket-vector frame into per-band join rows
-    (vec_id, buckets, tbl, bucket). The Generate carries only the
+    """Explode a bucket-vector frame into one row per vector and band:
+    its columns plus (tbl, bucket). The Generate carries only the
     n_tables-long array — no unrolled kernels, no Janino risk."""
     return bucketed.select(
-        "vec_id", "buckets",
-        F.posexplode("buckets").alias("tbl", "bucket"))
+        "*", F.posexplode("buckets").alias("tbl", "bucket"))
 
 
 def _first_collision(a: str, b: str, n_tables: int) -> Column:
     """True iff this band is the FIRST where sides `a` and `b` share a
     bucket: for every earlier band s < tbl, a.buckets[s] != b.buckets[s].
-    Replaces pair DISTINCT after the per-band self-join — each colliding
+    Replaces pair DISTINCT after the per-band join — each colliding
     pair survives in exactly one band, so no candidate-volume-sized
     exchange is needed (the r7 1 M-vector probe put the distinct at the
     top of the profile: ~8× candidate multiplicity on dense near-dup
@@ -958,9 +991,11 @@ def _lsh_params(frame: DataFrame, n_planes: int | None,
 
 def _probe_partitions(frame: DataFrame, n_planes: int, n_tables: int,
                       corpus_n: int | None) -> int:
-    """Partition count for the band join's PROBE side (guide §2.5: AQE
-    cannot see a join's output multiplication — it sizes partitions from
-    input bytes). The band self-join multiplies its skinny input by the
+    """Partition count for the (tbl, bucket) exchange that feeds the
+    pair expansion — embedding_near_dup's in-partition verify kernel or
+    the incremental band join's PROBE side (guide §2.5: AQE cannot see
+    an operator's output multiplication — it sizes partitions from
+    input bytes). The expansion multiplies its input by the
     per-bucket pair volume (noise term ~N²/2^planes per table), and at
     fixture scale the upstream is a 1-4-split parquet scan whose
     partitioning flows straight through the BroadcastHashJoin — so the
@@ -971,13 +1006,119 @@ def _probe_partitions(frame: DataFrame, n_planes: int, n_tables: int,
     floored at defaultParallelism (fill the machine even when the
     estimate is small), capped at 4096 (one task per ~200k pairs is
     already generous at scale; beyond the cap per-task volume grows,
-    which sort-merge handles by spilling)."""
+    which the partition sort handles by spilling)."""
     sc = frame.sparkSession.sparkContext
     dp = sc.defaultParallelism
     if corpus_n is None:
         return dp
     est = n_tables * corpus_n * corpus_n // (2 ** n_planes)
     return int(min(4096, max(dp, est // 200_000)))
+
+
+#: Candidate pairs scored per numpy step of the verify kernel. Each pair
+#: gathers two dim-wide float64 rows, so this bounds the kernel's working
+#: set (~16 MB at dim 64) however large one block grows.
+_PAIR_TILE = 1 << 14
+
+
+def _block_pairs(run_end, tile: int):
+    """Every (i, j) with i < j < run_end[i] — all same-block row pairs of
+    a block-clustered batch — as (left, right) index arrays of at most
+    ``tile`` pairs each. The pairs are numbered flat (row i owns
+    run_end[i] - i - 1 of them), so a skewed block splits across tiles
+    like any other."""
+    import numpy as np
+
+    n = len(run_end)
+    cum = np.concatenate(([0], np.cumsum(run_end - np.arange(1, n + 1))))
+    for p0 in range(0, int(cum[-1]), tile):
+        p = np.arange(p0, min(p0 + tile, int(cum[-1])))
+        left = np.searchsorted(cum, p, side="right") - 1
+        yield left, left + 1 + (p - cum[left])
+
+
+def _cosine_verify(keys: list[str], dim: int, threshold: float,
+                   n_tables: int | None):
+    """``mapInArrow`` body scoring every same-block pair of a partition
+    sorted by (*keys, vec_id). Emits (vec_a, vec_b, raw cosine) for
+    vec_a < vec_b and raw cosine >= threshold - 1e-6; the caller rounds
+    and applies the exact threshold in Spark. The cosine is
+    ``dot / (nrm_a * nrm_b)`` through :func:`vector.tree_sum`, so every
+    value equals the SQL kernel's bit for bit. With ``n_tables`` the
+    rows are LSH band rows and a pair is scored only in its FIRST
+    colliding band (:func:`_first_collision`'s rule, as a mask over the
+    carried bucket vectors). A block still open at a batch's end is
+    carried into the next batch, so Arrow batch boundaries never split
+    or drop pairs."""
+    import numpy as np
+    import pyarrow as pa
+
+    from database_syncer_spark.pipeline.vector import tree_sum
+
+    tile = _PAIR_TILE  # read on the driver: the kernel ships as a closure
+
+    def arrays(b):
+        cols = {k: b.column(k).to_numpy(zero_copy_only=False) for k in keys}
+        cols["vec_id"] = b.column("vec_id").to_numpy()
+        x = _list_matrix(b.column("embedding"), dim).astype(np.float64)
+        cols["nrm"] = np.sqrt(tree_sum(x * x))
+        cols["x"] = x
+        if n_tables is not None:
+            cols["buckets"] = _list_matrix(b.column("buckets"), n_tables)
+        return cols
+
+    def block_starts(cols):
+        n = len(cols["vec_id"])
+        new = np.zeros(n, dtype=bool)
+        new[0] = True
+        for k in keys:
+            new[1:] |= cols[k][1:] != cols[k][:-1]
+        return np.flatnonzero(new)
+
+    def score(pieces):
+        cols = (pieces[0] if len(pieces) == 1 else
+                {k: np.concatenate([p[k] for p in pieces])
+                 for k in pieces[0]})
+        starts = block_starts(cols)
+        lens = np.diff(np.append(starts, len(cols["vec_id"])))
+        ids, x, nrm = cols["vec_id"], cols["x"], cols["nrm"]
+        for left, right in _block_pairs(np.repeat(starts + lens, lens),
+                                        tile):
+            keep = ids[left] < ids[right]
+            if n_tables is not None:
+                bk = cols["buckets"]
+                earlier = np.arange(n_tables) < cols["tbl"][left, None]
+                keep &= ~((bk[left] == bk[right]) & earlier).any(axis=1)
+            left, right = left[keep], right[keep]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = (tree_sum(x[left] * x[right])
+                       / (nrm[left] * nrm[right]))
+            hit = cos >= threshold - 1e-6
+            if hit.any():
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(ids[left[hit]]), pa.array(ids[right[hit]]),
+                     pa.array(cos[hit])], ["vec_a", "vec_b", "cosine"])
+
+    def gen(batches):
+        pending = []  # pieces of the block still open at the last batch
+        for b in batches:
+            if not b.num_rows:
+                continue
+            cols = arrays(b)
+            if pending and not all(pending[-1][k][-1] == cols[k][0]
+                                   for k in keys):
+                yield from score(pending)
+                pending = []
+            last = block_starts(cols)[-1]
+            if last:
+                yield from score(pending + [{k: v[:last]
+                                             for k, v in cols.items()}])
+                pending = []
+            pending.append({k: v[last:] for k, v in cols.items()})
+        if pending:
+            yield from score(pending)
+
+    return gen
 
 
 def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.5,
@@ -1003,13 +1144,26 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.5,
     inherent LSH trade; callers needing mid-similarity recall at scale
     must raise n_tables or use the exact ``block_col`` variant).
 
-    Band join rows carry (vec_id, buckets[n_tables], tbl, bucket) —
-    (2+n_tables)×8 bytes, embedding-free — so the self-join ships no
-    payload; the full bucket vector rides along because dedup across
-    bands is the _first_collision FILTER, not a pair distinct.
-    Embeddings are re-fetched candidate-sized for the exact cosine
-    verify. ``block_col`` keeps the exact within-column variant (the old
-    default) for oracle/exactness use.
+    SHAPE: one row per vector and band — (vec_id, buckets[n_tables],
+    embedding, tbl, bucket) — is shuffled ONCE by (tbl, bucket), sorted
+    by (tbl, bucket, vec_id) within partitions, and verified locally by
+    one vectorized Arrow kernel (:func:`_cosine_verify`): every
+    same-bucket pair, scored only in its first colliding band, exact
+    cosine through the engine's balanced-tree arithmetic. Candidates
+    are partitioned first and verified inside their partition, the
+    REPOSE (ICDE 2021) layout. ``block_col`` keeps the exact
+    within-column variant for oracle/exactness use: one block per
+    value, same kernel, no first-collision rule.
+
+    SCALE TRADE: the shuffle carries each embedding n_tables times
+    (~n_tables·N·4·dim bytes). In exchange no stage joins two
+    embeddings onto each candidate pair, as the skinny band self-join
+    and its two re-fetch joins did; at scale candidate pairs number
+    about n_tables·N or more (the noise term alone is ~N per band), so
+    that fetch moved at least as many embedding copies. The verify also
+    no longer runs the unrolled 64-term SQL cosine, whose 39,647-byte
+    generated method is past HotSpot's 8,000-byte JIT limit and so ran
+    in the bytecode interpreter.
 
     .. versionchanged:: r7
        Defaults changed semantics: ``threshold`` 0.9 -> 0.5 and
@@ -1018,68 +1172,34 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.5,
        label-blocked behavior must now pass ``block_col="label",
        threshold=0.9`` explicitly — with LSH blocking the emitted pair
        set is recall-total only in the regimes documented above."""
-    from database_syncer_spark.pipeline import vector as V
-
-    e = embeddings.select(
-        "vec_id", "embedding", V.norm("embedding", dim).alias("nrm"))
-
     if block_col is not None:
-        blocked = embeddings.select(
-            "vec_id", F.col(block_col).alias("block"))
-        a, b = blocked.alias("a"), blocked.alias("b")
-        pairs = (
-            a.join(b, "block")
-            .where(F.col("a.vec_id") < F.col("b.vec_id"))
-            .select(F.col("a.vec_id").alias("vec_a"),
-                    F.col("b.vec_id").alias("vec_b")))
+        keys = ["block"]
+        rows = (embeddings.where(F.col(block_col).isNotNull())
+                .select("vec_id", "embedding",
+                        F.col(block_col).alias("block"))
+                .repartition("block"))
     else:
+        keys = ["tbl", "bucket"]
         n_planes, n_tables, corpus_n = _lsh_params(
             embeddings, n_planes, n_tables, corpus_n)
-        # All n_tables band buckets in ONE Arrow-batched mapInPandas pass.
-        # The unrolled-expression alternatives both fail here: explode(
-        # array(struct(<16 band kernels>))) inlines 4096 product terms
-        # into one generate_doConsume and blows Janino's 64 KB method
-        # limit (the r6 sim_lsh_ann defect), and a 16-branch select+union
-        # serializes a ~4k-term interpreted tree into EVERY task binary —
-        # measured OOM at task DESERIALIZATION (ObjectInputStream handle
-        # table) with 8 concurrent tasks on a 1 GiB heap, on a 500-row
-        # fixture. A 64×64 sign-projection is one numpy GEMV per batch:
-        # the serialized plan is KBs (planes travel as a closure
-        # constant), the executor work is vectorized, and the per-row
-        # dot uses a fixed-axis pairwise sum so a row's sign bits are
-        # independent of batch boundaries (partition-count-independent
-        # buckets — the same determinism rule the ANN model state pins).
-        # Each pair is emitted ONLY from its first colliding band
-        # (_first_collision) instead of DISTINCT over the per-band join
-        # output — the join rows carry each side's full bucket vector
-        # (n_tables longs) so the dedup is a codegen'd filter, not a
-        # candidate-volume-sized exchange.
-        # Explicit-count repartition on the join key: user-specified
-        # counts survive AQE coalescing, so the pair expansion + verify
-        # run at collision-volume-sized parallelism instead of the
-        # scan's split count (guide §2.5; measured 29.7 s -> see
-        # OPTIMIZATION_r12.md). Keyed on (tbl, bucket) so a shuffle
-        # join at scale reuses this exchange outright.
-        skinny = _lsh_band_rows(
+        # All n_tables band buckets in ONE Arrow-batched pass: unrolled
+        # band kernels either blow Janino's 64 KB method limit inside
+        # one Generate (the r6 sim_lsh_ann defect) or ship a ~4k-term
+        # interpreted tree in every task binary (measured OOM at task
+        # deserialization on a 500-row fixture). Explicit-count
+        # repartition: user-specified counts survive AQE coalescing, so
+        # the verify runs at collision-volume-sized parallelism instead
+        # of the scan's split count (guide §2.5; OPTIMIZATION_r12.md).
+        rows = _lsh_band_rows(
             _lsh_bucket_vectors(embeddings, n_planes, n_tables, dim)
         ).repartition(
             _probe_partitions(embeddings, n_planes, n_tables, corpus_n),
             "tbl", "bucket")
-        a, b = skinny.alias("a"), skinny.alias("b")
-        pairs = (
-            a.join(b, ["tbl", "bucket"])
-            .where((F.col("a.vec_id") < F.col("b.vec_id"))
-                   & _first_collision("a", "b", n_tables))
-            .select(F.col("a.vec_id").alias("vec_a"),
-                    F.col("b.vec_id").alias("vec_b")))
-
-    dot = V.dot("ea.embedding", "eb.embedding", dim)
-    cos = dot / (F.col("ea.nrm") * F.col("eb.nrm"))
     return (
-        pairs
-        .join(e.alias("ea"), F.col("vec_a") == F.col("ea.vec_id"))
-        .join(e.alias("eb"), F.col("vec_b") == F.col("eb.vec_id"))
-        .select("vec_a", "vec_b", F.round(cos, 6).alias("cosine"))
+        rows.sortWithinPartitions(*keys, "vec_id")
+        .mapInArrow(_cosine_verify(keys, dim, threshold, n_tables),
+                    "vec_a long, vec_b long, cosine double")
+        .select("vec_a", "vec_b", F.round("cosine", 6).alias("cosine"))
         .where(F.col("cosine") >= threshold)
     )
 
@@ -1105,11 +1225,15 @@ def embedding_incremental_near_dup(batch: DataFrame, corpus: DataFrame,
 
     n_planes, n_tables, corpus_n = _lsh_params(
         corpus, n_planes, n_tables, corpus_n)
-    # First-collision emit instead of pair DISTINCT, same as
-    # embedding_near_dup: dedup is a codegen'd filter over the carried
-    # bucket vectors, never a candidate-volume-sized exchange.
+    # First-collision emit instead of pair DISTINCT, the rule
+    # embedding_near_dup's verify kernel applies: dedup is a codegen'd
+    # filter over the carried bucket vectors, never a candidate-volume-
+    # sized exchange. The band rows stay embedding-free (at rest this
+    # corpus side is a band index; carrying embeddings would multiply
+    # it by n_tables).
     bb = _lsh_band_rows(
-        _lsh_bucket_vectors(batch, n_planes, n_tables, dim)).alias("a")
+        _lsh_bucket_vectors(batch, n_planes, n_tables, dim)
+        .drop("embedding")).alias("a")
     # Corpus side is the join's probe side (the batch side broadcasts):
     # same explicit-count repartition as embedding_near_dup so the
     # batch×corpus candidate expansion doesn't inherit the corpus
@@ -1117,7 +1241,8 @@ def embedding_incremental_near_dup(batch: DataFrame, corpus: DataFrame,
     # overstates a batch probe's collision volume — the floor/cap
     # clamp keeps that harmless.
     bc = (_lsh_band_rows(
-        _lsh_bucket_vectors(corpus, n_planes, n_tables, dim))
+        _lsh_bucket_vectors(corpus, n_planes, n_tables, dim)
+        .drop("embedding"))
         .repartition(
             _probe_partitions(corpus, n_planes, n_tables, corpus_n),
             "tbl", "bucket")
@@ -1126,11 +1251,11 @@ def embedding_incremental_near_dup(batch: DataFrame, corpus: DataFrame,
             .where(_first_collision("a", "b", n_tables))
             .select("vec_id", "corpus_id"))
     # Fetch embeddings by joining cand with the full (vec_id, embedding,
-    # nrm) projections directly — the same shape as embedding_near_dup.
-    # An earlier form pre-pruned each side with a semi-join on cand's
-    # distinct ids, which referenced the UNPERSISTED cand subtree three
-    # times (hits + two id sets) and re-ran the whole candidate join per
-    # reference (r7 review finding); cand is consumed exactly once here.
+    # nrm) projections directly. An earlier form pre-pruned each side
+    # with a semi-join on cand's distinct ids, which referenced the
+    # UNPERSISTED cand subtree three times (hits + two id sets) and
+    # re-ran the whole candidate join per reference (r7 review
+    # finding); cand is consumed exactly once here.
     eb = batch.select(
         "vec_id", "embedding", V.norm("embedding", dim).alias("nrm"))
     ec = corpus.select(

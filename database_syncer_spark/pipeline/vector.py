@@ -8,9 +8,17 @@ fixture (4.7s -> 0.15s for brute-force top-k). These helpers unroll the
 loop over a statically-known dimension into a flat sum of GetArrayItem
 products, which Tungsten compiles into one tight codegen span.
 
-The unroll is bounded (dim=64 in the fixtures; codegen splits oversized
-methods automatically), and every helper takes the dimension explicitly
-so the expression is fixed at plan time.
+The unroll is bounded by dim (64 in the fixtures), and every helper
+takes the dimension explicitly so the expression is fixed at plan time.
+Codegen does NOT keep a large unroll fast: HotSpot never JIT-compiles a
+method over 8,000 bytes of bytecode (``DontCompileHugeMethods``, the
+JDK 17 default), so such a kernel runs in the bytecode interpreter.
+Largest generated method at sf0.01 (``debug.codegenStringSeq``):
+22,366-22,510 bytes for sim_topk_cosine, sim_lsh_ann, sim_ivf_ann,
+sim_pq_ann, sim_ivfpq_ann and sim_ivf_incremental; 5,385 bytes for
+multimodal_columns. dedup_embedding_cosine verifies in a numpy kernel
+built on :func:`tree_sum` instead, which reproduces these sums bit for
+bit (its 64-term SQL cosine compiled to 39,647 bytes).
 
 Construction goes through ONE ``F.expr(sql)`` call when the inputs are
 plain column names (every hot call site) instead of building the tree
@@ -71,6 +79,16 @@ def _balanced_sum(terms: list[Column]) -> Column:
 
 def _balanced_sum_sql(terms: list[str]) -> str:
     return _balanced(terms, lambda a, b: f"({a} + {b})")
+
+
+def tree_sum(terms):
+    """numpy mirror of the SQL kernels' sum: reduces the LAST axis of a
+    float64 array with `_balanced`'s pairing, so ``tree_sum(a * b)``
+    and ``np.sqrt(tree_sum(x * x))`` equal ``dot``/``norm`` bit for bit
+    (IEEE float64 ops are deterministic; pinned in tests/test_pipeline.py).
+    Vectorized verify kernels use it to emit the engine's exact values."""
+    return _balanced([terms[..., i] for i in range(terms.shape[-1])],
+                     lambda a, b: a + b)
 
 
 def _dlit(v: float) -> str:

@@ -13,7 +13,9 @@ DuckDB; `pyarrow.parquet` is the only reader.
 Arithmetic contract (why byte-identical equality is assertable):
 - Spark-side dot/norm kernels are balanced expression trees
   (pipeline/vector.py `_balanced`); float addition is order-dependent,
-  so `tree_sum` replays the exact pairing in float64.
+  so `tree_sum` (pipeline/vector.py, pinned bit-equal to the SQL
+  kernels in tests/test_pipeline.py) replays the exact pairing in
+  float64.
 - Every model quantity the engine rounds for partition-independence
   (9-dp centroids/codebooks/scores, 6-dp cosines) is rounded here with
   the SAME function the engine uses at that site — Python `round` where
@@ -39,6 +41,8 @@ import os
 import struct
 
 import numpy as np
+
+from database_syncer_spark.pipeline.vector import tree_sum
 
 # --- pure-Python xxHash64 (public xxHash spec; Spark's XxHash64 applies
 # it with seed 42 — to UTF-8 bytes for strings, to the 8-byte
@@ -125,21 +129,6 @@ def xxh64_chain(args: list, seed: int = 42) -> int:
 
 
 # --- engine-exact float arithmetic ------------------------------------------
-
-
-def tree_sum(terms: np.ndarray) -> np.ndarray:
-    """Pairwise balanced-tree sum over the LAST axis with exactly the
-    pairing of pipeline/vector.py `_balanced` ((0,1),(2,3),...; an odd
-    tail carries to the end of the next round). IEEE float64 ops are
-    deterministic, so this reproduces the engine's codegen'd sums
-    bit-for-bit."""
-    while terms.shape[-1] > 1:
-        n = terms.shape[-1]
-        paired = terms[..., 0:n - 1:2] + terms[..., 1:n:2]
-        if n % 2:
-            paired = np.concatenate([paired, terms[..., -1:]], axis=-1)
-        terms = paired
-    return terms[..., 0]
 
 
 def tree_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:

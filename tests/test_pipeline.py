@@ -707,6 +707,24 @@ def test_connected_components_deep_chains_converge(spark):
             assert got[head + pos] == head
 
 
+def test_connected_components_drops_null_endpoints(spark):
+    """An edge with a NULL endpoint links nothing: the labels equal the
+    same graph's without those edges — no NULL node, and no node that
+    only a NULL edge touched. A graph of NULL edges alone is empty."""
+    from database_syncer_spark.pipeline.dedup import connected_components
+
+    def labels(edges):
+        return {(r.doc_id, r.component) for r in connected_components(
+            spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
+        ).collect()}
+
+    edges = [(1, 2), (2, 3), (10, 11)]
+    nulls = [(None, 4), (3, None), (None, None), (None, 11)]
+    assert labels(edges + nulls) == labels(edges) == {
+        (1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+    assert labels(nulls) == set()
+
+
 def test_ngram_containment_catches_subdocument(spark, sf_dir):
     """A short doc embedded verbatim inside a much longer one:
     containment(short→long) = 1.0 while Jaccard ≈ |A|/|B| is far below
@@ -1037,6 +1055,107 @@ def test_embedding_lsh_blocking_recall_total(spark):
         assert lsh <= exhaustive, name  # cosine verify: no false positives
         assert lsh == exhaustive, (name, exhaustive - lsh)
         assert len(exhaustive) >= min_pairs[name], name
+
+
+@pytest.mark.parametrize("dim", [1, 5, 63, 64])
+def test_tree_sum_matches_sql_kernels(spark, dim):
+    """vector.tree_sum is the verify kernel's arithmetic: it must equal
+    the SQL kernels V.dot/V.norm bit for bit, or embedding_near_dup's
+    rounded cosines drift from every oracle built on the engine's sums.
+    Magnitudes span 6 decades so a different pairing would show."""
+    import numpy as np
+
+    from database_syncer_spark.pipeline import vector as V
+
+    rng = np.random.default_rng(dim)
+    a, b = ((rng.standard_normal((40, dim))
+             * 10.0 ** rng.uniform(-3, 3, (40, dim))).astype(np.float32)
+            for _ in range(2))
+    got = spark.createDataFrame(
+        [(x.tolist(), y.tolist()) for x, y in zip(a, b)],
+        "a array<float>, b array<float>").select(
+        V.dot("a", "b", dim).alias("dot"),
+        V.norm("a", dim).alias("nrm")).collect()
+    a, b = a.astype(np.float64), b.astype(np.float64)
+    assert [r.dot for r in got] == V.tree_sum(a * b).tolist()
+    assert [r.nrm for r in got] == np.sqrt(V.tree_sum(a * a)).tolist()
+
+
+def test_list_matrix_rejects_null_and_ragged_rows():
+    """The Arrow kernels view an embedding column as one n×dim matrix.
+    A NULL row, a NULL element or a wrong-length row must raise, not
+    shift every later row — including a ragged column whose total
+    length still equals n×dim. A sliced column views only its rows."""
+    import pyarrow as pa
+
+    from database_syncer_spark.pipeline.dedup import _list_matrix
+
+    f32 = pa.list_(pa.float32())
+    ok = pa.array([[1.0, 2.0], [3.0, 4.0], [5.0, 6.0]], f32)
+    assert _list_matrix(ok, 2).tolist() == [[1, 2], [3, 4], [5, 6]]
+    assert _list_matrix(ok.slice(1, 1), 2).tolist() == [[3, 4]]
+    for bad in ([[1.0, 2.0], None], [[1.0, None], [3.0, 4.0]],
+                [[1.0, 2.0], [3.0]], [[1.0], [2.0, 3.0, 4.0]]):
+        with pytest.raises(ValueError, match="exactly 2"):
+            _list_matrix(pa.array(bad, f32), 2)
+
+
+def _near_dup_corpus(spark, n_base: int = 60, dim: int = 64):
+    """(frame, ids, mat): clusters of 1-5 noisy copies around random
+    base vectors — ~180 vectors, a few hundred pairs far above τ=0.5
+    inside clusters, cross-cluster cosines near 0."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    mat = np.repeat(rng.standard_normal((n_base, dim)),
+                    rng.integers(1, 6, n_base), axis=0)
+    mat = (mat + 0.2 * rng.standard_normal(mat.shape)).astype(np.float32)
+    ids = np.arange(len(mat), dtype=np.int64)
+    frame = spark.createDataFrame(
+        [(int(i), row.tolist()) for i, row in zip(ids, mat)],
+        "vec_id bigint, embedding array<float>")
+    return frame, ids, mat.astype(np.float64)
+
+
+def test_embedding_near_dup_exact_across_arrow_batches(spark):
+    """The verify kernel carries a (tbl, bucket) block that crosses an
+    Arrow batch boundary into the next batch. At 7 records per batch
+    every block spans several batches; the LSH output must still equal
+    the exhaustive engine-exact pair set."""
+    from ann_reference import exhaustive_cosine_pairs
+    from database_syncer_spark.pipeline.dedup import embedding_near_dup
+
+    emb, ids, mat = _near_dup_corpus(spark)
+    truth = exhaustive_cosine_pairs(ids, mat, threshold=0.5)
+    assert len(truth) > 100
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = sorted((r.vec_a, r.vec_b, r.cosine) for r in
+                     embedding_near_dup(emb, threshold=0.5,
+                                        corpus_n=len(ids)).collect())
+    finally:
+        spark.conf.set(key, prev)
+    assert got == sorted(truth)  # a list: a pair emitted twice fails
+
+
+def test_embedding_near_dup_block_larger_than_pair_tile(spark, monkeypatch):
+    """One constant block_col block of ~180 vectors holds ~16k pairs;
+    with the pair tile cut to 97, one row's partners split across
+    tiles. The exact block variant must still equal the exhaustive
+    pair set."""
+    from ann_reference import exhaustive_cosine_pairs
+    from database_syncer_spark.pipeline import dedup
+
+    monkeypatch.setattr(dedup, "_PAIR_TILE", 97)
+    emb, ids, mat = _near_dup_corpus(spark)
+    assert len(ids) - 1 > 97  # the first row's partners alone span tiles
+    got = sorted((r.vec_a, r.vec_b, r.cosine) for r in
+                 dedup.embedding_near_dup(
+                     emb.withColumn("blk", F.lit("all")), threshold=0.5,
+                     block_col="blk").collect())
+    assert got == sorted(exhaustive_cosine_pairs(ids, mat, threshold=0.5))
 
 
 def test_embedding_lsh_scale_params_widen_buckets(spark, sf_dir):

@@ -138,6 +138,34 @@ def test_cosine_kernels_stay_in_codegen(spark, sf_dir):
     assert "zip_with" not in ivf and "aggregate(embedding" not in ivf
 
 
+def test_embedding_near_dup_one_shuffle_jit_sized(spark, sf_dir):
+    """dedup_embedding_cosine verifies in one Arrow kernel over
+    bucket-clustered rows. Its unrolled 64-term SQL cosine compiled to a
+    39,647-byte method, past HotSpot's 8,000-byte JIT limit
+    (DontCompileHugeMethods), so it ran in the bytecode interpreter.
+    Pin the replacement: every generated method stays JIT-sized, no
+    join is left, and the only shuffle is the (tbl, bucket) exchange."""
+    from database_syncer_spark.registry import all_queries
+
+    df = all_queries()["dedup_embedding_cosine"](spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    debug = getattr(spark._jvm.org.apache.spark.sql.execution.debug,
+                    "package")
+    seq = debug.codegenStringSeq(plan)
+    sizes = [seq.apply(i)._3().maxMethodCodeSize()
+             for i in range(seq.size())]
+    assert sizes and max(sizes) < 8000, sizes
+    final = plan.executedPlan().toString()  # AQE's final plan only
+    assert "Join" not in final, final
+    exchanges = re.findall(r"Exchange (\w+)\(([^)]*)\)", final)
+    assert len(exchanges) == 1, final
+    kind, cols = exchanges[0]
+    assert kind == "hashpartitioning", final
+    assert [c.split("#")[0] for c in cols.split(", ")[:2]] == [
+        "tbl", "bucket"], final
+
+
 def test_no_row_at_a_time_python_in_headline(spark, sf_dir):
     """Headline keys may cross into Python only through Arrow-batched
     evaluation (ArrowEvalPython / MapInPandas), never BatchEvalPython."""

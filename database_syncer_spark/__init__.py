@@ -32,7 +32,6 @@ def __getattr__(name: str):
         "write_bucketed_snapshot": "database_syncer_spark.core.bucketing",
         "generate_sync_script": "database_syncer_spark.core.script",
         "write_script": "database_syncer_spark.core.script",
-        "materialize_script": "database_syncer_spark.core.script",
         "read_sql_dump": "database_syncer_spark.sources.dump",
         "write_sql_dump": "database_syncer_spark.sources.dump",
         "sync_dumps": "database_syncer_spark.sources.dump",
@@ -49,7 +48,6 @@ __all__ = [
     "get_spark", "load_tables", "TABLE_NAMES",
     "snapshot_diff", "apply_changes", "dedup_last_wins", "diff_stats",
     "catalog_diff", "write_bucketed_snapshot", "generate_sync_script", "write_script",
-    "materialize_script",
     "read_sql_dump", "write_sql_dump", "sync_dumps", "compare_sql_files",
 ]
 __version__ = "0.1.0"

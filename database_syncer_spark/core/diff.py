@@ -15,9 +15,8 @@ strings, sync.py:217-226, and so treats NULL as the literal string "NULL" —
 ``eqNullSafe`` reproduces NULL==NULL semantics for typed columns).
 
 Scale notes (100 TB):
-- The join shuffles both sides by PK once; AQE handles skew-splitting.
-  If the backup side is small (dimension tables), pass
-  ``broadcast_backup=True`` to eliminate the shuffle entirely.
+- The join shuffles both sides by PK once; AQE handles skew-splitting
+  and switches to a broadcast join when one side measures small.
 - Only PK + compared columns are read (column pruning reaches the parquet
   scan because everything below is declarative).
 - Change detection is a struct comparison inside codegen — no Python, no
@@ -35,55 +34,26 @@ CHANGE_TYPE = "change_type"
 INSERT, UPDATE, DELETE = "INSERT", "UPDATE", "DELETE"
 
 
-def _ns_eq(cols: list[str]) -> Column:
-    """Null-safe equality of the given columns across the p/b aliases."""
-    cond = F.lit(True)
-    for c in cols:
-        cond = cond & F.col(f"p.{c}").eqNullSafe(F.col(f"b.{c}"))
-    return cond
+def _classify_outer_join(
+    prod: DataFrame, backup: DataFrame, pk_cols: list[str],
+    compare_cols: list[str],
+) -> tuple[DataFrame, Column, list[Column]]:
+    """Full-outer join of the two snapshots on PK, classified.
 
-
-def snapshot_diff(
-    prod: DataFrame,
-    backup: DataFrame,
-    pk_cols: list[str],
-    compare_cols: list[str] | None = None,
-    broadcast_backup: bool = False,
-    last_wins_col: str | None = None,
-) -> DataFrame:
-    """Classify row-level changes that turn ``backup`` into ``prod``.
-
-    Returns a CDC DataFrame: ``pk_cols + [change_type] + value columns``
-    where value columns carry the post-image for INSERT/UPDATE and the
-    pre-image for DELETE (the reference emits the backup record's PK for
-    DELETE, sync.py:199-215, and production values for INSERT/UPDATE,
-    sync.py:175-197 / :388-395).
-
-    ``last_wins_col``: if given, both sides are first deduplicated on PK
-    keeping the row with the greatest value of this column — the explicit
-    Spark form of the reference's dict-overwrite semantics (sync.py:67,
-    "last INSERT for a PK wins").
-
-    NULL-PK contract (pinned by tests/test_diff.py, identical in
-    ``snapshot_diff_fused``): the join keys use plain ``=`` (the
-    SQL/MERGE model), so a row with a NULL PK never matches the other
-    side — it surfaces as an INSERT (prod side, post-image) or DELETE
-    (backup side, pre-image). Presence is tracked with explicit
-    per-side markers, NOT the PK's null-ness, so null-PK rows are
-    classified correctly rather than falling through as UPDATEs.
+    Returns ``(rows, change, pk_out)``: the joined rows that changed
+    (sides aliased ``p``/``b``), the INSERT/DELETE/UPDATE change-type
+    column, and the output PK columns. NULL-PK contract (pinned by
+    tests/test_diff.py, identical in ``snapshot_diff_fused``): the join
+    keys use plain ``=`` (the SQL/MERGE model), so a row with a NULL PK
+    never matches the other side — it surfaces as an INSERT (prod side)
+    or DELETE (backup side). Presence is tracked with explicit per-side
+    markers, NOT the PK's null-ness, so null-PK rows are classified
+    correctly rather than falling through as UPDATEs.
     """
-    if compare_cols is None:
-        compare_cols = [c for c in prod.columns if c not in pk_cols]
-    if last_wins_col is not None:
-        prod = dedup_last_wins(prod, pk_cols, last_wins_col)
-        backup = dedup_last_wins(backup, pk_cols, last_wins_col)
-
     p = prod.select(
         *pk_cols, *compare_cols, F.lit(True).alias("__pp")).alias("p")
     b = backup.select(
         *pk_cols, *compare_cols, F.lit(True).alias("__bp")).alias("b")
-    if broadcast_backup:
-        b = F.broadcast(b)
 
     # Plain-equality join keys (not eqNullSafe): SQL MERGE/diff semantics
     # use `=` (so does the DuckDB oracle), and — decisive at scale — a
@@ -95,27 +65,47 @@ def snapshot_diff(
 
     # Presence flags: the explicit marker is NULL exactly when the outer
     # join found no row on that side — unlike the PK, which can also be
-    # NULL on a PRESENT row (the null-PK contract above).
+    # NULL on a PRESENT row.
     in_prod = F.col("p.__pp").isNotNull()
     in_backup = F.col("b.__bp").isNotNull()
-    changed = ~_ns_eq(compare_cols)
-
+    same = F.lit(True)
+    for c in compare_cols:
+        same = same & F.col(f"p.{c}").eqNullSafe(F.col(f"b.{c}"))
     change = (
         F.when(in_prod & ~in_backup, F.lit(INSERT))
         .when(~in_prod & in_backup, F.lit(DELETE))
-        .when(changed, F.lit(UPDATE))
+        .when(~same, F.lit(UPDATE))
     )
+    pk_out = [F.coalesce(F.col(f"p.{c}"), F.col(f"b.{c}")).alias(c)
+              for c in pk_cols]
+    return joined.where(change.isNotNull()), change, pk_out
 
-    out_cols: list[Column] = [
-        F.coalesce(F.col(f"p.{c}"), F.col(f"b.{c}")).alias(c) for c in pk_cols
-    ]
-    out_cols.append(change.alias(CHANGE_TYPE))
-    for c in compare_cols:
-        out_cols.append(
-            F.when(change == DELETE, F.col(f"b.{c}"))
-            .otherwise(F.col(f"p.{c}")).alias(c)
-        )
-    return joined.where(change.isNotNull()).select(*out_cols)
+
+def snapshot_diff(
+    prod: DataFrame,
+    backup: DataFrame,
+    pk_cols: list[str],
+    compare_cols: list[str] | None = None,
+) -> DataFrame:
+    """Classify row-level changes that turn ``backup`` into ``prod``.
+
+    Returns a CDC DataFrame: ``pk_cols + [change_type] + value columns``
+    where value columns carry the post-image for INSERT/UPDATE and the
+    pre-image for DELETE (the reference emits the backup record's PK for
+    DELETE, sync.py:199-215, and production values for INSERT/UPDATE,
+    sync.py:175-197 / :388-395). One full-outer join on PK; NULL-PK
+    rows follow the contract in ``_classify_outer_join``. Duplicate PKs
+    are not resolved here: ``snapshot_diff_fused`` fuses last-wins dedup
+    of both sides into the diff.
+    """
+    if compare_cols is None:
+        compare_cols = [c for c in prod.columns if c not in pk_cols]
+    rows, change, pk_out = _classify_outer_join(
+        prod, backup, pk_cols, compare_cols)
+    return rows.select(
+        *pk_out, change.alias(CHANGE_TYPE),
+        *[F.when(change == DELETE, F.col(f"b.{c}"))
+          .otherwise(F.col(f"p.{c}")).alias(c) for c in compare_cols])
 
 
 def snapshot_diff_fused(
@@ -127,10 +117,11 @@ def snapshot_diff_fused(
 ) -> DataFrame:
     """``snapshot_diff`` + last-wins dedup of BOTH sides in ONE shuffle.
 
-    ``snapshot_diff(last_wins_col=...)`` costs two aggregations (one
-    per side) plus a join — with exchange reuse that is still two
-    shuffled aggregates feeding a sort-merge join. This form tags each
-    side, unions, and resolves everything in a single ``groupBy(pk)``:
+    Deduplicating each side with ``dedup_last_wins`` before
+    ``snapshot_diff`` costs two aggregations (one per side) plus a join —
+    with exchange reuse that is still two shuffled aggregates feeding a
+    sort-merge join. This form tags each side, unions, and resolves
+    everything in a single ``groupBy(pk)``:
 
         max_by(vals if side else null, ord if side else null)
 
@@ -231,7 +222,8 @@ def scd2_history(
     - INSERT: the post-image opened;
     - DELETE: the pre-image closed.
 
-    One full-outer join on PK (same single shuffle as ``snapshot_diff``)
+    The same classified full-outer join as ``snapshot_diff``
+    (``_classify_outer_join``, one shuffle, same NULL-PK contract)
     followed by an ``inline`` over a 0-2 element struct array — no second
     pass, no window. ``snapshot_ts`` is a caller-supplied literal so the
     output is deterministic and oracle-checkable. ``valid_from`` of a
@@ -240,22 +232,8 @@ def scd2_history(
     """
     if compare_cols is None:
         compare_cols = [c for c in prod.columns if c not in pk_cols]
-
-    p = prod.select(
-        *pk_cols, *compare_cols, F.lit(True).alias("__pp")).alias("p")
-    b = backup.select(
-        *pk_cols, *compare_cols, F.lit(True).alias("__bp")).alias("b")
-    on = [F.col(f"p.{c}") == F.col(f"b.{c}") for c in pk_cols]  # see snapshot_diff
-    joined = p.join(b, on, "full_outer")
-
-    in_prod = F.col("p.__pp").isNotNull()     # see snapshot_diff: presence
-    in_backup = F.col("b.__bp").isNotNull()   # markers, not PK null-ness
-    changed = ~_ns_eq(compare_cols)
-    change = (
-        F.when(in_prod & ~in_backup, F.lit(INSERT))
-        .when(~in_prod & in_backup, F.lit(DELETE))
-        .when(changed, F.lit(UPDATE))
-    )
+    rows, change, pk_out = _classify_outer_join(
+        prod, backup, pk_cols, compare_cols)
     snap = F.lit(snapshot_ts).cast("timestamp_ntz")
     null_ts = F.lit(None).cast("timestamp_ntz")
 
@@ -271,12 +249,7 @@ def scd2_history(
         F.when(change.isin(UPDATE, DELETE), image("b", False)),
         F.when(change.isin(UPDATE, INSERT), image("p", True)),
     ))
-    pk_out = [F.coalesce(F.col(f"p.{c}"), F.col(f"b.{c}")).alias(c)
-              for c in pk_cols]
-    return (
-        joined.where(change.isNotNull())
-        .select(*pk_out, change.alias(CHANGE_TYPE), F.inline(versions))
-    )
+    return rows.select(*pk_out, change.alias(CHANGE_TYPE), F.inline(versions))
 
 
 def dedup_last_wins(df: DataFrame, pk_cols: list[str],

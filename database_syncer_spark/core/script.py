@@ -125,12 +125,16 @@ def ddl_statements(catalog: dict[str, list[str]],
 def write_script(statements: DataFrame, path: str,
                  header: str = "-- sync script",
                  ddl: list[str] | None = None) -> None:
-    """Write an ordered statement DataFrame to ONE script file, scalably.
+    """Write a statement DataFrame to ONE script file, scalably.
 
     The upstream ``orderBy`` range-partitions, so part files in filename
     order ARE global statement order; executors write the text parts in
     parallel and the driver only streams the parts together
     (O(1) memory) — never collecting the script like ``assemble_script``.
+    The file is assembled under a sibling ``.tmp`` name and renamed into
+    place (atomic on one filesystem), so a failed write leaves any
+    previous file at ``path`` intact and never a truncated one — callers
+    cache dump files by "exists and non-empty".
     """
     import glob as _glob
     import os
@@ -138,46 +142,22 @@ def write_script(statements: DataFrame, path: str,
     import tempfile
 
     parts_dir = tempfile.mkdtemp(prefix="dss_script_parts_")
+    tmp_path = path + ".tmp"
     try:
         (statements.select("statement")
          .write.mode("overwrite").text(parts_dir))
-        with open(path, "w", encoding="utf-8") as out_fh:
+        with open(tmp_path, "w", encoding="utf-8") as out_fh:
             out_fh.write(header + "\n")
             for line in ddl or []:
                 out_fh.write(line + "\n")
             for part in sorted(_glob.glob(os.path.join(parts_dir, "part-*"))):
                 with open(part, "r", encoding="utf-8") as in_fh:
                     shutil.copyfileobj(in_fh, out_fh)
+        os.replace(tmp_path, path)
     finally:
         shutil.rmtree(parts_dir, ignore_errors=True)
-
-
-def materialize_script(statements: DataFrame, path: str,
-                       header: str = "-- sync script",
-                       ddl: list[str] | None = None,
-                       collect_threshold: int = 100_000) -> str:
-    """Write the ordered statement stream to ONE script file, routing by
-    size: at or under ``collect_threshold`` statements the script is
-    collected and written by the driver (one tiny file, the reference's
-    shape, sync.py:587-589); above it, the distributed ``write_script``
-    path streams executor-written text parts so the script is never
-    resident in driver memory. Both paths produce byte-identical files
-    (tested), so callers can treat the gate as invisible.
-
-    Returns the mode used ("collected" | "distributed"). The gate costs
-    one extra job; it uses ``limit(threshold+1).count()`` so Spark's
-    CollectLimit stops scanning right past the threshold instead of
-    counting a 100-TB change stream to the end. Callers that already
-    know the change volume should persist ``statements`` upstream (the
-    gate job and the write otherwise recompute the diff)."""
-    probe = statements.limit(collect_threshold + 1).count()
-    if probe <= collect_threshold:
-        text = assemble_script(statements, header=header, ddl=ddl)
-        with open(path, "w", encoding="utf-8") as fh:
-            fh.write(text + "\n")
-        return "collected"
-    write_script(statements, path, header=header, ddl=ddl)
-    return "distributed"
+        if os.path.exists(tmp_path):
+            os.remove(tmp_path)
 
 
 def assemble_script(statements: DataFrame, header: str = "-- sync script",

@@ -14,7 +14,9 @@ inside quoted strings (SURVEY §1.2 [verified]). This rebuild:
   single-column keys);
 - tokenizes INSERT rows with a real quote-aware scanner (handles ``''``
   and backslash escapes, parens/commas/semicolons inside strings) inside
-  ``mapInPandas`` — Arrow-batched, one Python pass, no row-at-a-time UDF;
+  ``mapInPandas`` — Arrow-batched, one Python pass, no row-at-a-time UDF.
+  This is the only row parse: a Catalyst-only tokenizer measured ~2×
+  slower (7.5 s vs 3.3 s per side on a 3M-row dump, local[32]; SCALE.md);
 - casts raw SQL literals to typed columns JVM-side.
 
 Known format assumptions (same family as mysqldump defaults): statements
@@ -201,8 +203,8 @@ _FAST_VAL_RE = re.compile(
 _SEP_CHARS = " \t\r\n,;"
 
 #: full-match hex literal (>=1 digit: MySQL keeps a bare '0x' as raw
-#: text, and the JVM fast-path lookahead refuses it the same way —
-#: zero-digit '0x' must stay raw in BOTH tokenizers)
+#: text, so a zero-digit '0x' stays raw in both the fast path and the
+#: scanner)
 _HEX_LIT_RE = re.compile(r"0[xX][0-9A-Fa-f]+\Z")
 #: introducer/typed-literal prefix before a quoted string: a charset
 #: introducer (_utf8mb4'…'), a hex string literal (X'…'), or a bit
@@ -707,13 +709,14 @@ def _parse_insert_batches(schemas: dict[str, TableSchema]):
 
     ``(seq_hi, seq_lo)`` extends the statement-order key from
     ``read_dump_statements`` down to individual rows (statement position
-    × 1e6 + row position inside the statement) so duplicate PKs can
+    << 30 | row position inside the statement) so duplicate PKs can
     resolve last-wins exactly like the reference's dict overwrite
-    (sync.py:67). Bounds: ≤1e6 rows per INSERT statement (mysqldump
-    packet limits keep real statements far below); the ×1e6 cannot
-    overflow a long (row-in-partition < 2^33, 2^33·1e6 < 2^63). Offsets
-    restart per file, so last-wins across a multi-file glob is undefined —
-    same as the reference, which reads exactly one file per side.
+    (sync.py:67). The shift fits a long with no per-statement row limit
+    in practice: the statement position is < 2^33 (the row-in-partition
+    mask), a statement string is < 2^31 chars and every row takes at
+    least 2 (``()``), so the row position is < 2^30 and the sum < 2^63.
+    Sharded reads compose the shard index into ``seq_hi``, so last-wins
+    is file order across shards too.
     """
     import pandas as pd
 
@@ -753,7 +756,7 @@ def _parse_insert_batches(schemas: dict[str, TableSchema]):
                         pos = {c: i for i, c in enumerate(listed)}
                         remap = [pos.get(c) for c in cols_l]
                     n_expect = len(listed)
-                base = int(lo) * 1_000_000
+                base = int(lo) << 30
                 for row_idx, row in enumerate(tokenize_insert_rows(m.group(3))):
                     if len(row) == n_expect:
                         if remap is not None:
@@ -775,196 +778,31 @@ def _parse_insert_batches(schemas: dict[str, TableSchema]):
     return run
 
 
-# --- JVM tokenizer ----------------------------------------------------------
-#
-# The Python tokenizer above is the SEMANTIC REFERENCE (property-tested
-# against the char scanner). This block re-expresses its regex fast path
-# as pure Catalyst expressions so the INSERT hot path never leaves
-# whole-stage codegen: row split, value split, unquote/unescape are all
-# `regexp_extract_all`/`regexp_replace`/`replace` over columns. Any
-# statement the fast shape can't PROVABLY handle (quote in bare position,
-# backslash-newline in a string, sentinel chars in data) is routed to the
-# Python scanner, so the two paths together are exactly
-# ``tokenize_insert_rows`` by construction — cross-checked by
-# tests/test_dump.py::test_jvm_tokenizer_matches_python_*.
-#
-# MEASURED (3M-row orders dump, local[32]): this path parses ~2x SLOWER
-# than the Arrow-batched Python tokenizer (7.5s vs 3.3s per side) — the
-# Arrow round-trip it eliminates was never the bottleneck, and Java-regex
-# per-char alternation + posexplode of row bodies + the unescape chain
-# cost more than Python's C-level sre sweep over whole statements. Kept
-# as a tested option (``tokenizer="jvm"``) because it needs no Python
-# workers on executors; the default stays ``"python"``.
-
-#: private-use marker used by the unescape rewrite; statements containing
-#: it fall back to the Python scanner so data can never collide with it.
-_SENT = "\ue000"
-_J_Q1 = r"'(?:[^'\\]|\\.|'')*'"
-_J_Q2 = r'"(?:[^"\\]|\\.|"")*"'
-#: one parenthesized row of fast-shape content (mirror of _FAST_ROW_RE)
-_J_ROW_RE = r"\(((?:[^()'\"]|" + _J_Q1 + "|" + _J_Q2 + r")*)\)"
-#: a row body that the fast value grammar fully explains (anchored):
-#: values wholly quoted or quote-free, comma-separated (mirror of the
-#: sequential _FAST_VAL_RE loop accepting the whole body). The bare
-#: alternative REFUSES hex-literal-shaped values (0x + a hex digit,
-#: with the lookahead tolerating the leading whitespace `\s*` may have
-#: deferred): hex literals decode in the PYTHON tokenizer
-#: (_bare_literal), so a body carrying one must fail this validation
-#: and route to the scanner — the two paths stay value-identical by
-#: construction.
-_J_VAL = (r"(?:" + _J_Q1 + "|" + _J_Q2
-          + r"|(?![ \t\r\n]*0[xX][0-9A-Fa-f])[^,'\"]*)")
-_J_BODY_OK_RE = r"\A(?:\s*" + _J_VAL + r"\s*,)*\s*" + _J_VAL + r"\s*\z"
-#: one value per match over ("," + body): each match consumes its leading
-#: comma, so matches can never be zero-length (Java's find() would
-#: otherwise emit a spurious empty match after a match ending at EOS,
-#: where Python's sequential-match loop stops at the first ``$`` hit)
-_J_VAL_EXTRACT_RE = (r",\s*(" + _J_Q1 + "|" + _J_Q2
-                     + r"|[^,'\"]*?)\s*(?=,|\z)")
-#: anchored Java mirror of _INSERT_RE (regexp_extract uses find())
-_J_INSERT_RE = (r"(?is)\AINSERT\s+INTO\s+[`\"]?(\w+)[`\"]?\s*"
-                r"(?:\(([^)]*)\))?\s*VALUES\s*(.*)")
-_J_SEPS = " \t\r\n,;"
-
-
-def _j_unescape(v, q: str):
-    """Unquote + unescape a wholly-quoted literal, mirroring ``_unquote``.
-
-    Single-pass token order is preserved by first marking every
-    backslash-escaped char with the sentinel (one regex pass, left to
-    right), so the quote-doubling pass can tell a ``''`` pair from a
-    quote produced by ``\\'`` (lookbehind on the sentinel), and the
-    named escapes (\\n \\t \\r \\0) resolve before the marker is
-    stripped and the escaped char kept."""
-    inner = v.substr(F.lit(2), F.length(v) - 2)
-    out = F.regexp_replace(inner, r"(?s)\\(.)", _SENT + "$1")
-    out = F.regexp_replace(out, "(?<!" + _SENT + ")" + q + q, q)
-    for esc, ch in (("n", "\n"), ("t", "\t"), ("r", "\r"), ("0", "\x00")):
-        out = F.replace(out, F.lit(_SENT + esc), F.lit(ch))
-    return F.replace(out, F.lit(_SENT), F.lit(""))
-
-
-def _j_value(v):
-    """Raw fast-shape literal -> final value (mirror of the fast-path
-    literal handling: quoted -> unescape, bare NULL (any case) -> null,
-    other bare literals verbatim)."""
-    return (
-        F.when(v.startswith("'"), _j_unescape(v, "'"))
-        .when(v.startswith('"'), _j_unescape(v, '"'))
-        .when(F.upper(v) == "NULL", F.lit(None).cast("string"))
-        .otherwise(v)
-    )
-
-
-def _parse_inserts_jvm(inserts: DataFrame, schemas: dict[str, TableSchema]):
-    """INSERT statements -> (parsed, cache_handle), all-JVM fast path.
-
-    ``parsed`` has the same schema and semantics as
-    ``_parse_insert_batches`` output; statements failing the fast-shape
-    validation are parsed by that Python worker instead and unioned in.
-    The flagged statement scan is persisted (MEMORY_AND_DISK, statement
-    text kept only for fallback rows so the cache is ~the dump's data
-    bytes) because the fast/fallback split is two consumers of one scan
-    — without it each branch would re-read and re-validate the file.
-    """
-    from pyspark import StorageLevel
-
-    tbl = F.regexp_extract("stmt", _J_INSERT_RE, 1)
-    collist = F.regexp_extract("stmt", _J_INSERT_RE, 2)
-    vp = F.regexp_extract("stmt", _J_INSERT_RE, 3)
-    base = (
-        inserts.select("stmt", "seq_hi", "seq_lo", tbl.alias("table"),
-                       collist.alias("collist"), vp.alias("vp"))
-        .where(F.col("table").isin(list(schemas)))
-    )
-    residual_ok = (
-        F.translate(F.regexp_replace("vp", _J_ROW_RE, ""), _J_SEPS, "") == ""
-    )
-    # The JVM shape assigns values positionally, so it only applies when
-    # the column list is absent or exactly the schema (= table) order;
-    # reordered/partial lists route to the Python scanner, which remaps.
-    norm_cols = F.translate(F.col("collist"), "` \t\r\n\"", "")
-    expected = F.lit(None).cast("string")
-    for name, ts in schemas.items():
-        expected = F.when(F.col("table") == name,
-                          F.lit(",".join(ts.column_names))).otherwise(expected)
-    cols_ok = (norm_cols == "") | (norm_cols == expected)
-    fast = (
-        residual_ok
-        & cols_ok
-        & F.forall(F.regexp_extract_all("vp", F.lit(_J_ROW_RE), 1),
-                   lambda b: b.rlike(_J_BODY_OK_RE))
-        & ~F.contains(F.col("vp"), F.lit(_SENT))
-    )
-    flagged = base.select(
-        "table", "seq_hi", "seq_lo",
-        F.regexp_extract_all("vp", F.lit(_J_ROW_RE), 1).alias("rows"),
-        fast.alias("fast"),
-        F.when(~fast, F.col("stmt")).alias("stmt"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    exploded = (
-        flagged.where("fast")
-        .select("table", "seq_hi", "seq_lo",
-                F.posexplode("rows").alias("pos", "body"))
-        .select(
-            "table", "seq_hi",
-            (F.col("seq_lo") * 1_000_000 + F.col("pos")).alias("seq_lo"),
-            F.regexp_extract_all(F.concat(F.lit(","), F.col("body")),
-                                 F.lit(_J_VAL_EXTRACT_RE), 1).alias("raw"),
-        )
-    )
-    ncols_map = F.create_map(*[
-        x for name, ts in schemas.items()
-        for x in (F.lit(name), F.lit(len(ts.columns)))
-    ])
-    jvm_parsed = (
-        exploded
-        .where(F.size("raw") == ncols_map[F.col("table")])
-        .select("table", F.transform("raw", _j_value).alias("vals"),
-                "seq_hi", "seq_lo")
-    )
-    fallback = (
-        flagged.where(~F.col("fast"))
-        .select("stmt", "seq_hi", "seq_lo")
-        .mapInPandas(
-            _parse_insert_batches(schemas),
-            "table string, vals array<string>, seq_hi long, seq_lo long",
-        )
-    )
-    return jvm_parsed.unionByName(fallback), flagged
-
-
 def read_sql_dump(spark: SparkSession, path: str, typed: bool = True,
                   dedup_pk: bool = True,
-                  tokenizer: str = "python",
                   tables: list[str] | None = None,
                   on_split_string: str = "error") -> dict[str, DataFrame]:
     """Ingest a SQL dump into a dict of DataFrames (one per table).
 
     The reference's parse_sql_dump (sync.py:29-72), distributed: DDL is
     parsed on the driver (tiny), DML rows are tokenized in parallel Arrow
-    batches and cast to the DDL-derived schema. ``typed=False`` keeps
-    every value as its raw string (the reference's string-typed semantics,
-    SURVEY §1.2) for bit-faithful parity. ``dedup_pk`` resolves duplicate
-    PKs last-wins in file order (reference sync.py:67). ``tokenizer``:
-    ``"python"`` (default — measured faster, see the JVM-tokenizer block
-    comment) tokenizes rows in Arrow-batched Python; ``"jvm"`` keeps
-    tokenizing in whole-stage codegen (no executor Python workers) with
-    automatic per-statement fallback to the Python scanner.
-    ``tables``: ingest only these tables — table PROJECTION pushed into
-    the source (see read_sql_dump_with_schemas).
+    batches (``mapInPandas``) and cast to the DDL-derived schema.
+    ``typed=False`` keeps every value as its raw string (the reference's
+    string-typed semantics, SURVEY §1.2) for bit-faithful parity.
+    ``dedup_pk`` resolves duplicate PKs last-wins in file order
+    (reference sync.py:67). ``tables``: ingest only these tables — table
+    PROJECTION pushed into the source (see read_sql_dump_with_schemas).
+    ``on_split_string``: see ``read_dump_statements``.
     """
     out, _ = read_sql_dump_with_schemas(spark, path, typed=typed,
-                                        dedup_pk=dedup_pk,
-                                        tokenizer=tokenizer, tables=tables,
+                                        dedup_pk=dedup_pk, tables=tables,
                                         on_split_string=on_split_string)
     return out
 
 
 def read_sql_dump_with_schemas(
     spark: SparkSession, path: str, typed: bool = True, dedup_pk: bool = True,
-    tokenizer: str = "python", keep_seq: bool = False,
+    keep_seq: bool = False,
     tables: list[str] | None = None, ignore_missing: bool = False,
     on_split_string: str = "error", cache_statements: bool | None = False,
 ) -> tuple[dict[str, DataFrame], dict[str, TableSchema]]:
@@ -1034,26 +872,29 @@ def read_sql_dump_with_schemas(
     try:
         return _read_dump_body(
             spark, stmts, cache_statements, tables, ignore_missing,
-            typed, dedup_pk, keep_seq, tokenizer)
+            typed, dedup_pk, keep_seq)
     except Exception:
         if cache_statements:
             stmts.unpersist()
         raise
 
 
-def _read_dump_body(spark, stmts, cache_statements, tables, ignore_missing,
-                    typed, dedup_pk, keep_seq, tokenizer):
-    from database_syncer_spark.core.diff import dedup_last_wins
-
-    create_stmts = [
-        r.stmt for r in
-        stmts.where("startswith(upper(stmt), 'CREATE TABLE')").collect()
-    ]
+def _collect_schemas(stmts: DataFrame) -> dict[str, TableSchema]:
+    """Collect the dump's CREATE TABLE statements (a JVM-side filter;
+    DDL is tiny) and parse them driver-side, keyed by table name."""
     schemas: dict[str, TableSchema] = {}
-    for stmt in create_stmts:
-        ts = parse_create_table(stmt)
+    for r in stmts.where("startswith(upper(stmt), 'CREATE TABLE')").collect():
+        ts = parse_create_table(r.stmt)
         if ts:
             schemas[ts.name] = ts
+    return schemas
+
+
+def _read_dump_body(spark, stmts, cache_statements, tables, ignore_missing,
+                    typed, dedup_pk, keep_seq):
+    from database_syncer_spark.core.diff import dedup_last_wins
+
+    schemas = _collect_schemas(stmts)
     if tables is not None:
         want = set(tables)
         missing = want - set(schemas)
@@ -1073,18 +914,13 @@ def _read_dump_body(spark, stmts, cache_statements, tables, ignore_missing,
         # INSERTs (anchored regex tolerant of keyword case, whitespace,
         # and backtick/bare identifiers — the same surface _INSERT_RE
         # accepts). Runs JVM-side before the Python crossing.
-        import re as _re
-
-        names = "|".join(_re.escape(n) for n in sorted(schemas))
+        names = "|".join(re.escape(n) for n in sorted(schemas))
         inserts = inserts.where(F.col("stmt").rlike(
             rf"(?is)^INSERT\s+INTO\s+[`\"]?({names})[`\"]?\s*[(\sV]"))
-    if tokenizer == "jvm":
-        parsed, _cache = _parse_inserts_jvm(inserts, schemas)
-    else:
-        parsed = inserts.mapInPandas(
-            _parse_insert_batches(schemas),
-            "table string, vals array<string>, seq_hi long, seq_lo long",
-        )
+    parsed = inserts.mapInPandas(
+        _parse_insert_batches(schemas),
+        "table string, vals array<string>, seq_hi long, seq_lo long",
+    )
     # One pass over the parsed rows serves every table; per-table filter +
     # positional cast is pure Catalyst from here. With several tables the
     # per-table frames are independent consumers of the same parse
@@ -1115,17 +951,7 @@ def _read_dump_body(spark, stmts, cache_statements, tables, ignore_missing,
 
 def get_dump_schemas(spark: SparkSession, path: str) -> dict[str, TableSchema]:
     """Parsed DDL only (driver-side)."""
-    stmts = read_dump_statements(spark, path)
-    create_stmts = [
-        r.stmt for r in
-        stmts.where(F.upper(F.col("stmt")).startswith("CREATE TABLE")).collect()
-    ]
-    out: dict[str, TableSchema] = {}
-    for stmt in create_stmts:
-        ts = parse_create_table(stmt)
-        if ts:
-            out[ts.name] = ts
-    return out
+    return _collect_schemas(read_dump_statements(spark, path))
 
 
 # --- dump writer (tests / fixtures / round-trips) ---------------------------
@@ -1145,39 +971,30 @@ _SPARK_TO_MYSQL = {
 
 
 def write_sql_dump(df: DataFrame, table: str, pk_cols: list[str], path: str,
-                   rows_per_insert: int = 100,
-                   complete_insert: bool = True) -> None:
+                   rows_per_insert: int = 100) -> None:
     """Render a DataFrame as a mysqldump-style SQL file — distributed.
 
     Value tuples are rendered by the same JVM-side literal expressions as
     the sync-script sink; rows are batched into multi-row INSERT
-    statements inside ``mapInPandas`` (per partition, no shuffle), written
-    as distributed text, then the part files are streamed into the final
-    single file with O(1) driver memory. Statement order across
-    partitions is arbitrary — fine for a snapshot dump, whose rows are
-    PK-unique by construction.
+    statements inside ``mapInPandas`` (per partition, no shuffle) and
+    written by the sync-script file writer (``write_script``: executor
+    text parts streamed into one file with O(1) driver memory, published
+    atomically). Statement order across partitions is arbitrary — fine
+    for a snapshot dump, whose rows are PK-unique by construction.
 
-    ``complete_insert`` (default) emits the column list on every INSERT
-    (mysqldump's ``--complete-insert``). The reference parser REQUIRES
-    the column list — its INSERT regex is
-    ``INSERT INTO `t` (cols) VALUES`` (sync.py:55) — and silently parses
-    ZERO records from column-list-free dumps (mysqldump's default form,
-    and ironically also the form the reference itself re-emits,
-    sync.py:69). Our ingest accepts both forms (_INSERT_RE)."""
-    import glob as _glob
-    import shutil
-    import tempfile
-
-    from database_syncer_spark.core.script import sql_literal
+    Every INSERT carries the column list (mysqldump's
+    ``--complete-insert``). The reference parser REQUIRES it — its
+    INSERT regex is ``INSERT INTO `t` (cols) VALUES`` (sync.py:55) — and
+    silently parses ZERO records from column-list-free dumps (mysqldump's
+    default form, and ironically also the form the reference itself
+    re-emits, sync.py:69). Our ingest accepts both forms (_INSERT_RE)."""
+    from database_syncer_spark.core.script import sql_literal, write_script
 
     dtypes = {f.name: f.dataType for f in df.schema.fields}
     lits = [sql_literal(c, dtypes[c]) for c in df.columns]
     rendered = df.selectExpr(f"concat_ws(', ', {', '.join(lits)}) AS r")
-    col_list = (
-        " (" + ", ".join(f"`{c}`" for c in df.columns) + ")"
-        if complete_insert else ""
-    )
-    head = f"INSERT INTO `{table}`{col_list} VALUES\n"
+    col_list = ", ".join(f"`{c}`" for c in df.columns)
+    head = f"INSERT INTO `{table}` ({col_list}) VALUES\n"
 
     def to_statements(batches):
         import pandas as pd
@@ -1191,9 +1008,9 @@ def write_sql_dump(df: DataFrame, table: str, pk_cols: list[str], path: str,
                     out.append(head + ",\n".join(buf) + ";")
                     buf = []
             if out:
-                yield pd.DataFrame({"s": out})
+                yield pd.DataFrame({"statement": out})
         if buf:
-            yield pd.DataFrame({"s": [head + ",\n".join(buf) + ";"]})
+            yield pd.DataFrame({"statement": [head + ",\n".join(buf) + ";"]})
 
     col_defs = []
     for f in df.schema.fields:
@@ -1211,26 +1028,8 @@ def write_sql_dump(df: DataFrame, table: str, pk_cols: list[str], path: str,
         ") ENGINE=InnoDB DEFAULT CHARSET=utf8mb4;",
         "",
     ])
-
-    parts_dir = tempfile.mkdtemp(prefix="dss_dump_parts_")
-    # Assemble into a sibling temp name and rename: callers cache dumps by
-    # "exists and non-empty", so a crash mid-assembly must never leave a
-    # plausible-looking truncated file at the final path (rename on the
-    # same filesystem is atomic).
-    tmp_path = path + ".tmp"
-    try:
-        (rendered.mapInPandas(to_statements, "s string")
-         .write.mode("overwrite").text(parts_dir))
-        with open(tmp_path, "w", encoding="utf-8") as out_fh:
-            out_fh.write(header + "\n")
-            for part in sorted(_glob.glob(os.path.join(parts_dir, "part-*"))):
-                with open(part, "r", encoding="utf-8") as in_fh:
-                    shutil.copyfileobj(in_fh, out_fh)
-        os.replace(tmp_path, path)
-    finally:
-        shutil.rmtree(parts_dir, ignore_errors=True)
-        if os.path.exists(tmp_path):
-            os.remove(tmp_path)
+    write_script(rendered.mapInPandas(to_statements, "statement string"),
+                 path, header=header)
 
 
 # --- end-to-end orchestration (reference compare_sql_files, sync.py:522) ----

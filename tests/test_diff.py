@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from database_syncer_spark.catalog import load_table
@@ -496,26 +497,27 @@ def test_write_script_preserves_global_statement_order(spark, sf_dir, tmp_path):
         assert fh.read() == want
 
 
-def test_materialize_script_size_gate(spark, sf_dir, tmp_path):
-    """materialize_script routes small scripts through the driver
-    collect and large ones through the distributed writer — and both
-    paths produce byte-identical files."""
-    from database_syncer_spark.core.script import (
-        assemble_script, materialize_script)
+def test_write_script_failure_keeps_previous_file(spark, tmp_path,
+                                                  monkeypatch):
+    """A write that fails while assembling the file leaves the previous
+    script at ``path`` byte-for-byte and no ``.tmp`` file behind: the
+    script is assembled under a sibling name and renamed into place."""
+    import shutil
 
-    prod, backup = _pair(spark, sf_dir)
-    changes = snapshot_diff(prod, backup, ["o_orderkey"])
-    stmts = generate_sync_script(changes, "orders", ["o_orderkey"])
-    want = assemble_script(stmts) + "\n"
+    from database_syncer_spark.core.script import write_script
 
-    small = str(tmp_path / "small.sql")
-    assert materialize_script(stmts, small) == "collected"
-    big = str(tmp_path / "big.sql")
-    assert materialize_script(stmts, big, collect_threshold=10) == "distributed"
-    with open(small, encoding="utf-8") as fh_s, \
-            open(big, encoding="utf-8") as fh_b:
-        assert fh_s.read() == want
-        assert fh_b.read() == want
+    path = tmp_path / "script.sql"
+    path.write_text("-- previous script\n", encoding="utf-8")
+    stmts = spark.createDataFrame([("DELETE FROM t;",)], "statement string")
+
+    def fail(*_a, **_k):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(shutil, "copyfileobj", fail)
+    with pytest.raises(OSError, match="disk full"):
+        write_script(stmts, str(path))
+    assert path.read_text(encoding="utf-8") == "-- previous script\n"
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["script.sql"]
 
 
 # --- rendering of names and values that need quoting ------------------------

@@ -5,6 +5,7 @@ Each case cites the reference behavior it preserves or deliberately fixes
 
 from __future__ import annotations
 
+import os
 import textwrap
 
 import pytest
@@ -81,9 +82,7 @@ def test_tokenizer_hex_and_introducer_literals():
     # in both paths rather than half-decoding
     assert tokenize_insert_rows("(1,0xZZ)") == [["1", "0xZZ"]]
     # degenerate zero-digit '0x' is NOT a hex literal in MySQL: it must
-    # stay raw text here exactly as the JVM fast-path lookahead (which
-    # requires >=1 digit) keeps it — the two paths may not diverge
-    # (r10 advice)
+    # stay raw text (r10 advice)
     assert tokenize_insert_rows("(1,0x,'y')") == [["1", "0x", "y"]]
 
 
@@ -184,13 +183,10 @@ def test_read_sql_dump_raw_mode(spark, tmp_path):
     assert r.v == "1.0"  # not coerced
 
 
-@pytest.mark.parametrize("tokenizer", ["python", "jvm"])
-def test_reordered_and_partial_column_lists(spark, tmp_path, tokenizer):
+def test_reordered_and_partial_column_lists(spark, tmp_path):
     """An explicit column list is honored: reordered lists remap to table
     order, omitted columns become NULL. (The reference cannot parse
-    either — sync.py:55 requires the complete list in table order; and
-    the JVM fast shape must route these to the Python scanner rather
-    than positionally mis-assign.)"""
+    either — sync.py:55 requires the complete list in table order.)"""
     dump = USERS_DDL + (
         "INSERT INTO `users` (`name`,`id`,`bal`) VALUES ('alice',1,10.50);\n"
         "INSERT INTO `users` (`id`,`bal`) VALUES (2,7.25);\n"
@@ -201,7 +197,7 @@ def test_reordered_and_partial_column_lists(spark, tmp_path, tokenizer):
     )
     path = _write(tmp_path, "cols.sql", dump)
     rows = {r.id: r for r in
-            read_sql_dump(spark, path, tokenizer=tokenizer)["users"].collect()}
+            read_sql_dump(spark, path)["users"].collect()}
     assert rows[1].name == "alice" and float(rows[1].bal) == 10.50
     assert rows[2].name is None and float(rows[2].bal) == 7.25
     assert rows[3].name == "carol"
@@ -278,6 +274,47 @@ def test_dump_roundtrip_via_writer(spark, sf_dir, tmp_path):
     # timestamps come back as timestamp (session UTC) vs ntz: align for diff
     back = back.withColumn("o_orderdate", F.col("o_orderdate").cast("timestamp_ntz"))
     assert snapshot_diff(orders, back, ["o_orderkey"]).count() == 0
+
+
+def test_write_sql_dump_golden_bytes(spark, tmp_path):
+    """The dump writer's exact bytes: DDL header, a blank line, then
+    multi-row INSERTs with the column list and every literal family
+    (quote doubling, backslash kept verbatim, NULL, decimal, date,
+    boolean, double)."""
+    import datetime
+    import decimal
+
+    df = spark.createDataFrame(
+        [(1, "o'neil", decimal.Decimal("10.50"), datetime.date(2024, 2, 29),
+          True, 1.5),
+         (2, None, None, None, None, None),
+         (3, "back\\slash", decimal.Decimal("-0.01"),
+          datetime.date(1999, 12, 31), False, -2.0)],
+        "id int, name string, amt decimal(10,2), d date, flag boolean, "
+        "x double").coalesce(1)
+    path = str(tmp_path / "golden.sql")
+    write_sql_dump(df, "t", ["id"], path, rows_per_insert=2)
+    cols = "INSERT INTO `t` (`id`, `name`, `amt`, `d`, `flag`, `x`) VALUES\n"
+    with open(path, encoding="utf-8") as fh:
+        assert fh.read() == (
+            "DROP TABLE IF EXISTS `t`;\n"
+            "CREATE TABLE `t` (\n"
+            "  `id` int(11) NOT NULL,\n"
+            "  `name` varchar(255) DEFAULT NULL,\n"
+            "  `amt` decimal(10,2) DEFAULT NULL,\n"
+            "  `d` date DEFAULT NULL,\n"
+            "  `flag` tinyint(1) DEFAULT NULL,\n"
+            "  `x` double DEFAULT NULL,\n"
+            "  PRIMARY KEY (`id`)\n"
+            ") ENGINE=InnoDB DEFAULT CHARSET=utf8mb4;\n"
+            "\n"
+            + cols +
+            "(1, 'o''neil', 10.50, '2024-02-29 00:00:00.000000', TRUE, 1.5),\n"
+            "(2, NULL, NULL, NULL, NULL, NULL);\n"
+            + cols +
+            "(3, 'back\\slash', -0.01, '1999-12-31 00:00:00.000000', FALSE, "
+            "-2.0);\n")
+    assert sorted(os.listdir(tmp_path)) == ["golden.sql"]
 
 
 def test_get_dump_schemas(spark, tmp_path):
@@ -484,15 +521,16 @@ def test_compare_sql_files_missing_input(spark, tmp_path):
         str(tmp_path / "out.sql"), verbose=False) is None
 
 
-# --- JVM tokenizer parity ----------------------------------------------------
+# --- tokenizer exactness ----------------------------------------------------
 
-def _adversarial_dump(seed: int, n_stmts: int = 60) -> tuple[str, int]:
-    """Render a 3-col dump of hostile values; returns (text, n_good_rows).
+def _adversarial_statements(seed: int, n_stmts: int = 60
+                            ) -> list[tuple[str, list[list[str | None]]]]:
+    """Render VALUES clauses of 3-col rows of hostile values; returns
+    ``(clause, rows)`` pairs, ``rows`` being the values each clause encodes.
 
     Mixes both SQL escape families ('' doubling and backslash escapes),
     both quote chars, named escapes, NULL case variants, empty and padded
-    values, and occasional malformed statements that must route to the
-    Python scanner identically under either tokenizer.
+    values, and occasional malformed tails that force the char scanner.
     """
     import random
 
@@ -519,7 +557,7 @@ def _adversarial_dump(seed: int, n_stmts: int = 60) -> tuple[str, int]:
                  .replace("\n", "\\n").replace("\t", "\\t"))
         return q + body + q
 
-    stmts, n_rows = [], 0
+    out = []
     for _ in range(n_stmts):
         rows = []
         for _ in range(rng.randrange(1, 4)):
@@ -533,43 +571,27 @@ def _adversarial_dump(seed: int, n_stmts: int = 60) -> tuple[str, int]:
             "(" + ",".join(render(v) for v in row) + ")" for row in rows)
         if rng.random() < 0.1:
             clause += " 'stray"  # malformed tail -> scanner fallback path
-        else:
-            n_rows += len(rows)
-        stmts.append(f"INSERT INTO adv VALUES {clause};")
-    ddl = ("CREATE TABLE adv (a text, b text, c text, "
-           "PRIMARY KEY (a));")
-    return ddl + "\n" + "\n".join(stmts) + "\n", n_rows
+        out.append((clause, rows))
+    return out
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
-def test_jvm_tokenizer_matches_python_on_adversarial_dump(spark, tmp_path, seed):
-    """The all-JVM tokenizer (regexp row/value split + sentinel unescape +
-    scanner fallback routing) must agree exactly with the Python
-    tokenizer on hostile data — both escape families, both quote chars,
-    parens/commas/semicolons in strings, NULL variants, malformed
-    statements."""
-    text, _ = _adversarial_dump(seed)
-    path = _write(tmp_path, f"adv{seed}.sql", text)
-    out = {}
-    for tok in ("python", "jvm"):
-        # the generator plants deliberately-malformed "'stray" tails to
-        # force the scanner fallback; the default unterminated-string
-        # guard would (correctly) refuse those, so opt out here.
-        tables = read_sql_dump(spark, path, typed=False, dedup_pk=False,
-                               tokenizer=tok, on_split_string="ignore")
-        out[tok] = sorted(
-            (tuple(r) for r in tables["adv"].collect()),
-            key=lambda t: tuple((v is None, v) for v in t))
-    assert out["jvm"] == out["python"]
-    assert len(out["jvm"]) > 50  # the generator produced real rows
+def test_tokenizer_exact_on_adversarial_statements(seed):
+    """``tokenize_insert_rows`` recovers exactly the rows each hostile
+    VALUES clause encodes — both escape families, both quote chars,
+    parens/commas/semicolons/newlines in strings, NULL variants, and a
+    stray text tail outside the row parens (scanner path)."""
+    stmts = _adversarial_statements(seed)
+    assert sum(len(rows) for _, rows in stmts) > 100
+    assert any(clause.endswith("'stray") for clause, _ in stmts)
+    for clause, rows in stmts:
+        assert tokenize_insert_rows(clause) == rows, clause
 
 
-def test_hex_and_introducer_dump_golden_both_tokenizers(spark, tmp_path):
+def test_hex_and_introducer_dump_golden(spark, tmp_path):
     """End-to-end golden for mysqldump literal breadth: a conforming
     dump mixing hex literals, charset introducers, X'…' and b'…'
-    ingests to identical typed rows through BOTH tokenizer paths (the
-    JVM fast shape must route hex/introducer statements to the Python
-    scanner — its own grammar never sees them)."""
+    ingests to the expected typed rows."""
     dump = (
         "CREATE TABLE t (id int, payload text, tag text, bits int, "
         "PRIMARY KEY (id));\n"
@@ -578,29 +600,26 @@ def test_hex_and_introducer_dump_golden_both_tokenizers(spark, tmp_path):
         "INSERT INTO t VALUES (3,'quoted',NULL,0x33);\n"
     )
     path = _write(tmp_path, "hex.sql", dump)
-    expect = {1: ("hello", "wörld", 5), 2: ("✓", "plain", 12),
-              3: ("quoted", None, 3)}
-    for tok in ("python", "jvm"):
-        rows = {r.id: (r.payload, r.tag, r.bits)
-                for r in read_sql_dump(spark, path, tokenizer=tok)["t"]
-                .collect()}
-        assert rows == expect, tok
+    rows = {r.id: (r.payload, r.tag, r.bits)
+            for r in read_sql_dump(spark, path)["t"].collect()}
+    assert rows == {1: ("hello", "wörld", 5), 2: ("✓", "plain", 12),
+                    3: ("quoted", None, 3)}
 
 
-def test_jvm_tokenizer_named_escapes_and_sentinel(spark, tmp_path):
-    """Named escapes map like the scanner (\\n \\t \\r \\0); data containing
-    the private-use sentinel char routes to the scanner and round-trips."""
-    sent = "\ue000"
+def test_named_escapes_and_private_use_char(spark, tmp_path):
+    """Named escapes map like the scanner (\\n \\t \\r \\0, unknown
+    escapes keep the char); a private-use char in data round-trips."""
+    pua = "\ue000"
     dump = (
         "CREATE TABLE t (a text, b text, PRIMARY KEY (a));\n"
         "INSERT INTO t VALUES ('k1', 'a\\nb\\tc\\rd\\0e\\zf');\n"
-        f"INSERT INTO t VALUES ('k2', 'has {sent} sentinel');\n"
+        f"INSERT INTO t VALUES ('k2', 'has {pua} marker');\n"
     )
-    path = _write(tmp_path, "sent.sql", dump)
+    path = _write(tmp_path, "pua.sql", dump)
     rows = {r.a: r.b for r in
             read_sql_dump(spark, path, typed=False, dedup_pk=False)["t"].collect()}
     assert rows["k1"] == "a\nb\tc\rd\x00ezf"  # \z -> literal z
-    assert rows["k2"] == f"has {sent} sentinel"
+    assert rows["k2"] == f"has {pua} marker"
 
 
 def test_python_tokenizer_all_rows_arity_filtered(spark, tmp_path):
@@ -612,8 +631,31 @@ def test_python_tokenizer_all_rows_arity_filtered(spark, tmp_path):
         "INSERT INTO t VALUES ('only', 'two', 'but-three-values');\n"
     )
     path = _write(tmp_path, "empty.sql", dump)
-    for tok in ("python", "jvm"):
-        assert read_sql_dump(spark, path, tokenizer=tok)["t"].count() == 0
+    assert read_sql_dump(spark, path)["t"].count() == 0
+
+
+def test_row_order_key_past_a_million_rows_per_statement():
+    """Last-wins row order holds for a statement of more than 1e6 rows:
+    a PK re-inserted by the NEXT statement must sort after every row of
+    the long one (a ``lo * 1e6 + row`` key would put the long
+    statement's late rows after the next statement's). Pure Python."""
+    import pandas as pd
+
+    from database_syncer_spark.sources.dump import (
+        _parse_insert_batches, parse_create_table)
+
+    schema = parse_create_table("CREATE TABLE t (a int, PRIMARY KEY (a))")
+    n = 1_000_002
+    batch = pd.DataFrame({
+        "stmt": ["INSERT INTO t VALUES " + ",".join(["(1)"] * n),
+                 "INSERT INTO t VALUES (1)"],
+        "seq_hi": [0, 0],
+        "seq_lo": [0, 1],
+    })
+    out = pd.concat(_parse_insert_batches({"t": schema})(iter([batch])))
+    assert len(out) == n + 1
+    assert out["seq_lo"].is_unique
+    assert out["seq_lo"].iloc[-1] == out["seq_lo"].max()
 
 
 def test_table_projection_pushdown(spark, tmp_path):

@@ -1075,6 +1075,7 @@ def compare_sql_files(spark: SparkSession, production_file: str,
         catalog, {t: s.create_stmt + ";" for t, s in prod_schemas.items()})
     common = catalog["common"]
     stats: dict[str, dict[str, int]] = {name: {} for name in common}
+    cells: list[tuple[str, str, str]] = []
     if common:
         combined = reduce(DataFrame.unionByName, [
             statements[name].selectExpr(
@@ -1091,17 +1092,19 @@ def compare_sql_files(spark: SparkSession, production_file: str,
         ordered = combined.orderBy("section", "__tbl", "statement").observe(
             observed,
             F.expr(f"array({', '.join(e for _, _, e in cells)}) AS n"))
-        write_script(
-            ordered, output_file,
-            header="-- sync script: apply to backup to reach production state",
-            ddl=ddl,
-        )
+    else:
+        # a header (+ DDL) only script, so a stale one from an earlier
+        # run never survives at ``output_file``
+        ordered = spark.createDataFrame([], "statement string")
+    write_script(
+        ordered, output_file,
+        header="-- sync script: apply to backup to reach production state",
+        ddl=ddl,
+    )
+    if cells:
         for (name, ct, _), n in zip(cells, observed.get["n"]):
             if n:
                 stats[name][ct] = n
-    elif ddl:
-        with open(output_file, "w", encoding="utf-8") as fh:
-            fh.write("\n".join(["-- sync script"] + ddl) + "\n")
 
     if verbose:
         print(f"Tables to create: {len(catalog['create'])}, "

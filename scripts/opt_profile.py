@@ -87,8 +87,12 @@ def main() -> None:
             # clearJobGroup: setJobGroup(None, None) leaned on
             # undocumented None pass-through in a str-typed API and
             # would crash mid-run if a future PySpark validates args
-            # (ADVICE r12).
-            sc._jsc.clearJobGroup()
+            # (ADVICE r12). ``_jsc`` is private, so without it unset the
+            # group through the public local-property API instead.
+            if hasattr(sc, "_jsc"):
+                sc._jsc.clearJobGroup()
+            else:
+                sc.setLocalProperty("spark.jobGroup.id", None)
             st = sc.statusTracker()
             job_ids = st.getJobIdsForGroup(group)
             n_stages = n_tasks = 0

@@ -521,6 +521,34 @@ def test_compare_sql_files_missing_input(spark, tmp_path):
         str(tmp_path / "out.sql"), verbose=False) is None
 
 
+@pytest.mark.parametrize("case", ["no_tables", "ddl_only"])
+def test_compare_sql_files_without_common_table_replaces_script(
+        spark, tmp_path, capsys, case):
+    """With no table in both dumps the sync still publishes its script
+    (the usual header, plus any DDL) through the one atomic writer, so a
+    stale script from an earlier run never survives at ``output_file``."""
+    from database_syncer_spark import compare_sql_files
+
+    header = "-- sync script: apply to backup to reach production state"
+    prod = "-- MySQL dump\nSET NAMES utf8mb4;\n"
+    want = [header]
+    if case == "ddl_only":
+        prod += USERS_DDL
+        want += ["DROP TABLE IF EXISTS `users`;", "CREATE TABLE `users` ("]
+    p = _write(tmp_path, "prod.sql", prod)
+    b = _write(tmp_path, "backup.sql", "-- MySQL dump\nSET NAMES utf8mb4;\n")
+    out = tmp_path / "out.sql"
+    out.write_text("stale\n")
+    result = compare_sql_files(spark, p, b, str(out))
+    assert result["table_stats"] == {}
+    lines = out.read_text().splitlines()
+    assert "stale" not in lines
+    assert lines[:len(want)] == want
+    if case == "no_tables":
+        assert lines == [header]
+    assert f"Sync script written: {out}" in capsys.readouterr().out
+
+
 # --- tokenizer exactness ----------------------------------------------------
 
 def _adversarial_statements(seed: int, n_stmts: int = 60

@@ -723,3 +723,44 @@ def test_compare_sql_files_sorts_once(spark, tmp_path, monkeypatch):
     [plan] = plans
     assert "Union" in plan
     assert len(re.findall(r"Exchange rangepartitioning", plan)) == 1, plan
+
+
+def _compiles_on_rerun(spark, job) -> int:
+    """Janino compiles during the second of two back-to-back runs of
+    ``job``. AQE is off for the two runs: it re-plans from runtime stats
+    and numbers codegen stages in stage-completion order, so under AQE
+    a rerun may emit a few new class bodies; with the plan fixed every
+    compile on the rerun is a codegen-cache miss."""
+    counter = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+               .METRIC_COMPILATION_TIME())
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        job()
+        before = counter.getCount()
+        job()
+        return counter.getCount() - before
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def test_corpus_curate_rerun_compiles_nothing(spark, sf_dir):
+    """Spark's codegen class cache (session.py) holds a whole
+    ``corpus_curate`` working set: a rerun reuses every generated class
+    instead of recompiling the ones an undersized cache evicted."""
+    from database_syncer_spark.queries.pipeline import corpus_curate
+
+    assert _compiles_on_rerun(
+        spark, lambda: corpus_curate(spark, sf_dir).collect()) == 0
+
+
+def test_compare_sql_files_rerun_compiles_nothing(spark, sf_dir, tmp_path):
+    """The same guard for the dump sync on the fixture dump pair."""
+    from database_syncer_spark.queries.dump import (_orders_backup_dump,
+                                                    _orders_dump)
+    from database_syncer_spark.sources.dump import compare_sql_files
+
+    prod, backup = _orders_dump(spark, sf_dir), _orders_backup_dump(
+        spark, sf_dir)
+    assert _compiles_on_rerun(spark, lambda: compare_sql_files(
+        spark, prod, backup, str(tmp_path / "out.sql"), verbose=False)) == 0

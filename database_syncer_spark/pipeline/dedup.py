@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from database_syncer_spark.pipeline import vector as V
+
 # --- exact -------------------------------------------------------------------
 
 def exact_dedup(documents: DataFrame) -> DataFrame:
@@ -884,74 +886,6 @@ def _lsh_block_planes(corpus_n: int) -> int:
     return planes
 
 
-def _list_matrix(col, width: int):
-    """An Arrow ``list<...>`` column whose rows all hold ``width``
-    non-NULL values, as an n×width numpy matrix viewing the child
-    buffer in place (no per-row numpy objects). Anything else raises:
-    a ragged or NULL row would silently shift every later row."""
-    import pyarrow.compute as pc
-
-    flat = col.flatten()
-    if (col.null_count or flat.null_count
-            or pc.any(pc.not_equal(pc.list_value_length(col),
-                                   width)).as_py()):
-        raise ValueError(
-            f"expected non-NULL rows of exactly {width} non-NULL values")
-    return flat.to_numpy().reshape(len(col), width)
-
-
-def _lsh_bucket_vectors(embeddings: DataFrame, n_planes: int, n_tables: int,
-                        dim: int) -> DataFrame:
-    """(vec_id, buckets array<long>[n_tables], embedding) — every band's
-    bucket id in ONE row per vector, with the embedding carried through
-    for the verify kernel; bucket t is that band's n_planes sign bits
-    against similarity.py's deterministic md5 hyperplanes. One
-    ``mapInArrow`` pass: the list<float> column is viewed as an n×dim
-    matrix (:func:`_list_matrix`), then for each plane
-    (X * p).sum(axis=1) — the reduced axis has fixed length dim, so
-    numpy's pairwise summation gives every row the SAME ieee result
-    whatever the batch size (partition-count-independent buckets)."""
-    import numpy as np
-    import pyarrow as pa
-
-    from database_syncer_spark.pipeline import similarity as S
-
-    flat = np.array(
-        [row for t in range(n_tables)
-         for row in S._hyperplanes(n_planes, dim, t)])  # (T*r, dim)
-    weights = (1 << np.arange(n_planes, dtype=np.int64))
-
-    def gen(batches):
-        for b in batches:
-            n = b.num_rows
-            if not n:
-                continue
-            X = _list_matrix(b.column("embedding"), dim).astype(np.float64)
-            bits = np.empty((n, len(flat)), dtype=np.int64)
-            for j in range(len(flat)):
-                bits[:, j] = (X * flat[j]).sum(axis=1) > 0
-            buckets = bits.reshape(n, n_tables, n_planes) @ weights
-            yield pa.RecordBatch.from_arrays(
-                [b.column("vec_id"),
-                 pa.ListArray.from_arrays(
-                     pa.array(np.arange(0, n * n_tables + 1, n_tables,
-                                        dtype=np.int32)),
-                     pa.array(buckets.ravel())),
-                 b.column("embedding")],
-                ["vec_id", "buckets", "embedding"])
-
-    return embeddings.select("vec_id", "embedding").mapInArrow(
-        gen, "vec_id long, buckets array<long>, embedding array<float>")
-
-
-def _lsh_band_rows(bucketed: DataFrame) -> DataFrame:
-    """Explode a bucket-vector frame into one row per vector and band:
-    its columns plus (tbl, bucket). The Generate carries only the
-    n_tables-long array — no unrolled kernels, no Janino risk."""
-    return bucketed.select(
-        "*", F.posexplode("buckets").alias("tbl", "bucket"))
-
-
 def _first_collision(a: str, b: str, n_tables: int) -> Column:
     """True iff this band is the FIRST where sides `a` and `b` share a
     bucket: for every earlier band s < tbl, a.buckets[s] != b.buckets[s].
@@ -1043,28 +977,25 @@ def _cosine_verify(keys: list[str], dim: int, threshold: float,
     sorted by (*keys, vec_id). Emits (vec_a, vec_b, raw cosine) for
     vec_a < vec_b and raw cosine >= threshold - 1e-6; the caller rounds
     and applies the exact threshold in Spark. The cosine is
-    ``dot / (nrm_a * nrm_b)`` through :func:`vector.tree_sum`, so every
-    value equals the SQL kernel's bit for bit. With ``n_tables`` the
-    rows are LSH band rows and a pair is scored only in its FIRST
-    colliding band (:func:`_first_collision`'s rule, as a mask over the
+    :func:`vector.cosines`, the arithmetic of every other cosine in the
+    package. With ``n_tables`` the rows are LSH band rows and a pair is
+    scored only in its FIRST colliding band (:func:`_first_collision`'s rule, as a mask over the
     carried bucket vectors). A block still open at a batch's end is
     carried into the next batch, so Arrow batch boundaries never split
     or drop pairs."""
     import numpy as np
     import pyarrow as pa
 
-    from database_syncer_spark.pipeline.vector import tree_sum
-
     tile = _PAIR_TILE  # read on the driver: the kernel ships as a closure
 
     def arrays(b):
         cols = {k: b.column(k).to_numpy(zero_copy_only=False) for k in keys}
         cols["vec_id"] = b.column("vec_id").to_numpy()
-        x = _list_matrix(b.column("embedding"), dim).astype(np.float64)
-        cols["nrm"] = np.sqrt(tree_sum(x * x))
+        x = V._list_matrix(b.column("embedding"), dim).astype(np.float64)
+        cols["nrm"] = V.row_norms(x)
         cols["x"] = x
         if n_tables is not None:
-            cols["buckets"] = _list_matrix(b.column("buckets"), n_tables)
+            cols["buckets"] = V._list_matrix(b.column("buckets"), n_tables)
         return cols
 
     def block_starts(cols):
@@ -1091,8 +1022,7 @@ def _cosine_verify(keys: list[str], dim: int, threshold: float,
                 keep &= ~((bk[left] == bk[right]) & earlier).any(axis=1)
             left, right = left[keep], right[keep]
             with np.errstate(divide="ignore", invalid="ignore"):
-                cos = (tree_sum(x[left] * x[right])
-                       / (nrm[left] * nrm[right]))
+                cos = V.cosines(x[left], x[right], nrm[left], nrm[right])
             hit = cos >= threshold - 1e-6
             if hit.any():
                 yield pa.RecordBatch.from_arrays(
@@ -1127,7 +1057,7 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.5,
                        corpus_n: int | None = None,
                        block_col: str | None = None) -> DataFrame:
     """Vector near-dup pairs (round-6dp cosine >= threshold), blocked by
-    random-hyperplane LSH buckets (similarity.py's deterministic md5
+    random-hyperplane LSH buckets (vector.py's deterministic md5
     planes) instead of a data column: candidate volume tracks the true
     near-dup pair count plus an N²/2**n_planes-per-band noise term, not
     the quadratic within-block blowup a label/category block gives
@@ -1160,10 +1090,7 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.5,
     embeddings onto each candidate pair, as the skinny band self-join
     and its two re-fetch joins did; at scale candidate pairs number
     about n_tables·N or more (the noise term alone is ~N per band), so
-    that fetch moved at least as many embedding copies. The verify also
-    no longer runs the unrolled 64-term SQL cosine, whose 39,647-byte
-    generated method is past HotSpot's 8,000-byte JIT limit and so ran
-    in the bytecode interpreter.
+    that fetch moved at least as many embedding copies.
 
     .. versionchanged:: r7
        Defaults changed semantics: ``threshold`` 0.9 -> 0.5 and
@@ -1182,16 +1109,13 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.5,
         keys = ["tbl", "bucket"]
         n_planes, n_tables, corpus_n = _lsh_params(
             embeddings, n_planes, n_tables, corpus_n)
-        # All n_tables band buckets in ONE Arrow-batched pass: unrolled
-        # band kernels either blow Janino's 64 KB method limit inside
-        # one Generate (the r6 sim_lsh_ann defect) or ship a ~4k-term
-        # interpreted tree in every task binary (measured OOM at task
-        # deserialization on a 500-row fixture). Explicit-count
+        # All n_tables band buckets in ONE Arrow-batched pass (the
+        # shared bucket kernel, vector._lsh_bucket_vectors). Explicit-count
         # repartition: user-specified counts survive AQE coalescing, so
         # the verify runs at collision-volume-sized parallelism instead
         # of the scan's split count (guide §2.5; OPTIMIZATION_r12.md).
-        rows = _lsh_band_rows(
-            _lsh_bucket_vectors(embeddings, n_planes, n_tables, dim)
+        rows = V._lsh_band_rows(
+            V._lsh_bucket_vectors(embeddings, n_planes, n_tables, dim)
         ).repartition(
             _probe_partitions(embeddings, n_planes, n_tables, corpus_n),
             "tbl", "bucket")
@@ -1221,18 +1145,16 @@ def embedding_incremental_near_dup(batch: DataFrame, corpus: DataFrame,
     are blocking-independent wherever blocking recall is total (the
     fixture regime — pinned in tests) and the exhaustive batch×corpus
     SQL is a complete oracle."""
-    from database_syncer_spark.pipeline import vector as V
-
     n_planes, n_tables, corpus_n = _lsh_params(
         corpus, n_planes, n_tables, corpus_n)
     # First-collision emit instead of pair DISTINCT, the rule
-    # embedding_near_dup's verify kernel applies: dedup is a codegen'd
+    # embedding_near_dup's verify kernel applies: dedup is a
     # filter over the carried bucket vectors, never a candidate-volume-
     # sized exchange. The band rows stay embedding-free (at rest this
     # corpus side is a band index; carrying embeddings would multiply
     # it by n_tables).
-    bb = _lsh_band_rows(
-        _lsh_bucket_vectors(batch, n_planes, n_tables, dim)
+    bb = V._lsh_band_rows(
+        V._lsh_bucket_vectors(batch, n_planes, n_tables, dim)
         .drop("embedding")).alias("a")
     # Corpus side is the join's probe side (the batch side broadcasts):
     # same explicit-count repartition as embedding_near_dup so the
@@ -1240,8 +1162,8 @@ def embedding_incremental_near_dup(batch: DataFrame, corpus: DataFrame,
     # scan's 1-4 splits (guide §2.5). The corpus²-based estimate
     # overstates a batch probe's collision volume — the floor/cap
     # clamp keeps that harmless.
-    bc = (_lsh_band_rows(
-        _lsh_bucket_vectors(corpus, n_planes, n_tables, dim)
+    bc = (V._lsh_band_rows(
+        V._lsh_bucket_vectors(corpus, n_planes, n_tables, dim)
         .drop("embedding"))
         .repartition(
             _probe_partitions(corpus, n_planes, n_tables, corpus_n),
@@ -1250,23 +1172,18 @@ def embedding_incremental_near_dup(batch: DataFrame, corpus: DataFrame,
     cand = (bb.join(bc, ["tbl", "bucket"])
             .where(_first_collision("a", "b", n_tables))
             .select("vec_id", "corpus_id"))
-    # Fetch embeddings by joining cand with the full (vec_id, embedding,
-    # nrm) projections directly. An earlier form pre-pruned each side
-    # with a semi-join on cand's distinct ids, which referenced the
-    # UNPERSISTED cand subtree three times (hits + two id sets) and
-    # re-ran the whole candidate join per reference (r7 review
-    # finding); cand is consumed exactly once here.
-    eb = batch.select(
-        "vec_id", "embedding", V.norm("embedding", dim).alias("nrm"))
-    ec = corpus.select(
-        F.col("vec_id").alias("corpus_id"),
-        F.col("embedding").alias("c_embedding"),
-        V.norm("embedding", dim).alias("c_nrm"))
-    cos = F.round(
-        V.dot("embedding", "c_embedding", dim)
-        / (F.col("nrm") * F.col("c_nrm")), 6)
-    hits = (cand.join(eb, "vec_id").join(ec, "corpus_id")
-            .select("vec_id", cos.alias("cosine"))
+    # Fetch embeddings by joining cand with the full (vec_id, embedding)
+    # projections directly. An earlier form pre-pruned each side with a
+    # semi-join on cand's distinct ids, which referenced the UNPERSISTED
+    # cand subtree three times (hits + two id sets) and re-ran the whole
+    # candidate join per reference (r7 review finding); cand is consumed
+    # exactly once here.
+    ec = corpus.select(F.col("vec_id").alias("corpus_id"),
+                       F.col("embedding").alias("c_embedding"))
+    pairs = (cand.join(batch.select("vec_id", "embedding"), "vec_id")
+             .join(ec, "corpus_id"))
+    hits = (V.cosine(pairs, "embedding", "c_embedding", dim)
+            .select("vec_id", F.round("cosine", 6).alias("cosine"))
             .where(F.col("cosine") >= threshold)
             .groupBy("vec_id")
             .agg(F.count("*").alias("n_dups"),

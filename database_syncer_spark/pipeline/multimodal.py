@@ -997,9 +997,9 @@ def frame_sample(with_payload: DataFrame, frame_bytes: int = 64,
 
 def probe_dim(embeddings: DataFrame, col: str = "embedding") -> int:
     """Embedding dimensionality from one sampled row (one-row driver
-    read — model-state scale, not data scale). The unrolled vector
-    kernels need dim at plan time; probing beats hardcoding because a
-    wrong dim makes non-ANSI GetArrayItem return NULL silently."""
+    read — model-state scale, not data scale). The vector kernels need
+    dim to view a batch as an n×dim matrix; probing beats hardcoding,
+    and a row of another width raises in the kernel."""
     row = embeddings.select(F.size(col).alias("d")).first()
     if row is None or row["d"] is None or row["d"] <= 0:
         raise ValueError(f"cannot probe embedding dim from column {col!r}")
@@ -1009,11 +1009,10 @@ def probe_dim(embeddings: DataFrame, col: str = "embedding") -> int:
 def check_dim(embeddings: DataFrame, col: str = "embedding") -> int:
     """Probe AND validate: returns the corpus dim after one cheap
     aggregate proves every row agrees (min(size) == max(size)). A ragged
-    corpus raises here, at plan-build time, instead of silently NULLing
-    norms downstream — and the validation lives OUTSIDE the hot kernels,
-    whose unrolled expressions stay in whole-stage codegen (a per-row
-    assert_true in the norm projection measured +25% on the sf0.1
-    brute-force scan). One size-only columnar scan, no data movement."""
+    or NULL-bearing corpus raises here, at plan-build time, before any
+    vector kernel runs (the kernels raise too, but only once a task
+    reaches the bad row). One size-only columnar scan, no data
+    movement."""
     return check_dim_count(embeddings, col)[0]
 
 
@@ -1030,8 +1029,7 @@ def check_dim_count(embeddings: DataFrame,
         raise ValueError(f"cannot probe embedding dim from column {col!r}")
     if row["n"] != row["nn"]:
         # min/max(size) skip NULLs, so without this a NULL-bearing corpus
-        # would pass validation yet NULL its norms downstream — the exact
-        # failure class this function exists to prevent.
+        # would pass validation.
         raise ValueError(
             f"column {col!r} has {row['n'] - row['nn']} NULL embedding "
             f"rows (of {row['n']})")
@@ -1045,25 +1043,19 @@ def check_dim_count(embeddings: DataFrame,
 def multimodal_join(documents: DataFrame, embeddings: DataFrame,
                     dim: int | None = None) -> DataFrame:
     """Mixed text + vector + scalar table: documents ⋈ embeddings with
-    array math on the vector column (all built-in exprs). ``dim`` is
-    probed from the data when not given; a per-row ``assert_true`` guard
-    makes ragged embeddings fail loudly instead of yielding NULL norms."""
+    the vector column's width and L2 norm (the :func:`vector.with_norm`
+    kernel). ``dim`` is probed from the data when not given; the kernel
+    raises ``ValueError`` on a NULL embedding or one of another width
+    instead of yielding a wrong norm."""
     from database_syncer_spark.pipeline import vector as V
 
     if dim is None:
         dim = probe_dim(embeddings)
-    emb = F.col("embedding")
-    l2sq = V.norm_sq(emb, dim)
-    dim_ok = F.assert_true(
-        F.size(emb) == dim,
-        F.format_string("embedding dim != %d", F.lit(dim)))
-    return (
-        documents.join(
-            embeddings, documents.doc_id == embeddings.vec_id, "inner")
-        .select(
-            "doc_id", "lang", "label",
-            F.length("text").alias("text_len"),
-            F.when(dim_ok.isNull(), F.size(emb)).alias("dim"),
-            F.round(F.sqrt(l2sq), 6).alias("l2_norm"),
-        )
-    )
+    joined = documents.join(
+        embeddings, documents.doc_id == embeddings.vec_id, "inner")
+    cols = joined.select("doc_id", "lang", "label",
+                         F.length("text").alias("text_len"), "embedding")
+    return V.with_norm(cols, "embedding", dim, "nrm").select(
+        "doc_id", "lang", "label", "text_len",
+        F.size("embedding").alias("dim"),
+        F.round("nrm", 6).alias("l2_norm"))

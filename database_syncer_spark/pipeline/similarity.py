@@ -1,32 +1,36 @@
 """Similarity search over embedding columns (SURVEY.md §2 B11
 sim_topk_cosine / sim_lsh_ann; PAPERS.md top-k similarity corpus).
 
-Two paths:
+Five top-k families, one output schema (query_id, neighbor_id, cosine,
+rank). Every family ends in the same exact re-rank: its candidate
+(query, vector) pairs go through the :func:`vector.cosine` Arrow kernel
+and one round(cosine, 6) + row_number tail (:func:`_topk`).
 
-- brute_force_topk: exact cosine top-k. The query set broadcasts; the
-  corpus streams through one codegen'd pass (unrolled dot product,
-  pipeline/vector.py) and a per-query top-k window. Correct at any scale
-  but O(Q×N) — the baseline and the verifier for the approximate path.
-- lsh_ann_topk: random-hyperplane LSH. Deterministic hyperplanes (hash-
-  seeded, no RNG), bucket ids for corpus and queries, candidates = same
-  bucket in ANY of T tables, exact re-rank of candidates only. At 100 TB
-  the bucket id is also the partitioning key, so a query touches one
-  partition per table instead of the full corpus.
+- brute_force_topk: exact. The query set broadcasts into a cross join
+  with the corpus. Correct at any scale but O(Q×N) — the baseline and
+  the ground truth of :func:`ann_recall`.
+- lsh_ann_topk: random-hyperplane LSH. Deterministic md5 hyperplanes,
+  bucket ids for corpus and queries from the shared bucket kernel
+  (vector._lsh_bucket_vectors), candidates = same bucket in ANY of T
+  tables. At 100 TB the bucket id is also the partitioning key, so a
+  query touches one partition per table instead of the full corpus.
 - ivf_ann_topk: inverted-file (IVF) partitioning. Deterministic seed
-  centroids + one Lloyd refinement (all JVM-side: assignment is an argmax
-  over C dot-product expressions, the per-cell mean is one groupBy with
-  per-dimension F.sum — no explode, no Python). Queries probe their
-  n_probe nearest cells; candidates = corpus rows in those cells; exact
-  re-rank. At 100 TB the cell id is the storage partitioning key
-  (write .partitionBy("cell")), so a probe reads n_probe/n_cells of the
-  corpus instead of all of it. Centroid state is C×dim floats — driver-
-  side model state, broadcast to executors (same shape as MLlib KMeans).
+  centroids + one Lloyd refinement (assignment is an Arrow-batched
+  numpy matmul, the per-cell mean one groupBy with per-dimension
+  F.sum). Queries probe their n_probe nearest cells; candidates =
+  corpus rows in those cells. At 100 TB the cell id is the storage
+  partitioning key (write .partitionBy("cell")), so a probe reads
+  n_probe/n_cells of the corpus. Centroid state is C×dim floats —
+  driver-side model state, broadcast to executors (same shape as MLlib
+  KMeans).
+- pq_ann_topk: product quantization. The corpus is stored as m small
+  codes per vector; an asymmetric-distance scan (:func:`_adc_scan`)
+  keeps the top refine·k codes per query for the exact re-rank.
+- ivfpq_ann_topk: IVF-PQ, the same ADC scan restricted to each query's
+  probed cells.
 """
 
 from __future__ import annotations
-
-import hashlib
-import struct
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
@@ -38,31 +42,42 @@ def brute_force_topk(embeddings: DataFrame, n_queries: int = 10,
                      k: int = 10, dim: int = 64) -> DataFrame:
     """Exact top-k cosine neighbors for the first ``n_queries`` vectors.
 
-    Rank on round(cosine, 6) with vec_id tie-break so ordering is stable
-    across engines and shuffle orders. The dot/norm expressions are
-    unrolled over ``dim`` (pipeline/vector.py) so the whole scan stays in
-    one whole-stage-codegen span.
+    The query rows broadcast into a cross join with the corpus, and
+    :func:`vector.cosine` scores every (query, vector) pair in an Arrow
+    kernel. Rank on round(cosine, 6) with vec_id tie-break so ordering
+    is stable across engines and shuffle orders.
 
-    Callers should pass ``dim=multimodal.check_dim(df)`` rather than
-    hardcode: non-ANSI GetArrayItem past the end returns NULL silently,
-    so a wrong or ragged dim would otherwise produce NULL norms and
-    quietly drop rows from every top-k. Validation deliberately lives in
-    check_dim (one size-only aggregate), NOT as a per-row assert in this
-    projection — an assert_true here measured +25% by dragging the scan
-    out of whole-stage codegen."""
-    e = embeddings.select(
-        "vec_id", "embedding", V.norm("embedding", dim).alias("nrm"))
+    ``dim`` is the width of every embedding; pass
+    ``multimodal.check_dim(df)`` rather than hardcode it. The kernel
+    views each batch as an n×dim matrix, so a NULL row or a row of any
+    other length raises ``ValueError`` there."""
+    e = embeddings.select("vec_id", "embedding")
     q = (e.where(F.col("vec_id") < n_queries)
          .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("q_emb"),
-                 F.col("nrm").alias("q_nrm")))
-    pairs = F.broadcast(q).crossJoin(e).where(F.col("vec_id") != F.col("query_id"))
-    cos = F.round(V.dot("q_emb", "embedding", dim) / (F.col("q_nrm") * F.col("nrm")), 6)
+                 F.col("embedding").alias("q_emb")))
+    pairs = (F.broadcast(q).crossJoin(e)
+             .where(F.col("vec_id") != F.col("query_id")))
+    return _topk(_pair_cosines(pairs, dim), k)
+
+
+def _pair_cosines(pairs: DataFrame, dim: int) -> DataFrame:
+    """(query_id, neighbor_id, raw cosine) of (query_id, vec_id, q_emb,
+    embedding) candidate pairs, through the :func:`vector.cosine`
+    kernel."""
+    return V.cosine(
+        pairs.select("query_id", F.col("vec_id").alias("neighbor_id"),
+                     "q_emb", "embedding"),
+        "q_emb", "embedding", dim)
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The tail every top-k path shares: round the cosine to 6 dp and
+    keep each query's k best by (cosine desc, neighbor_id asc), with
+    their rank."""
     w = W.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id"))
     return (
-        pairs.select("query_id", F.col("vec_id").alias("neighbor_id"),
-                     cos.alias("cosine"))
+        scored.withColumn("cosine", F.round("cosine", 6))
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
     )
@@ -109,28 +124,12 @@ def ann_recall(embeddings: DataFrame, ann: DataFrame, n_queries: int = 10,
     )
 
 
-def _hyperplanes(n_planes: int, dim: int, table: int) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes from md5 — no RNG state,
-    same planes on every executor and every run."""
-    planes = []
-    for p in range(n_planes):
-        row = []
-        for d in range(dim):
-            h = hashlib.md5(f"dss-lsh:{table}:{p}:{d}".encode()).digest()
-            (u,) = struct.unpack("<Q", h[:8])
-            row.append((u / 2**63) - 1.0)  # uniform [-1, 1)
-        planes.append(row)
-    return planes
-
-
-def _bucket_expr(planes: list[list[float]]):
-    """Bucket id = sign bits of the plane projections (constant-folded,
-    codegen'd dot products — no array literals, no lambdas)."""
-    bucket = F.lit(0)
-    for p, row in enumerate(planes):
-        proj = V.dot_lit("embedding", row)
-        bucket = bucket + F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return bucket
+def _lsh_rows(embeddings: DataFrame, n_planes: int, n_tables: int,
+              dim: int) -> DataFrame:
+    """(vec_id, embedding, tbl, bucket): one row per vector and LSH
+    table, from the shared bucket kernel (vector._lsh_bucket_vectors)."""
+    return V._lsh_band_rows(V._lsh_bucket_vectors(
+        embeddings, n_planes, n_tables, dim)).drop("buckets")
 
 
 def build_lsh_index(embeddings: DataFrame, n_planes: int = 4,
@@ -140,21 +139,10 @@ def build_lsh_index(embeddings: DataFrame, n_planes: int = 4,
     (tbl, bucket). Pass the result as ``index=`` to :func:`lsh_ann_topk`
     to time/serve queries without re-bucketing the corpus per call
     (persist it first to actually pin the at-rest state)."""
-    e = embeddings.select("vec_id", "embedding",
-                          V.norm("embedding", dim).alias("nrm"))
-    per_table = []
-    for t in range(n_tables):
-        bucket = _bucket_expr(_hyperplanes(n_planes, dim, t))
-        per_table.append(
-            e.select("vec_id", "embedding", "nrm",
-                     F.lit(t).alias("tbl"), bucket.alias("bucket")))
-    bucketed = per_table[0]
-    for p in per_table[1:]:
-        bucketed = bucketed.unionByName(p)
     # carry the build params: serving must bucket queries with the SAME
     # planes the corpus was bucketed with, whatever the caller passes
-    return {"bucketed": bucketed, "n_planes": n_planes,
-            "n_tables": n_tables, "dim": dim}
+    return {"bucketed": _lsh_rows(embeddings, n_planes, n_tables, dim),
+            "n_planes": n_planes, "n_tables": n_tables, "dim": dim}
 
 
 def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
@@ -170,7 +158,6 @@ def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
     if index is None:
         index = build_lsh_index(embeddings, n_planes=n_planes,
                                 n_tables=n_tables, dim=dim)
-    bucketed = index["bucketed"]
     # serve with the params the index was BUILT with (query buckets must
     # come from the same hyperplanes as the corpus buckets)
     n_planes = index.get("n_planes", n_planes)
@@ -182,52 +169,21 @@ def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
     # prebuilt index, drawing queries from index["bucketed"] would
     # silently serve the wrong query set whenever the caller passes a
     # different embeddings frame (r4 review).
-    # Per-table select + union, the same shape as the corpus side in
-    # build_lsh_index — NOT one explode(array(struct(bucket_0, bucket_1,
-    # ...))): that Generate inlines every table's n_planes×dim unrolled
-    # dot products into a single generate_doConsume method, which blows
-    # Janino's 64 KB method limit and silently drops the whole stage to
-    # interpreted execution (the r5 bench's 8 "ERROR CodeGenerator:
-    # Failed to compile" lines — root cause "Code grows beyond 64 KB",
-    # pinned by tests/test_plans.py's codegen-fallback canary). The
-    # union scans the FILTERED query rows n_tables times — O(Q·T), never
-    # a corpus pass — and each branch's projection stays well inside one
-    # codegen unit.
-    q_base = (embeddings.where(F.col("vec_id") < n_queries)
-              .select(F.col("vec_id").alias("query_id"),
-                      F.col("embedding"),
-                      V.norm("embedding", dim).alias("q_nrm")))
-    per_table_q = []
-    for t in range(n_tables):
-        bucket = _bucket_expr(_hyperplanes(n_planes, dim, t))
-        per_table_q.append(
-            q_base.select("query_id", "embedding", "q_nrm",
-                          F.lit(t).alias("tbl"), bucket.alias("bucket")))
-    q = per_table_q[0]
-    for p in per_table_q[1:]:
-        q = q.unionByName(p)
-    q = q.withColumnRenamed("embedding", "q_emb")
-    cos = F.round(V.dot("q_emb", "embedding", dim) / (F.col("q_nrm") * F.col("nrm")), 6)
-    cand = (
-        # Q·n_tables rows vs the corpus: broadcast the query side so the
-        # bucketed corpus is never shuffled (at rest it's partitioned by
-        # (tbl, bucket); the broadcast probe preserves that layout).
-        # Cosine is computed BEFORE the multi-table dedup so the dedup
-        # Exchange carries three scalars per row, never the embedding
-        # arrays (duplicate pairs score identically, so which survives
-        # is value-irrelevant).
-        F.broadcast(q).join(bucketed, ["tbl", "bucket"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                cos.alias("cosine"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    q = (_lsh_rows(embeddings.where(F.col("vec_id") < n_queries),
+                   n_planes, n_tables, dim)
+         .select(F.col("vec_id").alias("query_id"),
+                 F.col("embedding").alias("q_emb"), "tbl", "bucket"))
+    # Q·n_tables rows vs the corpus: broadcast the query side so the
+    # bucketed corpus is never shuffled (at rest it's partitioned by
+    # (tbl, bucket); the broadcast probe preserves that layout). Cosine
+    # is computed BEFORE the multi-table dedup so the dedup Exchange
+    # carries three scalars per row, never the embedding arrays
+    # (duplicate pairs score identically, so which survives is
+    # value-irrelevant).
+    cand = (F.broadcast(q).join(index["bucketed"], ["tbl", "bucket"])
+            .where(F.col("vec_id") != F.col("query_id")))
+    return _topk(_pair_cosines(cand, dim)
+                 .dropDuplicates(["query_id", "neighbor_id"]), k)
 
 
 def train_pq_codebooks(embeddings: DataFrame, m: int = 8, dim: int = 64,
@@ -260,11 +216,11 @@ def train_pq_codebooks(embeddings: DataFrame, m: int = 8, dim: int = 64,
                      for r in seeds])           # k_sub × dim
     books = [base[:, s * d_sub:(s + 1) * d_sub].copy() for s in range(m)]
     for _ in range(lloyd_iters):
-        coded = _with_pq_codes(
-            embeddings.select("embedding"), books, m, dim)
-        nrm = V.norm("embedding", dim)
+        coded = V.with_norm(_with_pq_codes(
+            embeddings.select("embedding"), books, m, dim),
+            "embedding", dim, "__nrm")
         pairs = coded.select(
-            "embedding", nrm.alias("__nrm"),
+            "embedding", "__nrm",
             F.posexplode("pq_codes").alias("sub", "code"))
         aggs = [F.sum((F.col("embedding")[F.col("sub") * d_sub + i]
                        / F.col("__nrm")).cast("double")).alias(f"s{i}")
@@ -373,58 +329,74 @@ def pq_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
     Unlike IVF (which prunes WHICH rows are read), PQ compresses WHAT
     is read — at scale the two compose (IVF-PQ: probe cells, scan
     codes, re-rank survivors). The codes scan is one map pass over the
-    code table, and the scorer keeps only each BATCH's top refine·k per
-    query (argpartition), so the window that selects global candidates
-    shuffles ~refine·k·Q·n_batches rows, never the Q×N cross product;
-    the exact re-rank then joins refine·k·Q rows back to the full
-    vectors by vec_id."""
+    code table (:func:`_adc_scan`), and the scorer keeps only each
+    BATCH's top refine·k per query, so the window that selects global
+    candidates shuffles ~refine·k·Q·n_batches rows, never the Q×N cross
+    product; the exact re-rank then joins refine·k·Q rows back to the
+    full vectors by vec_id."""
+    if index is None:
+        index = build_pq_index(embeddings, m=m, dim=dim, k_sub=k_sub)
+    qarr, qmat = _query_matrix(embeddings, n_queries)
+    scored = _adc_scan(index["coded"], qarr, qmat, index["books"], m,
+                       refine * k, None)
+    return _exact_rerank(embeddings, scored, n_queries, k, refine, dim)
+
+
+def _query_matrix(embeddings: DataFrame, n_queries: int):
+    """(query ids, Q×dim L2-normalized query matrix), driver-side."""
+    import numpy as np
+
+    qrows = (embeddings.where(F.col("vec_id") < n_queries)
+             .select("vec_id", "embedding").collect())
+    return (np.asarray([int(r.vec_id) for r in qrows]),
+            np.stack([_normalize([float(v) for v in r.embedding])
+                      for r in qrows]))
+
+
+def _adc_scan(coded: DataFrame, qarr, qmat, books: list, m: int, keep: int,
+              probe_ok) -> DataFrame:
+    """(query_id, vec_id, adc) — the ADC scan of a code table. Each query
+    builds LUT[q, s, j] = dot(q_s, c_sj) (Q·m·k_sub floats, broadcast
+    state) and a code row scores round(Σ_s LUT[q, s, codes[s]], 9); the
+    9-dp round makes the refine·k boundary partition-independent. With
+    ``probe_ok`` (a Q×C bool mask over IVF cells) a row competes only
+    for queries that probe its ``cell``: the at-rest partition pruning,
+    expressed as a mask because the local fixture is one unpartitioned
+    file. Each batch keeps its top ``keep`` rows per query."""
     import numpy as np
     import pandas as pd
 
-    if index is None:
-        index = build_pq_index(embeddings, m=m, dim=dim, k_sub=k_sub)
-    books, coded = index["books"], index["coded"]
+    from pyspark.sql import types as T
 
-    d_sub = dim // m
-    qrows = (embeddings.where(F.col("vec_id") < n_queries)
-             .select("vec_id", "embedding").collect())
-    qids = [int(r.vec_id) for r in qrows]
-    qmat = np.stack([_normalize([float(v) for v in r.embedding])
-                     for r in qrows])            # Q × dim
-    # LUT[q, s, j] = dot(q_s, c_sj) — Q·m·k_sub floats, broadcast state
+    d_sub = qmat.shape[1] // m
     lut = np.stack([
         qmat[:, s * d_sub:(s + 1) * d_sub]
         @ np.asarray(books[s], dtype=np.float64).T
         for s in range(m)], axis=1)              # Q × m × k_sub
-
-    from pyspark.sql import types as T
     out_schema = T.StructType([
         T.StructField("query_id", T.LongType()),
         T.StructField("vec_id", T.LongType()),
         T.StructField("adc", T.DoubleType()),
     ])
 
-    keep = refine * k
-    qarr = np.asarray(qids)
-
     def score(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             codes = np.stack(pdf["pq_codes"].to_numpy())    # B × m
-            # approx[q, b] = Σ_s LUT[q, s, codes[b, s]]; 9-dp round so
-            # the refine·k candidate boundary is partition-independent.
             approx = np.round(
                 lut[:, np.arange(m)[None, :], codes].sum(axis=2), 9)
-            # Mask each query's own vector BEFORE the argpartition prune:
-            # filtering it afterwards would let it occupy a top-refine·k
-            # slot and silently drop the true refine·k-th candidate.
-            approx[np.equal.outer(qarr, pdf["vec_id"].to_numpy())] = -np.inf
-            nq, nb = approx.shape
+            if probe_ok is not None:
+                approx[~probe_ok[:, pdf["cell"].to_numpy()]] = -np.inf
             vids = pdf["vec_id"].to_numpy()
+            # Mask each query's own vector BEFORE the prune: filtering it
+            # afterwards would let it occupy a top-keep slot and silently
+            # drop the true keep-th candidate.
+            approx[np.equal.outer(qarr, vids)] = -np.inf
+            nq, nb = approx.shape
             if nb > keep:
-                # per-batch top refine·k per query: the global top-k is
-                # a subset of every batch's top-k, so pruning here is
+                # per-batch top keep per query: the global top-k is a
+                # subset of every batch's top-k, so pruning here is
                 # lossless and keeps the downstream shuffle
                 # batch-count-proportional instead of corpus-sized.
                 # Boundary ties break on vec_id (batch-composition-
@@ -442,9 +414,9 @@ def pq_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
                     "adc": approx.reshape(-1),
                 })
 
-    scored = coded.mapInPandas(score, out_schema).where(
-        F.col("vec_id") != F.col("query_id"))
-    return _exact_rerank(embeddings, scored, n_queries, k, refine, dim)
+    # -inf marks the query's own vector and unprobed cells
+    return (coded.mapInPandas(score, out_schema)
+            .where(F.col("adc") != F.lit(float("-inf"))))
 
 
 def _exact_rerank(embeddings: DataFrame, scored: DataFrame, n_queries: int,
@@ -457,24 +429,12 @@ def _exact_rerank(embeddings: DataFrame, scored: DataFrame, n_queries: int,
     cands = (scored.withColumn("__r", F.row_number().over(w_adc))
              .where(F.col("__r") <= refine * k)
              .select("query_id", "vec_id"))
-
-    e = embeddings.select("vec_id", "embedding",
-                          V.norm("embedding", dim).alias("nrm"))
+    e = embeddings.select("vec_id", "embedding")
     q = (embeddings.where(F.col("vec_id") < n_queries)
          .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("q_emb"),
-                 V.norm("embedding", dim).alias("q_nrm")))
+                 F.col("embedding").alias("q_emb")))
     joined = cands.join(e, "vec_id").join(F.broadcast(q), "query_id")
-    cos = F.round(
-        V.dot("q_emb", "embedding", dim) / (F.col("q_nrm") * F.col("nrm")), 6)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        joined.select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _topk(_pair_cosines(joined, dim), k)
 
 
 def build_ivfpq_index(embeddings: DataFrame, n_cells: int = 16, m: int = 8,
@@ -503,7 +463,7 @@ def ivfpq_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
     parquet scan), PQ compresses WHAT is scanned (m uint8 codes per row,
     ADC lookups instead of dim multiplies), and the survivors re-rank
     exactly against the full vectors. Reuses the IVF trainer/assigner
-    and the PQ codebooks/ADC scorer of the standalone paths; the only
+    and the PQ codebooks and ADC scan of the standalone paths; the only
     new piece is the per-query cell mask inside the scan.
 
     Model state: C×dim centroids + m×k_sub×(dim/m) codebooks + the Q×C
@@ -511,73 +471,20 @@ def ivfpq_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
     assignment and score rounds to 9 dp like the parent paths, so the
     recall rows are partition-independent and driver-pinnable."""
     import numpy as np
-    import pandas as pd
 
     if index is None:
         index = build_ivfpq_index(embeddings, n_cells=n_cells, m=m,
                                   dim=dim, k_sub=k_sub)
-    centroids, books, coded = (
-        index["centroids"], index["books"], index["coded"])
-
-    d_sub = dim // m
-    qrows = (embeddings.where(F.col("vec_id") < n_queries)
-             .select("vec_id", "embedding").collect())
-    qarr = np.asarray([int(r.vec_id) for r in qrows])
-    qmat = np.stack([_normalize([float(v) for v in r.embedding])
-                     for r in qrows])            # Q × dim
+    centroids = index["centroids"]
+    qarr, qmat = _query_matrix(embeddings, n_queries)
     # Per-query probed cells: same rounded-argmax math as
     # _with_probe_cells, driver-side (Q rows of model-state work).
-    cmat = np.asarray(centroids, dtype=np.float64).T
-    qdots = np.round(qmat @ cmat, 9)             # Q × C
+    qdots = np.round(qmat @ np.asarray(centroids, dtype=np.float64).T, 9)
     order = np.argsort(-qdots, axis=1, kind="stable")[:, :n_probe]
     probe_ok = np.zeros((len(qarr), len(centroids)), dtype=bool)
     np.put_along_axis(probe_ok, order, True, axis=1)  # Q × C mask
-    lut = np.stack([
-        qmat[:, s * d_sub:(s + 1) * d_sub]
-        @ np.asarray(books[s], dtype=np.float64).T
-        for s in range(m)], axis=1)              # Q × m × k_sub
-
-    from pyspark.sql import types as T
-    out_schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("adc", T.DoubleType()),
-    ])
-    keep = refine * k
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.stack(pdf["pq_codes"].to_numpy())    # B × m
-            approx = np.round(
-                lut[:, np.arange(m)[None, :], codes].sum(axis=2), 9)
-            # IVF mask: a row only competes for queries that probe its
-            # cell (this is the at-rest partition pruning, expressed as
-            # a mask because the local fixture is one unpartitioned
-            # file). Self-matches masked before the prune as in PQ.
-            cells = pdf["cell"].to_numpy()
-            approx[~probe_ok[:, cells]] = -np.inf
-            approx[np.equal.outer(qarr, pdf["vec_id"].to_numpy())] = -np.inf
-            nq, nb = approx.shape
-            vids = pdf["vec_id"].to_numpy()
-            if nb > keep:
-                idx = _topk_cols_deterministic(approx, vids, keep)
-                yield pd.DataFrame({
-                    "query_id": np.repeat(qarr, keep),
-                    "vec_id": vids[idx].reshape(-1),
-                    "adc": np.take_along_axis(approx, idx, axis=1).reshape(-1),
-                })
-            else:
-                yield pd.DataFrame({
-                    "query_id": np.repeat(qarr, nb),
-                    "vec_id": np.tile(vids, nq),
-                    "adc": approx.reshape(-1),
-                })
-
-    scored = (coded.mapInPandas(score, out_schema)
-              .where(F.col("vec_id") != F.col("query_id"))
-              .where(F.col("adc") != F.lit(float("-inf"))))
+    scored = _adc_scan(index["coded"], qarr, qmat, index["books"], m,
+                       refine * k, probe_ok)
     return _exact_rerank(embeddings, scored, n_queries, k, refine, dim)
 
 
@@ -726,15 +633,19 @@ def build_ivf_index(embeddings: DataFrame, n_cells: int = 16,
     ``index=`` to :func:`ivf_ann_topk` to serve without retraining or
     re-assigning."""
     centroids = train_ivf_centroids(embeddings, n_cells=n_cells, dim=dim)
-    assigned = (_with_probe_cells(
+    return {"centroids": centroids,
+            "assigned": _assign_cells(embeddings, centroids)}
+
+
+def _assign_cells(embeddings: DataFrame,
+                  centroids: list[list[float]]) -> DataFrame:
+    """(vec_id, embedding, cell): each row with its nearest centroid."""
+    return (_with_probe_cells(
         embeddings.select("vec_id", "embedding"), centroids, n_probe=1)
-        .select("vec_id", "embedding",
-                V.norm("embedding", dim).alias("nrm"),
-                F.col("probe_cells")[0].alias("cell")))
-    return {"centroids": centroids, "assigned": assigned}
+        .select("vec_id", "embedding", F.col("probe_cells")[0].alias("cell")))
 
 
-def append_ivf_index(index: dict, batch: DataFrame, dim: int = 64) -> dict:
+def append_ivf_index(index: dict, batch: DataFrame) -> dict:
     """Index MAINTENANCE for IVF — the vector-side twin of the dedup
     family's append_band_index: new vectors are assigned to the FROZEN
     centroids (one Arrow matmul pass over the batch; the model does not
@@ -747,13 +658,9 @@ def append_ivf_index(index: dict, batch: DataFrame, dim: int = 64) -> dict:
     distribution, which shows up as recall decay — the signal that
     schedules the retrain."""
     centroids = index["centroids"]
-    add = (_with_probe_cells(
-        batch.select("vec_id", "embedding"), centroids, n_probe=1)
-        .select("vec_id", "embedding",
-                V.norm("embedding", dim).alias("nrm"),
-                F.col("probe_cells")[0].alias("cell")))
     return {"centroids": centroids,
-            "assigned": index["assigned"].unionByName(add)}
+            "assigned": index["assigned"].unionByName(
+                _assign_cells(batch, centroids))}
 
 
 def ivf_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
@@ -775,16 +682,7 @@ def ivf_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
             .where(F.col("vec_id") < n_queries), centroids, n_probe=n_probe)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("q_emb"),
-                 V.norm("embedding", dim).alias("q_nrm"),
                  F.explode("probe_cells").alias("cell")))
     cand = (F.broadcast(q).join(e, "cell")
             .where(F.col("vec_id") != F.col("query_id")))
-    cos = F.round(V.dot("q_emb", "embedding", dim) / (F.col("q_nrm") * F.col("nrm")), 6)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        cand.select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _topk(_pair_cosines(cand, dim), k)

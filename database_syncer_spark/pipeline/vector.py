@@ -1,71 +1,61 @@
-"""Codegen-friendly vector math over array<float> columns.
+"""The package's one vector arithmetic: Arrow kernels on :func:`tree_sum`.
 
-Spark's higher-order functions (zip_with / aggregate / transform) are
-evaluated by the interpreted expression path — they sit OUTSIDE
-whole-stage codegen, and a lambda-per-element dot product measured ~30x
-slower than the equivalent unrolled expression on the sf0.1 embeddings
-fixture (4.7s -> 0.15s for brute-force top-k). These helpers unroll the
-loop over a statically-known dimension into a flat sum of GetArrayItem
-products, which Tungsten compiles into one tight codegen span.
+Every dot product, norm, cosine and hyperplane projection over an
+``array<float>`` embedding column is float64 numpy inside a
+``mapInArrow`` kernel, summed by :func:`tree_sum`:
 
-The unroll is bounded by dim (64 in the fixtures), and every helper
-takes the dimension explicitly so the expression is fixed at plan time.
-Codegen does NOT keep a large unroll fast: HotSpot never JIT-compiles a
-method over 8,000 bytes of bytecode (``DontCompileHugeMethods``, the
-JDK 17 default), so such a kernel runs in the bytecode interpreter.
-Largest generated method at sf0.01 (``debug.codegenStringSeq``):
-22,366-22,510 bytes for sim_topk_cosine, sim_lsh_ann, sim_ivf_ann,
-sim_pq_ann, sim_ivfpq_ann and sim_ivf_incremental; 5,385 bytes for
-multimodal_columns. dedup_embedding_cosine verifies in a numpy kernel
-built on :func:`tree_sum` instead, which reproduces these sums bit for
-bit (its 64-term SQL cosine compiled to 39,647 bytes).
+- :func:`cosine` appends the raw cosine of two vector columns to any
+  pair frame (brute force, the LSH/IVF/PQ re-ranks, incremental dedup);
+- :func:`with_norm` appends a vector column's L2 norm;
+- :func:`_lsh_bucket_vectors` projects every vector onto the md5
+  hyperplanes of all LSH tables at once (similarity and dedup);
+- ``dedup._cosine_verify`` scores block pairs with :func:`row_norms` and
+  :func:`cosines`.
 
-Construction goes through ONE ``F.expr(sql)`` call when the inputs are
-plain column names (every hot call site) instead of building the tree
-Column-by-Column: each ``col[i].cast(...) * ...`` operator is a Py4J
-round trip, and a 64-dim dot built that way costs ~0.5s of driver time
-PER CALL — profiled r5 on the ANN serving path, where expression
-construction (2.1s) dwarfed execution (0.8s). The SQL string mirrors
-the exact balanced-tree parenthesization and uses D-suffixed double
-literals, so the parsed expression — and every downstream rounded
-value — is identical to the Column-built tree (pinned by the ANN
-recall regression tests). Column inputs fall back to the original
-per-element construction.
+Why not SQL. An unrolled SQL sum (one ``GetArrayItem`` product per
+dimension) grows with dim. HotSpot never JIT-compiles a method over
+8,000 bytes of bytecode (``DontCompileHugeMethods``), and the 64-term
+cosine already compiled to 22-40 KB methods at the fixtures' dim 64, so
+it ran in the bytecode interpreter. Janino rejects a method over 64 KB:
+at dim 768 a dot + norm over 20k rows failed with "Code grows beyond
+64 KB", fell back out of whole-stage codegen and took 5.1-6.9 s warm,
+against 0.90-1.03 s for the same math as a kernel (the two were equal at
+dim 64). Higher-order functions (``zip_with``/``aggregate``) are
+interpreted per element. A kernel's generated JVM code does not depend
+on dim, and its numpy cost is linear in it.
+
+Determinism. Float addition is not associative, so the summation order
+is part of every pinned value: :func:`tree_sum` adds in a fixed
+pairwise-balanced tree over the vector axis, the same for every row
+whatever the Arrow batch size, so results are partition-independent and
+``tests/ann_reference.py`` replays them in plain numpy.
+
+Inputs. A kernel views a column as one n×dim matrix
+(:func:`_list_matrix`): a NULL row, a NULL element or a row of any other
+length raises ``ValueError``, never a silently truncated or shifted
+vector. Work runs in row tiles of at most :data:`_TILE_FLOATS` values
+per operand, so the working set stays bounded at any width.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import hashlib
+import struct
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _col(c) -> Column:
-    return F.col(c) if isinstance(c, str) else c
-
-
-def _is_ref(c) -> bool:
-    """True when `c` is a plain (possibly dot-qualified) column name we
-    can splice into a SQL string (backtick-quoted by `_ref_sql`)."""
-    return isinstance(c, str) and c.replace(".", "_").isidentifier()
-
-
-def _ref_sql(c: str) -> str:
-    """Backtick-quote each dot-separated segment so the spliced name
-    resolves exactly like F.col(c) — an unquoted identifier that is also
-    an argless SQL function (current_date, current_user) or a reserved
-    word would otherwise parse/resolve differently (r5 ADVICE)."""
-    return ".".join(f"`{seg}`" for seg in c.split("."))
+#: float64 values per operand matrix in one kernel step (8 MB): a tile
+#: is max(1, _TILE_FLOATS // width) rows, so memory is bounded at any dim.
+_TILE_FLOATS = 1 << 20
 
 
 def _balanced(terms: list, add) -> object:
     """Pairwise-balanced addition tree (depth log2 n instead of n).
 
-    Float addition isn't associative, so the tree SHAPE is part of each
-    kernel's deterministic contract — both shapes are deterministic, but
-    the balanced one plans measurably faster on the driver and its
-    partial sums stay closer in magnitude (mildly better numerics than
-    left-to-right). The same pairing is used for the Column path and
-    the SQL-string path so the two construct the SAME expression."""
+    Float addition isn't associative, so the tree SHAPE is part of the
+    arithmetic's deterministic contract; the balanced shape keeps
+    partial sums closer in magnitude than left-to-right."""
     while len(terms) > 1:
         terms = [add(terms[i], terms[i + 1]) if i + 1 < len(terms)
                  else terms[i]
@@ -73,68 +63,155 @@ def _balanced(terms: list, add) -> object:
     return terms[0]
 
 
-def _balanced_sum(terms: list[Column]) -> Column:
-    return _balanced(terms, lambda a, b: a + b)
-
-
-def _balanced_sum_sql(terms: list[str]) -> str:
-    return _balanced(terms, lambda a, b: f"({a} + {b})")
-
-
 def tree_sum(terms):
-    """numpy mirror of the SQL kernels' sum: reduces the LAST axis of a
-    float64 array with `_balanced`'s pairing, so ``tree_sum(a * b)``
-    and ``np.sqrt(tree_sum(x * x))`` equal ``dot``/``norm`` bit for bit
-    (IEEE float64 ops are deterministic; pinned in tests/test_pipeline.py).
-    Vectorized verify kernels use it to emit the engine's exact values."""
+    """Sum the LAST axis of a float64 array in :func:`_balanced`'s
+    pairing. ``tree_sum(a * b)`` is the package's dot product and
+    ``np.sqrt(tree_sum(x * x))`` its norm (IEEE float64 ops are
+    deterministic, so every row gets the same bits on every host)."""
     return _balanced([terms[..., i] for i in range(terms.shape[-1])],
                      lambda a, b: a + b)
 
 
-def _dlit(v: float) -> str:
-    """A double literal that parses to the same IEEE value F.lit(float)
-    would produce: repr() is the shortest round-trip form and the D
-    suffix makes the parser build a DoubleType literal directly (a bare
-    decimal would go through DECIMAL and could differ in the last ulp)."""
-    return f"{float(v)!r}D"
+def row_norms(x):
+    """Row L2 norms of an n×dim float64 matrix."""
+    import numpy as np
+
+    return np.sqrt(tree_sum(x * x))
 
 
-def dot(a, b, dim: int) -> Column:
-    """sum_i a[i]*b[i] as a flat codegen'd expression."""
-    if _is_ref(a) and _is_ref(b):
-        qa, qb = _ref_sql(a), _ref_sql(b)
-        return F.expr(_balanced_sum_sql(
-            [f"(CAST({qa}[{i}] AS DOUBLE) * CAST({qb}[{i}] AS DOUBLE))"
-             for i in range(dim)]))
-    a, b = _col(a), _col(b)
-    return _balanced_sum([a[i].cast("double") * b[i].cast("double")
-                          for i in range(dim)])
+def cosines(x, y, nx, ny):
+    """Row-wise raw cosine of two n×dim matrices whose row norms are
+    ``nx``/``ny``: one tree dot, one norm product, one division."""
+    return tree_sum(x * y) / (nx * ny)
 
 
-def dot_lit(col, coeffs: list[float]) -> Column:
-    """Dot product against a driver-side constant vector (hyperplane,
-    centroid): constants fold into the codegen'd expression — no array
-    literal, no per-element lambda."""
-    if _is_ref(col):
-        qc = _ref_sql(col)
-        return F.expr(_balanced_sum_sql(
-            [f"(CAST({qc}[{i}] AS DOUBLE) * {_dlit(v)})"
-             for i, v in enumerate(coeffs)]))
-    col = _col(col)
-    return _balanced_sum([col[i].cast("double") * F.lit(float(v))
-                          for i, v in enumerate(coeffs)])
+def _list_matrix(col, width: int):
+    """An Arrow ``list<...>`` column whose rows all hold ``width``
+    non-NULL values, as an n×width numpy matrix viewing the child
+    buffer in place (no per-row numpy objects). Anything else raises:
+    a ragged or NULL row would silently shift every later row."""
+    import pyarrow.compute as pc
+
+    flat = col.flatten()
+    if (col.null_count or flat.null_count
+            or pc.any(pc.not_equal(pc.list_value_length(col),
+                                   width)).as_py()):
+        raise ValueError(
+            f"expected non-NULL rows of exactly {width} non-NULL values")
+    return flat.to_numpy().reshape(len(col), width)
 
 
-def norm_sq(col, dim: int) -> Column:
-    if _is_ref(col):
-        qc = _ref_sql(col)
-        return F.expr(_balanced_sum_sql(
-            [f"(CAST({qc}[{i}] AS DOUBLE) * CAST({qc}[{i}] AS DOUBLE))"
-             for i in range(dim)]))
-    col = _col(col)
-    return _balanced_sum([col[i].cast("double") * col[i].cast("double")
-                          for i in range(dim)])
+def _row_tiles(batch, width: int):
+    """``batch`` as consecutive slices of at most
+    max(1, _TILE_FLOATS // width) rows."""
+    step = max(1, _TILE_FLOATS // width)
+    for lo in range(0, batch.num_rows, step):
+        yield batch.slice(lo, step)
 
 
-def norm(col, dim: int) -> Column:
-    return F.sqrt(norm_sq(col, dim))
+def _map_rows(frame: DataFrame, vectors: list[str], drop: list[str],
+              dim: int, name: str, fn) -> DataFrame:
+    """``frame`` minus ``drop`` plus a double column ``name`` =
+    fn(*matrices), one matrix per column of ``vectors``; every other
+    column passes through unchanged."""
+    import numpy as np
+    import pyarrow as pa
+
+    from pyspark.sql import types as T
+
+    rest = [f for f in frame.schema.fields if f.name not in drop]
+    names = [f.name for f in rest] + [name]
+    schema = T.StructType(rest + [T.StructField(name, T.DoubleType())])
+
+    def gen(batches):
+        for b in batches:
+            for t in _row_tiles(b, dim * len(vectors)):
+                xs = [_list_matrix(t.column(c), dim).astype(np.float64)
+                      for c in vectors]
+                yield pa.RecordBatch.from_arrays(
+                    [t.column(c) for c in names[:-1]] + [pa.array(fn(*xs))],
+                    names)
+
+    return frame.mapInArrow(gen, schema)
+
+
+def _checked_cosines(x, y):
+    nx, ny = row_norms(x), row_norms(y)
+    if not (nx * ny).all():
+        raise ValueError("cosine of a zero vector is undefined")
+    return cosines(x, y, nx, ny)
+
+
+def cosine(pairs: DataFrame, a: str, b: str, dim: int) -> DataFrame:
+    """The raw cosine of vector columns ``a`` and ``b`` of every row:
+    ``pairs`` with those two columns replaced by a double ``cosine``.
+    Callers round in Spark (``F.round(cosine, 6)``). A zero vector
+    raises ``ValueError``, as the SQL division by zero did."""
+    return _map_rows(pairs, [a, b], [a, b], dim, "cosine", _checked_cosines)
+
+
+def with_norm(frame: DataFrame, col: str, dim: int, name: str) -> DataFrame:
+    """``frame`` plus a double column ``name``: the L2 norm of vector
+    column ``col`` (which is kept)."""
+    return _map_rows(frame, [col], [], dim, name, row_norms)
+
+
+# --- random-hyperplane LSH ---------------------------------------------------
+
+
+def _hyperplanes(n_planes: int, dim: int, table: int) -> list[list[float]]:
+    """Deterministic pseudo-random hyperplanes from md5 — no RNG state,
+    same planes on every executor and every run."""
+    planes = []
+    for p in range(n_planes):
+        row = []
+        for d in range(dim):
+            h = hashlib.md5(f"dss-lsh:{table}:{p}:{d}".encode()).digest()
+            (u,) = struct.unpack("<Q", h[:8])
+            row.append((u / 2**63) - 1.0)  # uniform [-1, 1)
+        planes.append(row)
+    return planes
+
+
+def _lsh_bucket_vectors(embeddings: DataFrame, n_planes: int, n_tables: int,
+                        dim: int) -> DataFrame:
+    """(vec_id, buckets array<long>[n_tables], embedding) — every LSH
+    table's bucket id in ONE row per vector, the embedding carried
+    through. Bucket t holds table t's n_planes sign bits (plane p sets
+    bit p when the projection is > 0) against :func:`_hyperplanes`. One
+    ``mapInArrow`` pass projects each row tile onto all n_tables·n_planes
+    planes at once through :func:`tree_sum`, so a bucket id depends only
+    on its own row (partition-count-independent)."""
+    import numpy as np
+    import pyarrow as pa
+
+    planes = np.array(
+        [row for t in range(n_tables)
+         for row in _hyperplanes(n_planes, dim, t)])  # (T*r, dim)
+    weights = (1 << np.arange(n_planes, dtype=np.int64))
+
+    def gen(batches):
+        for batch in batches:
+            for b in _row_tiles(batch, dim * len(planes)):
+                n = b.num_rows
+                X = _list_matrix(b.column("embedding"), dim).astype(np.float64)
+                bits = tree_sum(X[:, None, :] * planes[None, :, :]) > 0
+                buckets = bits.reshape(n, n_tables, n_planes) @ weights
+                yield pa.RecordBatch.from_arrays(
+                    [b.column("vec_id"),
+                     pa.ListArray.from_arrays(
+                         pa.array(np.arange(0, n * n_tables + 1, n_tables,
+                                            dtype=np.int32)),
+                         pa.array(buckets.ravel())),
+                     b.column("embedding")],
+                    ["vec_id", "buckets", "embedding"])
+
+    return embeddings.select("vec_id", "embedding").mapInArrow(
+        gen, "vec_id long, buckets array<long>, embedding array<float>")
+
+
+def _lsh_band_rows(bucketed: DataFrame) -> DataFrame:
+    """Explode a bucket-vector frame into one row per vector and LSH
+    table: its columns plus (tbl, bucket)."""
+    return bucketed.select(
+        "*", F.posexplode("buckets").alias("tbl", "bucket"))

@@ -835,10 +835,9 @@ def dedup_embedding_cosine(spark, sf_dir):
 # --- similarity ----------------------------------------------------------------
 # dim is PROBED AND VALIDATED from the data (multimodal.check_dim: one
 # size-only aggregate proving the corpus is non-ragged), never
-# hardcoded — a wrong dim makes non-ANSI GetArrayItem yield silent
-# NULLs. Validation stays out of the hot kernels so they keep
-# whole-stage codegen, and is cached per fixture dir (dim is a table
-# property; the read-only fixtures never change within a process).
+# hardcoded, so a bad corpus fails before any vector kernel runs. It is
+# cached per fixture dir (dim is a table property; the read-only
+# fixtures never change within a process).
 
 _DIM_CACHE: dict[str, tuple[int, int]] = {}
 
@@ -892,7 +891,7 @@ def sim_ivf_incremental(spark, sf_dir):
     dim = _emb_dim(sf_dir, emb)
     is_batch = F.col("vec_id") % _BATCH_MOD == _BATCH_REM
     index = S.build_ivf_index(emb.where(~is_batch), dim=dim)
-    grown = S.append_ivf_index(index, emb.where(is_batch), dim=dim)
+    grown = S.append_ivf_index(index, emb.where(is_batch))
     return S.ann_recall(emb, S.ivf_ann_topk(emb, dim=dim, index=grown),
                         dim=dim)
 

@@ -30,6 +30,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half the host's physical memory
+    capped at 48g. Local mode runs executors inside the driver JVM, so
+    this IS the executor heap: 8g forced GC churn and shuffle spill on
+    ~30M-row sync jobs, while a heap larger than the host lets the JVM
+    grow until the kernel OOM-kills it instead of collecting (a fixed
+    48g default did that on a 15 GB host). Half leaves room for the
+    Python workers and the page cache."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(48 << 10, phys // 2 >> 20)}m"
+
+
 def get_spark(app_name: str = "database_syncer_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) the SparkSession used by the engine and tests."""
@@ -114,11 +128,7 @@ def get_spark(app_name: str = "database_syncer_spark",
         # captured logs (the r5 bench stderr was ~1 MB of bars) and
         # interleave with real ERROR lines, making them hard to grep.
         .config("spark.ui.showConsoleProgress", "false")
-        # Local mode runs executors inside the driver JVM, so this IS the
-        # executor heap; 8g forced GC churn + shuffle spill from ~30M-row
-        # sync jobs (measured superlinear 15M->30M scaling). Leave room
-        # for 32 Python workers + page cache on a 128GiB box.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
     )
     try:
         spark = builder.getOrCreate()

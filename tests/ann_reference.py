@@ -11,11 +11,12 @@ fixtures with numpy + pure Python. No SparkSession, no DataFrame, no
 DuckDB; `pyarrow.parquet` is the only reader.
 
 Arithmetic contract (why byte-identical equality is assertable):
-- Spark-side dot/norm kernels are balanced expression trees
-  (pipeline/vector.py `_balanced`); float addition is order-dependent,
-  so `tree_sum` (pipeline/vector.py, pinned bit-equal to the SQL
-  kernels in tests/test_pipeline.py) replays the exact pairing in
-  float64.
+- The engine computes every dot, norm, cosine and hyperplane projection
+  with `tree_sum` (pipeline/vector.py): a fixed pairwise-balanced sum
+  over the vector axis in float64. Float addition is order-dependent,
+  so this module imports the same `tree_sum` rather than re-deriving
+  it (tests/test_pipeline.py::test_tree_sum_matches_sql_kernels pins it
+  to the SQL kernels the engine used before).
 - Every model quantity the engine rounds for partition-independence
   (9-dp centroids/codebooks/scores, 6-dp cosines) is rounded here with
   the SAME function the engine uses at that site — Python `round` where
@@ -26,9 +27,10 @@ Arithmetic contract (why byte-identical equality is assertable):
   with a from-scratch pure-Python xxHash64 (public spec, seed 42),
   signed-compared like Spark's LongType.
 
-Mirrors pipeline/similarity.py (hyperplanes :109, LSH :133-230, PQ
-train/assign/score :220-446, IVF :683-760, IVF-PQ :493-578) and
-pipeline/dedup.py's SimHash. Used by tests/test_numpy_reference.py
+Mirrors pipeline/similarity.py (brute_force_topk, lsh_ann_topk,
+train_pq_codebooks/_with_pq_codes/_adc_scan/_exact_rerank,
+train_ivf_centroids/ivf_ann_topk, ivfpq_ann_topk), pipeline/vector.py's
+_hyperplanes and _lsh_bucket_vectors, and pipeline/dedup.py's SimHash. Used by tests/test_numpy_reference.py
 (asserted against the live pins every session) and
 scripts/pin_independent_oracles.py (pin regeneration).
 """
@@ -323,22 +325,27 @@ def exhaustive_cosine_pairs(ids: np.ndarray, mat: np.ndarray,
     return out
 
 
-def exact_thresholds(ids: np.ndarray, mat: np.ndarray,
-                     n_queries: int = 10, k: int = 10) -> dict[int, float]:
-    """Per query: the k-th exact cosine at round-6 (brute_force_topk's
-    contract: round(cos, 6) desc, vec_id asc, self excluded), with the
-    engine's tree arithmetic."""
+def exact_topk(ids: np.ndarray, mat: np.ndarray, n_queries: int = 10,
+               k: int = 10) -> dict[int, list[tuple[int, float]]]:
+    """brute_force_topk mirror: per query, its k (neighbor_id, round-6
+    cosine) rows by (cosine desc, neighbor_id asc), self excluded, with
+    the engine's tree arithmetic."""
     nrm = tree_norm(mat)
-    thr = {}
+    out = {}
     for qpos in np.flatnonzero(ids < n_queries):
         qid = int(ids[qpos])
         raw = tree_sum(mat * mat[qpos]) / (nrm * nrm[qpos])
-        cos = np.array([round6(v) for v in raw])
-        mask = ids != qid
-        cand_ids, cand_cos = ids[mask], cos[mask]
-        order = np.lexsort((cand_ids, -cand_cos))
-        thr[qid] = float(cand_cos[order[k - 1]])
-    return thr
+        out[qid] = _rank_topk([(int(i), round6(v)) for i, v in zip(ids, raw)
+                               if i != qid], k)
+    return out
+
+
+def exact_thresholds(ids: np.ndarray, mat: np.ndarray,
+                     n_queries: int = 10, k: int = 10) -> dict[int, float]:
+    """Per query: the k-th exact cosine at round-6 (the ground truth
+    of ann_recall)."""
+    return {qid: rows[k - 1][1] for qid, rows in
+            exact_topk(ids, mat, n_queries=n_queries, k=k).items()}
 
 
 def _exact_rerank(ids: np.ndarray, mat: np.ndarray, nrm: np.ndarray,
@@ -366,7 +373,7 @@ def recall_rows(retrieved: dict[int, list[tuple[int, float]]],
 
 
 def hyperplanes(n_planes: int, dim: int, table: int) -> list[list[float]]:
-    """similarity._hyperplanes verbatim (md5-seeded, deterministic)."""
+    """vector._hyperplanes verbatim (md5-seeded, deterministic)."""
     planes = []
     for p in range(n_planes):
         row = []
@@ -379,7 +386,8 @@ def hyperplanes(n_planes: int, dim: int, table: int) -> list[list[float]]:
 
 
 def _lsh_buckets(mat: np.ndarray, planes: list[list[float]]) -> np.ndarray:
-    """_bucket_expr mirror: bucket = Σ_p (1<<p when tree-projection > 0)."""
+    """vector._lsh_bucket_vectors mirror, one table: bucket = Σ_p (1<<p
+    when the tree projection > 0)."""
     bucket = np.zeros(len(mat), dtype=np.int64)
     for p, row in enumerate(planes):
         proj = tree_sum(mat * np.asarray(row, dtype=np.float64))
@@ -457,9 +465,9 @@ def ivf_retrieve(ids: np.ndarray, mat: np.ndarray, n_queries: int = 10,
 def pq_books(ids: np.ndarray, mat: np.ndarray, m: int = 8,
              k_sub: int = 16, lloyd_iters: int = 1) -> list[np.ndarray]:
     """train_pq_codebooks mirror: L2-normalized space throughout; Lloyd
-    sums divide by the row's TREE norm (the engine's posexplode pass
-    computes V.norm), assignment normalizes with np.linalg.norm (the
-    engine's Arrow pass) — the mismatch is the engine's own, replayed."""
+    sums divide by the row's TREE norm (the engine's vector.with_norm
+    kernel), assignment normalizes with np.linalg.norm (the engine's
+    _with_pq_codes pass) — the mismatch is the engine's own, replayed."""
     dim = mat.shape[1]
     d_sub = dim // m
     base = np.stack([_normalize_py(mat[p])
@@ -496,7 +504,7 @@ def _pq_assign(mat: np.ndarray, books: list[np.ndarray], m: int) -> np.ndarray:
 
 def _adc_scores(qmat: np.ndarray, books: list[np.ndarray],
                 codes: np.ndarray, m: int) -> np.ndarray:
-    """pq_ann_topk's scorer: LUT[q,s,j] = q_s·c_sj, approx = round(Σ_s
+    """_adc_scan's scorer: LUT[q,s,j] = q_s·c_sj, approx = round(Σ_s
     LUT lookups, 9) — same numpy calls, full-corpus batch (the 9-dp
     round makes batch shape irrelevant, as the engine documents)."""
     d_sub = qmat.shape[1] // m

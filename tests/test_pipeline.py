@@ -8,8 +8,10 @@ from pyspark.sql import functions as F
 
 from database_syncer_spark.catalog import load_table
 from database_syncer_spark.pipeline.dedup import (
-    minhash_lsh_dedup, ngram_jaccard_pairs, simhash_dedup,
+    embedding_incremental_near_dup, minhash_lsh_dedup, ngram_jaccard_pairs,
+    simhash_dedup,
 )
+from database_syncer_spark.pipeline.multimodal import multimodal_join
 from database_syncer_spark.pipeline.similarity import brute_force_topk, lsh_ann_topk
 from database_syncer_spark.pipeline.text import classify_lang, train_lang_profiles
 
@@ -1059,26 +1061,38 @@ def test_embedding_lsh_blocking_recall_total(spark):
 
 @pytest.mark.parametrize("dim", [1, 5, 63, 64])
 def test_tree_sum_matches_sql_kernels(spark, dim):
-    """vector.tree_sum is the verify kernel's arithmetic: it must equal
-    the SQL kernels V.dot/V.norm bit for bit, or embedding_near_dup's
-    rounded cosines drift from every oracle built on the engine's sums.
-    Magnitudes span 6 decades so a different pairing would show."""
+    """The package's vector arithmetic must reproduce the unrolled SQL
+    kernels it replaced bit for bit, or every rounded cosine and pinned
+    recall row built on them drifts. tests/sql_vector_golden.json holds
+    the SQL dot, norm and cosine (dot / (norm(a) * norm(b))) of these
+    vectors, captured before the SQL kernels were deleted, as float.hex
+    strings. Magnitudes span 6 decades so a different pairing would
+    show."""
+    import json
+    import os
+
     import numpy as np
 
     from database_syncer_spark.pipeline import vector as V
 
+    with open(os.path.join(os.path.dirname(__file__),
+                           "sql_vector_golden.json")) as fh:
+        golden = {k: [float.fromhex(v) for v in vals]
+                  for k, vals in json.load(fh)[str(dim)].items()}
     rng = np.random.default_rng(dim)
     a, b = ((rng.standard_normal((40, dim))
              * 10.0 ** rng.uniform(-3, 3, (40, dim))).astype(np.float32)
             for _ in range(2))
-    got = spark.createDataFrame(
-        [(x.tolist(), y.tolist()) for x, y in zip(a, b)],
-        "a array<float>, b array<float>").select(
-        V.dot("a", "b", dim).alias("dot"),
-        V.norm("a", dim).alias("nrm")).collect()
+    frame = spark.createDataFrame(
+        [(i, x.tolist(), y.tolist()) for i, (x, y) in enumerate(zip(a, b))],
+        "i int, a array<float>, b array<float>")
+    nrm = V.with_norm(frame, "a", dim, "nrm").drop("a", "b")
+    got = (V.cosine(frame, "a", "b", dim).join(nrm, "i")
+           .orderBy("i").collect())
     a, b = a.astype(np.float64), b.astype(np.float64)
-    assert [r.dot for r in got] == V.tree_sum(a * b).tolist()
-    assert [r.nrm for r in got] == np.sqrt(V.tree_sum(a * a)).tolist()
+    assert V.tree_sum(a * b).tolist() == golden["dot"]
+    assert [r.nrm for r in got] == golden["nrm"]
+    assert [r.cosine for r in got] == golden["cos"]
 
 
 def test_list_matrix_rejects_null_and_ragged_rows():
@@ -1088,7 +1102,7 @@ def test_list_matrix_rejects_null_and_ragged_rows():
     length still equals n×dim. A sliced column views only its rows."""
     import pyarrow as pa
 
-    from database_syncer_spark.pipeline.dedup import _list_matrix
+    from database_syncer_spark.pipeline.vector import _list_matrix
 
     f32 = pa.list_(pa.float32())
     ok = pa.array([[1.0, 2.0], [3.0, 4.0], [5.0, 6.0]], f32)
@@ -1098,6 +1112,54 @@ def test_list_matrix_rejects_null_and_ragged_rows():
                 [[1.0, 2.0], [3.0]], [[1.0], [2.0, 3.0, 4.0]]):
         with pytest.raises(ValueError, match="exactly 2"):
             _list_matrix(pa.array(bad, f32), 2)
+
+
+def _bad_row_frames(spark, bad: str):
+    """(documents, embeddings): 40 dim-8 vectors with row 3 replaced by
+    a NULL embedding ("null"), a 9-value one ("long") or zeros
+    ("zero")."""
+    import numpy as np
+
+    mat = np.random.default_rng(5).standard_normal((40, 8)).tolist()
+    mat[3] = {"null": None, "long": mat[3] + [100.0], "zero": [0.0] * 8}[bad]
+    emb = spark.createDataFrame(list(enumerate(mat)),
+                                "vec_id bigint, embedding array<float>")
+    docs = spark.createDataFrame(
+        [(i, "en", "x", "t" * i) for i in range(40)],
+        "doc_id bigint, lang string, label string, text string")
+    return docs, emb
+
+
+_VECTOR_PATHS = {
+    "brute_force_topk": lambda docs, e: brute_force_topk(e, 5, 5, 8),
+    "lsh_ann_topk": lambda docs, e: lsh_ann_topk(e, 5, 5, dim=8),
+    "embedding_incremental_near_dup":
+        lambda docs, e: embedding_incremental_near_dup(
+            e.where("vec_id % 2 = 1"), e.where("vec_id % 2 = 0"), dim=8),
+    "multimodal_join": lambda docs, e: multimodal_join(docs, e, dim=8),
+}
+
+
+@pytest.mark.parametrize("bad", ["null", "long"])
+@pytest.mark.parametrize("path", sorted(_VECTOR_PATHS))
+def test_vector_paths_reject_null_and_wrong_width_rows(spark, path, bad):
+    """Every vector kernel views its input through _list_matrix, so a
+    NULL embedding or one with dim+1 values fails the query with
+    _list_matrix's ValueError. The SQL kernels they replaced scored a
+    NULL row as a NULL cosine and read only the first dim values of a
+    long row."""
+    docs, emb = _bad_row_frames(spark, bad)
+    with pytest.raises(Exception, match="ValueError: expected non-NULL "
+                                        "rows of exactly 8 non-NULL"):
+        _VECTOR_PATHS[path](docs, emb).collect()
+
+
+def test_cosine_of_zero_vector_raises(spark):
+    """A zero vector has no cosine: the kernel raises, as the SQL
+    division by zero did under ANSI mode."""
+    _, emb = _bad_row_frames(spark, "zero")
+    with pytest.raises(Exception, match="ValueError: cosine of a zero"):
+        brute_force_topk(emb, 5, 5, 8).collect()
 
 
 def _near_dup_corpus(spark, n_base: int = 60, dim: int = 64):
@@ -1173,12 +1235,12 @@ def test_embedding_lsh_scale_params_widen_buckets(spark, sf_dir):
 
 
 def test_lsh_bucket_vectors_partition_independent(spark, sf_dir):
-    """The numpy bucketing pass claims partition-count-independent
-    buckets (per-plane (X*p).sum(axis=1): the reduced axis has fixed
-    length dim, so numpy's pairwise summation is identical whatever the
-    Arrow batch size). Pin it: same corpus, 1 vs 8 partitions, byte-equal
+    """The bucket kernel claims partition-count-independent buckets:
+    each projection is a tree_sum over one row's fixed-length vector
+    axis, so its bits do not depend on the Arrow batch or row tile the
+    row lands in. Pin it: same corpus, 1 vs 8 partitions, byte-equal
     bucket vectors."""
-    from database_syncer_spark.pipeline.dedup import _lsh_bucket_vectors
+    from database_syncer_spark.pipeline.vector import _lsh_bucket_vectors
 
     emb = load_table(spark, sf_dir, "embeddings")
     one = {r.vec_id: list(r.buckets) for r in
@@ -1238,7 +1300,7 @@ def test_append_ivf_index_serves_batch_vectors(spark, sf_dir):
     index = build_ivf_index(corpus, dim=dim)
     before = {r.vec_id: r.cell for r in
               index["assigned"].select("vec_id", "cell").collect()}
-    grown = append_ivf_index(index, emb.where(is_batch), dim=dim)
+    grown = append_ivf_index(index, emb.where(is_batch))
     after = {r.vec_id: r.cell for r in
              grown["assigned"].select("vec_id", "cell").collect()}
     batch_ids = {r.vec_id for r in

@@ -121,19 +121,18 @@ def test_banded_range_join_is_equi_not_nested_loop(spark, sf_dir):
 
 
 def test_cosine_kernels_stay_in_codegen(spark, sf_dir):
-    """pipeline/vector.py exists because higher-order functions fall out
-    of whole-stage codegen; the similarity/dedup kernels must not
-    regress to lambda evaluation (measured ~4x slower at sf0.1)."""
+    """The vector math runs in pipeline/vector.py's Arrow kernels:
+    higher-order functions are interpreted per element, outside
+    whole-stage codegen (a lambda dot product measured ~30x slower
+    than an unrolled one at sf0.1), so no similarity or dedup key may
+    plan a lambda over the embedding."""
     from database_syncer_spark.registry import all_queries
 
     qs = all_queries()
     for key in ["sim_topk_cosine", "sim_lsh_ann", "dedup_embedding_cosine"]:
         plan = _plan(qs[key](spark, sf_dir))
         assert "lambdafunction" not in plan, f"{key} uses interpreted HOFs"
-    # IVF keeps exactly one benign lambda: mapping the n_probe ranked
-    # (dot, cell) structs to cell ids — a C-element array per row, not a
-    # per-dimension kernel. The dot products themselves must stay
-    # unrolled (no zip_with/aggregate over the embedding).
+    # No zip_with/aggregate over the embedding in IVF either.
     ivf = _plan(qs["sim_ivf_ann"](spark, sf_dir))
     assert "zip_with" not in ivf and "aggregate(embedding" not in ivf
 
@@ -164,6 +163,63 @@ def test_embedding_near_dup_one_shuffle_jit_sized(spark, sf_dir):
     assert kind == "hashpartitioning", final
     assert [c.split("#")[0] for c in cols.split(", ")[:2]] == [
         "tbl", "bucket"], final
+
+
+def _max_method_bytes(spark, df) -> int:
+    """Run ``df`` and return the largest generated method of its
+    executed plan (``debug.codegenStringSeq``)."""
+    df.collect()
+    debug = getattr(spark._jvm.org.apache.spark.sql.execution.debug,
+                    "package")
+    seq = debug.codegenStringSeq(df._jdf.queryExecution().executedPlan())
+    return max(seq.apply(i)._3().maxMethodCodeSize()
+               for i in range(seq.size()))
+
+
+def test_vector_paths_at_dim_768_stay_jit_sized(spark):
+    """Real embeddings are 384-1536 wide. At dim 768 an unrolled SQL
+    dot/norm grows past Janino's 64 KB method limit (a compile error
+    with spark.sql.codegen.fallback=false, which conftest sets). The
+    Arrow kernels' generated code does not depend on dim: every method
+    of brute_force_topk, lsh_ann_topk, embedding_incremental_near_dup
+    and multimodal_join stays under HotSpot's 8,000-byte JIT limit,
+    and the brute-force rows equal the numpy reference's exact top-k."""
+    import numpy as np
+    from ann_reference import exact_topk
+
+    from database_syncer_spark.pipeline import dedup as D
+    from database_syncer_spark.pipeline import multimodal as M
+    from database_syncer_spark.pipeline import similarity as S
+
+    assert spark.conf.get("spark.sql.codegen.fallback") == "false"
+    dim, rng = 768, np.random.default_rng(768)
+    base = rng.standard_normal((100, dim))
+    mat = (np.repeat(base, 3, axis=0)
+           + 0.3 * rng.standard_normal((300, dim))).astype(np.float32)
+    ids = np.arange(300, dtype=np.int64)
+    emb = spark.createDataFrame(
+        [(int(i), row.tolist()) for i, row in zip(ids, mat)],
+        "vec_id bigint, embedding array<float>")
+    docs = spark.createDataFrame(
+        [(int(i), "en", "x", "text") for i in ids],
+        "doc_id bigint, lang string, label string, text string")
+    is_batch = emb.vec_id % 3 == 0
+    runs = {
+        "brute_force_topk": S.brute_force_topk(emb, dim=dim),
+        "lsh_ann_topk": S.lsh_ann_topk(emb, dim=dim),
+        "embedding_incremental_near_dup": D.embedding_incremental_near_dup(
+            emb.where(is_batch), emb.where(~is_batch), dim=dim),
+        "multimodal_join": M.multimodal_join(docs, emb, dim=dim),
+    }
+    sizes = {name: _max_method_bytes(spark, df) for name, df in runs.items()}
+    assert max(sizes.values()) < 8000, sizes
+    got = {}
+    for r in runs["brute_force_topk"].collect():
+        got.setdefault(r.query_id, []).append(
+            (r.rank, r.neighbor_id, r.cosine))
+    want = exact_topk(ids, mat.astype(np.float64))
+    assert {q: [(nb, c) for _, nb, c in sorted(rows)]
+            for q, rows in got.items()} == want
 
 
 def test_no_row_at_a_time_python_in_headline(spark, sf_dir):

@@ -462,10 +462,10 @@ def sync_pg_to_mysql(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff also proves NULL-vs-value classification across dialects.
 
     Rides the production ``sync_dumps`` entry point (dialects
-    auto-sniffed → the cross-dialect path, r10). That path deliberately
-    runs the PLAIN per-table diff: r10 built and A/B-rejected the fused
-    variant for this shape — see ``_sync_dumps_cross_dialect``'s
-    docstring for the measurements."""
+    auto-sniffed). A pair with a pg side deliberately runs the PLAIN
+    per-table diff: r10 built and A/B-rejected the fused variant for
+    this shape — see the diff selection in ``sources.dump._sync_plans``
+    and SCALE.md for the measurements."""
     from database_syncer_spark.sources.dump import sync_dumps
 
     changes, _, _, _ = sync_dumps(spark, _orders_pg_dump(spark, sf_dir),

@@ -62,9 +62,12 @@ _TYPE_MAP = [
 ]
 
 
-def _spark_type(mysql_type: str) -> str:
-    for pat, target in _TYPE_MAP:
-        m = pat.match(mysql_type.strip())
+def _spark_type(source_type: str, type_map) -> str:
+    """Spark cast target of a DDL column type, by the first matching
+    ``(pattern, target)`` of a dialect's type map (``None`` target:
+    ``decimal(p,s)`` from the pattern's groups 2 and 3)."""
+    for pat, target in type_map:
+        m = pat.match(source_type.strip())
         if m:
             if target is None:
                 return f"decimal({m.group(2)},{m.group(3)})"
@@ -74,17 +77,31 @@ def _spark_type(mysql_type: str) -> str:
 
 @dataclass
 class TableSchema:
+    """One dump table's DDL, from either dialect's parser. The parser
+    fixes ``type_map`` (``_TYPE_MAP`` here, ``pg_dump._PG_TYPE_MAP``), so
+    ``spark_types`` needs no dialect branch."""
     name: str
-    columns: list[tuple[str, str]]          # (name, mysql_type)
+    columns: list[tuple[str, str]]          # (name, source type)
     pk_cols: list[str]
     create_stmt: str
+    type_map: list = field(repr=False)
 
     @property
     def column_names(self) -> list[str]:
         return [c for c, _ in self.columns]
 
     def spark_types(self) -> list[tuple[str, str]]:
-        return [(c, _spark_type(t)) for c, t in self.columns]
+        return [(c, _spark_type(t, self.type_map)) for c, t in self.columns]
+
+
+def _resolve_pk(declared: list[str], col_names: list[str]) -> list[str]:
+    """The declared PK columns, else an 'id' column, else the first
+    column. The reference falls back to 'id' too (sync.py:97-104) and
+    keys on values[0] when that is missing (sync.py:169-171); a declared
+    name that is not a column falls back the same way."""
+    if not declared:
+        declared = ["id"] if "id" in col_names else col_names[:1]
+    return [c for c in declared if c in col_names] or col_names[:1]
 
 
 _CREATE_RE = re.compile(r"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?[`\"]?(\w+)[`\"]?", re.I)
@@ -170,20 +187,12 @@ def parse_create_table(stmt: str) -> TableSchema | None:
         columns.append((cm.group(1), cm.group(2)))
         if auto_inc is None and "AUTO_INCREMENT" in upper:
             auto_inc = cm.group(1)
-    col_names = [c for c, _ in columns]
-    if not pk:
-        # Reference fallback chain (sync.py:97-104): AUTO_INCREMENT col,
-        # then 'id'; we add first-column as the final fallback instead of
-        # keying on a column that doesn't exist (sync.py:169-171 keys on
-        # values[0] in that case — same effect, made explicit).
-        if auto_inc:
-            pk = [auto_inc]
-        elif "id" in col_names:
-            pk = ["id"]
-        elif col_names:
-            pk = [col_names[0]]
-    pk = [c for c in pk if c in col_names] or col_names[:1]
-    return TableSchema(name=name, columns=columns, pk_cols=pk, create_stmt=stmt.strip())
+    # the reference's fallback chain (sync.py:97-104) starts at the
+    # AUTO_INCREMENT column
+    pk = _resolve_pk(pk or ([auto_inc] if auto_inc else []),
+                     [c for c, _ in columns])
+    return TableSchema(name=name, columns=columns, pk_cols=pk,
+                       create_stmt=stmt.strip(), type_map=_TYPE_MAP)
 
 
 # --- value tokenizer --------------------------------------------------------
@@ -533,6 +542,29 @@ def _stitch_fragments(frags: DataFrame, line_sep: str) -> DataFrame:
     )
 
 
+def _dump_files(path: str) -> list[str]:
+    """A dump's files in file order: ``path`` itself, or a shard
+    directory's regular files in name order, skipping names that start
+    with ``_`` or ``.`` as Spark's file source does (``_SUCCESS``,
+    ``.crc``). The first one is the dump's head file."""
+    if not os.path.isdir(path):
+        return [path]
+    return [os.path.join(path, f) for f in sorted(os.listdir(path))
+            if not f.startswith(("_", "."))
+            and os.path.isfile(os.path.join(path, f))]
+
+
+def _dump_head(path: str) -> bytes:
+    """The first 64 KB of a dump's head file (b"" when there is none or
+    it cannot be read) — what the dialect sniff (``sniff_dump_dialect``)
+    and the statement separator sniff read."""
+    try:
+        with open(_dump_files(path)[0], "rb") as fh:
+            return fh.read(65536)
+    except (IndexError, OSError):
+        return b""
+
+
 def read_dump_statements(spark: SparkSession, path: str,
                          on_split_string: str = "error") -> DataFrame:
     """One row per SQL statement, split distributedly on ``;\\n``.
@@ -582,27 +614,17 @@ def read_dump_statements(spark: SparkSession, path: str,
     # which a ";\n" lineSep never matches — the whole file would arrive
     # as ONE statement. Sniff the head driver-side (KBs, not a scan) and
     # pick the separator; btrim below strips the stray \r either way.
-    line_sep = ";\n"
-    head_path = path
-    shard_names: list[str] | None = None
-    if os.path.isdir(path):
-        inner = sorted(
-            f for f in os.listdir(path) if not f.startswith(("_", ".")))
-        head_path = os.path.join(path, inner[0]) if inner else path
-        if len(inner) > 1:
-            # SHARDED dump (a big database dumped as part-*.sql files):
-            # file order = lexicographic file NAME, the convention shard
-            # writers follow — driver-side listing, model-state scale.
-            shard_names = inner
-    try:
-        with open(head_path, "rb") as fh:
-            head = fh.read(65536)
-        # The two byte patterns are disjoint (";\r\n" has no ";\n"
-        # substring), so majority vote picks the dominant convention.
-        if head.count(b";\r\n") > head.count(b";\n"):
-            line_sep = ";\r\n"
-    except OSError:
-        pass
+    head = _dump_head(path)
+    # The two byte patterns are disjoint (";\r\n" has no ";\n"
+    # substring), so majority vote picks the dominant convention.
+    line_sep = (";\r\n" if head.count(b";\r\n") > head.count(b";\n")
+                else ";\n")
+    # SHARDED dump (a big database dumped as part-*.sql files): file
+    # order = lexicographic file NAME, the convention shard writers
+    # follow — driver-side listing, model-state scale.
+    shards = _dump_files(path)
+    shard_names = ([os.path.basename(f) for f in shards]
+                   if len(shards) > 1 else None)
 
     raw_cols = (
         spark.read.option("lineSep", line_sep).text(path)
@@ -1206,98 +1228,39 @@ def sync_dumps(spark: SparkSession, prod_path: str, backup_path: str,
 def _sync_plans(spark: SparkSession, prod_path: str, backup_path: str,
                 tables: list[str] | None):
     """``sync_dumps`` with each table's statement rows UNSORTED
-    (``generate_sync_script(ordered=False)``)."""
+    (``generate_sync_script(ordered=False)``). Each side reads through
+    its sniffed dialect's reader into the same typed-frame contract;
+    PK columns come from the prod side."""
     from pyspark import StorageLevel
 
-    from database_syncer_spark.core.diff import catalog_diff, snapshot_diff_fused
+    from database_syncer_spark.core.diff import (catalog_diff, snapshot_diff,
+                                                 snapshot_diff_fused)
     from database_syncer_spark.core.script import generate_sync_script
-    from database_syncer_spark.sources.pg_dump import sniff_dump_dialect
+    from database_syncer_spark.sources.pg_dump import (
+        read_pg_dump_with_schemas, sniff_dump_dialect)
 
     _size_shuffle_partitions(spark, prod_path, backup_path)
-    dialects = (sniff_dump_dialect(prod_path), sniff_dump_dialect(backup_path))
-    if "postgres" in dialects:
-        return _sync_dumps_cross_dialect(spark, prod_path, backup_path,
-                                         dialects, tables)
-    # keep_seq + no dedup: last-wins resolution happens INSIDE the diff's
-    # single shuffle (snapshot_diff_fused) instead of as a per-side
-    # aggregation before a join — one wide stage less per table.
-    # a requested table may legitimately be absent from ONE side (that's
-    # what the catalog diff reports), so each side ignores missing names
-    # inside its own (single) DDL scan — a separate get_dump_schemas
-    # prescan would repeat the full statement scan per side.
-    # cache_statements=None: the r8-measured skinny single-scan with the
-    # size auto-gate — the DDL collect materializes the statement frame
-    # once and the row parse reads it back instead of re-scanning the
-    # raw file, but only for dumps small enough that the cache doesn't
-    # contend with the diff's execution memory (see the
-    # read_sql_dump_with_schemas docstring for both A/Bs)
-    prod, prod_schemas = read_sql_dump_with_schemas(
-        spark, prod_path, dedup_pk=False, keep_seq=True,
-        tables=tables, ignore_missing=True, cache_statements=None)
-    backup, _ = read_sql_dump_with_schemas(
-        spark, backup_path, dedup_pk=False, keep_seq=True,
-        tables=tables, ignore_missing=True, cache_statements=None)
-    if tables is not None:
-        nowhere = set(tables) - set(prod) - set(backup)
-        if nowhere:
-            raise ValueError(f"tables in neither dump: {sorted(nowhere)}")
-    catalog = catalog_diff(prod, backup)
-    changes, statements = {}, {}
-    for name in catalog["common"]:
-        pk = prod_schemas[name].pk_cols
-        ch = snapshot_diff_fused(prod[name], backup[name], pk).persist(
-            StorageLevel.MEMORY_AND_DISK)
-        changes[name] = ch
-        statements[name] = generate_sync_script(ch, name, pk, ordered=False)
-    return changes, catalog, statements, prod_schemas
+    dialects = [sniff_dump_dialect(p) for p in (prod_path, backup_path)]
+    # Both sides mysql: keep_seq + no dedup, so last-wins resolution
+    # happens INSIDE the diff's single shuffle (snapshot_diff_fused).
+    # Otherwise the mysql side dedups in its reader and the plain diff
+    # runs: a COPY side needs no last-wins, and fusing the mixed pair
+    # lost 4 of 5 A/B pairs (SCALE.md, r10 "cross-dialect sync FUSE A/B").
+    fused = dialects == ["mysql", "mysql"]
 
-
-def _sync_dumps_cross_dialect(spark, prod_path, backup_path, dialects,
-                              tables):
-    """_sync_plans when at least one side is a PostgreSQL plain dump
-    (auto-sniffed): each side reads through its dialect's reader into
-    the SAME typed-DataFrame contract, then the shared diff/script core
-    runs unchanged — dialect lives entirely at the source boundary.
-
-    Differences vs the all-mysql fast path, both deliberate — and as of
-    r10, MEASURED, not just argued:
-    - plain ``snapshot_diff`` per table instead of the fused
-      last-wins+diff: a COPY block cannot express PK overwrites, so the
-      pg side needs no last-wins; the mysql side (if any) deduplicates
-      in its own reader (``dedup_pk=True``). The r9 note said "fusable
-      later"; r10 BUILT the fused variant (mysql side keep_seq, pg side
-      constant order key, one groupBy(pk) over the tagged union) and
-      the interleaved fresh-JVM A/B at 3 M rows/side REJECTED it:
-      unfused won 4 of 5 alternating pairs (e.g. 22.2 s vs 253.2 s in
-      the same host window), and the isolated diff-stage comparison on
-      identical inputs measured fused 82.6 s vs plain 46.1 s. The fuse
-      pays off only when BOTH sides need last-wins (the all-mysql case,
-      where it replaced TWO dedup aggregations + a join with one
-      shuffle); here it drags the pg side — which needs no resolution
-      at all — through a 6 M-row SortAggregate with two struct max_by
-      buffers, while the unfused mysql dedup's output partitioning is
-      already reusable by the join. SCALE.md carries the table.
-    - columns are aligned to the PROD side's schema order before the
-      diff (the two dialects' DDL may list columns differently); a
-      backup missing a prod column fails loudly in the select, same as
-      the reference's positional mismatch would.
-    PK columns come from the prod side (pg: inline constraint or
-    pg_dump's post-data ALTER; mysql: PRIMARY KEY clause)."""
-    from pyspark import StorageLevel
-
-    from database_syncer_spark.core.diff import catalog_diff, snapshot_diff
-    from database_syncer_spark.core.script import generate_sync_script
-    from database_syncer_spark.sources.pg_dump import read_pg_dump_with_schemas
-
-    def _read(path, dialect):
+    def read(path, dialect):
         if dialect == "postgres":
             return read_pg_dump_with_schemas(spark, path, tables=tables)
+        # a requested table may legitimately be absent from ONE side
+        # (the catalog diff reports it), so each side ignores missing
+        # names inside its own DDL scan; cache_statements=None is the
+        # size-gated statement cache (read_sql_dump_with_schemas)
         return read_sql_dump_with_schemas(
-            spark, path, dedup_pk=True, tables=tables, ignore_missing=True,
-            cache_statements=None)
+            spark, path, dedup_pk=not fused, keep_seq=fused, tables=tables,
+            ignore_missing=True, cache_statements=None)
 
-    prod, prod_schemas = _read(prod_path, dialects[0])
-    backup, backup_schemas = _read(backup_path, dialects[1])
+    prod, prod_schemas = read(prod_path, dialects[0])
+    backup, _ = read(backup_path, dialects[1])
     if tables is not None:
         nowhere = set(tables) - set(prod) - set(backup)
         if nowhere:
@@ -1307,14 +1270,18 @@ def _sync_dumps_cross_dialect(spark, prod_path, backup_path, dialects,
     for name in catalog["common"]:
         pk = prod_schemas[name].pk_cols
         p = prod[name]
-        # cross-dialect type drift (e.g. mysql datetime -> timestamp vs
-        # pg -> timestamp_ntz) must not classify every row as changed:
-        # cast the backup to the prod side's exact column types.
-        b = backup[name].selectExpr(
-            *[f"CAST({quote_ident(c)} AS {t}) AS {quote_ident(c)}"
-              for c, t in p.dtypes])
-        ch = snapshot_diff(p, b, pk_cols=pk).persist(
-            StorageLevel.MEMORY_AND_DISK)
-        changes[name] = ch
-        statements[name] = generate_sync_script(ch, name, pk, ordered=False)
+        if fused:
+            ch = snapshot_diff_fused(p, backup[name], pk)
+        else:
+            # the two dialects type columns differently (mysql datetime
+            # -> timestamp, pg -> timestamp_ntz) and may order them
+            # differently: cast the backup to the prod column types, so
+            # type drift alone never classifies a row as changed
+            b = backup[name].selectExpr(
+                *[f"CAST({quote_ident(c)} AS {t}) AS {quote_ident(c)}"
+                  for c, t in p.dtypes])
+            ch = snapshot_diff(p, b, pk_cols=pk)
+        changes[name] = ch.persist(StorageLevel.MEMORY_AND_DISK)
+        statements[name] = generate_sync_script(changes[name], name, pk,
+                                                ordered=False)
     return changes, catalog, statements, prod_schemas

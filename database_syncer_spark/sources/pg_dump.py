@@ -42,13 +42,10 @@ assumed WITHIN one file, never across files.
 
 Escape handling: COPY text format escapes ``\\\\ \\t \\n \\r`` (written
 by ``write_pg_dump`` below, and by pg itself). The reader unescapes
-with a sentinel chain (``\\\\\\\\`` -> U+0001 first, so ``\\\\t`` —
-literal backslash-t — never turns into a tab), which is exact for any
-input not containing a raw U+0001 byte; ``write_pg_dump`` never emits
-one (it escapes U+0001 as ``\\x01`` is NOT a COPY escape — instead the
-writer asserts nothing, pg text columns virtually never contain SOH,
-and a mismatch would fail the round-trip value hash loudly, not
-silently).
+with a literal-replace chain that first swaps ``\\\\\\\\`` for the
+sentinel U+0001, so ``\\\\t`` (an escaped backslash, then t) never
+becomes a tab. The unescape is exact for input without a raw U+0001
+byte.
 
 Reference parity: the reference ingests ONLY mysqldump INSERT format
 (sync.py:29-120); this module is the Spark-first breadth a real
@@ -58,17 +55,19 @@ instance. No reference code exists for it — cited for absence.
 
 from __future__ import annotations
 
-import os
 import re
-
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from database_syncer_spark.sources.dump import (TableSchema, _dump_head,
+                                                _matching_paren_body,
+                                                _resolve_pk,
+                                                _split_top_level)
+
 __all__ = [
     "read_pg_dump", "read_pg_dump_with_schemas", "write_pg_dump",
-    "parse_pg_create_table", "sniff_dump_dialect", "PgTableSchema",
+    "parse_pg_create_table", "sniff_dump_dialect",
 ]
 
 # --- DDL ------------------------------------------------------------------
@@ -88,16 +87,6 @@ _PG_TYPE_MAP = [
     (re.compile(r"^(text|character|varchar|char|uuid|json)", re.I), "string"),
     (re.compile(r"^bytea", re.I), "binary"),
 ]
-
-
-def _pg_spark_type(pg_type: str) -> str:
-    for pat, target in _PG_TYPE_MAP:
-        m = pat.match(pg_type.strip())
-        if m:
-            if target is None:
-                return f"decimal({m.group(2)},{m.group(3)})"
-            return target
-    return "string"
 
 
 _PG_CREATE_RE = re.compile(
@@ -120,15 +109,8 @@ def parse_pg_create_table(stmt: str) -> tuple[str, list[tuple[str, str]]] | None
     m = _PG_CREATE_RE.search(stmt)
     if not m:
         return None
-    body = stmt[m.end():]
-    depth, end = 1, len(body)
-    for i, ch in enumerate(body):
-        depth += (ch == "(") - (ch == ")")
-        if depth == 0:
-            end = i
-            break
     cols: list[tuple[str, str]] = []
-    for piece in _split_commas(body[:end]):
+    for piece in _split_top_level(_matching_paren_body(stmt[m.end() - 1:])):
         piece = piece.strip()
         if not piece or re.match(
                 r"^(PRIMARY\s+KEY|CONSTRAINT|CHECK|UNIQUE|FOREIGN\s+KEY)",
@@ -140,38 +122,6 @@ def parse_pg_create_table(stmt: str) -> tuple[str, list[tuple[str, str]]] | None
     return m.group(1), cols
 
 
-def _split_commas(body: str) -> list[str]:
-    """Split a DDL body on top-level commas (parens nest: numeric(12,2))."""
-    out, depth, start = [], 0, 0
-    for i, ch in enumerate(body):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append(body[start:i])
-            start = i + 1
-    out.append(body[start:])
-    return out
-
-
-@dataclass
-class PgTableSchema:
-    """TableSchema-shaped metadata for a pg dump table (same interface
-    the mysql reader's TableSchema exposes to sync_dumps/ddl paths)."""
-    name: str
-    columns: list[tuple[str, str]]          # (name, pg_type)
-    pk_cols: list[str]
-    create_stmt: str
-
-    @property
-    def column_names(self) -> list[str]:
-        return [c for c, _ in self.columns]
-
-    def spark_types(self) -> list[tuple[str, str]]:
-        return [(c, _pg_spark_type(t)) for c, t in self.columns]
-
-
 _PG_INLINE_PK_RE = re.compile(r"PRIMARY\s+KEY\s*\(([^)]*)\)", re.I)
 _PG_ALTER_PK_RE = re.compile(
     r'ALTER\s+TABLE\s+(?:ONLY\s+)?(?:[\w$]+\.)?"?(\w+)"?\s+'
@@ -179,42 +129,26 @@ _PG_ALTER_PK_RE = re.compile(
     re.I | re.S)
 
 
-def _pg_pk_cols(table: str, create_stmt: str, ddl_text: str,
-                col_names: list[str]) -> list[str]:
-    """PK columns for ``table``: inline table constraint first, then the
-    post-data ALTER (pg_dump's layout), else the same heuristic ladder
-    the mysql reader uses — an 'id' column, else the first column."""
+def _declared_pk(table: str, create_stmt: str, ddl_text: str) -> list[str]:
+    """PK columns ``table`` declares: the inline table constraint, else
+    the post-data ALTER (pg_dump's layout), else none."""
     m = _PG_INLINE_PK_RE.search(create_stmt)
     if m:
         return [c.strip().strip('"') for c in m.group(1).split(",")]
     for am in _PG_ALTER_PK_RE.finditer(ddl_text):
         if am.group(1) == table:
             return [c.strip().strip('"') for c in am.group(2).split(",")]
-    if "id" in col_names:
-        return ["id"]
-    return col_names[:1]
+    return []
 
 
 def sniff_dump_dialect(path: str) -> str:
-    """'postgres' | 'mysql' from the first ~64 KB of a dump file (or the
-    first file of a sharded directory) — driver-side, KB-scale. pg plain
+    """'postgres' | 'mysql' from the first 64 KB of a dump's head file
+    (``dump._dump_files``) — driver-side, KB-scale. pg plain
     dumps announce themselves (`-- PostgreSQL database dump`) or carry a
     COPY header; mysqldump files carry INSERT INTO / ENGINE= / backtick
     DDL. Defaults to mysql (the reference's only dialect) when neither
     signature appears."""
-    p = path
-    if os.path.isdir(path):
-        entries = sorted(
-            f for f in os.listdir(path)
-            if os.path.isfile(os.path.join(path, f)))
-        if not entries:
-            return "mysql"
-        p = os.path.join(path, entries[0])
-    try:
-        with open(p, "r", encoding="utf-8", errors="replace") as fh:
-            head = fh.read(65536)
-    except OSError:
-        return "mysql"
+    head = _dump_head(path).decode("utf-8", errors="replace")
     if ("PostgreSQL database dump" in head
             or re.search(r"^COPY\s.+\sFROM stdin;\s*$", head, re.M)):
         return "postgres"
@@ -247,10 +181,10 @@ def read_pg_dump(spark: SparkSession, path: str,
 def read_pg_dump_with_schemas(
     spark: SparkSession, path: str, typed: bool = True,
     tables: list[str] | None = None,
-) -> tuple[dict[str, DataFrame], dict[str, PgTableSchema]]:
-    """``read_pg_dump`` plus TableSchema-shaped DDL metadata (columns,
-    PK from the inline constraint or pg_dump's post-data ALTER) — what
-    the cross-dialect sync path consumes. ``tables`` restricts ingest:
+) -> tuple[dict[str, DataFrame], dict[str, TableSchema]]:
+    """``read_pg_dump`` plus each table's ``TableSchema`` (columns, PK
+    from the inline constraint or pg_dump's post-data ALTER) — what
+    ``sync_dumps`` consumes. ``tables`` restricts ingest:
     unrequested tables' COPY blocks are dropped at the RANGE level, so
     their data lines are filtered by the broadcast join without ever
     being split or unescaped."""
@@ -295,18 +229,18 @@ def read_pg_dump_with_schemas(
                                & (F.col("lid") >= s) & (F.col("lid") <= e))
     ddl_text = "\n".join(
         r.value for r in lines.where(~in_block).collect())
-    schemas: dict[str, PgTableSchema] = {}
+    schemas: dict[str, TableSchema] = {}
     for stmt in ddl_text.split(";"):
         parsed = parse_pg_create_table(stmt)
         if parsed:
             name, cols = parsed
-            schemas[name] = PgTableSchema(
+            schemas[name] = TableSchema(
                 name=name, columns=cols,
+                pk_cols=_resolve_pk(_declared_pk(name, stmt, ddl_text),
+                                    [c for c, _ in cols]),
                 # no trailing ";" — consumers (ddl_statements) append it,
                 # matching the mysql TableSchema convention
-                pk_cols=_pg_pk_cols(name, stmt, ddl_text,
-                                    [c for c, _ in cols]),
-                create_stmt=stmt.strip())
+                create_stmt=stmt.strip(), type_map=_PG_TYPE_MAP)
 
     out: dict[str, DataFrame] = {}
     found_tables = sorted({t for _, _, _, t, _ in ranges})
@@ -345,10 +279,10 @@ def read_pg_dump_with_schemas(
             for i, name in enumerate(col_names)]
         df = data.select(*raw_cols)
         if typed and table in schemas:
-            pg_types = dict(schemas[table].columns)
+            spark_types = dict(schemas[table].spark_types())
             df = df.select(*[
-                F.col(c).cast(_pg_spark_type(pg_types[c])).alias(c)
-                if c in pg_types else F.col(c)
+                F.col(c).cast(spark_types[c]).alias(c)
+                if c in spark_types else F.col(c)
                 for c in col_names])
         out[table] = df
     return out, schemas
@@ -389,19 +323,17 @@ def write_pg_dump(df: DataFrame, table: str, pk_cols: list[str],
                   path: str) -> None:
     """Render a DataFrame as a pg_dump plain-format file — distributed.
 
-    Same shape as ``write_sql_dump``: data lines render JVM-side and
-    write as distributed text parts, then stream-concatenate into the
-    final file with O(1) driver memory (atomic rename, so render-once
-    caches never see a truncated file). Layout follows pg_dump: CREATE
-    TABLE, COPY block, post-data PRIMARY KEY constraint."""
-    import glob as _glob
-    import shutil
-    import tempfile
+    Layout follows pg_dump: CREATE TABLE, COPY block, post-data PRIMARY
+    KEY constraint. Data lines render JVM-side; the ``\\.`` terminator
+    and the constraint are one trailing row unioned after them (a union
+    keeps its inputs' partition order), and ``write_script`` publishes
+    the lot, as for ``write_sql_dump``."""
+    from database_syncer_spark.core.script import write_script
 
     dtypes = {f.name: f.dataType for f in df.schema.fields}
     rendered = df.select(F.concat_ws(
         "\t", *[_pg_field(F.col(c), dtypes[c]) for c in df.columns])
-        .alias("r"))
+        .alias("statement"))
 
     col_defs = []
     for f in df.schema.fields:
@@ -422,7 +354,6 @@ def write_pg_dump(df: DataFrame, table: str, pk_cols: list[str],
         ");",
         "",
         f"COPY public.{table} ({', '.join(df.columns)}) FROM stdin;",
-        "",
     ])
     footer = "\n".join([
         "\\.",
@@ -430,21 +361,7 @@ def write_pg_dump(df: DataFrame, table: str, pk_cols: list[str],
         f"ALTER TABLE ONLY public.{table}",
         f"    ADD CONSTRAINT {table}_pkey PRIMARY KEY "
         f"({', '.join(pk_cols)});",
-        "",
     ])
-
-    parts_dir = tempfile.mkdtemp(prefix="dss_pgdump_parts_")
-    tmp_path = path + ".tmp"
-    try:
-        rendered.write.mode("overwrite").text(parts_dir)
-        with open(tmp_path, "w", encoding="utf-8") as out_fh:
-            out_fh.write(header)
-            for part in sorted(_glob.glob(os.path.join(parts_dir, "part-*"))):
-                with open(part, "r", encoding="utf-8") as in_fh:
-                    shutil.copyfileobj(in_fh, out_fh)
-            out_fh.write(footer)
-        os.replace(tmp_path, path)
-    finally:
-        shutil.rmtree(parts_dir, ignore_errors=True)
-        if os.path.exists(tmp_path):
-            os.remove(tmp_path)
+    footer_row = df.sparkSession.createDataFrame([(footer,)],
+                                                 "statement string")
+    write_script(rendered.unionByName(footer_row), path, header=header)

@@ -4,14 +4,14 @@ heterogeneous pg-prod vs mysql-backup sync end to end at 3 M rows/side
 — the fixture regime where r9 recorded 46.7 s against the all-mysql
 fused sync's 13.1 s (SCALE.md). r10 used this probe to A/B the fused
 cross-dialect variant against the plain-diff form and REJECTED the
-fuse (unfused won 4/5 interleaved pairs; see
-_sync_dumps_cross_dialect's docstring and SCALE.md for the table).
+fuse (unfused won 4/5 interleaved pairs; see the diff selection in
+sources/dump.py's _sync_plans and SCALE.md for the table).
 
 Fixture (identical to the r9 measure): orders replicated x20 with key
 shifts (3 M rows), prod rendered as a PostgreSQL plain dump, the
 derive_backup evolution (300 k U / 150 k I / 120 k D planted) rendered
 as a mysqldump file. The probe runs `sync_dumps` (dialect sniff ->
-cross-dialect path) and reports wall + per-change-type counts, which
+plain diff) and reports wall + per-change-type counts, which
 must equal the planted set exactly — a speedup that loses changes is
 not a speedup.
 

@@ -10,6 +10,8 @@ casts, and multi-file (sharded) dumps.
 from __future__ import annotations
 
 import datetime
+import os
+import re
 import textwrap
 from decimal import Decimal
 
@@ -96,6 +98,60 @@ def test_pg_roundtrip_typed_columns(spark, tmp_path):
         "id": "bigint", "bal": "decimal(12,2)", "x": "double",
         "ok": "boolean", "ts": "timestamp_ntz", "d": "date"}
     assert {tuple(r) for r in back.collect()} == set(rows)
+
+
+def test_write_pg_dump_golden_bytes(spark, tmp_path):
+    """The pg writer's exact bytes over three input partitions: header
+    and CREATE TABLE, the COPY block's rows in partition order (tab,
+    newline and backslash escaped, NULL as ``\\N``), then the ``\\.``
+    terminator and the post-data composite PRIMARY KEY. Row (2, 'a')
+    pins today's rendering of a NULL boolean, ``f``."""
+    rows = [
+        (1, "a", "plain", Decimal("10.50"), True,
+         datetime.datetime(2024, 2, 29, 12, 30, 45, 123456)),
+        (1, "b", "tab\there", Decimal("-0.01"), False,
+         datetime.datetime(1999, 12, 31, 23, 59, 59)),
+        (2, "a", "line\nbreak", None, None, None),
+        (2, "b", "back\\slash", Decimal("0.00"), True,
+         datetime.datetime(2000, 1, 1)),
+        (3, "a", None, Decimal("12345678.99"), False,
+         datetime.datetime(2024, 1, 2, 3, 4, 5, 6)),
+    ]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 3),
+        "a int, b string, note string, amt decimal(10,2), ok boolean, "
+        "ts timestamp_ntz")
+    assert df.rdd.getNumPartitions() == 3
+    path = str(tmp_path / "golden.sql")
+    write_pg_dump(df, "t", ["a", "b"], path)
+    with open(path, encoding="utf-8") as fh:
+        assert fh.read() == (
+            "--\n"
+            "-- PostgreSQL database dump\n"
+            "--\n"
+            "\n"
+            "SET client_encoding = 'UTF8';\n"
+            "\n"
+            "CREATE TABLE public.t (\n"
+            "    a integer NOT NULL,\n"
+            "    b text NOT NULL,\n"
+            "    note text,\n"
+            "    amt numeric(10,2),\n"
+            "    ok boolean,\n"
+            "    ts timestamp without time zone\n"
+            ");\n"
+            "\n"
+            "COPY public.t (a, b, note, amt, ok, ts) FROM stdin;\n"
+            "1\ta\tplain\t10.50\tt\t2024-02-29 12:30:45.123456\n"
+            "1\tb\ttab\\there\t-0.01\tf\t1999-12-31 23:59:59.000000\n"
+            "2\ta\tline\\nbreak\t\\N\tf\t\\N\n"
+            "2\tb\tback\\\\slash\t0.00\tt\t2000-01-01 00:00:00.000000\n"
+            "3\ta\t\\N\t12345678.99\tf\t2024-01-02 03:04:05.000006\n"
+            "\\.\n"
+            "\n"
+            "ALTER TABLE ONLY public.t\n"
+            "    ADD CONSTRAINT t_pkey PRIMARY KEY (a, b);\n")
+    assert sorted(os.listdir(tmp_path)) == ["golden.sql"]
 
 
 # --- block assignment ----------------------------------------------------------
@@ -228,6 +284,36 @@ def test_sniff_dump_dialect(tmp_path):
     d.mkdir()
     (d / "part-000.sql").write_text(PG_PROD)
     assert sniff_dump_dialect(str(d)) == "postgres"
+    # ... skipping the marker and checksum files a Spark or Hadoop writer
+    # leaves next to the shards, which sort before them by name
+    assert sniff_dump_dialect(_pg_shards_with_markers(tmp_path)) == "postgres"
+
+
+def _pg_shards_with_markers(tmp_path) -> str:
+    d = tmp_path / "marked"
+    d.mkdir()
+    (d / "part-000.sql").write_text(PG_PROD)
+    (d / "_SUCCESS").write_text("")
+    (d / ".part-000.sql.crc").write_bytes(b"crc\x00\x01\x02\x03")
+    return str(d)
+
+
+def test_sync_pg_shard_dir_with_marker_files(spark, tmp_path):
+    """A pg shard directory holding ``_SUCCESS`` and a ``.crc`` file
+    syncs as pg: its table is common with the pg backup, and the one
+    row the backup lacks is the only change. Sniffed as mysql, the
+    catalog diff reported prod table 'public' to create and 't' to
+    drop."""
+    from database_syncer_spark.sources.dump import sync_dumps
+
+    prod = _pg_shards_with_markers(tmp_path)
+    backup = _write(tmp_path, "backup.sql", PG_PROD.replace("3\tadded\n", ""))
+    changes, catalog, _, _ = sync_dumps(spark, prod, backup)
+    assert catalog["common"] == ["t"]
+    assert catalog["create"] == [] and catalog["drop"] == []
+    assert [(r.id, r.v, r.change_type) for r in changes["t"].collect()] \
+        == [(3, "added", "INSERT")]
+    changes["t"].unpersist()
 
 
 def test_pg_schemas_pk_from_post_data_alter(spark, tmp_path):
@@ -283,8 +369,9 @@ def test_cross_dialect_sync_last_wins(spark, tmp_path):
     sync.py:67) BEFORE the diff classifies — id 2's final 'new' value
     equals prod, so no change row surfaces. (The r10 fused variant that
     moved this resolution inside the diff was A/B-rejected for the
-    cross-dialect shape — _sync_dumps_cross_dialect docstring — so this
-    pins the semantics, not the plan shape.)"""
+    cross-dialect shape — see the diff selection in
+    ``sources.dump._sync_plans`` — so this pins the semantics, not the
+    plan shape; ``test_every_dialect_pair_syncs_alike`` pins that.)"""
     from database_syncer_spark.sources.dump import sync_dumps
 
     my_dup = MY_BACKUP.replace(
@@ -298,3 +385,82 @@ def test_cross_dialect_sync_last_wins(spark, tmp_path):
     # id 2: prod 'new' vs last-wins backup 'new' -> unchanged, absent
     assert got == {3: "INSERT", 4: "DELETE"}
     changes["t"].unpersist()
+
+
+# One table in both dialects: prod has 1 unchanged, 2 updated (a value to
+# NULL), 3 inserted; backup has 4, deleted. Each mysql side carries a
+# duplicate PK whose last INSERT wins.
+_MY_DDL = ("CREATE TABLE `t` (\n  `id` int(11) NOT NULL,\n"
+           "  `v` varchar(20) DEFAULT NULL,\n"
+           "  `amt` decimal(10,2) DEFAULT NULL,\n"
+           "  `ts` datetime DEFAULT NULL,\n"
+           "  PRIMARY KEY (`id`)\n) ENGINE=InnoDB;\n")
+_PG_DDL = ("CREATE TABLE public.t (\n    id bigint NOT NULL,\n    v text,\n"
+           "    amt numeric(10,2),\n    ts timestamp without time zone\n);\n")
+_PAIR_ROWS = {
+    "prod": [(1, "it's", "1.50", "2024-02-29 12:30:45"),
+             (2, "new", None, "1999-12-31 23:59:59"),
+             (3, "added", "3.25", None)],
+    "backup": [(1, "it's", "1.50", "2024-02-29 12:30:45"),
+               (2, "old", "2.00", "1999-12-31 23:59:59"),
+               (4, "gone", "4.00", "2000-01-01 00:00:00")],
+}
+
+
+def _render_dump(side: str, dialect: str) -> str:
+    rows = _PAIR_ROWS[side]
+    if dialect == "pg":
+        lines = ["\t".join("\\N" if v is None else str(v) for v in r)
+                 for r in rows]
+        return (_PG_DDL + "COPY public.t (id, v, amt, ts) FROM stdin;\n"
+                + "".join(f"{line}\n" for line in lines) + "\\.\n"
+                "ALTER TABLE ONLY public.t\n"
+                "    ADD CONSTRAINT t_pkey PRIMARY KEY (id);\n")
+
+    def lit(v):
+        if v is None:
+            return "NULL"
+        return str(v) if isinstance(v, int) else "'" + v.replace("'", "''") + "'"
+
+    def insert(rs):
+        return ("INSERT INTO `t` VALUES "
+                + ",".join("(" + ",".join(map(lit, r)) + ")" for r in rs)
+                + ";\n")
+
+    # the duplicate of id 2 comes first, so the real row wins
+    stale = (2, "stale", "9.99", None)
+    return _MY_DDL + insert([stale] + rows[:1]) + insert(rows[1:])
+
+
+@pytest.mark.parametrize("backup_dialect", ["mysql", "pg"])
+@pytest.mark.parametrize("prod_dialect", ["mysql", "pg"])
+def test_every_dialect_pair_syncs_alike(spark, tmp_path, prod_dialect,
+                                        backup_dialect):
+    """The same rows in any dialect pair give the same CRUD counts and
+    the same script bytes. Only the all-mysql pair fuses last-wins into
+    the diff's aggregation (no Join in its changes plan); every pair
+    with a pg side runs the plain full-outer join diff, the r10 A/B
+    winner for that shape."""
+    from database_syncer_spark.sources.dump import compare_sql_files
+
+    prod = _write(tmp_path, "prod.sql", _render_dump("prod", prod_dialect))
+    backup = _write(tmp_path, "backup.sql",
+                    _render_dump("backup", backup_dialect))
+    out = str(tmp_path / "sync.sql")
+    result = compare_sql_files(spark, prod, backup, out, verbose=False)
+    assert result["table_stats"] == {
+        "t": {"INSERT": 1, "UPDATE": 1, "DELETE": 1}}
+    with open(out, encoding="utf-8") as fh:
+        assert fh.read() == (
+            "-- sync script: apply to backup to reach production state\n"
+            "DELETE FROM `t` WHERE `id` = 4;\n"
+            "UPDATE `t` SET `v` = 'new', `amt` = NULL, "
+            "`ts` = '1999-12-31 23:59:59.000000' WHERE `id` = 2;\n"
+            "INSERT INTO `t` VALUES (3, 'added', 3.25, NULL);\n")
+    changes = result["changes"]["t"]
+    plan = changes._jdf.queryExecution().executedPlan().toString()
+    if (prod_dialect, backup_dialect) == ("mysql", "mysql"):
+        assert "Join" not in plan, plan
+    else:
+        assert re.search(r"Join .*FullOuter", plan), plan
+    changes.unpersist()

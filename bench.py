@@ -117,6 +117,9 @@ SECONDARY = [
     "dedup_incremental_rolling",   # two-day admit-and-grow index loop
     "stream_dedup_rolling",        # the same loop as streaming foreachBatch
     "sim_ivf_incremental",         # frozen-centroid vector-index append
+    # r13's 2.4x n-gram shape win, tracked so its regression is visible
+    "dedup_ngram_jaccard",         # shingle-set Jaccard self-join
+    "dedup_ngram_containment",     # shingle-set containment self-join
     # r12 optimization round addition dedup_embedding_cosine (tracked
     # from birth after the probe-side repartition fix, 29.7 s -> 5.6 s,
     # OPTIMIZATION_r12.md) moved to SCALING_SENTINEL (r13): it is now

@@ -119,7 +119,7 @@ def stream_dedup_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from database_syncer_spark.pipeline.dedup import (
         append_band_index, build_corpus_band_index, incremental_near_dups)
     from database_syncer_spark.streaming.runner import (
-        stage_as_stream_source_grouped)
+        drain, stage_as_stream_source_grouped)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     rem = F.col("doc_id") % 16
@@ -148,7 +148,10 @@ def stream_dedup_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_store = os.path.join(workdir, "corpus")
     verdicts_dir = os.path.join(workdir, "verdicts")
     corpus0.write.mode("overwrite").parquet(corpus_store)
-    build_corpus_band_index(spark.read.parquet(corpus_store), table)
+    # every corpus_store read names its schema: no inference job per read
+    corpus_schema = corpus0.schema
+    build_corpus_band_index(
+        spark.read.schema(corpus_schema).parquet(corpus_store), table)
 
     def probe_admit(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
@@ -161,7 +164,7 @@ def stream_dedup_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
         # append path now also refreshes the default session's catalog,
         # this is the belt to that suspender).
         bs = batch.sparkSession
-        corpus = bs.read.parquet(corpus_store)
+        corpus = bs.read.schema(corpus_schema).parquet(corpus_store)
         v = incremental_near_dups(
             batch, corpus, corpus_bands=bs.table(table)).persist()
         v.write.mode("append").parquet(verdicts_dir)
@@ -171,16 +174,12 @@ def stream_dedup_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
         admitted.write.mode("append").parquet(corpus_store)
         v.unpersist()
 
-    q = (spark.readStream.schema(batches.schema)
-         .option("maxFilesPerTrigger", 1)
-         .parquet(src)
-         .writeStream.foreachBatch(probe_admit)
-         .outputMode("update")
-         .start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(spark,
+          spark.readStream.schema(batches.schema)
+          .option("maxFilesPerTrigger", 1)
+          .parquet(src)
+          .writeStream.foreachBatch(probe_admit)
+          .outputMode("update"))
     out = spark.read.parquet(verdicts_dir)
     day = (F.when(F.col("doc_id") >= _SROLL_PLANT_OFFSET, F.lit(3))
            .when(F.col("doc_id") % 16 == _SROLL_SLICES[0], F.lit(1))

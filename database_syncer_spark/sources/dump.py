@@ -1144,10 +1144,14 @@ def compare_sql_files(spark: SparkSession, production_file: str,
 _CACHE_STMT_MAX_BYTES = 3 << 30
 
 
+#: ``_input_bytes`` of a path that can't be stat'd
+_UNSTATABLE = (1 << 63) - 1
+
+
 def _input_bytes(path: str) -> int:
-    """Local input size (file or flat dump directory); 2**63-1 when the
-    path can't be stat'd (non-local storage) so the auto-gate declines
-    to cache rather than guessing."""
+    """Local input size (file or flat dump directory); ``_UNSTATABLE``
+    when the path can't be stat'd (non-local storage) so the auto-gate
+    declines to cache rather than guessing."""
     try:
         if os.path.isdir(path):
             # Recurse: a nested shard directory must contribute its
@@ -1163,7 +1167,7 @@ def _input_bytes(path: str) -> int:
             return total
         return os.path.getsize(path)
     except OSError:
-        return (1 << 63) - 1
+        return _UNSTATABLE
 
 
 def _size_shuffle_partitions(spark: SparkSession, *paths: str) -> None:
@@ -1178,14 +1182,15 @@ def _size_shuffle_partitions(spark: SparkSession, *paths: str) -> None:
     512 → 185 s, while the sf0.1 bench is unchanged because AQE
     coalesces small shuffles back down. Only ever raises (small jobs
     keep their default); explicit SPARK_GRAFT_SHUFFLE wins; non-local
-    paths (no stat) are left to cluster defaults.
+    paths (no stat) are left to cluster defaults. A sharded dump counts
+    its shards' bytes (``_input_bytes``), not its directory's inode size.
     """
     if os.environ.get("SPARK_GRAFT_SHUFFLE"):
         return
-    try:
-        total = sum(os.path.getsize(p) for p in paths)
-    except OSError:
+    sizes = [_input_bytes(p) for p in paths]
+    if _UNSTATABLE in sizes:
         return
+    total = sum(sizes)
     current = int(spark.conf.get("spark.sql.shuffle.partitions"))
     target = min(int(total // (20 << 20)), 2048)
     if target > current:

@@ -313,7 +313,8 @@ def _pg_field(col: F.Column, dtype) -> F.Column:
     elif isinstance(dtype, T.DateType):
         v = F.date_format(col, "yyyy-MM-dd")
     elif isinstance(dtype, T.BooleanType):
-        v = F.when(col, F.lit("t")).otherwise(F.lit("f"))
+        # no otherwise(): NULL stays NULL and renders as \N below
+        v = F.when(col, F.lit("t")).when(~col, F.lit("f"))
     else:
         v = col.cast("string")
     return F.coalesce(v, F.lit("\\N"))

@@ -1,5 +1,13 @@
 """Streaming execution helpers: file replay, memory-sink runs, and the
 foreachBatch incremental-sync loop (the reference's diff, incrementalized).
+
+Every query here is started, drained and stopped by :func:`drain`, so
+each micro-batch costs the same fixed work: an offset-log and a
+commit-log write on the query's temporary local checkpoint (plus the
+file source's own log entry), each a write-to-temp and rename through
+:data:`_FS_CHECKPOINT_MANAGER` with no process fork, then the Spark
+jobs of the batch's own plan — two per CDC batch in
+:func:`incremental_sync_foreachbatch`, whose docstring has its cost.
 """
 
 from __future__ import annotations
@@ -11,12 +19,17 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 
 def _staging_complete(path: str, n_files: int) -> bool:
+    """A staging is published by one rename after its last write, so
+    Spark's ``_SUCCESS`` marker in ``path`` means it is whole. A stager
+    writes at most ``n_files`` parquet files: none for an empty
+    partition, so 3 rows staged into 5 files leave 3."""
     return (os.path.exists(os.path.join(path, "_SUCCESS"))
             and sum(f.endswith(".parquet")
-                    for f in os.listdir(path)) == n_files)
+                    for f in os.listdir(path)) <= n_files)
 
 
 def _publish_staging(tmp: str, path: str, n_files: int) -> str:
@@ -40,12 +53,12 @@ def stage_as_stream_source(df: DataFrame, path: str, n_files: int = 5,
     (FIXTURES.md §B3). Arrival order across files is arbitrary.
 
     ``reuse=True`` skips the write when ``path`` already holds a completed
-    staging (Spark's own ``_SUCCESS`` marker plus the expected file count)
-    — callers whose ``df`` is a pure function of an immutable fixture
-    (the driver's correctness keys) pay the staging job once per machine
-    instead of once per call. Pass ``reuse=False`` (default) whenever the
-    input can change between calls. Writes land in a unique temp dir and
-    are renamed into place, so concurrent stagers race safely."""
+    staging (see :func:`_staging_complete`) — callers whose ``df`` is a
+    pure function of an immutable fixture (the driver's correctness
+    keys) pay the staging job once per machine instead of once per
+    call. Pass ``reuse=False`` (default) whenever the input can change
+    between calls. Writes land in a unique temp dir and are renamed into
+    place, so concurrent stagers race safely."""
     if os.path.exists(path):
         if reuse and _staging_complete(path, n_files):
             return path
@@ -63,8 +76,8 @@ def stage_as_stream_source_ordered(df: DataFrame, path: str, n_files: int = 5,
     arrival order). Required for watermark tests: with out-of-order
     replay a watermark legitimately drops late rows. ``reuse`` and the
     atomic tmp+rename publish as in :func:`stage_as_stream_source`
-    (each sequential append leaves one part file, so the file count
-    check holds here too)."""
+    (each sequential append leaves at most one part file, so the file
+    count check holds here too)."""
     from pyspark.sql import Window as W
 
     if os.path.exists(path):
@@ -118,6 +131,45 @@ ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming.state."
                     "RocksDBStateStoreProvider")
 _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
 
+#: Checkpoint file manager for every query :func:`drain` runs. None of
+#: them sets a ``checkpointLocation``, so each commits to Spark's
+#: temporary checkpoint on the local disk. The default FileContext
+#: manager renames through ``getFileLinkStatus``, which on a local
+#: filesystem forks a ``readlink`` process (Hadoop ``FileUtil.readLink``)
+#: for every offset, commit and file-source log entry; the FileSystem
+#: manager renames in-process.
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming."
+    "checkpointing.FileSystemBasedCheckpointFileManager")
+_CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def drain(spark: SparkSession, writer: DataStreamWriter,
+          conf: dict[str, str | int | None] | None = None) -> None:
+    """Start ``writer``'s query, process everything its source holds,
+    and stop it. The session confs in ``conf`` (None values skipped) and
+    :data:`_FS_CHECKPOINT_MANAGER` hold for the query's whole life,
+    not just its ``start()`` (the file source opens its log on the
+    stream thread after ``start()`` returns); the previous values are
+    restored, or unset, afterwards, also when a batch raises."""
+    settings = {_CHECKPOINT_MANAGER_KEY: _FS_CHECKPOINT_MANAGER,
+                **{k: v for k, v in (conf or {}).items() if v is not None}}
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
 
 def run_stream_to_memory(
     spark: SparkSession,
@@ -137,42 +189,20 @@ def run_stream_to_memory(
     instance PER shuffle partition PER micro-batch; replaying a tiny
     fixture with the session's batch-tuned partition count (32 on the
     bench host) pays 32x the state-store maintenance for no parallelism.
-    The override is applied for the query's planning only and restored
-    immediately (streaming queries pin their partitioning at start).
-    ``state_store_provider`` is pinned the same way (default RocksDB —
-    see :data:`ROCKSDB_PROVIDER`)."""
+    ``state_store_provider`` (default RocksDB — see
+    :data:`ROCKSDB_PROVIDER`) is pinned the same way. Both hold for the
+    query's life only (see :func:`drain`); the session conf is restored
+    afterwards."""
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_path)
     )
-    conf_key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(conf_key)
-    prev_provider = spark.conf.get(_PROVIDER_KEY, None)
-    if shuffle_partitions is not None:
-        spark.conf.set(conf_key, str(shuffle_partitions))
-    if state_store_provider is not None:
-        spark.conf.set(_PROVIDER_KEY, state_store_provider)
-    try:
-        q = (
-            shape(stream)
-            .writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set(conf_key, prev)
-        if state_store_provider is not None:
-            if prev_provider is None:
-                spark.conf.unset(_PROVIDER_KEY)
-            else:
-                spark.conf.set(_PROVIDER_KEY, prev_provider)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(spark,
+          shape(stream).writeStream.outputMode(output_mode)
+          .format("memory").queryName(query_name),
+          {"spark.sql.shuffle.partitions": shuffle_partitions,
+           _PROVIDER_KEY: state_store_provider})
     return spark.table(query_name)
 
 
@@ -195,6 +225,16 @@ def incremental_sync_foreachbatch(
     versions are parquet snapshots (no table format jars in the image).
     Each change-PK appears exactly once, so the final state is independent
     of how the stream is chunked.
+
+    Cost per call: the staging write (its shuffle and the write), the
+    ``state_v0`` write, then per micro-batch one state version read with
+    ``initial_state``'s schema (no inference job) and one
+    ``apply_changes`` write of the next version — the anti-join's
+    broadcast (or shuffle) stage and the write, two jobs at CDC batch
+    sizes: 3 + 2n jobs for n batches. An empty batch is merged like any
+    other: ``apply_changes`` returns the state unchanged, which costs
+    less than an emptiness probe job on every batch. The returned frame
+    reads the final version with the same known schema.
     """
     from database_syncer_spark.core.diff import apply_changes
 
@@ -203,32 +243,25 @@ def incremental_sync_foreachbatch(
         changes, changes_path or os.path.join(workdir, "changes"),
         n_chunks, reuse=reuse_changes)
 
+    schema = initial_state.schema
     state_path = os.path.join(workdir, "state_v0")
     initial_state.write.mode("overwrite").parquet(state_path)
     version = {"n": 0, "path": state_path}
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        cur = spark.read.parquet(version["path"])
+        cur = spark.read.schema(schema).parquet(version["path"])
         new = apply_changes(cur, batch, pk_cols)
         nxt = os.path.join(workdir, f"state_v{version['n'] + 1}")
         new.write.mode("overwrite").parquet(nxt)
         version["n"] += 1
         version["path"] = nxt
 
-    q = (
-        spark.readStream.schema(changes.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(merge_batch)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(spark,
+          spark.readStream.schema(changes.schema)
+          .option("maxFilesPerTrigger", 1)
+          .parquet(src)
+          .writeStream.foreachBatch(merge_batch)
+          .outputMode("update"))
     # Only the FINAL state version is ever read again (the return value
     # references it lazily, so the workdir itself must survive the call);
     # dropping the intermediate versions keeps repeated bench/test runs
@@ -236,4 +269,4 @@ def incremental_sync_foreachbatch(
     for n in range(version["n"]):
         shutil.rmtree(os.path.join(workdir, f"state_v{n}"),
                       ignore_errors=True)
-    return spark.read.parquet(version["path"])
+    return spark.read.schema(schema).parquet(version["path"])

@@ -170,6 +170,31 @@ def test_statement_cache_value_identical_and_gated(spark, tmp_path):
     assert _input_bytes("/nonexistent/x.sql") > _CACHE_STMT_MAX_BYTES
 
 
+def test_shuffle_partitions_sized_from_shard_bytes(spark, tmp_path,
+                                                   monkeypatch):
+    """A sharded dump sizes the shuffle from its shards' bytes, not the
+    directory's inode size; a path that can't be stat'd leaves the conf
+    alone rather than reading as 2**63-1 bytes."""
+    from database_syncer_spark.sources.dump import _size_shuffle_partitions
+
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
+    shards = tmp_path / "shards"
+    shards.mkdir()
+    for i in range(2):  # sparse: 2 x 150 MB of apparent size, no blocks
+        with open(shards / f"part-{i}.sql", "wb") as fh:
+            os.truncate(fh.fileno(), 150 << 20)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "4")
+        _size_shuffle_partitions(spark, str(shards), "/nonexistent/x.sql")
+        assert spark.conf.get(key) == "4"
+        _size_shuffle_partitions(spark, str(shards), str(shards))
+        assert spark.conf.get(key) == str((600 << 20) // (20 << 20))
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_read_sql_dump_raw_mode(spark, tmp_path):
     """typed=False keeps raw literal strings (reference semantics: '1' and
     '1.0' differ, SURVEY §1.2)."""

@@ -100,12 +100,23 @@ def test_pg_roundtrip_typed_columns(spark, tmp_path):
     assert {tuple(r) for r in back.collect()} == set(rows)
 
 
+def test_pg_roundtrip_null_boolean(spark, tmp_path):
+    """A NULL boolean comes back NULL, not False: the writer renders it
+    ``\\N`` like any other NULL."""
+    rows = [(1, True), (2, False), (3, None)]
+    df = spark.createDataFrame(rows, "id bigint, ok boolean")
+    path = str(tmp_path / "bool.sql")
+    write_pg_dump(df, "t", ["id"], path)
+    back = read_pg_dump(spark, path)["t"]
+    assert {(r.id, r.ok) for r in back.collect()} == set(rows)
+
+
 def test_write_pg_dump_golden_bytes(spark, tmp_path):
     """The pg writer's exact bytes over three input partitions: header
     and CREATE TABLE, the COPY block's rows in partition order (tab,
     newline and backslash escaped, NULL as ``\\N``), then the ``\\.``
     terminator and the post-data composite PRIMARY KEY. Row (2, 'a')
-    pins today's rendering of a NULL boolean, ``f``."""
+    holds a NULL boolean, rendered ``\\N`` like every NULL."""
     rows = [
         (1, "a", "plain", Decimal("10.50"), True,
          datetime.datetime(2024, 2, 29, 12, 30, 45, 123456)),
@@ -144,7 +155,7 @@ def test_write_pg_dump_golden_bytes(spark, tmp_path):
             "COPY public.t (a, b, note, amt, ok, ts) FROM stdin;\n"
             "1\ta\tplain\t10.50\tt\t2024-02-29 12:30:45.123456\n"
             "1\tb\ttab\\there\t-0.01\tf\t1999-12-31 23:59:59.000000\n"
-            "2\ta\tline\\nbreak\t\\N\tf\t\\N\n"
+            "2\ta\tline\\nbreak\t\\N\t\\N\t\\N\n"
             "2\tb\tback\\\\slash\t0.00\tt\t2000-01-01 00:00:00.000000\n"
             "3\ta\t\\N\t12345678.99\tf\t2024-01-02 03:04:05.000006\n"
             "\\.\n"

@@ -287,3 +287,129 @@ def test_stream_dedup_rolling_sees_prior_admissions(spark, sf_dir):
         sorted(key(r) for r in out.where("day = 1")
                .drop("day").collect())
     out.unpersist()
+
+
+def _changes_frame(spark, rows):
+    from database_syncer_spark.core.diff import CHANGE_TYPE
+
+    return spark.createDataFrame(rows, f"k long, v long, {CHANGE_TYPE} string")
+
+
+def _last_job_id(sc) -> int:
+    """Run one marker job and return its id; job ids are sequential, so
+    the difference of two markers counts every job between them."""
+    sc.setJobGroup("job-count-marker", "job-count-marker")
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    return max(sc.statusTracker().getJobIdsForGroup("job-count-marker"))
+
+
+def test_empty_change_log_returns_initial_state(spark, tmp_path):
+    """With no per-batch emptiness probe, an empty change log still
+    leaves the state exactly as it started."""
+    from database_syncer_spark.streaming.runner import (
+        incremental_sync_foreachbatch)
+
+    state = spark.createDataFrame([(1, 10), (2, 20), (3, 30)],
+                                  "k long, v long")
+    final = incremental_sync_foreachbatch(
+        spark, _changes_frame(spark, []), state, ["k"], n_chunks=3,
+        workdir=str(tmp_path / "empty"))
+    assert _rows(final) == [(1, 10), (2, 20), (3, 30)]
+
+
+def test_cdc_replay_runs_two_jobs_per_batch(spark, tmp_path):
+    """One replay's Spark jobs, pinned: the staging write (its shuffle
+    stage and the write), the state_v0 write, then two per micro-batch
+    (the anti-join's broadcast and the next state version's write). No
+    emptiness probe and no schema-inference job on any state read,
+    including the returned frame's."""
+    from database_syncer_spark.streaming.runner import (
+        incremental_sync_foreachbatch)
+
+    n_chunks = 3
+    state = spark.range(100).selectExpr("id AS k", "id * 3 AS v")
+    changes = _changes_frame(
+        spark, [(k, k * 7, ("DELETE", "UPDATE")[k % 2])
+                for k in range(90, 100)]
+        + [(k, k * 7, "INSERT") for k in range(100, 110)])
+    sc = spark.sparkContext
+    before = _last_job_id(sc)
+    final = incremental_sync_foreachbatch(
+        spark, changes, state, ["k"], n_chunks=n_chunks,
+        workdir=str(tmp_path / "jobs"))
+    jobs = _last_job_id(sc) - before - 1
+    assert jobs == 3 + 2 * n_chunks
+    got = dict(_rows(final))
+    assert len(got) == 100 - 5 + 10
+    assert got[89] == 89 * 3 and got[91] == 91 * 7 and got[109] == 109 * 7
+    assert 90 not in got
+
+
+def test_checkpoint_manager_conf_restored(spark, staged_events):
+    """Every query runs on the FileSystem checkpoint manager for its
+    whole life only: each micro-batch sees it, and afterwards the
+    session conf reads as before the call, whether it was unset or set,
+    and also when the batch function raises."""
+    from pyspark.errors import StreamingQueryException
+
+    from database_syncer_spark.streaming.runner import (
+        _CHECKPOINT_MANAGER_KEY, _FS_CHECKPOINT_MANAGER, drain)
+
+    path, df = staged_events
+    seen = []
+
+    def record(batch, epoch_id):
+        seen.append(batch.sparkSession.conf.get(_CHECKPOINT_MANAGER_KEY))
+
+    def boom(batch, epoch_id):
+        raise ValueError("batch failed")
+
+    def replay(fn):
+        return (spark.readStream.schema(df.schema)
+                .option("maxFilesPerTrigger", 1).parquet(path)
+                .writeStream.foreachBatch(fn))
+
+    prev = spark.conf.get(_CHECKPOINT_MANAGER_KEY, None)
+    context_manager = ("org.apache.spark.sql.execution.streaming."
+                       "checkpointing.FileContextBasedCheckpointFileManager")
+    try:
+        for before in (None, context_manager):
+            if before is None:
+                spark.conf.unset(_CHECKPOINT_MANAGER_KEY)
+            else:
+                spark.conf.set(_CHECKPOINT_MANAGER_KEY, before)
+            drain(spark, replay(record))
+            assert seen and set(seen) == {_FS_CHECKPOINT_MANAGER}
+            assert spark.conf.get(_CHECKPOINT_MANAGER_KEY, None) == before
+            run_stream_to_memory(spark, path, df.schema, stream_distinct,
+                                 "t_ckpt_restore", output_mode="append")
+            assert spark.conf.get(_CHECKPOINT_MANAGER_KEY, None) == before
+            with pytest.raises(StreamingQueryException, match="batch failed"):
+                drain(spark, replay(boom))
+            assert spark.conf.get(_CHECKPOINT_MANAGER_KEY, None) == before
+    finally:
+        if prev is None:
+            spark.conf.unset(_CHECKPOINT_MANAGER_KEY)
+        else:
+            spark.conf.set(_CHECKPOINT_MANAGER_KEY, prev)
+
+
+def test_reuse_accepts_staging_with_fewer_rows_than_files(spark, tmp_path):
+    """Spark writes no file for an empty partition, so 3 rows staged
+    into 5 files leave 3; ``reuse=True`` must still recognise that
+    published staging instead of rewriting it on every call."""
+    path = str(tmp_path / "small")
+    stage_as_stream_source(spark.range(3), path, n_files=5)
+    assert sum(f.endswith(".parquet") for f in os.listdir(path)) < 5
+    probe = os.path.join(path, "_kept")
+    open(probe, "w").close()
+    assert stage_as_stream_source(spark.range(3), path, n_files=5,
+                                  reuse=True) == path
+    assert os.path.exists(probe)
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == \
+        [0, 1, 2]

@@ -1,24 +1,29 @@
 #!/usr/bin/env python
-"""Per-round benchmark: headline queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark: headline query keys at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
+Prints TWO JSON lines: the detail record (methodology, previous totals,
+per-key raw runs and job/stage/task shape, ANN splits; also written to
+BENCH_DETAIL_LAST.json), then the compact machine record, LAST and
+under 2 KB so a consumer that parses only the tail line gets it whole:
   {"metric": "...", "value": total_sec, "unit": "sec",
-   "queries": {key: sec, ...}, "sf": 0.1}
+   "queries": {key: sec, ...}, "sf": 0.1, ...}
 
 Each query is materialized through the built-in `noop` sink so the full
 plan executes on the executors (scan -> shuffle -> agg) without paying
 driver-side collect/serialization — the same discipline a cluster bench
 would use.  Per key: two untimed warmup executions, then the MEDIAN of
-five timed executions (secondary keys: three — they are heavy and not
-part of the headline total).  The warmups absorb the per-plan one-time costs
-that belong to the JVM, not the engine — whole-stage-codegen Janino
-compilation and C2 JIT of the generated methods (measured on the CDC
-diff at sf0.1: 6.2s first execution, 1.4s second, ~0.8s steady state —
-one warmup still over-reports by ~1.6x) — and the median rejects
-page-cache-cold first touches and GC outliers, so the reported number
-is steady-state plan execution, which is what scales to a real cluster.
-The JSON line carries "methodology" so cross-round trend tracking knows
-what the numbers mean.
+five timed executions (secondary keys: one warmup, median of three —
+they are heavy and not part of the headline total).  The warmups absorb
+the per-plan one-time costs that belong to the JVM, not the engine —
+whole-stage-codegen Janino compilation and C2 JIT of the generated
+methods (measured on the CDC diff at sf0.1: 6.2s first execution, 1.4s
+second, ~0.8s steady state — one warmup still over-reports by ~1.6x) —
+and the median rejects page-cache-cold first touches, GC outliers and
+co-tenant spikes (with five reps one spike cannot land on the median).
+
+To time other keys the same way:
+  spark = get_spark("bench"); warm(spark, sf_dir)
+  time_keys(spark, ["dedup_exact"], sf_dir, warmups=2, reps=5)
 
 Headline set: one key per engine area from SURVEY.md §2 — CDC diff
 (the reference's soul), star join, TPC-H-Q1-shape agg, window, set op,
@@ -32,6 +37,7 @@ import json
 import os
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -50,39 +56,28 @@ HEADLINE = [
     "text_quality_score",
 ]
 
-# r11 headline rotation (VERDICT r10 item 7): the 12-key HEADLINE set
-# was frozen at r1 and no longer spans the registry. These three are
-# timed with the FULL headline discipline (2 warmups, median of 5, raw
-# runs recorded) but kept OUT of "value" so the 12-key total stays
-# directly comparable across rounds r1..r10.
+# Newer engine areas, timed on the full headline discipline (2 warmups,
+# median of 5, raw runs recorded) but kept OUT of "value" so the 12-key
+# total stays comparable with every earlier BENCH record.
 HEADLINE_EXT = [
     "scan_pg_dump",               # pg COPY-protocol ingest
     "win_retention_cohort",       # cohort window + conditional agg
     "corpus_curate_incremental",  # ingest-time curation verdict
-    # r12 rotation (VERDICT r11 item 6): the newest families accrue
-    # trend history on the full headline discipline from birth
     "multimodal_jpeg_pixels",     # baseline-JPEG Huffman+IDCT decode
     "dedup_incremental_indexed",  # at-rest bucketed band-index probe
-    #   (moved up from SECONDARY r12 — the ext discipline's 2-warmup/
-    #   5-rep record is the stricter trend instrument)
 ]
 
-# CPU-scaling sentinel (VERDICT r12 item 2): every 12-key HEADLINE
-# entry is sub-1.2 s at sf0.1 — scheduling/barrier-bound, so the
-# driver's 32-vs-8-core comparison over `queries` reads ≈1.0 for all
-# of them and the honored $SPARK_GRAFT_CPUS contract looks broken
-# ("suspect_cpus_ignored"). dedup_embedding_cosine is genuinely
-# CPU-bound (measured 12.17 s @ 8 cores vs 5.58 s @ 32, BENCH_r12_c8),
-# so timing it on the full headline discipline and reporting it INSIDE
-# "queries" — while keeping "value" the sum of the original 12 keys so
-# the headline total stays r1-comparable — makes the scaling contract
-# legible in the surface the driver actually compares.
+# CPU-scaling sentinel: every HEADLINE key is sub-1.2 s at sf0.1 —
+# scheduling/barrier-bound — so a 32-vs-8-core comparison over
+# `queries` reads ≈1.0 for all of them. dedup_embedding_cosine is
+# CPU-bound (12.17 s @ 8 cores vs 5.58 s @ 32, BENCH_r12_c8), so it is
+# timed on the headline discipline and reported INSIDE "queries" (but
+# not in "value") to make the core-count contract legible there.
 SCALING_SENTINEL = ["dedup_embedding_cosine"]
 
 # Heaviest non-headline families, tracked so a regression is visible
-# BEFORE a round touches them. Kept out of HEADLINE/"value" so the
-# headline total stays directly comparable across rounds (BENCH_r01
-# covers exactly the 12 keys above).
+# before a change touches them; kept out of "value". A key appears in
+# exactly one list: each is timed once per bench.
 SECONDARY = [
     "stream_foreachbatch_merge",   # real micro-batch MERGE replay
     "stream_stateful_custom",      # applyInPandasWithState job
@@ -95,48 +90,107 @@ SECONDARY = [
     "sim_ivfpq_ann",               # composed IVF-PQ (probe + ADC + re-rank)
     "stream_stream_join",          # watermarked stream-stream join replay
     "dedup_corpus_keep",           # exact + near-dup + components keep-list
-    # r4 additions, tracked from birth so their first regression is visible
     "win_sessionize",              # gap sessionization, single Exchange
     "text_ngram_lm_score",         # corpus-bigram LM scoring
     "sink_cdc_compact",            # two diffs + pk-keyed compaction agg
     "dedup_incremental",           # batch-vs-corpus banded LSH
-    # r5 additions
     "sample_temperature_mix",      # domain-rebalanced sampling
     "dedup_soft_keep",             # components + 1/cluster down-weighting
-    # r8 additions
     "dedup_paragraph",             # repeated-span scrub (chunk freq + keep-first)
     "corpus_curate",               # composed filter→scrub→dedup→pack pipeline
-    # r10 additions
     "sink_merge_incremental",      # set-based CDC merge batches + replay
-    # corpus_curate_incremental moved to HEADLINE_EXT (r11): it was
-    # double-timed here AND there (11 executions of one of the heaviest
-    # keys per bench); the ext slot's 2-warmup/5-rep discipline is the
-    # stricter record
-    # r11 addition dedup_incremental_indexed moved to HEADLINE_EXT (r12)
-    # r12 additions
     "dedup_incremental_rolling",   # two-day admit-and-grow index loop
     "stream_dedup_rolling",        # the same loop as streaming foreachBatch
     "sim_ivf_incremental",         # frozen-centroid vector-index append
-    # r13's 2.4x n-gram shape win, tracked so its regression is visible
     "dedup_ngram_jaccard",         # shingle-set Jaccard self-join
     "dedup_ngram_containment",     # shingle-set containment self-join
-    # r12 optimization round addition dedup_embedding_cosine (tracked
-    # from birth after the probe-side repartition fix, 29.7 s -> 5.6 s,
-    # OPTIMIZATION_r12.md) moved to SCALING_SENTINEL (r13): it is now
-    # timed on the full headline discipline and reported inside
-    # "queries" (still excluded from "value") so the driver's CPU
-    # scaling comparison sees it — double-timing it here too would
-    # repeat the corpus_curate_incremental mistake r11 fixed.
 ]
 
 
+def warm(spark, sf_dir: str) -> None:
+    """Pay the one-time session costs before the first timed key.
+
+    - JVM + parquet footer caches, on the smallest table;
+    - the Python worker pool + Arrow serializer, so UDF-backed keys time
+      steady-state execution, not the fork of the interpreters (~5 s
+      measured on local[32]);
+    - the text-source classes the dump source loads on first use, via a
+      one-statement probe file.
+    """
+    import tempfile
+
+    from database_syncer_spark.sources.dump import read_dump_statements
+
+    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
+    spark.range(0, 64, 1, 32).mapInPandas(lambda it: it, "id long").count()
+    probe = os.path.join(tempfile.gettempdir(), "dss_bench_warm.sql")
+    with open(probe, "w", encoding="utf-8") as fh:
+        fh.write("SELECT 1;\n")
+    read_dump_statements(spark, probe).count()
+
+
+def _shape(sc, group: str) -> dict[str, int]:
+    """Jobs, stages and tasks the status tracker recorded for one job
+    group. A stage shared by several jobs (AQE resubmits) counts once;
+    a stage that ran no task (skipped: its shuffle output existed)
+    counts not at all."""
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stage_ids = {sid for j in jobs if (info := st.getJobInfo(j))
+                 for sid in info.stageIds}
+    tasks = [s.numCompletedTasks for sid in stage_ids
+             if (s := st.getStageInfo(sid)) and s.numCompletedTasks]
+    return {"jobs": len(jobs), "stages": len(tasks), "tasks": sum(tasks)}
+
+
+def time_keys(spark, keys: list[str], sf_dir: str, warmups: int,
+              reps: int) -> dict[str, dict]:
+    """Time registry keys through the ``noop`` sink.
+
+    Per key: ``warmups`` untimed executions, then ``reps`` timed ones.
+    Returns ``{key: {"sec": median, "runs": sorted runs, "shape":
+    {"jobs", "stages", "tasks"} of the last rep}}``; keys missing from
+    the registry are skipped. Each rep runs under its own job group,
+    which is how the last rep's shape is read back."""
+    from database_syncer_spark.registry import all_queries
+
+    queries = all_queries()
+    sc = spark.sparkContext
+    out: dict[str, dict] = {}
+    try:
+        for key in keys:
+            fn = queries.get(key)
+            if fn is None:
+                continue
+
+            def run() -> float:
+                t0 = time.perf_counter()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                return time.perf_counter() - t0
+
+            for _ in range(warmups):  # codegen/JIT + page cache
+                run()
+            runs = []
+            for _ in range(reps):
+                group = f"bench {key} {uuid.uuid4().hex}"
+                sc.setJobGroup(group, key)
+                runs.append(round(run(), 3))
+            runs.sort()
+            out[key] = {"sec": runs[reps // 2], "runs": runs,
+                        "shape": _shape(sc, group)}
+    finally:
+        # clear what setJobGroup set, so later jobs carry no bench group
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    return out
+
+
 def _host_probe(spark) -> dict:
-    """Fixed-work, code-independent host calibration (VERDICT r10
-    item 2): every BENCH artifact carries the host phase measured by
-    the SAME pinned work, so cross-round per-key ratios read against
-    `host_probe_sec` instead of relitigating the bimodal disk each
-    round (three rounds running, the bench verdict section was
-    dominated by exactly that).
+    """Fixed-work, code-independent host calibration: every BENCH
+    record carries the host phase measured by the same pinned work, so
+    per-key ratios across records read against `host_probe_sec` instead
+    of guessing at the host's bimodal disk.
 
     - ``cpu_runs``: 8M x 1M shuffle join + groupBy agg over
       spark.range — pure JVM/Tungsten work, zero repo code, zero
@@ -196,73 +250,27 @@ def main() -> None:
         sf = None
 
     from database_syncer_spark.session import get_spark
-    from database_syncer_spark.registry import all_queries
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
+    warm(spark, sf_dir)
 
-    # Warm the JVM + parquet footer caches on the smallest table so the
-    # first timed key doesn't absorb one-time session costs.
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-    # Warm the Python worker pool + Arrow serializer path the same way:
-    # UDF-backed keys should time steady-state execution, not the one-time
-    # fork of 32 interpreters (~5s measured on local[32]).
-    spark.range(0, 64, 1, 32).mapInPandas(lambda it: it, "id long").count()
-    # And the text-source scan path used by the dump source: its first use
-    # loads the file-source classes — a one-statement probe file pays that
-    # outside the timings.
-    import tempfile
-
-    from database_syncer_spark.sources.dump import read_dump_statements
-    probe = os.path.join(tempfile.gettempdir(), "dss_bench_warm.sql")
-    with open(probe, "w", encoding="utf-8") as fh:
-        fh.write("SELECT 1;\n")
-    read_dump_statements(spark, probe).count()
-
-    def time_keys(keys: list[str], warmups: int, reps: int,
-                  raw: dict[str, list[float]] | None = None,
-                  ) -> dict[str, float]:
-        out: dict[str, float] = {}
-        for key in keys:
-            fn = queries.get(key)
-            if fn is None:
-                continue
-
-            def run() -> float:
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                return time.perf_counter() - t0
-
-            for _ in range(warmups):  # codegen/JIT + page cache
-                run()
-            runs = sorted(round(run(), 3) for _ in range(reps))
-            out[key] = runs[reps // 2]
-            if raw is not None:
-                raw[key] = runs
-        return out
-
-    # Median of FIVE for the headline (was 3): this box shows sporadic
-    # 2x per-key swings from co-tenant load; with 3 reps one spike lands
-    # on the median, with 5 it takes three. Secondary keys are heavy, so
-    # they stay at 3 reps — but their RAW run triple is recorded in the
-    # detail artifact (r9 verdict item 1: a one-burst co-tenant outlier
-    # like sim_lsh_ann's recorded 150.3 s must be self-diagnosing — a
-    # [2.1, 2.2, 150.3] triple reads as a burst, a [148, 150, 153]
-    # triple as a regression).
     probe_start = _host_probe(spark)
-    timings = time_keys(HEADLINE, warmups=2, reps=5)
-    scaling_sentinel = time_keys(SCALING_SENTINEL, warmups=2, reps=5)
-    ext_runs: dict[str, list[float]] = {}
-    headline_ext = time_keys(HEADLINE_EXT, warmups=2, reps=5, raw=ext_runs)
-    secondary_runs: dict[str, list[float]] = {}
-    secondary = time_keys(SECONDARY, warmups=1, reps=3, raw=secondary_runs)
+    headline = time_keys(spark, HEADLINE, sf_dir, warmups=2, reps=5)
+    sentinel = time_keys(spark, SCALING_SENTINEL, sf_dir, warmups=2, reps=5)
+    ext = time_keys(spark, HEADLINE_EXT, sf_dir, warmups=2, reps=5)
+    # Secondary keys are heavy, so three reps — their raw sorted triple
+    # is recorded so an outlier is self-diagnosing: [2.1, 2.2, 150.3]
+    # reads as a co-tenant burst, [148, 150, 153] as a regression.
+    second = time_keys(spark, SECONDARY, sf_dir, warmups=1, reps=3)
+    timings, scaling_sentinel, headline_ext, secondary = (
+        {k: r["sec"] for k, r in block.items()}
+        for block in (headline, sentinel, ext, second))
 
-    # ANN SERVING-ONLY timings (VERDICT r3 item 3): the sim_* registry
-    # keys time ANN + exact brute force + recall join in one plan — a
-    # verification artifact, so the metric ANN work should improve
-    # (serving latency) was invisible. Time the *_ann_topk call alone
-    # here; recall stays the correctness surface in the registry keys.
+    # ANN serving-only timings: the sim_* registry keys time ANN + exact
+    # brute force + recall join in one plan (a verification artifact),
+    # so the serving latency ANN work should improve is timed here
+    # alone; recall stays the correctness surface in the registry keys.
     from database_syncer_spark.catalog import load_table
     from database_syncer_spark.pipeline import similarity as S
     from database_syncer_spark.queries.pipeline import _emb_dim
@@ -270,11 +278,10 @@ def main() -> None:
     emb = load_table(spark, sf_dir, "embeddings")
     dim = _emb_dim(sf_dir, emb)
 
-    # Train-once/serve-many (r4): a deployment builds each index ONCE
-    # (model training + corpus coding — ann_index_build below), stores
-    # the coded corpus at rest (persist+count here stands in for the
-    # partitioned parquet), and serves queries against it. Serving
-    # latency — the number ANN work should improve — is the index= path.
+    # Train once, serve many: a deployment builds each index ONCE (model
+    # training + corpus coding — ann_index_build below), stores the coded
+    # corpus at rest (persist+count here stands in for the partitioned
+    # parquet), and serves queries against it through index=.
     ann_index_build: dict[str, float] = {}
     indexes: dict[str, dict] = {}
     corpus_keys = {"lsh": "bucketed", "ivf": "assigned",
@@ -318,8 +325,8 @@ def main() -> None:
             if name in idx:
                 idx[name].unpersist()
 
-    # Previous-round totals, so the regression gate is visible in the
-    # artifact itself (BENCH_r01: 12-key headline total 8.13s at sf0.1).
+    # Earlier records' totals, so a regression is visible in the record
+    # itself.
     prev: dict[str, float] = {}
     import glob as _glob
     here = os.path.dirname(os.path.abspath(__file__))
@@ -327,28 +334,17 @@ def main() -> None:
         try:
             with open(p, encoding="utf-8") as fh:
                 d = json.load(fh)
-            # the round driver wraps our JSON line under "parsed"
+            # a stored record may wrap the JSON line under "parsed"
             prev[os.path.basename(p)] = d.get("parsed", d).get("value")
         except (OSError, ValueError, AttributeError):
             pass
 
     total = round(sum(timings.values()), 3)
-
-    # VERDICT r5 defect #1: the driver tail-captures stdout and parses the
-    # LAST line as the machine record; r5's single line (with its embedded
-    # methodology narrative) outgrew that buffer and BENCH_r05.json came
-    # back `parsed: null`. Split the output:
-    #   line 1  — full detail (methodology, prev_totals, secondary, ANN
-    #             splits), also written to BENCH_DETAIL_LAST.json so the
-    #             narrative survives even if the tail truncates it;
-    #   line 2  — the compact machine record, guaranteed < 2 KB, LAST.
     probe_end = _host_probe(spark)
 
-    # Probe-normalized per-key ratios (VERDICT r11 item 7): key_sec /
-    # mean(host_probe start, end sec). The next round's regression
-    # screen is then a division against the previous round's normalized
-    # value instead of an adjudication debate — a key whose RAW seconds
-    # doubled but whose ratio held ran on a slow host, not slow code.
+    # Probe-normalized per-key ratios, key_sec / mean(host_probe start,
+    # end sec): a key whose raw seconds doubled but whose ratio held ran
+    # on a slow host, not slow code.
     probe_mean = round((probe_start["sec"] + probe_end["sec"]) / 2, 3)
     normalized = {
         k: round(v / probe_mean, 3)
@@ -362,53 +358,52 @@ def main() -> None:
         "probe_mean_sec": probe_mean,
         "normalized": normalized,
         "headline_ext": headline_ext,
-        "headline_ext_runs": ext_runs,
+        "headline_ext_runs": {k: r["runs"] for k, r in ext.items()},
         "secondary": secondary,
-        "secondary_runs": secondary_runs,
+        "secondary_runs": {k: r["runs"] for k, r in second.items()},
+        "shape": {k: r["shape"]
+                  for block in (headline, sentinel, ext, second)
+                  for k, r in block.items()},
         "ann_index_build": ann_index_build,
         "ann_serving": ann_serving,
         "methodology": (
-            "noop-sink; headline: 2 warmups, median of 5 timed (r01 used "
-            "median of 3); secondary (not in value): 1 warmup, median of "
-            "3, RAW sorted triple in secondary_runs (a lone outlier run "
-            "is a co-tenant burst, three elevated runs a regression); "
+            "noop-sink; headline: 2 warmups, median of 5 timed; "
+            "secondary (not in value): 1 warmup, median of 3, RAW sorted "
+            "triple in secondary_runs (a lone outlier run is a co-tenant "
+            "burst, three elevated runs a regression); shape: jobs, "
+            "stages that ran tasks, and completed tasks of each key's "
+            "last timed run, read from the status tracker by job group. "
             "ann_serving: the *_ann_topk serving call against a "
             "PREBUILT persisted index (train-once/serve-many; "
             "ann_index_build is the one-time train+code cost), 1 warmup "
             "median of 3 — the sim_* secondary keys time inline-build "
             "serving + brute-force verify + recall join and so overstate "
-            "serving cost by design. headline_ext (r11): three "
-            "rotated-in keys on the FULL headline discipline, kept out "
-            "of value so the 12-key total stays r1-comparable. "
-            "queries additionally carries dedup_embedding_cosine (r13): "
-            "the CPU-bound scaling sentinel, full headline discipline, "
-            "EXCLUDED from value — value stays the sum of the original "
-            "12 HEADLINE keys; the sentinel exists so the driver's "
-            "32-vs-8-core ratio over queries has one key that actually "
-            "scales with cores. "
+            "serving cost by design. headline_ext: newer engine areas on "
+            "the full headline discipline, kept out of value so the "
+            "12-key total stays comparable across records. queries also "
+            "carries dedup_embedding_cosine, the CPU-bound scaling "
+            "sentinel on the full headline discipline, EXCLUDED from "
+            "value — value is the sum of the 12 HEADLINE keys; the "
+            "sentinel gives a 32-vs-8-core ratio over queries one key "
+            "that actually scales with cores. "
             "host_probe: fixed-work code-independent calibration "
             "(shuffle-join CPU triple + synced ~330MB parquet write "
             "pair) at bench start and end — read per-key ratios "
             "against it before calling a regression. Host shows "
-            "±30-45% uniform cross-round drift; same-host A/B on "
-            "pinned fixtures (BASELINE.md) is the regression arbiter. "
-            "Per-round adjudications live in BASELINE.md / SCALE.md, "
-            "not here."),
+            "±30-45% uniform drift between sessions; same-host A/B on "
+            "pinned fixtures (BASELINE.md) is the regression arbiter."),
     }
-    # The effective parallelism contract, in the machine record itself
-    # (VERDICT r12 item 1/"what's wrong"): session.py honors
-    # $SPARK_GRAFT_CPUS via master(local[cpus]) but the driver could
-    # not SEE that from the artifact — emit master + defaultParallelism
-    # so a scaling run is self-describing.
+    # The effective parallelism, in the machine record itself:
+    # session.py honors $SPARK_GRAFT_CPUS via master(local[cpus]), and a
+    # scaling run is self-describing only if the record says so.
     sc = spark.sparkContext
     machine = {
         "metric": "headline_queries_total_wall",
         "value": total,
         "unit": "sec",
         # queries = the 12 HEADLINE keys (their sum IS "value") + the
-        # CPU-bound scaling sentinel, timed on the same discipline but
-        # EXCLUDED from "value" so the total stays r1-comparable.
-        # Entries are only ever ADDED here, never removed or renamed.
+        # scaling sentinel, which is EXCLUDED from "value". Entries are
+        # only ever ADDED here, never removed or renamed.
         "queries": {**timings, **scaling_sentinel},
         # the sentinel keys again on their own: queries minus these is
         # the 12-key set, whose sum equals "value"
@@ -424,10 +419,10 @@ def main() -> None:
         "sf": sf,
     }
     line = json.dumps(machine)
-    if len(line) > 1900:  # never regress the tail-parse again
-        # mark the elision (r6 ADVICE): a consumer of the last line must
-        # be able to tell "dropped for size" from "not measured", and
-        # where the full record lives
+    if len(line) > 1900:  # the tail line must stay whole
+        # mark the elision: a consumer of the last line must be able to
+        # tell "dropped for size" from "not measured", and where the
+        # full record lives
         line = json.dumps({**{k: machine[k] for k in
                               ("metric", "value", "unit", "queries",
                                "scaling_sentinel", "host_probe_sec", "master",

@@ -179,8 +179,8 @@ def minhash_lsh_dedup(documents: DataFrame, threshold: float = 0.5,
     # The candidate pair set is referenced THREE times downstream (the
     # id set that prunes the corpus, and both sides of the verify
     # join); left lazy, Catalyst plans the whole signature + band-join
-    # subtree once per reference (the r12 before-plan shows it 3x,
-    # 112 operators — plans/r12/dedup_minhash_lsh_before.txt). The
+    # subtree once per reference (the before-plan showed it 3x,
+    # 112 operators — OPTIMIZATION_r12.md). The
     # pairs are candidate-sized by construction, so an EAGER node-local
     # checkpoint executes the generator once and hands all three
     # consumers a tiny materialized table (same discipline as
@@ -542,7 +542,7 @@ def _shingle_intersections(documents: DataFrame, k: int,
     interpreted PER ELEMENT (the exact text_decontaminate finding; A/B
     at sf0.1: 2.3-2.9 s -> 1.0 s for the full jaccard key, and 4.1-6.4 s
     -> 1.2-1.5 s for this stage alone at a 100 k-doc probe, values
-    identical — scripts/ngram_shape_ab.py / ngram_shape_scale_probe.py).
+    identical — OPTIMIZATION_r13.md).
     The per-doc DISTINCT the array form gave row-locally comes from a
     collect_set grouped on doc_id, with the corpus repartitioned by
     doc_id FIRST (the repetition_score trick): hashpartitioning(doc_id)
@@ -772,7 +772,7 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     # interleaved on pre-materialized edges: 18 -> 14 jobs,
     # 0.82-1.85 -> 0.64-1.05 s per call at sf0.1, 5.20 -> 3.98 s at a
     # 1 M-edge star-forest probe, label maps identical —
-    # scripts/components_ab.py). The self-edges ride the SAME explode
+    # OPTIMIZATION_r13.md). The self-edges ride the SAME explode
     # as the symmetric pair — (a,b),(b,a),(a,a),(b,b), one pass over
     # the edge plan; duplicates of a self-edge are harmless under min
     # and cost less than the distinct-nodes union branch that would
@@ -839,7 +839,7 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
         # 1 M-edge star forest (stats/broadcast survive, no per-round
         # full re-store) — is untouched where it wins; a depth-14
         # chain drops 121 s -> 19 s with identical label maps
-        # (scripts/components_ab.py regimes + the deep-chain test).
+        # (OPTIMIZATION_r13.md regimes + the deep-chain test).
         if (it + 1) % 8 == 0:
             comp = comp.localCheckpoint(eager=True)
             cached.unpersist()
@@ -935,7 +935,7 @@ def _probe_partitions(frame: DataFrame, n_planes: int, n_tables: int,
     partitioning flows straight through the BroadcastHashJoin — so the
     whole candidate expansion AND the unrolled exact-cosine verify ran
     in ≤4 tasks (measured: dedup_embedding_cosine 29.7 s at sf0.1 /
-    2000 vectors, scripts/opt_profile_sf0.1.json). Size from the
+    2000 vectors, OPTIMIZATION_r12.md). Size from the
     expected collision volume instead: ~200k candidate pairs per task,
     floored at defaultParallelism (fill the machine even when the
     estimate is small), capped at 4096 (one task per ~200k pairs is

@@ -110,7 +110,7 @@ def ann_recall(embeddings: DataFrame, ann: DataFrame, n_queries: int = 10,
     # report recall 0 instead of vanishing) and Catalyst planned the
     # whole O(Q×N) brute-force subtree TWICE — the before-plan of every
     # sim_*_ann key shows two BroadcastNestedLoopJoin Cross + Window
-    # chains (plans/r12/sim_lsh_ann_before.txt). The left join from thr
+    # chains (OPTIMIZATION_r12.md). The left join from thr
     # keeps the zero-retrieval guarantee: such queries yield one
     # NULL-cosine row, when() scores it 0, and the sum is never NULL.
     n_hits = (F.sum(F.when(F.col("cosine") >= F.col("__thr"), 1)

@@ -604,12 +604,10 @@ def read_dump_statements(spark: SparkSession, path: str,
       shuffle, then re-checked (a split the stitcher's single-quote
       model can't represent still fails loudly). Whitespace INSIDE the
       re-joined literal is preserved (trim happens after stitching).
-    - ``"ignore"``: the pre-hardening behavior, for callers that have
-      already validated the dump.
     """
-    if on_split_string not in ("error", "repair", "ignore"):
+    if on_split_string not in ("error", "repair"):
         raise ValueError(f"on_split_string={on_split_string!r}: expected "
-                         "'error', 'repair' or 'ignore'")
+                         "'error' or 'repair'")
     # CRLF dumps (Windows mysqldump/editors) end statements with ";\r\n",
     # which a ";\n" lineSep never matches — the whole file would arrive
     # as ONE statement. Sniff the head driver-side (KBs, not a scan) and
@@ -706,24 +704,22 @@ def read_dump_statements(spark: SparkSession, path: str,
     out = frags.select(
         stmt.alias("stmt"), "seq_hi", "seq_lo",
     ).where(F.length("stmt") > 0)
-    if on_split_string != "ignore":
-        # "error" mode catches the split; "repair" keeps the same check
-        # AFTER stitching as a belt (a split the stitcher's single-quote
-        # model can't represent must still fail loudly, never parse
-        # garbage). assert_true is NULL on pass, so the filter keeps
-        # every valid row, and being a filter (not an unused projection)
-        # it cannot be pruned by the optimizer. Leading comment lines
-        # (which may hold odd quote counts — "-- don't edit") are
-        # already stripped above, so the check sees pure statement text.
-        out = out.where(F.assert_true(
-            ~_has_unterminated_string(F.col("stmt")),
-            F.concat(
-                F.lit("unterminated string literal in dump statement (a "
-                      "literal containing ';\\n' splits mid-string; "
-                      "re-read with on_split_string='repair'): "),
-                F.substring("stmt", 1, 120)),
-        ).isNull())
-    return out
+    # "error" mode catches the split; "repair" keeps the same check
+    # AFTER stitching as a belt (a split the stitcher's single-quote
+    # model can't represent must still fail loudly, never parse
+    # garbage). assert_true is NULL on pass, so the filter keeps every
+    # valid row, and being a filter (not an unused projection) it
+    # cannot be pruned by the optimizer. Leading comment lines (which
+    # may hold odd quote counts — "-- don't edit") are already stripped
+    # above, so the check sees pure statement text.
+    return out.where(F.assert_true(
+        ~_has_unterminated_string(F.col("stmt")),
+        F.concat(
+            F.lit("unterminated string literal in dump statement (a "
+                  "literal containing ';\\n' splits mid-string; "
+                  "re-read with on_split_string='repair'): "),
+            F.substring("stmt", 1, 120)),
+    ).isNull())
 
 
 def _parse_insert_batches(schemas: dict[str, TableSchema]):

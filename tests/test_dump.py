@@ -814,9 +814,9 @@ def test_embedded_stmt_separator_repair_mode(spark, tmp_path):
 
 
 def test_clean_dump_identical_across_split_modes(spark, tmp_path):
-    """On a conforming dump all three modes agree (repair is the
-    identity when no fragment has odd quote parity), including quoted
-    values with escaped quotes and semicolons NOT at line ends."""
+    """On a conforming dump both modes agree (repair is the identity
+    when no fragment has odd quote parity), including quoted values
+    with escaped quotes and semicolons NOT at line ends."""
     dump = USERS_DDL + (
         "INSERT INTO `users` VALUES (1,'o''brien; esq.',1.50);\n"
         "INSERT INTO `users` VALUES (2,'b\\'c',2.25);\n"
@@ -824,10 +824,21 @@ def test_clean_dump_identical_across_split_modes(spark, tmp_path):
     )
     path = _write(tmp_path, "clean.sql", dump)
     frames = [read_sql_dump(spark, path, on_split_string=m)["users"]
-              for m in ("error", "repair", "ignore")]
+              for m in ("error", "repair")]
     rows = [sorted((r.id, r.name) for r in f.collect()) for f in frames]
-    assert rows[0] == rows[1] == rows[2]
+    assert rows[0] == rows[1]
     assert rows[0] == [(1, "o'brien; esq."), (2, "b'c"), (3, None)]
+
+
+def test_split_mode_ignore_rejected(spark, tmp_path):
+    """No mode turns the unterminated-string check off: the old
+    "ignore" mode is an unknown mode now, rejected before any scan."""
+    from database_syncer_spark.sources.dump import read_dump_statements
+
+    path = _write(tmp_path, "clean.sql", USERS_DDL)
+    for read in (read_dump_statements, read_sql_dump):
+        with pytest.raises(ValueError, match="on_split_string"):
+            read(spark, path, on_split_string="ignore")
 
 
 def _stmts(spark, path, mode):
@@ -849,7 +860,7 @@ def test_comment_block_before_statement_kept(spark, tmp_path):
                  "-- Dumping data for table t\n--\n"
                  "INSERT INTO t VALUES (1);\n"
                  "INSERT INTO t VALUES (2);\n")
-    for mode in ("error", "repair", "ignore"):
+    for mode in ("error", "repair"):
         got = _stmts(spark, p, mode)
         assert got == ["CREATE TABLE t (id INT)",
                        "INSERT INTO t VALUES (1)",
@@ -893,7 +904,7 @@ def test_multiblock_comments_with_blank_lines_and_apostrophe(spark, tmp_path):
     p.write_text("--\n-- Section A\n--\n\n--\n-- don't edit\n--\n"
                  "INSERT INTO t VALUES (1,'a');\n"
                  "INSERT INTO t VALUES (2,'b');\n")
-    for mode in ("error", "repair", "ignore"):
+    for mode in ("error", "repair"):
         assert _stmts(spark, p, mode) == [
             "INSERT INTO t VALUES (1,'a')",
             "INSERT INTO t VALUES (2,'b')"], mode

@@ -257,6 +257,62 @@ def test_bench_headline_keys_exist():
     assert not missing, missing
 
 
+def test_bench_time_keys_times_and_shapes(spark, sf_dir):
+    """bench.time_keys is the one loop that times registry keys: a run
+    yields a positive median and the last rep's jobs/stages/tasks, and
+    the bench job group does not outlive the call."""
+    import bench
+
+    got = bench.time_keys(spark, ["dedup_exact", "no_such_key"], sf_dir,
+                          warmups=0, reps=1)
+    assert list(got) == ["dedup_exact"]
+    rec = got["dedup_exact"]
+    assert rec["sec"] > 0 and rec["runs"] == [rec["sec"]]
+    assert all(rec["shape"][k] >= 1 for k in ("jobs", "stages", "tasks")), rec
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_registry_order_puts_stalest_keys_first():
+    """Registry order comes from the CORRECTNESS_r*.json history: keys
+    never verified first, then by the last check that passed them, so
+    a check of the first 50 keys reaches the stalest ones and never a
+    key the newest check just verified."""
+    import glob
+    import json
+    import os
+
+    from database_syncer_spark import registry
+
+    files = glob.glob(os.path.join(registry._HISTORY_DIR,
+                                   "CORRECTNESS_r*.json"))
+    if not files:
+        pytest.skip("no CORRECTNESS history next to the package")
+    newest = max(files, key=lambda p: int(re.search(r"_r(\d+)\.json$",
+                                                    p).group(1)))
+    with open(newest, encoding="utf-8") as fh:
+        just_checked = {k for k, row in json.load(fh).items()
+                        if all(row.get(f) for f in registry._PASS_FIELDS)}
+    keys = list(registry.all_queries())
+    assert not set(keys[:50]) & just_checked
+    rank = registry._last_pass_round()
+    assert [rank.get(k, 0) for k in keys] == sorted(
+        rank.get(k, 0) for k in keys)
+    fresh = registry._reorder({keys[-1]: 0, "zz_never_checked": 1})
+    assert list(fresh) == ["zz_never_checked", keys[-1]]
+
+
+def test_registry_order_without_history_is_module_order(monkeypatch,
+                                                        tmp_path):
+    import importlib
+
+    from database_syncer_spark import registry
+
+    monkeypatch.setattr(registry, "_HISTORY_DIR", str(tmp_path))
+    assert list(registry.all_queries()) == [
+        k for m in registry._MODULES
+        for k in importlib.import_module(m).QUERIES]
+
+
 def test_session_pins_cached_plan_aqe(spark):
     """session.py sets canChangeCachedPlanOutputPartitioning=true so AQE
     sizes cached-plan materializations by bytes (r12: the components

@@ -10,6 +10,10 @@ action touches it).
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -51,6 +55,54 @@ def sf_dir_tag(sf_dir: str) -> str:
     norm = os.path.normpath(os.path.abspath(sf_dir))
     h = hashlib.sha256(norm.encode()).hexdigest()[:8]
     return f"{os.path.basename(norm).replace('.', '_')}_{h}"
+
+
+#: Version of every render-once fixture :func:`fixture_cache` keeps.
+#: Bump it when any rendering, staging or upstream derivation changes
+#: (e.g. ``derive_backup``'s key scheme), so no older copy is served.
+FIXTURE_VERSION = "v5"
+
+
+def fixture_cache(sf_dir: str, name: str,
+                  build: Callable[[str], object]) -> str:
+    """Path of the fixture ``name`` derived from ``sf_dir``, built once.
+
+    The path lives in the temp dir and carries :data:`FIXTURE_VERSION`
+    and :func:`sf_dir_tag`. If it exists it is returned as is.
+    Otherwise ``build(tmp)`` writes the fixture (a file or a directory)
+    at ``tmp``, a sibling of the path unique to this call, and
+    ``os.rename`` publishes it. Only that rename creates the path, so a
+    path that exists holds a whole fixture. A concurrent builder may
+    win the race: a directory then stays the winner's and the local
+    copy is dropped; a file is replaced atomically by an identical one
+    (every build is a pure function of the read-only fixture). A
+    ``build`` that raises leaves neither the path nor ``tmp``.
+    """
+    path = os.path.join(
+        tempfile.gettempdir(),
+        f"dss_{FIXTURE_VERSION}_{sf_dir_tag(sf_dir)}_{name}")
+    if os.path.exists(path):
+        return path
+    tmp = f"{path}.{os.getpid()}.{uuid.uuid4().hex}.tmp"
+    try:
+        build(tmp)
+    except BaseException:
+        _remove(tmp)
+        raise
+    try:
+        os.rename(tmp, path)
+    except OSError:
+        _remove(tmp)
+        if not os.path.exists(path):
+            raise
+    return path
+
+
+def _remove(path: str) -> None:
+    if os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
+    elif os.path.lexists(path):
+        os.remove(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

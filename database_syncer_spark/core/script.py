@@ -131,22 +131,23 @@ def write_script(statements: DataFrame, path: str,
     order ARE global statement order; executors write the text parts in
     parallel and the driver only streams the parts together
     (O(1) memory) — never collecting the script like ``assemble_script``.
-    The file is assembled under a sibling ``.tmp`` name and renamed into
-    place (atomic on one filesystem), so a failed write leaves any
-    previous file at ``path`` intact and never a truncated one — callers
-    cache dump files by "exists and non-empty".
+    The file is assembled under a sibling name unique to this call and
+    renamed into place (atomic on one filesystem), so a failed write
+    leaves any previous file at ``path`` intact and never a truncated
+    one, and two writers of one ``path`` never share a file.
     """
     import glob as _glob
     import os
     import shutil
     import tempfile
+    import uuid
 
     parts_dir = tempfile.mkdtemp(prefix="dss_script_parts_")
-    tmp_path = path + ".tmp"
+    tmp_path = f"{path}.{uuid.uuid4().hex}.tmp"
     try:
         (statements.select("statement")
          .write.mode("overwrite").text(parts_dir))
-        with open(tmp_path, "w", encoding="utf-8") as out_fh:
+        with open(tmp_path, "x", encoding="utf-8") as out_fh:
             out_fh.write(header + "\n")
             for line in ddl or []:
                 out_fh.write(line + "\n")

@@ -63,25 +63,22 @@ N_HASHES = 16
 N_BANDS = 4  # 4 rows per band
 
 
-def minhash_signatures(documents: DataFrame, k: int = 3,
-                       slim: bool = False) -> DataFrame:
-    """K minhashes per doc — plus, unless ``slim``, the distinct shingle
-    set for the exact verify: min over shingles of hash-family-i(shingle).
+def minhash_signatures(documents: DataFrame, k: int = 3) -> DataFrame:
+    """K minhashes per doc: min over shingles of hash-family-i(shingle).
 
     Shape: explode shingle positions -> slice/concat_ws -> one
     xxhash64 per shingle STRING (the expensive variable-width hash); the
     K families re-hash that fixed-width bigint with a distinct literal
     seed inside K ``min`` aggregates of ONE groupBy(doc_id) — map-side
-    partial combine reduces each partition to K longs + (non-slim) the
-    shingle set before the shuffle. Every expression is whole-stage
-    codegen.
+    partial combine reduces each partition to K longs before the
+    shuffle. Every expression is whole-stage codegen.
 
-    ``slim=True`` drops the ``collect_set(shingle)``: the partial aggs
-    then carry K longs per doc instead of the doc's whole distinct
-    shingle TEXT — measured 43.2 s -> 8.7 s for the signature pass at
-    the 500×/2.5 M-doc probe (r6). Candidate verification fetches
-    shingles separately (with_shingles is a pure projection) for only
-    the docs that actually collide.
+    The signatures carry no shingle set: the partial aggs hold K longs
+    per doc instead of the doc's whole distinct shingle TEXT — measured
+    43.2 s -> 8.7 s for the signature pass at the 500×/2.5 M-doc probe
+    (r6). Candidate verification fetches shingles separately
+    (with_shingles is a pure projection) for only the docs that
+    actually collide.
 
     (A previous form computed the families with ``transform(sh_hash,
     lambda h, i=i: xxhash64(lit(i), h))`` — a TWO-argument lambda, so
@@ -98,13 +95,10 @@ def minhash_signatures(documents: DataFrame, k: int = 3,
     sh = pos.select(
         "doc_id",
         F.concat_ws(" ", F.slice("__toks", F.col("__i"), k)).alias("shingle"))
-    h = sh.select("doc_id", "shingle", F.xxhash64("shingle").alias("h"))
-    aggs = [F.min(F.xxhash64(F.lit(i), F.col("h"))).alias(f"mh_{i}")
-            for i in range(N_HASHES)]
-    if slim:
-        return h.groupBy("doc_id").agg(*aggs)
+    h = sh.select("doc_id", F.xxhash64("shingle").alias("h"))
     return h.groupBy("doc_id").agg(
-        F.collect_set("shingle").alias("shingles"), *aggs)
+        *[F.min(F.xxhash64(F.lit(i), F.col("h"))).alias(f"mh_{i}")
+          for i in range(N_HASHES)])
 
 
 def _doc_shingle_sets(documents: DataFrame, k: int) -> DataFrame:
@@ -175,7 +169,7 @@ def minhash_lsh_dedup(documents: DataFrame, threshold: float = 0.5,
     never shuffles at all; when a pathological corpus makes candidates
     huge, the same plan degrades gracefully to two shuffled joins —
     still strictly less traffic than the 8× ride-along."""
-    signed = minhash_signatures(documents, k, slim=True)
+    signed = minhash_signatures(documents, k)
     # The candidate pair set is referenced THREE times downstream (the
     # id set that prunes the corpus, and both sides of the verify
     # join); left lazy, Catalyst plans the whole signature + band-join
@@ -220,7 +214,7 @@ def _corpus_band_rows(docs, k: int = 3) -> DataFrame:
     fallback of the batch probe (r12 review: the block existed in three
     copies; a band-shape change applied to fewer than all three would
     silently diverge the stored index from the inline probe)."""
-    sc = minhash_signatures(docs, k, slim=True)
+    sc = minhash_signatures(docs, k)
     return (sc.select(F.col("doc_id").alias("corpus_id"),
                       F.explode(_band_structs()).alias("band"))
             .select("corpus_id", "band.band_id", "band.band_hash"))
@@ -319,7 +313,7 @@ def _band_candidates(batch: DataFrame, corpus: DataFrame, k: int,
     ship every stored doc's distinct shingle text through the shuffle
     on every ingest batch. With ``corpus_bands`` the corpus side is the
     AT-REST bucketed table scan; inline otherwise."""
-    sb = minhash_signatures(batch, k, slim=True)
+    sb = minhash_signatures(batch, k)
     eb = (sb.select("doc_id", F.explode(_band_structs()).alias("band"))
           .select("doc_id", "band.band_id", "band.band_hash"))
     if corpus_bands is not None:

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from database_syncer_spark.catalog import load_table, sf_dir_tag
+from database_syncer_spark.catalog import fixture_cache, load_table, sf_dir_tag
 
 _BAND = 500.0          # banding width == the range half-window
 _RANGE = 500.0
@@ -672,33 +672,22 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     it into parquet). Stages a deterministic payload dir from the
     documents fixture (doc_id < 40, one file per doc, utf-8 bytes of
     the text — byte-exact vs the oracle because fixture text is ASCII),
-    atomically published so concurrent runs can't read a half-staged
-    dir; reads back with a pathGlobFilter (partition-style file
-    pruning); projects doc_id parsed from the file name, the source's
-    file length, and md5(content)."""
+    rendered once through :func:`fixture_cache`; reads back with a
+    pathGlobFilter (partition-style file pruning); projects doc_id
+    parsed from the file name, the source's file length, and
+    md5(content)."""
     import os
-    import tempfile
 
-    tag = sf_dir_tag(sf_dir)
-    # v-token in the cache name (the queries/dump.py _DUMP_FMT
-    # discipline): bump it whenever staged content/layout changes so a
-    # stale dir from an older build can't shadow the current fixture
-    d = os.path.join(tempfile.gettempdir(), f"dss_binfiles_v2_{tag}")
-    if not os.path.isdir(d):
-        tmp = f"{d}.tmp{os.getpid()}"
-        os.makedirs(tmp, exist_ok=True)
-        rows = (load_table(spark, sf_dir, "documents")
-                .where(F.col("doc_id") < 40)
-                .select("doc_id", "text").collect())
-        for r in rows:
+    def build(tmp: str) -> None:
+        os.makedirs(tmp)
+        for r in (load_table(spark, sf_dir, "documents")
+                  .where(F.col("doc_id") < 40)
+                  .select("doc_id", "text").collect()):
             with open(os.path.join(tmp, f"doc_{int(r.doc_id):05d}.bin"),
                       "wb") as fh:
                 fh.write(r.text.encode("utf-8"))
-        try:
-            os.rename(tmp, d)
-        except OSError:  # concurrent winner published first
-            import shutil
-            shutil.rmtree(tmp, ignore_errors=True)
+
+    d = fixture_cache(sf_dir, "binfiles", build)
     b = (spark.read.format("binaryFile")
          .option("pathGlobFilter", "*.bin").load(d))
     return b.select(

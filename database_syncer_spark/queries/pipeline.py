@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from database_syncer_spark.catalog import load_table, sf_dir_tag
+from database_syncer_spark.catalog import fixture_cache, load_table, sf_dir_tag
 from database_syncer_spark.pipeline import dedup as D
 from database_syncer_spark.pipeline import multimodal as M
 from database_syncer_spark.pipeline import similarity as S
@@ -1074,7 +1074,8 @@ def multimodal_image_dims(spark, sf_dir):
         with open(os.path.join(tmp, f"img_{i:05d}.{fmt}"), "wb") as fh:
             fh.write(data)
 
-    d = _stage_fixture_dir(spark, sf_dir, "dss_imgfiles_v1", 60, write_one)
+    d = fixture_cache(sf_dir, "imgfiles",
+                      _per_doc_files(spark, sf_dir, 60, write_one))
     return decode_image_headers(
         _scan_staged(spark, d, "img_*", r"img_(\d+)\.\w+$"))
 
@@ -1102,7 +1103,8 @@ def multimodal_pixel_stats(spark, sf_dir):
         with open(os.path.join(tmp, f"px_{i:05d}.png"), "wb") as fh:
             fh.write(synth_png_rgb(8 + i % 9, 8 + i % 7))
 
-    d = _stage_fixture_dir(spark, sf_dir, "dss_pxfiles_v1", 40, write_one)
+    d = fixture_cache(sf_dir, "pxfiles",
+                      _per_doc_files(spark, sf_dir, 40, write_one))
     return png_pixel_stats(
         _scan_staged(spark, d, "px_*", r"px_(\d+)\.png$"))
 
@@ -1131,7 +1133,8 @@ def multimodal_gif_pixels(spark, sf_dir):
         with open(os.path.join(tmp, f"gif_{i:05d}.gif"), "wb") as fh:
             fh.write(synth_gif_lzw(24 + i % 40, 16 + i % 40))
 
-    d = _stage_fixture_dir(spark, sf_dir, "dss_giffiles_v1", 40, write_one)
+    d = fixture_cache(sf_dir, "giffiles",
+                      _per_doc_files(spark, sf_dir, 40, write_one))
     return gif_pixel_stats(
         _scan_staged(spark, d, "gif_*", r"gif_(\d+)\.gif$"))
 
@@ -1160,7 +1163,8 @@ def multimodal_jpeg_pixels(spark, sf_dir):
         with open(os.path.join(tmp, f"jpg_{i:05d}.jpg"), "wb") as fh:
             fh.write(synth_jpeg_fixture(i))
 
-    d = _stage_fixture_dir(spark, sf_dir, "dss_jpgfiles_v1", 40, write_one)
+    d = fixture_cache(sf_dir, "jpgfiles",
+                      _per_doc_files(spark, sf_dir, 40, write_one))
     return jpeg_pixel_stats(
         _scan_staged(spark, d, "jpg_*", r"jpg_(\d+)\.jpg$"))
 
@@ -1205,32 +1209,16 @@ def multimodal_media_meta(spark, sf_dir):
     return decode_media_headers(b)
 
 
-def _stage_fixture_dir(spark, sf_dir, dirname: str, id_bound: int,
-                       write_one) -> str:
-    """One-time atomic staging of per-doc fixture files into a
-    versioned tempdir (the ONE copy of the tag/makedirs/rename-publish
-    race pattern — the r11 review found four hand copies).
-    ``write_one(doc_id, tmpdir)`` writes one file for one doc."""
-    import os
-    import tempfile
-
-    d = os.path.join(tempfile.gettempdir(),
-                     f"{dirname}_{sf_dir_tag(sf_dir)}")
-    if not os.path.isdir(d):
-        tmp = f"{d}.tmp{os.getpid()}"
-        os.makedirs(tmp, exist_ok=True)
-        ids = [int(r.doc_id) for r in
-               load_table(spark, sf_dir, "documents")
-               .where(F.col("doc_id") < id_bound)
-               .select("doc_id").collect()]
-        for i in ids:
-            write_one(i, tmp)
-        try:
-            os.rename(tmp, d)
-        except OSError:  # concurrent winner published first
-            import shutil
-            shutil.rmtree(tmp, ignore_errors=True)
-    return d
+def _per_doc_files(spark, sf_dir, id_bound: int, write_one):
+    """A :func:`fixture_cache` build: ``write_one(doc_id, dir)`` writes
+    one file per document with ``doc_id < id_bound``."""
+    def build(tmp: str) -> None:
+        os.makedirs(tmp)
+        for r in (load_table(spark, sf_dir, "documents")
+                  .where(F.col("doc_id") < id_bound)
+                  .select("doc_id").collect()):
+            write_one(int(r.doc_id), tmp)
+    return build
 
 
 def _scan_staged(spark, d: str, glob: str, id_pattern: str):
@@ -1258,8 +1246,8 @@ def _write_media_file(i: int, tmp: str) -> None:
 
 
 def _scan_staged_media(spark, sf_dir, glob: str):
-    d = _stage_fixture_dir(spark, sf_dir, "dss_mediafiles_v2", 60,
-                           _write_media_file)
+    d = fixture_cache(sf_dir, "mediafiles",
+                      _per_doc_files(spark, sf_dir, 60, _write_media_file))
     return _scan_staged(spark, d, glob, r"med_(\d+)\.\w+$")
 
 

@@ -19,7 +19,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from database_syncer_spark.catalog import load_table, sf_dir_tag
+from database_syncer_spark.catalog import fixture_cache, load_table, sf_dir_tag
 from database_syncer_spark.streaming.queries import (
     session_window_agg,
     sliding_agg,
@@ -27,13 +27,6 @@ from database_syncer_spark.streaming.queries import (
     tumbling_agg,
     watermarked_tumbling,
 )
-
-#: bump when any staged-source DERIVATION changes (chunk count, the
-#: deriving transform, or the upstream snapshot derivation) — reuse=True
-#: stagings are keyed by path, so without a version token an edited
-#: derivation would silently serve the previous round's staged data
-#: (same hazard the dump cache solves with _DUMP_FMT, queries/dump.py).
-_STAGE_FMT = "v4"
 
 
 def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,20 +55,20 @@ def stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is literally ``SELECT * FROM orders``."""
     from database_syncer_spark.core.diff import snapshot_diff
     from database_syncer_spark.core.snapshots import derive_backup
-    from database_syncer_spark.streaming.runner import incremental_sync_foreachbatch
+    from database_syncer_spark.streaming.runner import (
+        incremental_sync_foreachbatch, stage_as_stream_source)
 
     prod = load_table(spark, sf_dir, "orders")
     backup = derive_backup(prod, "o_orderkey", "o_totalprice")
     changes = snapshot_diff(prod, backup, ["o_orderkey"])
-    tag = sf_dir_tag(sf_dir)
-    workdir = tempfile.mkdtemp(prefix=f"dss_febm_{tag}_")
-    # changes are a pure function of the read-only fixture — stage once
-    # per machine (reuse=True); state versions stay in the fresh workdir.
+    workdir = tempfile.mkdtemp(prefix=f"dss_febm_{sf_dir_tag(sf_dir)}_")
+    # changes are a pure function of the read-only fixture — staged once
+    # per machine; state versions stay in the fresh workdir.
+    src = fixture_cache(sf_dir, "febm_src",
+                        lambda tmp: stage_as_stream_source(changes, tmp, 3))
     return incremental_sync_foreachbatch(
-        spark, changes, backup, ["o_orderkey"], n_chunks=3, workdir=workdir,
-        changes_path=os.path.join(
-            tempfile.gettempdir(), f"dss_febm_src_{_STAGE_FMT}_{tag}"),
-        reuse_changes=True)
+        spark, changes, backup, ["o_orderkey"], workdir=workdir,
+        changes_path=src)
 
 
 #: streaming rolling-ingest fixture params (mirrored by the oracle):
@@ -87,8 +80,8 @@ _SROLL_PLANT_OFFSET = 20_000_000  # ≡ 0 mod 16, so rem is preserved
 def stream_dedup_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING admit-and-grow dedup — the production ingest shape:
     three daily document slices replayed as real micro-batches
-    (foreachBatch, one file per day via the grouped stager so batch k
-    IS day k), each batch probing the AT-REST band index
+    (foreachBatch, one file per day via stage_as_stream_batches so
+    batch k IS day k), each batch probing the AT-REST band index
     (incremental_near_dups with corpus_bands=), then admitting its
     novel docs by appending ONLY their band keys (append_band_index)
     and their text to the corpus store before the next batch fires.
@@ -119,7 +112,7 @@ def stream_dedup_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from database_syncer_spark.pipeline.dedup import (
         append_band_index, build_corpus_band_index, incremental_near_dups)
     from database_syncer_spark.streaming.runner import (
-        drain, stage_as_stream_source_grouped)
+        drain, stage_as_stream_batches)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     rem = F.col("doc_id") % 16
@@ -129,16 +122,12 @@ def stream_dedup_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus0 = docs.where(~rem.isin(*_SROLL_SLICES))
 
     tag = sf_dir_tag(sf_dir)
-    src = stage_as_stream_source_grouped(
-        batches,
-        os.path.join(tempfile.gettempdir(),
-                     f"dss_sroll_src_{_STAGE_FMT}_{tag}"),
-        [(rem == _SROLL_SLICES[0])
-         & (F.col("doc_id") < _SROLL_PLANT_OFFSET),
-         rem == _SROLL_SLICES[1],
-         (rem == _SROLL_SLICES[2])
-         | (F.col("doc_id") >= _SROLL_PLANT_OFFSET)],
-        reuse=True)
+    days = [batches.where(p) for p in (
+        (rem == _SROLL_SLICES[0]) & (F.col("doc_id") < _SROLL_PLANT_OFFSET),
+        rem == _SROLL_SLICES[1],
+        (rem == _SROLL_SLICES[2]) | (F.col("doc_id") >= _SROLL_PLANT_OFFSET))]
+    src = fixture_cache(sf_dir, "sroll_src",
+                        lambda tmp: stage_as_stream_batches(days, tmp))
 
     import shutil
 
@@ -215,9 +204,8 @@ def stream_stateful_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = load_table(spark, sf_dir, "events")
     tag = sf_dir_tag(sf_dir)
-    src = stage_as_stream_source(
-        events, os.path.join(tempfile.gettempdir(), f"dss_stateful_src_{_STAGE_FMT}_{tag}"),
-        3, reuse=True)
+    src = fixture_cache(sf_dir, "stateful_src",
+                        lambda tmp: stage_as_stream_source(events, tmp, 3))
     staged = spark.read.parquet(src)
     sink = run_stream_to_memory(
         spark, src, staged.schema, running_user_profile,
@@ -246,9 +234,8 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = load_table(spark, sf_dir, "events")
     tag = sf_dir_tag(sf_dir)
-    src = stage_as_stream_source(
-        events, os.path.join(tempfile.gettempdir(), f"dss_tws_src_{_STAGE_FMT}_{tag}"),
-        3, reuse=True)
+    src = fixture_cache(sf_dir, "tws_src",
+                        lambda tmp: stage_as_stream_source(events, tmp, 3))
     staged = spark.read.parquet(src)
 
     # transformWithState REQUIRES the RocksDB provider; since r7 the
@@ -289,9 +276,8 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = load_table(spark, sf_dir, "events")
     tag = sf_dir_tag(sf_dir)
-    src = stage_as_stream_source(
-        events, os.path.join(tempfile.gettempdir(), f"dss_ssj_src_{_STAGE_FMT}_{tag}"),
-        3, reuse=True)
+    src = fixture_cache(sf_dir, "ssj_src",
+                        lambda tmp: stage_as_stream_source(events, tmp, 3))
     staged = spark.read.parquet(src)
     dim = (
         events.select("event_type").distinct()
@@ -343,15 +329,15 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     already keeps monotonic) — at scale this is the filter pushed down
     to the sources; here it also cuts the replayed state volume."""
     from database_syncer_spark.streaming.runner import (
-        run_stream_to_memory, stage_as_stream_source_ordered)
+        run_stream_to_memory, stage_as_stream_batches)
 
     events = load_table(spark, sf_dir, "events").where(
         F.col("event_type").isin("click", "purchase"))
-    tag = sf_dir_tag(sf_dir)
-    src = stage_as_stream_source_ordered(
-        events,
-        os.path.join(tempfile.gettempdir(), f"dss_ssj2cp_src_{_STAGE_FMT}_{tag}"),
-        3, reuse=True)
+    chunked = events.withColumn("__chunk", F.ntile(3).over(W.orderBy("ts")))
+    thirds = [chunked.where(F.col("__chunk") == i).drop("__chunk")
+              for i in (1, 2, 3)]
+    src = fixture_cache(sf_dir, "ssj2cp_src",
+                        lambda tmp: stage_as_stream_batches(thirds, tmp))
     staged = spark.read.parquet(src)
 
     def shape(stream: DataFrame) -> DataFrame:
@@ -378,7 +364,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(F.col("c_user").alias("user_id"), "click_id", "purchase_id")
 
     return run_stream_to_memory(
-        spark, src, staged.schema, shape, f"dss_ssj2_{tag}",
+        spark, src, staged.schema, shape, f"dss_ssj2_{sf_dir_tag(sf_dir)}",
         output_mode="append", shuffle_partitions=4,
     )
 

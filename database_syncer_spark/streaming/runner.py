@@ -18,105 +18,33 @@ import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 
-def _staging_complete(path: str, n_files: int) -> bool:
-    """A staging is published by one rename after its last write, so
-    Spark's ``_SUCCESS`` marker in ``path`` means it is whole. A stager
-    writes at most ``n_files`` parquet files: none for an empty
-    partition, so 3 rows staged into 5 files leave 3."""
-    return (os.path.exists(os.path.join(path, "_SUCCESS"))
-            and sum(f.endswith(".parquet")
-                    for f in os.listdir(path)) <= n_files)
-
-
-def _publish_staging(tmp: str, path: str, n_files: int) -> str:
-    """Atomically move a finished staging dir into place (mirrors the
-    dump cache's tmp+os.replace pattern — ADVICE r2: fixed-path rmtree
-    plus in-place write let one process delete or half-read a staging
-    another process was still writing). os.rename fails if ``path``
-    appeared concurrently; accept the winner's copy if it is complete."""
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        if not _staging_complete(path, n_files):
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
+def stage_as_stream_source(df: DataFrame, path: str, n_files: int = 5) -> str:
+    """Write a DataFrame as N parquet files at ``path``, replacing what
+    is there, for file-by-file stream replay (FIXTURES.md §B3). Arrival
+    order across files is arbitrary. A staging that several calls or
+    processes share is built once through
+    :func:`~database_syncer_spark.catalog.fixture_cache`, which
+    publishes it whole."""
+    df.repartition(n_files).write.mode("overwrite").parquet(path)
     return path
 
 
-def stage_as_stream_source(df: DataFrame, path: str, n_files: int = 5,
-                           reuse: bool = False) -> str:
-    """Write a DataFrame as N parquet files for file-by-file stream replay
-    (FIXTURES.md §B3). Arrival order across files is arbitrary.
-
-    ``reuse=True`` skips the write when ``path`` already holds a completed
-    staging (see :func:`_staging_complete`) — callers whose ``df`` is a
-    pure function of an immutable fixture (the driver's correctness
-    keys) pay the staging job once per machine instead of once per
-    call. Pass ``reuse=False`` (default) whenever the input can change
-    between calls. Writes land in a unique temp dir and are renamed into
-    place, so concurrent stagers race safely."""
-    if os.path.exists(path):
-        if reuse and _staging_complete(path, n_files):
-            return path
-        shutil.rmtree(path)
-    tmp = f"{path}.tmp{os.getpid()}"
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    return _publish_staging(tmp, path, n_files)
-
-
-def stage_as_stream_source_ordered(df: DataFrame, path: str, n_files: int = 5,
-                                   order_col: str = "ts",
-                                   reuse: bool = False) -> str:
-    """Stage N files in EVENT-TIME order (file i holds the i-th time
-    quantile, written sequentially so the file source replays them in
-    arrival order). Required for watermark tests: with out-of-order
-    replay a watermark legitimately drops late rows. ``reuse`` and the
-    atomic tmp+rename publish as in :func:`stage_as_stream_source`
-    (each sequential append leaves at most one part file, so the file
-    count check holds here too)."""
-    from pyspark.sql import Window as W
-
-    if os.path.exists(path):
-        if reuse and _staging_complete(path, n_files):
-            return path
-        shutil.rmtree(path)
-    tmp = f"{path}.tmp{os.getpid()}"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    chunked = df.withColumn(
-        "__chunk", F.ntile(n_files).over(W.orderBy(order_col)))
-    for i in range(1, n_files + 1):
-        (chunked.where(F.col("__chunk") == i).drop("__chunk")
-         .coalesce(1).write.mode("append").parquet(tmp))
-    return _publish_staging(tmp, path, n_files)
-
-
-def stage_as_stream_source_grouped(df: DataFrame, path: str,
-                                   group_preds: list,
-                                   reuse: bool = False) -> str:
-    """Stage one file PER GROUP predicate, files written sequentially so
-    the file source (maxFilesPerTrigger=1, mtime-ordered like the
-    ordered stager) replays micro-batch k == group k exactly. For
-    replays whose SEMANTICS depend on batch composition (e.g. rolling
-    ingest: batch 2 must probe what batch 1 admitted), the ntile
-    chunkers are wrong — a row-count boundary can split a group across
-    batches. ``reuse`` and the atomic tmp+rename publish as in
-    :func:`stage_as_stream_source`."""
-    n_files = len(group_preds)
-    if os.path.exists(path):
-        if reuse and _staging_complete(path, n_files):
-            return path
-        shutil.rmtree(path)
-    tmp = f"{path}.tmp{os.getpid()}"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    for pred in group_preds:
-        df.where(pred).coalesce(1).write.mode("append").parquet(tmp)
-    return _publish_staging(tmp, path, n_files)
+def stage_as_stream_batches(frames: list[DataFrame], path: str) -> str:
+    """Write one parquet file per frame at ``path``, replacing what is
+    there, sequentially in list order, so the file source
+    (maxFilesPerTrigger=1 replays in mtime order) makes micro-batch k
+    exactly frame k. Use it where the replay's semantics depend on
+    batch order or composition: event-time quantiles for a watermark
+    (with out-of-order replay a watermark legitimately drops late rows),
+    or groups that must not be split across batches (rolling ingest:
+    batch 2 must probe what batch 1 admitted)."""
+    for i, df in enumerate(frames):
+        (df.coalesce(1).write.mode("append" if i else "overwrite")
+         .parquet(path))
+    return path
 
 
 #: RocksDB is the session default for every stateful streaming run (r6
@@ -214,7 +142,6 @@ def incremental_sync_foreachbatch(
     n_chunks: int = 5,
     workdir: str | None = None,
     changes_path: str | None = None,
-    reuse_changes: bool = False,
 ) -> DataFrame:
     """Incrementalized snapshot sync: stream CDC changes in micro-batches,
     each batch MERGEd into the running state via foreachBatch.
@@ -226,22 +153,26 @@ def incremental_sync_foreachbatch(
     Each change-PK appears exactly once, so the final state is independent
     of how the stream is chunked.
 
+    ``changes_path``, when given, names ``changes`` already staged by
+    :func:`stage_as_stream_source`, and no staging runs; otherwise the
+    call stages ``changes`` into ``n_chunks`` files under ``workdir``.
+
     Cost per call: the staging write (its shuffle and the write), the
     ``state_v0`` write, then per micro-batch one state version read with
     ``initial_state``'s schema (no inference job) and one
     ``apply_changes`` write of the next version — the anti-join's
     broadcast (or shuffle) stage and the write, two jobs at CDC batch
-    sizes: 3 + 2n jobs for n batches. An empty batch is merged like any
-    other: ``apply_changes`` returns the state unchanged, which costs
-    less than an emptiness probe job on every batch. The returned frame
-    reads the final version with the same known schema.
+    sizes: 3 + 2n jobs for n batches (1 + 2n with ``changes_path``).
+    An empty batch is merged like any other: ``apply_changes`` returns
+    the state unchanged, which costs less than an emptiness probe job
+    on every batch. The returned frame reads the final version with the
+    same known schema.
     """
     from database_syncer_spark.core.diff import apply_changes
 
     workdir = workdir or tempfile.mkdtemp(prefix="dss_sync_stream_")
-    src = stage_as_stream_source(
-        changes, changes_path or os.path.join(workdir, "changes"),
-        n_chunks, reuse=reuse_changes)
+    src = changes_path or stage_as_stream_source(
+        changes, os.path.join(workdir, "changes"), n_chunks)
 
     schema = initial_state.schema
     state_path = os.path.join(workdir, "state_v0")

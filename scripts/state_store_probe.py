@@ -23,7 +23,6 @@ import argparse
 import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -35,7 +34,7 @@ def main() -> None:
     ap.add_argument("--shapes", default="apws,tws,dedup")
     args = ap.parse_args()
 
-    from database_syncer_spark.catalog import load_table
+    from database_syncer_spark.catalog import fixture_cache, load_table
     from database_syncer_spark.queries.streaming import _stateful_partitions
     from database_syncer_spark.session import get_spark
     from database_syncer_spark.streaming.queries import stream_distinct
@@ -49,13 +48,10 @@ def main() -> None:
 
     events = load_table(spark, args.src, "events")
     n = events.count()
-    # key the reusable staging by source identity — a bare fixed path
-    # silently served the sf0.1 staging to the 10 M-event run on this
-    # script's first outing (reuse=True checks only completeness)
-    tag = f"{os.path.basename(os.path.normpath(args.src))}_{n}"
-    src = stage_as_stream_source(
-        events, os.path.join(tempfile.gettempdir(), f"dss_ssprobe_src_{tag}"),
-        3, reuse=True)
+    # the row count in the name keeps a regenerated --src dir from
+    # being served the staging of its previous contents
+    src = fixture_cache(args.src, f"ssprobe_src_{n}",
+                        lambda tmp: stage_as_stream_source(events, tmp, 3))
     staged = spark.read.parquet(src)
     parts = _stateful_partitions(spark, staged)
 

@@ -520,6 +520,24 @@ def test_write_script_failure_keeps_previous_file(spark, tmp_path,
     assert sorted(p.name for p in tmp_path.iterdir()) == ["script.sql"]
 
 
+def test_write_script_leaves_foreign_tmp_file(spark, tmp_path):
+    """Each call assembles under a name of its own: a ``script.sql.tmp``
+    that another writer holds survives byte-for-byte, and the published
+    script holds only this call's statements."""
+    from database_syncer_spark.core.script import write_script
+
+    path = tmp_path / "script.sql"
+    foreign = tmp_path / "script.sql.tmp"
+    foreign.write_bytes(b"-- another writer's half\n")
+    stmts = spark.createDataFrame([("DELETE FROM t;",)], "statement string")
+    write_script(stmts, str(path))
+    assert foreign.read_bytes() == b"-- another writer's half\n"
+    assert path.read_text(encoding="utf-8") == \
+        "-- sync script\nDELETE FROM t;\n"
+    assert sorted(p.name for p in tmp_path.iterdir()) == \
+        ["script.sql", "script.sql.tmp"]
+
+
 # --- rendering of names and values that need quoting ------------------------
 
 _QUOTING_SCHEMA = ("`id` int, `my col` string, `weird` string, `d` date, "

@@ -378,7 +378,7 @@ def test_minhash_band_join_is_skinny(spark, sf_dir):
         lsh_candidate_pairs, minhash_lsh_dedup, minhash_signatures)
 
     docs = load_table(spark, sf_dir, "documents")
-    gen_plan = _plan(lsh_candidate_pairs(minhash_signatures(docs, slim=True)))
+    gen_plan = _plan(lsh_candidate_pairs(minhash_signatures(docs)))
     assert "collect_set" not in gen_plan, "shingle text rides the band join"
     assert "band_id" in gen_plan and "band_hash" in gen_plan
     src = inspect.getsource(minhash_lsh_dedup)

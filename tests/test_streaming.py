@@ -52,11 +52,16 @@ def test_watermark_append_mode_closes_windows(spark, sf_dir, tmp_path_factory):
     """With a watermark and IN-ORDER replay, append mode emits exactly the
     finalized windows, each with its complete batch-true count; windows
     newer than (max event time - watermark) are withheld."""
-    from database_syncer_spark.streaming.runner import stage_as_stream_source_ordered
+    from pyspark.sql import Window as W
+
+    from database_syncer_spark.streaming.runner import stage_as_stream_batches
 
     events = load_table(spark, sf_dir, "events")
+    chunked = events.withColumn("__chunk", F.ntile(4).over(W.orderBy("ts")))
     path = str(tmp_path_factory.mktemp("stream_ord") / "events")
-    stage_as_stream_source_ordered(events, path, n_files=4)
+    stage_as_stream_batches(
+        [chunked.where(F.col("__chunk") == i).drop("__chunk")
+         for i in range(1, 5)], path)
     df = spark.read.parquet(path)
     batch = {tuple(r) for r in watermarked_tumbling(df).collect()}
     streamed = run_stream_to_memory(
@@ -172,41 +177,6 @@ def test_transform_with_state_typed_path(spark, staged_events):
     assert _rows(final) == _rows(batch)
 
 
-def test_staging_publish_survives_concurrent_winner(spark, tmp_path):
-    """_publish_staging must accept a complete staging that appeared
-    concurrently (rename loses the race) and clean up its own tmp dir —
-    the r2-flagged failure mode was one process rmtree'ing a staging
-    another process was reading."""
-    import os
-
-    from database_syncer_spark.streaming.runner import (
-        _publish_staging, stage_as_stream_source)
-
-    df = spark.range(10).selectExpr("id", "id * 2 AS v")
-    path = str(tmp_path / "staged")
-    stage_as_stream_source(df, path, n_files=2)  # the "winner's" staging
-
-    loser_tmp = str(tmp_path / "staged.tmp999")
-    df.repartition(2).write.parquet(loser_tmp)
-    out = _publish_staging(loser_tmp, path, n_files=2)
-    assert out == path
-    assert not os.path.exists(loser_tmp)          # loser's tmp removed
-    assert spark.read.parquet(path).count() == 10  # winner's data intact
-
-    # an INCOMPLETE (mid-write, non-empty) concurrent dir must raise,
-    # not be silently adopted or clobbered (os.rename onto an *empty*
-    # dir legitimately succeeds — nothing to protect there)
-    import pytest as _pytest
-    bad = str(tmp_path / "bad")
-    os.makedirs(bad)
-    open(os.path.join(bad, "part-partial.parquet"), "w").write("x")
-    loser2 = str(tmp_path / "bad.tmp1")
-    df.repartition(2).write.parquet(loser2)
-    with _pytest.raises(OSError):
-        _publish_staging(loser2, bad, n_files=2)
-    assert os.path.exists(os.path.join(bad, "part-partial.parquet"))
-
-
 def test_runner_pins_rocksdb_and_restores_conf(spark, staged_events):
     """r7: run_stream_to_memory pins the RocksDB state-store provider
     for the query (bounded-heap default at scale) but must leave the
@@ -225,23 +195,18 @@ def test_runner_pins_rocksdb_and_restores_conf(spark, staged_events):
 
 
 def test_grouped_stager_batch_is_group(spark, tmp_path):
-    """stage_as_stream_source_grouped must make micro-batch k EXACTLY
-    group k: one file per predicate, written in list order (mtime
+    """stage_as_stream_batches must make micro-batch k EXACTLY
+    group k: one file per frame, written in list order (mtime
     sequence — the property the file source's maxFilesPerTrigger=1
-    replay keys on), each containing precisely its group's rows. The
-    ntile chunkers cannot promise this when groups are unequal."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from database_syncer_spark.streaming.runner import (
-        stage_as_stream_source_grouped)
+    replay keys on), each containing precisely its group's rows. A
+    row-count chunker cannot promise this when groups are unequal."""
+    from database_syncer_spark.streaming.runner import stage_as_stream_batches
 
     df = spark.range(0, 100).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("g"))
     preds = [F.col("g") < 2, F.col("g").isin(2, 3, 4), F.col("g") > 4]
-    path = stage_as_stream_source_grouped(
-        df, str(tmp_path / "grp"), preds)
+    path = stage_as_stream_batches(
+        [df.where(p) for p in preds], str(tmp_path / "grp"))
     parts = sorted(
         (os.path.getmtime(os.path.join(path, f)), f)
         for f in os.listdir(path) if f.startswith("part-"))
@@ -397,19 +362,3 @@ def test_checkpoint_manager_conf_restored(spark, staged_events):
             spark.conf.unset(_CHECKPOINT_MANAGER_KEY)
         else:
             spark.conf.set(_CHECKPOINT_MANAGER_KEY, prev)
-
-
-def test_reuse_accepts_staging_with_fewer_rows_than_files(spark, tmp_path):
-    """Spark writes no file for an empty partition, so 3 rows staged
-    into 5 files leave 3; ``reuse=True`` must still recognise that
-    published staging instead of rewriting it on every call."""
-    path = str(tmp_path / "small")
-    stage_as_stream_source(spark.range(3), path, n_files=5)
-    assert sum(f.endswith(".parquet") for f in os.listdir(path)) < 5
-    probe = os.path.join(path, "_kept")
-    open(probe, "w").close()
-    assert stage_as_stream_source(spark.range(3), path, n_files=5,
-                                  reuse=True) == path
-    assert os.path.exists(probe)
-    assert sorted(r.id for r in spark.read.parquet(path).collect()) == \
-        [0, 1, 2]

@@ -1,11 +1,11 @@
 """Multimodal column plumbing (SURVEY.md §2 B11 multimodal_columns).
 
 Pattern for 100-TB multimodal corpora: media payloads are opaque
-``binary`` columns with typed metadata columns beside them; decode /
-feature-extraction runs as Arrow-batched ``mapInPandas`` so each Python
-worker sees a columnar batch of payloads (never one row at a time), and
-partitioning/pruning stay fully Spark-native because the payload is just
-another column.
+``binary`` columns with typed metadata columns beside them; every decode /
+feature extraction is one Arrow-batched ``mapInArrow`` pass
+(:func:`map_files`) so each Python worker sees a columnar batch of
+payloads (never one row at a time), and partitioning/pruning stay fully
+Spark-native because the payload is just another column.
 
 The container has no image/audio codecs, so the real decoder is a
 clearly-marked stub (NotImplementedError) and the default pipeline uses a
@@ -17,7 +17,7 @@ would use.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -29,6 +29,44 @@ def attach_binary_payload(documents: DataFrame) -> DataFrame:
     """Materialize an opaque binary column (utf-8 bytes of text here; an
     image/audio blob in production — the engine treats both identically)."""
     return documents.withColumn("payload", F.encode("text", "utf-8"))
+
+
+def map_files(files: DataFrame, col: str, schema: str,
+              rows: Callable[[bytes], Iterable[tuple]]) -> DataFrame:
+    """The one per-file decode pass: ``rows(data)`` turns one file's bytes
+    (``files``' binary column ``col``) into its output tuples, in
+    ``schema``'s column order after ``doc_id``. One ``mapInArrow`` pass
+    over (doc_id, ``col``); every output batch is built with the Arrow
+    types of ``schema``, derived once on the driver, so an empty batch
+    is typed like any other and a value that does not fit its column
+    raises a ``ValueError`` naming the column instead of wrapping. A
+    decoder's ``ValueError`` fails the task the same way."""
+    import pyarrow as pa
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    out = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(out)
+
+    def decode(batches):
+        for b in batches:
+            got = [(doc_id, *r)
+                   for doc_id, data in zip(b.column("doc_id").to_pylist(),
+                                           b.column(col).to_pylist())
+                   for r in rows(data)]
+            cols = list(zip(*got)) if got else [()] * len(arrow)
+            arrays = []
+            for field, values in zip(arrow, cols):
+                try:
+                    arrays.append(pa.array(values, type=field.type))
+                except (pa.ArrowException, OverflowError) as exc:
+                    raise ValueError(
+                        f"column {field.name!r} ({field.type}): {exc}"
+                    ) from exc
+            yield pa.RecordBatch.from_arrays(arrays, schema=arrow)
+
+    return files.select("doc_id", col).mapInArrow(decode, out)
 
 
 def decode_media(payload: bytes) -> dict:
@@ -47,7 +85,7 @@ def decode_media(payload: bytes) -> dict:
     raise NotImplementedError(
         "progressive-JPEG and MDCT codecs not available in this "
         "environment; baseline-JPEG pixels: jpeg.decode_jpeg_pixels / "
-        "jpeg_pixel_stats; PNG pixels: decode_png_pixels; GIF pixels: "
+        "pixel_stats; PNG pixels: decode_png_pixels; GIF pixels: "
         "decode_gif_pixels; PCM samples: decode_wav_samples; "
         "container metadata: parse_image_header / parse_media_header")
 
@@ -162,25 +200,12 @@ IMAGE_DIMS_SCHEMA = ("doc_id bigint, format string, width int, "
 
 
 def decode_image_headers(binary_files: DataFrame) -> DataFrame:
-    """Distributed image-header decode over a ``binaryFile`` scan:
-    Arrow-batched mapInPandas, one parse_image_header call per file,
-    fixed output schema — the real-decoder shape with zero codec deps.
-    Input contract: (doc_id, content) columns."""
-    def decode(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            parsed = [parse_image_header(bytes(b)) for b in pdf["content"]]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "format": [p[0] for p in parsed],
-                "width": pd.Series([p[1] for p in parsed], dtype="int32"),
-                "height": pd.Series([p[2] for p in parsed], dtype="int32"),
-                "n_bytes": pdf["content"].map(len).astype("int32"),
-            })
-
-    return (binary_files.select("doc_id", "content")
-            .mapInPandas(decode, IMAGE_DIMS_SCHEMA))
+    """Distributed image-header decode over a ``binaryFile`` scan: one
+    parse_image_header call per file through :func:`map_files` — the
+    real-decoder shape with zero codec deps. Input contract: (doc_id,
+    content) columns."""
+    return map_files(binary_files, "content", IMAGE_DIMS_SCHEMA,
+                     lambda data: [(*parse_image_header(data), len(data))])
 
 
 # --- real audio/video container metadata (no codec library needed) ---------
@@ -414,43 +439,23 @@ def parse_mp4_tracks(data: bytes) -> list[tuple[int, str, int, int]]:
     return out
 
 
+#: media_timescale is BIGINT: mdhd carries a u32 timescale. track_id
+#: stays int, so a legal u32 track_ID above 2^31 - 1 raises in map_files.
 TRACK_META_SCHEMA = ("doc_id bigint, track_id int, handler string, "
                      "media_timescale bigint, duration_ms bigint")
 
 
 def decode_track_meta(binary_files: DataFrame) -> DataFrame:
-    """Distributed per-track MP4 metadata: Arrow-batched mapInPandas,
-    one nested box walk per file, one output row per track. Input
-    contract: (doc_id, content)."""
-    def decode(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {"doc_id": [], "track_id": [], "handler": [],
-                    "media_timescale": [], "duration_ms": []}
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                for tid, handler, ts, dur in parse_mp4_tracks(
-                        bytes(content)):
-                    rows["doc_id"].append(doc_id)
-                    rows["track_id"].append(tid)
-                    rows["handler"].append(handler)
-                    rows["media_timescale"].append(ts)
-                    rows["duration_ms"].append(dur * 1000 // ts)
-            # media_timescale is int64: mdhd carries a u32 timescale, so
-            # a structurally-valid value > 2^31 must not overflow the
-            # Arrow cast on exactly the inputs the parser survives
-            yield pd.DataFrame(rows).astype(
-                {"track_id": "int32", "media_timescale": "int64",
-                 "duration_ms": "int64"})
-
-    return (binary_files.select("doc_id", "content")
-            .mapInPandas(decode, TRACK_META_SCHEMA))
+    """Distributed per-track MP4 metadata through :func:`map_files`: one
+    nested box walk per file, one output row per track. A u32 track_ID
+    above 2^31 - 1 raises instead of wrapping into the int column.
+    Input contract: (doc_id, content)."""
+    return map_files(
+        binary_files, "content", TRACK_META_SCHEMA,
+        lambda data: [(tid, handler, ts, dur * 1000 // ts)
+                      for tid, handler, ts, dur in parse_mp4_tracks(data)])
 
 
-#: duration_ms is BIGINT deliberately: 2^31 ms is only ~24.8 days, and a
-#: structurally-valid mvhd can carry u32 duration units over a small
-#: timescale (duration_ms up to ~2^41) — int32 would overflow the Arrow
-#: batch on exactly the adversarial inputs the parser must survive.
 # --- real PNG PIXEL decode (stdlib zlib only — no codec library) -----------
 #
 # PNG is the one mainstream image format whose pixel data needs no codec
@@ -761,47 +766,20 @@ PIXEL_STATS_SCHEMA = ("doc_id bigint, width int, height int, "
                       "n_px bigint")
 
 
-def _pixel_stats(binary_files: DataFrame, decoder) -> DataFrame:
-    """Distributed pixel statistics over a binaryFile scan:
-    Arrow-batched mapInPandas, one full pixel decode per file via
-    ``decoder`` (decode_png_pixels / decode_gif_pixels), exact
-    per-channel sums (the feature-extraction shape — swap the stats for
-    a resize/embed once the payload is real imagery). Input contract:
-    (doc_id, content)."""
-    def stats(batches: Iterator) -> Iterator:
-        import pandas as pd
+def pixel_stats(binary_files: DataFrame,
+                decoder: Callable[[bytes], tuple[int, int, bytes]]
+                ) -> DataFrame:
+    """Distributed pixel statistics over a binaryFile scan through
+    :func:`map_files`: one full pixel decode per file via ``decoder``
+    (decode_png_pixels / decode_gif_pixels / jpeg.decode_jpeg_pixels),
+    exact per-channel sums (the feature-extraction shape — swap the
+    stats for a resize/embed once the payload is real imagery). Input
+    contract: (doc_id, content)."""
+    def stats(data: bytes) -> list[tuple]:
+        w, h, px = decoder(data)
+        return [(w, h, sum(px[0::3]), sum(px[1::3]), sum(px[2::3]), w * h)]
 
-        for pdf in batches:
-            rows = {"doc_id": [], "width": [], "height": [],
-                    "sum_r": [], "sum_g": [], "sum_b": [], "n_px": []}
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                w, h, px = decoder(bytes(content))
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                for ci, col in enumerate(("sum_r", "sum_g", "sum_b")):
-                    rows[col].append(sum(px[ci::3]))
-                rows["n_px"].append(w * h)
-            yield pd.DataFrame(rows).astype(
-                {"width": "int32", "height": "int32", "sum_r": "int64",
-                 "sum_g": "int64", "sum_b": "int64", "n_px": "int64"})
-
-    return (binary_files.select("doc_id", "content")
-            .mapInPandas(stats, PIXEL_STATS_SCHEMA))
-
-
-def png_pixel_stats(binary_files: DataFrame) -> DataFrame:
-    return _pixel_stats(binary_files, decode_png_pixels)
-
-
-def gif_pixel_stats(binary_files: DataFrame) -> DataFrame:
-    return _pixel_stats(binary_files, decode_gif_pixels)
-
-
-def jpeg_pixel_stats(binary_files: DataFrame) -> DataFrame:
-    from database_syncer_spark.pipeline.jpeg import decode_jpeg_pixels
-
-    return _pixel_stats(binary_files, decode_jpeg_pixels)
+    return map_files(binary_files, "content", PIXEL_STATS_SCHEMA, stats)
 
 
 # --- real WAV PCM sample decode (no codec library) --------------------------
@@ -859,94 +837,48 @@ AUDIO_STATS_SCHEMA = ("doc_id bigint, sample_rate int, n_channels int, "
 
 
 def wav_sample_stats(binary_files: DataFrame) -> DataFrame:
-    """Distributed PCM sample statistics over a binaryFile scan:
-    Arrow-batched mapInPandas, one full sample decode per file via
-    decode_wav_samples, numpy int16 reduction per channel (the
+    """Distributed PCM sample statistics over a binaryFile scan through
+    :func:`map_files`: one full sample decode per file via
+    decode_wav_samples, numpy int16 reduction of channel 0 (the
     feature-extraction shape — swap the stats for resample/embed once
     the payload is real audio). Input contract: (doc_id, content)."""
-    def stats(batches: Iterator) -> Iterator:
+    def stats(data: bytes) -> list[tuple]:
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = {"doc_id": [], "sample_rate": [], "n_channels": [],
-                    "n_samples": [], "sum_ch0": [], "min_ch0": [],
-                    "max_ch0": []}
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                rate, n, chans = decode_wav_samples(bytes(content))
-                ch0 = np.frombuffer(chans[0], dtype="<i2")
-                rows["doc_id"].append(doc_id)
-                rows["sample_rate"].append(rate)
-                rows["n_channels"].append(len(chans))
-                rows["n_samples"].append(n)
-                rows["sum_ch0"].append(int(ch0.astype("int64").sum()))
-                rows["min_ch0"].append(int(ch0.min()))
-                rows["max_ch0"].append(int(ch0.max()))
-            yield pd.DataFrame(rows).astype(
-                {"sample_rate": "int32", "n_channels": "int32",
-                 "n_samples": "int64", "sum_ch0": "int64",
-                 "min_ch0": "int32", "max_ch0": "int32"})
+        rate, n, chans = decode_wav_samples(data)
+        ch0 = np.frombuffer(chans[0], dtype="<i2")
+        return [(rate, len(chans), n, int(ch0.sum(dtype=np.int64)),
+                 int(ch0.min()), int(ch0.max()))]
 
-    return (binary_files.select("doc_id", "content")
-            .mapInPandas(stats, AUDIO_STATS_SCHEMA))
+    return map_files(binary_files, "content", AUDIO_STATS_SCHEMA, stats)
 
 
+#: duration_ms is BIGINT deliberately: 2^31 ms is only ~24.8 days, and a
+#: structurally-valid mvhd can carry u32 duration units over a small
+#: timescale (duration_ms up to ~2^41); sample_rate is BIGINT because for
+#: MP4 it is the mvhd timescale, a u32. An int column would make
+#: map_files raise on exactly the inputs the parser must survive.
 MEDIA_META_SCHEMA = ("doc_id bigint, container string, duration_ms bigint, "
                      "sample_rate bigint, n_tracks int, n_bytes int")
 
 
 def decode_media_headers(binary_files: DataFrame) -> DataFrame:
     """Distributed audio/video container-metadata decode over a
-    ``binaryFile`` scan: Arrow-batched mapInPandas, one
-    parse_media_header call per file, fixed output schema. Input
-    contract: (doc_id, content) columns."""
-    def decode(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            parsed = [parse_media_header(bytes(b)) for b in pdf["content"]]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "container": [p[0] for p in parsed],
-                "duration_ms": pd.Series([p[1] for p in parsed],
-                                         dtype="int64"),
-                # int64: for MP4 this is the mvhd timescale, a u32 field
-                # that can legally exceed 2^31
-                "sample_rate": pd.Series([p[2] for p in parsed],
-                                         dtype="int64"),
-                "n_tracks": pd.Series([p[3] for p in parsed],
-                                      dtype="int32"),
-                "n_bytes": pdf["content"].map(len).astype("int32"),
-            })
-
-    return (binary_files.select("doc_id", "content")
-            .mapInPandas(decode, MEDIA_META_SCHEMA))
+    ``binaryFile`` scan: one parse_media_header call per file through
+    :func:`map_files`. Input contract: (doc_id, content) columns."""
+    return map_files(binary_files, "content", MEDIA_META_SCHEMA,
+                     lambda data: [(*parse_media_header(data), len(data))])
 
 
 def extract_features(with_payload: DataFrame) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads.
-
-    Batch shape: the worker receives pandas DataFrames of (doc_id,
-    payload) — one Arrow batch per ~10k rows — and emits fixed-schema
-    features. Swap the body for decode_media + numpy once codecs exist.
-    """
-    def extract(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = pdf["payload"]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_bytes": payloads.map(len).astype("int32"),
-                "payload_md5": payloads.map(
-                    lambda b: hashlib.md5(bytes(b)).hexdigest()),
-                "header_hex": payloads.map(lambda b: bytes(b)[:4].hex()),
-            })
-
-    return (
-        with_payload.select("doc_id", "payload")
-        .mapInPandas(extract, DECODED_SCHEMA)
-    )
+    """Feature extraction over binary payloads through :func:`map_files`:
+    the worker receives Arrow batches of (doc_id, payload) and emits
+    fixed-schema features. Swap the body for decode_media + numpy once
+    codecs exist."""
+    return map_files(
+        with_payload, "payload", DECODED_SCHEMA,
+        lambda data: [(len(data), hashlib.md5(data).hexdigest(),
+                       data[:4].hex())])
 
 
 FRAME_SCHEMA = ("doc_id bigint, frame_id int, byte_offset int, "
@@ -960,7 +892,7 @@ def frame_sample(with_payload: DataFrame, frame_bytes: int = 64,
     with the codec stubbed: a "frame" is a fixed-size byte window of the
     payload, sampling keeps every ``stride``-th frame, and the per-frame
     feature is its md5. The Spark-side plumbing is exactly what a real
-    ffmpeg-backed sampler uses: Arrow-batched ``mapInPandas`` over
+    ffmpeg-backed sampler uses: one :func:`map_files` pass over
     (doc_id, payload), frame fan-out INSIDE the worker (no row explosion
     before the Python crossing), fixed output schema.
 
@@ -969,41 +901,16 @@ def frame_sample(with_payload: DataFrame, frame_bytes: int = 64,
     the payload encodes — byte-exact because the fixture text is ASCII
     (one byte per char); a non-ASCII corpus would fail parity loudly,
     not silently."""
-    def sample(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def frames(data: bytes) -> list[tuple]:
+        out = []
+        for f in range(0, -(-len(data) // frame_bytes), stride):
+            chunk = data[f * frame_bytes:(f + 1) * frame_bytes]
+            out.append((f, f * frame_bytes, len(chunk),
+                        hashlib.md5(chunk).hexdigest()))
+        return out
 
-        for pdf in batches:
-            out = {"doc_id": [], "frame_id": [], "byte_offset": [],
-                   "n_frame_bytes": [], "frame_md5": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                data = bytes(payload)
-                for f in range(0, -(-len(data) // frame_bytes)):
-                    if f % stride:
-                        continue
-                    chunk = data[f * frame_bytes:(f + 1) * frame_bytes]
-                    out["doc_id"].append(doc_id)
-                    out["frame_id"].append(f)
-                    out["byte_offset"].append(f * frame_bytes)
-                    out["n_frame_bytes"].append(len(chunk))
-                    out["frame_md5"].append(hashlib.md5(chunk).hexdigest())
-            yield pd.DataFrame(out).astype(
-                {"frame_id": "int32", "byte_offset": "int32",
-                 "n_frame_bytes": "int32"})
-
-    return (with_payload.select("doc_id", "payload")
-            .where(F.length("payload") > 0)
-            .mapInPandas(sample, FRAME_SCHEMA))
-
-
-def probe_dim(embeddings: DataFrame, col: str = "embedding") -> int:
-    """Embedding dimensionality from one sampled row (one-row driver
-    read — model-state scale, not data scale). The vector kernels need
-    dim to view a batch as an n×dim matrix; probing beats hardcoding,
-    and a row of another width raises in the kernel."""
-    row = embeddings.select(F.size(col).alias("d")).first()
-    if row is None or row["d"] is None or row["d"] <= 0:
-        raise ValueError(f"cannot probe embedding dim from column {col!r}")
-    return int(row["d"])
+    return map_files(with_payload.where(F.length("payload") > 0),
+                     "payload", FRAME_SCHEMA, frames)
 
 
 def check_dim(embeddings: DataFrame, col: str = "embedding") -> int:
@@ -1041,16 +948,14 @@ def check_dim_count(embeddings: DataFrame,
 
 
 def multimodal_join(documents: DataFrame, embeddings: DataFrame,
-                    dim: int | None = None) -> DataFrame:
+                    dim: int) -> DataFrame:
     """Mixed text + vector + scalar table: documents ⋈ embeddings with
     the vector column's width and L2 norm (the :func:`vector.with_norm`
-    kernel). ``dim`` is probed from the data when not given; the kernel
-    raises ``ValueError`` on a NULL embedding or one of another width
-    instead of yielding a wrong norm."""
+    kernel). ``dim`` is the corpus width (pass :func:`check_dim`); the
+    kernel raises ``ValueError`` on a NULL embedding or one of another
+    width instead of yielding a wrong norm."""
     from database_syncer_spark.pipeline import vector as V
 
-    if dim is None:
-        dim = probe_dim(embeddings)
     joined = documents.join(
         embeddings, documents.doc_id == embeddings.vec_id, "inner")
     cols = joined.select("doc_id", "lang", "label",

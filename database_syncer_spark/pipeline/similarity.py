@@ -240,16 +240,14 @@ def train_pq_codebooks(embeddings: DataFrame, m: int = 8, dim: int = 64,
 def _with_pq_codes(df: DataFrame, books: list, m: int, dim: int,
                    emb_col: str = "embedding") -> DataFrame:
     """Append ``pq_codes``: per subspace, the nearest sub-centroid id
-    (L2), via one Arrow-batched numpy pass (same Janino rationale as
-    `_with_probe_cells`; m argmins over (B×d_sub)@(d_sub×k) products)."""
+    (:func:`_pq_encode`), via one Arrow-batched numpy pass (same Janino
+    rationale as `_with_probe_cells`)."""
     import numpy as np
     import pandas as pd
 
     from pyspark.sql import types as T
 
-    d_sub = dim // m
     bmats = [np.asarray(b, dtype=np.float64) for b in books]  # k × d_sub
-    bnorm = [0.5 * (b * b).sum(axis=1) for b in bmats]
     out_schema = T.StructType(
         list(df.schema.fields)
         + [T.StructField("pq_codes", T.ArrayType(T.IntegerType()))])
@@ -257,17 +255,9 @@ def _with_pq_codes(df: DataFrame, books: list, m: int, dim: int,
     def assign(batches):
         for pdf in batches:
             if len(pdf):
-                full = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
-                nrm = np.linalg.norm(full, axis=1, keepdims=True)
-                full = full / np.where(nrm == 0, 1.0, nrm)
-                codes = np.empty((len(pdf), m), dtype=np.int32)
-                for s in range(m):
-                    sub = full[:, s * d_sub:(s + 1) * d_sub]
-                    # argmin ||x-c||² == argmax (x·c − ½||c||²); 9-dp
-                    # round for batch-shape-independent assignment (see
-                    # _with_probe_cells).
-                    codes[:, s] = np.argmax(
-                        np.round(sub @ bmats[s].T - bnorm[s], 9), axis=1)
+                codes = _pq_encode(
+                    np.stack(pdf[emb_col].to_numpy()).astype(np.float64),
+                    bmats, m, dim // m)
                 pdf = pdf.assign(pq_codes=[row for row in codes])
             else:
                 pdf = pdf.assign(pq_codes=pd.Series([], dtype=object))
@@ -477,10 +467,9 @@ def ivfpq_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
                                   dim=dim, k_sub=k_sub)
     centroids = index["centroids"]
     qarr, qmat = _query_matrix(embeddings, n_queries)
-    # Per-query probed cells: same rounded-argmax math as
-    # _with_probe_cells, driver-side (Q rows of model-state work).
-    qdots = np.round(qmat @ np.asarray(centroids, dtype=np.float64).T, 9)
-    order = np.argsort(-qdots, axis=1, kind="stable")[:, :n_probe]
+    # Per-query probed cells, driver-side (Q rows of model-state work).
+    order = _nearest_cells(
+        qmat, np.asarray(centroids, dtype=np.float64).T, n_probe)
     probe_ok = np.zeros((len(qarr), len(centroids)), dtype=bool)
     np.put_along_axis(probe_ok, order, True, axis=1)  # Q × C mask
     scored = _adc_scan(index["coded"], qarr, qmat, index["books"], m,
@@ -493,17 +482,16 @@ def _with_cell_and_codes(df: DataFrame, centroids: list[list[float]],
     """IVF cell + PQ codes in ONE Arrow pass (vs chaining
     _with_probe_cells and _with_pq_codes, which costs two Python round
     trips over the full corpus — the difference is a whole corpus scan
-    at 100 TB). Identical math to the two parents, 9-dp rounding
-    included, so assignments are bit-equal to the chained form."""
+    at 100 TB). The same two functions as the two parents
+    (:func:`_nearest_cells`, :func:`_pq_encode`), so assignments are
+    bit-equal to the chained form."""
     import numpy as np
     import pandas as pd
 
     from pyspark.sql import types as T
 
     cmat = np.asarray(centroids, dtype=np.float64).T   # dim × C
-    d_sub = dim // m
     bmats = [np.asarray(b, dtype=np.float64) for b in books]
-    bnorm = [0.5 * (b * b).sum(axis=1) for b in bmats]
     out_schema = T.StructType([
         T.StructField("vec_id", T.LongType()),
         T.StructField("cell", T.IntegerType()),
@@ -519,19 +507,11 @@ def _with_cell_and_codes(df: DataFrame, centroids: list[list[float]],
                      "pq_codes": pd.Series([], dtype=object)})
                 continue
             mtx = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            dots = np.round(mtx @ cmat, 9)
-            cell = np.argsort(-dots, axis=1, kind="stable")[:, 0]
-            nrm = np.linalg.norm(mtx, axis=1, keepdims=True)
-            full = mtx / np.where(nrm == 0, 1.0, nrm)
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for s in range(m):
-                sub = full[:, s * d_sub:(s + 1) * d_sub]
-                codes[:, s] = np.argmax(
-                    np.round(sub @ bmats[s].T - bnorm[s], 9), axis=1)
             yield pd.DataFrame({
                 "vec_id": pdf["vec_id"].to_numpy(),
-                "cell": cell.astype("int32"),
-                "pq_codes": [row for row in codes],
+                "cell": _nearest_cells(mtx, cmat, 1)[:, 0].astype("int32"),
+                "pq_codes": [row for row in
+                             _pq_encode(mtx, bmats, m, dim // m)],
             })
 
     return df.mapInPandas(assign, out_schema)
@@ -569,12 +549,7 @@ def _with_probe_cells(df: DataFrame, centroids: list[list[float]],
         for pdf in batches:
             if len(pdf):
                 m = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
-                # 9-dp round before the argsort: BLAS blocking can vary
-                # with batch shape, and a 1e-16 wobble at a near-tie
-                # would flip cell assignment between runs; rounding makes
-                # such pairs exact ties, broken stably by cell index.
-                dots = np.round(m @ cmat, 9)          # B × C
-                order = np.argsort(-dots, axis=1, kind="stable")[:, :n_probe]
+                order = _nearest_cells(m, cmat, n_probe)
                 pdf = pdf.assign(
                     probe_cells=[row.astype("int32") for row in order])
             else:
@@ -582,6 +557,37 @@ def _with_probe_cells(df: DataFrame, centroids: list[list[float]],
             yield pdf
 
     return df.mapInPandas(assign, out_schema)
+
+
+def _nearest_cells(x, cmat, n: int):
+    """The ``n`` nearest cells of each row of ``x`` (B×dim), nearest
+    first: the column order of round(x @ cmat, 9) (cmat is dim×C),
+    descending, stable. The 9-dp round comes before the argsort
+    because BLAS blocking can vary with batch shape, and a 1e-16 wobble
+    at a near-tie would flip the assignment between runs; rounding
+    makes such pairs exact ties, broken by cell index."""
+    import numpy as np
+
+    return np.argsort(-np.round(x @ cmat, 9), axis=1, kind="stable")[:, :n]
+
+
+def _pq_encode(x, bmats: list, m: int, d_sub: int):
+    """PQ codes (B×m int32) of the rows of ``x`` (B×dim): each row is
+    L2-normalized (a zero row stays zero), then per subspace s the code
+    is argmax round(sub @ Bₛᵀ − ½‖Bₛ‖², 9) over the k×d_sub codebook
+    Bₛ = ``bmats[s]`` — argmin ‖sub − c‖², rounded as in
+    :func:`_nearest_cells`."""
+    import numpy as np
+
+    nrm = np.linalg.norm(x, axis=1, keepdims=True)
+    full = x / np.where(nrm == 0, 1.0, nrm)
+    codes = np.empty((len(x), m), dtype=np.int32)
+    for s in range(m):
+        sub = full[:, s * d_sub:(s + 1) * d_sub]
+        b = bmats[s]
+        codes[:, s] = np.argmax(
+            np.round(sub @ b.T - 0.5 * (b * b).sum(axis=1), 9), axis=1)
+    return codes
 
 
 def _normalize(vec: list[float]) -> list[float]:

@@ -1024,9 +1024,9 @@ def text_html_strip(spark, sf_dir):
 # --- multimodal ------------------------------------------------------------------
 
 def multimodal_columns(spark, sf_dir):
-    return M.multimodal_join(
-        load_table(spark, sf_dir, "documents"),
-        load_table(spark, sf_dir, "embeddings"))
+    emb = load_table(spark, sf_dir, "embeddings")
+    return M.multimodal_join(load_table(spark, sf_dir, "documents"), emb,
+                             _emb_dim(sf_dir, emb))
 
 
 def multimodal_decode(spark, sf_dir):
@@ -1047,10 +1047,10 @@ def multimodal_image_dims(spark, sf_dir):
     stage spec-valid PNG / GIF / JPEG files whose dimensions derive
     arithmetically from doc_id, read them back through the binaryFile
     source, and parse (format, width, height) from the CONTAINER BYTES
-    in Arrow-batched mapInPandas
-    (pipeline/multimodal.py:parse_image_header — big-endian PNG IHDR
-    with CRC check, little-endian GIF screen descriptor, JPEG marker
-    scan to SOF). The oracle recomputes the dims from the doc_id
+    in one Arrow-batched pass (pipeline/multimodal.py:map_files,
+    parse_image_header — big-endian PNG IHDR with CRC check,
+    little-endian GIF screen descriptor, JPEG marker scan to SOF). The
+    oracle recomputes the dims from the doc_id
     arithmetic alone, so the Spark side can only match by decoding the
     binary headers correctly — encoder (struct-pack) and decoder
     (scanner) share no code.
@@ -1087,9 +1087,9 @@ def multimodal_pixel_stats(spark, sf_dir):
     mod 251 and whose rows cycle through ALL FIVE spec filters
     (None/Sub/Up/Average/Paeth — synth filters forward, decoder
     unfilters; inverse ops, no shared path), read them back through
-    binaryFile, inflate + unfilter + sum channels in Arrow-batched
-    mapInPandas. The oracle recomputes the exact per-channel sums from
-    the pixel formula alone (a generate_series cross join), so only a
+    binaryFile, inflate + unfilter + sum channels in one Arrow-batched
+    pass (pipeline/multimodal.py:pixel_stats). The oracle recomputes
+    the exact per-channel sums from the pixel formula alone (a generate_series cross join), so only a
     byte-correct full decode — filters included — can match. With
     multimodal_gif_pixels this closes pixel decode for both
     losslessly-coded mainstream image formats; the stub is down to
@@ -1097,7 +1097,7 @@ def multimodal_pixel_stats(spark, sf_dir):
     import os
 
     from database_syncer_spark.pipeline.multimodal import (
-        png_pixel_stats, synth_png_rgb)
+        decode_png_pixels, pixel_stats, synth_png_rgb)
 
     def write_one(i, tmp):
         with open(os.path.join(tmp, f"px_{i:05d}.png"), "wb") as fh:
@@ -1105,8 +1105,9 @@ def multimodal_pixel_stats(spark, sf_dir):
 
     d = fixture_cache(sf_dir, "pxfiles",
                       _per_doc_files(spark, sf_dir, 40, write_one))
-    return png_pixel_stats(
-        _scan_staged(spark, d, "px_*", r"px_(\d+)\.png$"))
+    return pixel_stats(
+        _scan_staged(spark, d, "px_*", r"px_(\d+)\.png$"),
+        decode_png_pixels)
 
 
 def multimodal_gif_pixels(spark, sf_dir):
@@ -1117,9 +1118,9 @@ def multimodal_gif_pixels(spark, sf_dir):
     data produced by an ACTUAL LZW compressor — dictionary build,
     variable 9→12-bit code width, 4096-entry CLEAR reset, 255-byte
     sub-blocks — then decode (de-sub-block, variable-width LZW incl.
-    the KwKwK case, palette lookup) and sum channels in Arrow-batched
-    mapInPandas. Sizes up to 63×55 force code-width growth past 9 bits.
-    The oracle recomputes the exact per-channel sums from the
+    the KwKwK case, palette lookup) and sum channels in one
+    Arrow-batched pass (pipeline/multimodal.py:pixel_stats). Sizes up
+    to 63×55 force code-width growth past 9 bits. The oracle recomputes the exact per-channel sums from the
     index-formula + palette arithmetic alone, so only a byte-correct
     LZW round trip can match. With PNG (multimodal_pixel_stats) and
     this, both losslessly-coded mainstream image formats decode for
@@ -1127,7 +1128,7 @@ def multimodal_gif_pixels(spark, sf_dir):
     import os
 
     from database_syncer_spark.pipeline.multimodal import (
-        gif_pixel_stats, synth_gif_lzw)
+        decode_gif_pixels, pixel_stats, synth_gif_lzw)
 
     def write_one(i, tmp):
         with open(os.path.join(tmp, f"gif_{i:05d}.gif"), "wb") as fh:
@@ -1135,8 +1136,9 @@ def multimodal_gif_pixels(spark, sf_dir):
 
     d = fixture_cache(sf_dir, "giffiles",
                       _per_doc_files(spark, sf_dir, 40, write_one))
-    return gif_pixel_stats(
-        _scan_staged(spark, d, "gif_*", r"gif_(\d+)\.gif$"))
+    return pixel_stats(
+        _scan_staged(spark, d, "gif_*", r"gif_(\d+)\.gif$"),
+        decode_gif_pixels)
 
 
 def multimodal_jpeg_pixels(spark, sf_dir):
@@ -1146,9 +1148,9 @@ def multimodal_jpeg_pixels(spark, sf_dir):
     Huffman entropy coding with byte stuffing, every third doc
     4:2:0-subsampled, every fourth with restart markers — then decode
     (marker walk, canonical Huffman, dequantize, de-zigzag, float IDCT,
-    chroma replication, YCbCr→RGB) and sum channels in Arrow-batched
-    mapInPandas. The fixtures place quantized coefficients only at
-    DC/(4,0)/(0,4) with step 8, so the IDCT lands on exact integers and
+    chroma replication, YCbCr→RGB) and sum channels in one
+    Arrow-batched pass (pipeline/multimodal.py:pixel_stats). The
+    fixtures place quantized coefficients only at DC/(4,0)/(0,4) with step 8, so the IDCT lands on exact integers and
     the chroma offsets round deterministically — the oracle recomputes
     the exact per-channel sums from the coefficient arithmetic alone,
     so only a byte-correct Huffman+IDCT+color decode can match. JPEG is
@@ -1156,8 +1158,9 @@ def multimodal_jpeg_pixels(spark, sf_dir):
     leaves only progressive JPEG and MDCT codecs stubbed."""
     import os
 
-    from database_syncer_spark.pipeline.jpeg import synth_jpeg_fixture
-    from database_syncer_spark.pipeline.multimodal import jpeg_pixel_stats
+    from database_syncer_spark.pipeline.jpeg import (
+        decode_jpeg_pixels, synth_jpeg_fixture)
+    from database_syncer_spark.pipeline.multimodal import pixel_stats
 
     def write_one(i, tmp):
         with open(os.path.join(tmp, f"jpg_{i:05d}.jpg"), "wb") as fh:
@@ -1165,8 +1168,9 @@ def multimodal_jpeg_pixels(spark, sf_dir):
 
     d = fixture_cache(sf_dir, "jpgfiles",
                       _per_doc_files(spark, sf_dir, 40, write_one))
-    return jpeg_pixel_stats(
-        _scan_staged(spark, d, "jpg_*", r"jpg_(\d+)\.jpg$"))
+    return pixel_stats(
+        _scan_staged(spark, d, "jpg_*", r"jpg_(\d+)\.jpg$"),
+        decode_jpeg_pixels)
 
 
 def multimodal_track_meta(spark, sf_dir):
@@ -1191,10 +1195,10 @@ def multimodal_media_meta(spark, sf_dir):
     trak boxes) files whose parameters derive arithmetically from
     doc_id, read them back through the binaryFile source, and parse
     (container, duration_ms, sample_rate, n_tracks) from the CONTAINER
-    BYTES in Arrow-batched mapInPandas
-    (pipeline/multimodal.py:parse_media_header — little-endian RIFF
-    chunk scan with odd-size padding, big-endian ISO-BMFF box walk
-    handling mvhd v0/v1 and 64-bit largesize). The oracle recomputes
+    BYTES in one Arrow-batched pass (pipeline/multimodal.py:map_files,
+    parse_media_header — little-endian RIFF chunk scan with odd-size
+    padding, big-endian ISO-BMFF box walk handling mvhd v0/v1 and 64-bit
+    largesize). The oracle recomputes
     every field from the doc_id arithmetic alone, so the Spark side can
     only match by decoding the binary structure correctly — encoder
     (struct-pack in synth_wav/synth_mp4) and decoder (scanner) share no
@@ -1256,7 +1260,8 @@ def multimodal_audio_stats(spark, sf_dir):
     decode_wav_samples): the SAME staged WAV bytes multimodal_media_meta
     reads for metadata are here decoded to their int16 samples —
     fmt/data chunk scan, channel de-interleave, numpy per-channel
-    reduction in Arrow-batched mapInPandas. The oracle recomputes the
+    reduction in one Arrow-batched pass (pipeline/multimodal.py:
+    wav_sample_stats). The oracle recomputes the
     exact channel-0 sum/min/max from the synth byte formula alone
     (sample f's bytes are ((rate + 7·ch) + 26·ch·f + {0,13}) mod 256,
     assembled little-endian signed), so only a byte-correct sample read

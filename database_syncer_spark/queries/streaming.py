@@ -14,6 +14,7 @@ window assignment: start = floor(epoch / slide) * slide.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -52,7 +53,11 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental sync: CDC changes streamed in 5 micro-batches, each
     MERGEd into the backup state. Final state must equal production — the
-    oracle is literally ``SELECT * FROM orders``."""
+    oracle is literally ``SELECT * FROM orders``. State versions live in
+    one fixed per-tag workdir, cleared at the start of each call as in
+    :func:`stream_dedup_rolling`: the temp dir holds one copy however
+    often the key runs, and a prior call's returned frame is invalidated
+    by the next call."""
     from database_syncer_spark.core.diff import snapshot_diff
     from database_syncer_spark.core.snapshots import derive_backup
     from database_syncer_spark.streaming.runner import (
@@ -61,9 +66,11 @@ def stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     prod = load_table(spark, sf_dir, "orders")
     backup = derive_backup(prod, "o_orderkey", "o_totalprice")
     changes = snapshot_diff(prod, backup, ["o_orderkey"])
-    workdir = tempfile.mkdtemp(prefix=f"dss_febm_{sf_dir_tag(sf_dir)}_")
+    workdir = os.path.join(tempfile.gettempdir(),
+                           f"dss_febm_work_{sf_dir_tag(sf_dir)}")
+    shutil.rmtree(workdir, ignore_errors=True)
     # changes are a pure function of the read-only fixture — staged once
-    # per machine; state versions stay in the fresh workdir.
+    # per machine; state versions stay in the workdir.
     src = fixture_cache(sf_dir, "febm_src",
                         lambda tmp: stage_as_stream_source(changes, tmp, 3))
     return incremental_sync_foreachbatch(
@@ -128,8 +135,6 @@ def stream_dedup_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
         (rem == _SROLL_SLICES[2]) | (F.col("doc_id") >= _SROLL_PLANT_OFFSET))]
     src = fixture_cache(sf_dir, "sroll_src",
                         lambda tmp: stage_as_stream_batches(days, tmp))
-
-    import shutil
 
     table = f"dss_sroll_bands_{tag}"
     workdir = os.path.join(tempfile.gettempdir(), f"dss_sroll_work_{tag}")

@@ -7,8 +7,8 @@ throughput when payloads arrive as a binary COLUMN (the production
 shape — payloads live in parquet/lakehouse rows, not millions of tiny
 files). Fixtures are synthesized INSIDE the executors (mapInPandas), so
 the probe has no driver-side loop and no tiny-file I/O; the decode
-stage is exactly the shipped one (pipeline/multimodal.py:_pixel_stats /
-wav_sample_stats internals).
+stage is exactly the shipped one (pipeline/multimodal.py:pixel_stats /
+wav_sample_stats).
 
 Prints one JSON line per format with wall, rows, rows/sec and a
 fixed-work host calibration pair; SCALE.md carries the table.
@@ -95,9 +95,9 @@ def main() -> None:
                     for i in pdf["id"]],
             })
 
+    from database_syncer_spark.pipeline.jpeg import decode_jpeg_pixels
     from database_syncer_spark.pipeline.multimodal import (
-        gif_pixel_stats, jpeg_pixel_stats, png_pixel_stats,
-        wav_sample_stats)
+        decode_gif_pixels, decode_png_pixels, pixel_stats, wav_sample_stats)
 
     def calib() -> list[float]:
         import shutil
@@ -118,9 +118,12 @@ def main() -> None:
         return sorted(leg() for _ in range(2))
 
     jobs = [
-        ("png_pixels", N_IMAGES, gen_png, png_pixel_stats),
-        ("gif_pixels", N_IMAGES, gen_gif, gif_pixel_stats),
-        ("jpeg_pixels", N_IMAGES, gen_jpeg, jpeg_pixel_stats),
+        ("png_pixels", N_IMAGES, gen_png,
+         lambda f: pixel_stats(f, decode_png_pixels)),
+        ("gif_pixels", N_IMAGES, gen_gif,
+         lambda f: pixel_stats(f, decode_gif_pixels)),
+        ("jpeg_pixels", N_IMAGES, gen_jpeg,
+         lambda f: pixel_stats(f, decode_jpeg_pixels)),
         ("wav_samples", N_WAVS, gen_wav, wav_sample_stats),
     ]
     only = set(sys.argv[1:])

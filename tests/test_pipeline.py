@@ -1758,6 +1758,52 @@ def test_container_parsers_quarantine_not_garbage():
         decode_wav_samples(zero_ch)
 
 
+def test_track_meta_u32_track_id_overflow_raises(spark):
+    """A legal u32 tkhd track_ID of 2^31 + 5 does not fit the int
+    track_id column: decode_track_meta must fail naming the column,
+    never return the wrapped value -2147483643."""
+    from database_syncer_spark.pipeline.multimodal import (
+        decode_track_meta, parse_mp4_tracks, synth_mp4)
+
+    data = bytearray(synth_mp4(600, 3000, 1, total_bytes=900))
+    at = data.index(b"tkhd") + 4 + 4 + 8  # version/flags, ctime, mtime
+    data[at:at + 4] = (2**31 + 5).to_bytes(4, "big")
+    assert parse_mp4_tracks(bytes(data))[0][0] == 2**31 + 5
+    files = spark.createDataFrame([(7, bytes(data))],
+                                  "doc_id long, content binary")
+    with pytest.raises(Exception, match="column 'track_id'"):
+        decode_track_meta(files).collect()
+
+
+def test_map_files_empty_result_has_declared_schema(spark):
+    """map_files over zero input rows, and over rows whose decoder
+    emits nothing, returns an empty frame typed exactly as declared."""
+    from pyspark.sql.types import StructType
+
+    from database_syncer_spark.pipeline.multimodal import (
+        IMAGE_DIMS_SCHEMA, map_files)
+
+    files = spark.createDataFrame([(1, b"x"), (2, b"yz")],
+                                  "doc_id long, content binary")
+    for src in (files.where("doc_id < 0"), files):
+        out = map_files(src, "content", IMAGE_DIMS_SCHEMA, lambda data: [])
+        assert out.schema == StructType.fromDDL(IMAGE_DIMS_SCHEMA)
+        assert out.collect() == []
+
+
+def test_frame_sample_independent_of_partitioning(spark):
+    """frame_sample over a frame with more partitions than rows (so
+    some partitions are empty) returns the one-partition result."""
+    from database_syncer_spark.pipeline.multimodal import frame_sample
+
+    rows = [(i, bytes((i * 7 + j) % 256 for j in range(n)))
+            for i, n in enumerate((0, 1, 63, 64, 65, 200, 500))]
+    df = spark.createDataFrame(rows, "doc_id long, payload binary")
+    want = sorted(frame_sample(df.coalesce(1)).collect())
+    assert len(want) == 1 + 1 + 1 + 1 + 2 + 3  # ceil(len/64/3) per doc
+    assert sorted(frame_sample(df.repartition(16)).collect()) == want
+
+
 def test_quality_score_carry_equals_join_back(spark, sf_dir):
     """r12 optimization contract: quality_score(df, carry=('text',))
     must equal the old shape — score a skinny frame, join text back on

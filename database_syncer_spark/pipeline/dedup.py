@@ -18,7 +18,7 @@ Five strategies, each a distributed query shape that survives 100 TB:
 
 The text strategies are built-in expressions — xxhash64 / arrays /
 explode / joins. The embedding path's bucketing and verify are
-Arrow-batched numpy (``mapInArrow``); no strategy runs Python row at a
+Arrow-batched numpy (``map_arrow``); no strategy runs Python row at a
 time.
 """
 
@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from database_syncer_spark.arrow_map import map_arrow
 from database_syncer_spark.pipeline import vector as V
 
 # --- exact -------------------------------------------------------------------
@@ -967,7 +968,7 @@ def _block_pairs(run_end, tile: int):
 
 def _cosine_verify(keys: list[str], dim: int, threshold: float,
                    n_tables: int | None):
-    """``mapInArrow`` body scoring every same-block pair of a partition
+    """``map_arrow`` body scoring every same-block pair of a partition
     sorted by (*keys, vec_id). Emits (vec_a, vec_b, raw cosine) for
     vec_a < vec_b and raw cosine >= threshold - 1e-6; the caller rounds
     and applies the exact threshold in Spark. The cosine is
@@ -978,7 +979,6 @@ def _cosine_verify(keys: list[str], dim: int, threshold: float,
     carried into the next batch, so Arrow batch boundaries never split
     or drop pairs."""
     import numpy as np
-    import pyarrow as pa
 
     tile = _PAIR_TILE  # read on the driver: the kernel ships as a closure
 
@@ -1019,9 +1019,7 @@ def _cosine_verify(keys: list[str], dim: int, threshold: float,
                 cos = V.cosines(x[left], x[right], nrm[left], nrm[right])
             hit = cos >= threshold - 1e-6
             if hit.any():
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids[left[hit]]), pa.array(ids[right[hit]]),
-                     pa.array(cos[hit])], ["vec_a", "vec_b", "cosine"])
+                yield ids[left[hit]], ids[right[hit]], cos[hit]
 
     def gen(batches):
         pending = []  # pieces of the block still open at the last batch
@@ -1113,11 +1111,11 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.5,
         ).repartition(
             _probe_partitions(embeddings, n_planes, n_tables, corpus_n),
             "tbl", "bucket")
+    pairs = map_arrow(rows.sortWithinPartitions(*keys, "vec_id"),
+                      "vec_a long, vec_b long, cosine double",
+                      _cosine_verify(keys, dim, threshold, n_tables))
     return (
-        rows.sortWithinPartitions(*keys, "vec_id")
-        .mapInArrow(_cosine_verify(keys, dim, threshold, n_tables),
-                    "vec_a long, vec_b long, cosine double")
-        .select("vec_a", "vec_b", F.round("cosine", 6).alias("cosine"))
+        pairs.select("vec_a", "vec_b", F.round("cosine", 6).alias("cosine"))
         .where(F.col("cosine") >= threshold)
     )
 

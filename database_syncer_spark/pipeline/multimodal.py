@@ -2,7 +2,7 @@
 
 Pattern for 100-TB multimodal corpora: media payloads are opaque
 ``binary`` columns with typed metadata columns beside them; every decode /
-feature extraction is one Arrow-batched ``mapInArrow`` pass
+feature extraction is one Arrow-batched ``map_arrow`` pass
 (:func:`map_files`) so each Python worker sees a columnar batch of
 payloads (never one row at a time), and partitioning/pruning stay fully
 Spark-native because the payload is just another column.
@@ -21,6 +21,9 @@ from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from database_syncer_spark.arrow_map import map_arrow
 
 DECODED_SCHEMA = "doc_id bigint, n_bytes int, payload_md5 string, header_hex string"
 
@@ -35,19 +38,12 @@ def map_files(files: DataFrame, col: str, schema: str,
               rows: Callable[[bytes], Iterable[tuple]]) -> DataFrame:
     """The one per-file decode pass: ``rows(data)`` turns one file's bytes
     (``files``' binary column ``col``) into its output tuples, in
-    ``schema``'s column order after ``doc_id``. One ``mapInArrow`` pass
-    over (doc_id, ``col``); every output batch is built with the Arrow
-    types of ``schema``, derived once on the driver, so an empty batch
-    is typed like any other and a value that does not fit its column
-    raises a ``ValueError`` naming the column instead of wrapping. A
-    decoder's ``ValueError`` fails the task the same way."""
-    import pyarrow as pa
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
+    ``schema``'s column order after ``doc_id``, through
+    :func:`~database_syncer_spark.arrow_map.map_arrow` over (doc_id,
+    ``col``): an empty result is typed as declared, and a value that
+    does not fit its column raises a ``ValueError`` naming the column.
+    A decoder's ``ValueError`` fails the task the same way."""
     out = StructType.fromDDL(schema)
-    arrow = to_arrow_schema(out)
 
     def decode(batches):
         for b in batches:
@@ -55,18 +51,9 @@ def map_files(files: DataFrame, col: str, schema: str,
                    for doc_id, data in zip(b.column("doc_id").to_pylist(),
                                            b.column(col).to_pylist())
                    for r in rows(data)]
-            cols = list(zip(*got)) if got else [()] * len(arrow)
-            arrays = []
-            for field, values in zip(arrow, cols):
-                try:
-                    arrays.append(pa.array(values, type=field.type))
-                except (pa.ArrowException, OverflowError) as exc:
-                    raise ValueError(
-                        f"column {field.name!r} ({field.type}): {exc}"
-                    ) from exc
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow)
+            yield list(zip(*got)) or [()] * len(out)
 
-    return files.select("doc_id", col).mapInArrow(decode, out)
+    return map_arrow(files.select("doc_id", col), out, decode)
 
 
 def decode_media(payload: bytes) -> dict:
@@ -847,8 +834,9 @@ def wav_sample_stats(binary_files: DataFrame) -> DataFrame:
 
         rate, n, chans = decode_wav_samples(data)
         ch0 = np.frombuffer(chans[0], dtype="<i2")
-        return [(rate, len(chans), n, int(ch0.sum(dtype=np.int64)),
-                 int(ch0.min()), int(ch0.max()))]
+        # an empty data chunk has no min/max: NULL, and a sum of 0
+        lo, hi = (int(ch0.min()), int(ch0.max())) if n else (None, None)
+        return [(rate, len(chans), n, int(ch0.sum(dtype=np.int64)), lo, hi)]
 
     return map_files(binary_files, "content", AUDIO_STATS_SCHEMA, stats)
 

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from database_syncer_spark.arrow_map import map_arrow
 from database_syncer_spark.pipeline import vector as V
 
 
@@ -243,7 +244,6 @@ def _with_pq_codes(df: DataFrame, books: list, m: int, dim: int,
     (:func:`_pq_encode`), via one Arrow-batched numpy pass (same Janino
     rationale as `_with_probe_cells`)."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -253,17 +253,11 @@ def _with_pq_codes(df: DataFrame, books: list, m: int, dim: int,
         + [T.StructField("pq_codes", T.ArrayType(T.IntegerType()))])
 
     def assign(batches):
-        for pdf in batches:
-            if len(pdf):
-                codes = _pq_encode(
-                    np.stack(pdf[emb_col].to_numpy()).astype(np.float64),
-                    bmats, m, dim // m)
-                pdf = pdf.assign(pq_codes=[row for row in codes])
-            else:
-                pdf = pdf.assign(pq_codes=pd.Series([], dtype=object))
-            yield pdf
+        for b in batches:
+            x = V._list_matrix(b.column(emb_col), dim).astype(np.float64)
+            yield b.columns + [_pq_encode(x, bmats, m, dim // m)]
 
-    return df.mapInPandas(assign, out_schema)
+    return map_arrow(df, out_schema, assign)
 
 
 def _topk_cols_deterministic(approx, vids, keep):
@@ -354,31 +348,21 @@ def _adc_scan(coded: DataFrame, qarr, qmat, books: list, m: int, keep: int,
     expressed as a mask because the local fixture is one unpartitioned
     file. Each batch keeps its top ``keep`` rows per query."""
     import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
 
     d_sub = qmat.shape[1] // m
     lut = np.stack([
         qmat[:, s * d_sub:(s + 1) * d_sub]
         @ np.asarray(books[s], dtype=np.float64).T
         for s in range(m)], axis=1)              # Q × m × k_sub
-    out_schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("adc", T.DoubleType()),
-    ])
 
     def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.stack(pdf["pq_codes"].to_numpy())    # B × m
+        for b in batches:
+            codes = V._list_matrix(b.column("pq_codes"), m)    # B × m
             approx = np.round(
                 lut[:, np.arange(m)[None, :], codes].sum(axis=2), 9)
             if probe_ok is not None:
-                approx[~probe_ok[:, pdf["cell"].to_numpy()]] = -np.inf
-            vids = pdf["vec_id"].to_numpy()
+                approx[~probe_ok[:, b.column("cell").to_numpy()]] = -np.inf
+            vids = b.column("vec_id").to_numpy()
             # Mask each query's own vector BEFORE the prune: filtering it
             # afterwards would let it occupy a top-keep slot and silently
             # drop the true keep-th candidate.
@@ -392,20 +376,14 @@ def _adc_scan(coded: DataFrame, qarr, qmat, books: list, m: int, keep: int,
                 # Boundary ties break on vec_id (batch-composition-
                 # independent), not argpartition order.
                 idx = _topk_cols_deterministic(approx, vids, keep)
-                yield pd.DataFrame({
-                    "query_id": np.repeat(qarr, keep),
-                    "vec_id": vids[idx].reshape(-1),
-                    "adc": np.take_along_axis(approx, idx, axis=1).reshape(-1),
-                })
+                yield (np.repeat(qarr, keep), vids[idx].reshape(-1),
+                       np.take_along_axis(approx, idx, axis=1).reshape(-1))
             else:
-                yield pd.DataFrame({
-                    "query_id": np.repeat(qarr, nb),
-                    "vec_id": np.tile(vids, nq),
-                    "adc": approx.reshape(-1),
-                })
+                yield (np.repeat(qarr, nb), np.tile(vids, nq),
+                       approx.reshape(-1))
 
     # -inf marks the query's own vector and unprobed cells
-    return (coded.mapInPandas(score, out_schema)
+    return (map_arrow(coded, "query_id long, vec_id long, adc double", score)
             .where(F.col("adc") != F.lit(float("-inf"))))
 
 
@@ -486,41 +464,24 @@ def _with_cell_and_codes(df: DataFrame, centroids: list[list[float]],
     (:func:`_nearest_cells`, :func:`_pq_encode`), so assignments are
     bit-equal to the chained form."""
     import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
 
     cmat = np.asarray(centroids, dtype=np.float64).T   # dim × C
     bmats = [np.asarray(b, dtype=np.float64) for b in books]
-    out_schema = T.StructType([
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("cell", T.IntegerType()),
-        T.StructField("pq_codes", T.ArrayType(T.IntegerType())),
-    ])
 
     def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {"vec_id": pd.Series([], dtype="int64"),
-                     "cell": pd.Series([], dtype="int32"),
-                     "pq_codes": pd.Series([], dtype=object)})
-                continue
-            mtx = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy(),
-                "cell": _nearest_cells(mtx, cmat, 1)[:, 0].astype("int32"),
-                "pq_codes": [row for row in
-                             _pq_encode(mtx, bmats, m, dim // m)],
-            })
+        for b in batches:
+            x = V._list_matrix(b.column("embedding"), dim).astype(np.float64)
+            yield (b.column("vec_id"), _nearest_cells(x, cmat, 1)[:, 0],
+                   _pq_encode(x, bmats, m, dim // m))
 
-    return df.mapInPandas(assign, out_schema)
+    return map_arrow(df, "vec_id long, cell int, pq_codes array<int>",
+                     assign)
 
 
 def _with_probe_cells(df: DataFrame, centroids: list[list[float]],
                       n_probe: int, emb_col: str = "embedding") -> DataFrame:
     """Append ``probe_cells``: the n_probe nearest centroid ids per row,
-    nearest first, via an Arrow-batched numpy matmul (mapInPandas).
+    nearest first, via an Arrow-batched numpy matmul (``map_arrow``).
 
     Cosine argmax == dot-product argmax because the centroids are
     L2-normalized at build time (the row's own norm is a positive
@@ -535,7 +496,6 @@ def _with_probe_cells(df: DataFrame, centroids: list[list[float]],
     actually is; Arrow moves it in columnar batches, no shuffle, scales
     as one map pass at any corpus size."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -546,17 +506,11 @@ def _with_probe_cells(df: DataFrame, centroids: list[list[float]],
         + [T.StructField("probe_cells", T.ArrayType(T.IntegerType()))])
 
     def assign(batches):
-        for pdf in batches:
-            if len(pdf):
-                m = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
-                order = _nearest_cells(m, cmat, n_probe)
-                pdf = pdf.assign(
-                    probe_cells=[row.astype("int32") for row in order])
-            else:
-                pdf = pdf.assign(probe_cells=pd.Series([], dtype=object))
-            yield pdf
+        for b in batches:
+            x = V._list_matrix(b.column(emb_col), len(cmat)).astype(np.float64)
+            yield b.columns + [_nearest_cells(x, cmat, n_probe)]
 
-    return df.mapInPandas(assign, out_schema)
+    return map_arrow(df, out_schema, assign)
 
 
 def _nearest_cells(x, cmat, n: int):

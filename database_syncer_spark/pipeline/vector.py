@@ -1,8 +1,9 @@
 """The package's one vector arithmetic: Arrow kernels on :func:`tree_sum`.
 
 Every dot product, norm, cosine and hyperplane projection over an
-``array<float>`` embedding column is float64 numpy inside a
-``mapInArrow`` kernel, summed by :func:`tree_sum`:
+``array<float>`` embedding column is float64 numpy inside a kernel run
+by :func:`~database_syncer_spark.arrow_map.map_arrow`, summed by
+:func:`tree_sum`:
 
 - :func:`cosine` appends the raw cosine of two vector columns to any
   pair frame (brute force, the LSH/IVF/PQ re-ranks, incremental dedup);
@@ -30,11 +31,13 @@ pairwise-balanced tree over the vector axis, the same for every row
 whatever the Arrow batch size, so results are partition-independent and
 ``tests/ann_reference.py`` replays them in plain numpy.
 
-Inputs. A kernel views a column as one n×dim matrix
-(:func:`_list_matrix`): a NULL row, a NULL element or a row of any other
-length raises ``ValueError``, never a silently truncated or shifted
-vector. Work runs in row tiles of at most :data:`_TILE_FLOATS` values
-per operand, so the working set stays bounded at any width.
+Inputs. These kernels and ``similarity``'s IVF/PQ kernels
+(``_with_probe_cells``, ``_with_pq_codes``, ``_with_cell_and_codes``,
+``_adc_scan``) view a column as one n×dim matrix (:func:`_list_matrix`):
+a NULL row, a NULL element or a row of any other length raises
+``ValueError``, never a silently truncated or shifted vector. Work
+runs in row tiles of at most :data:`_TILE_FLOATS` values per operand,
+so the working set stays bounded at any width.
 """
 
 from __future__ import annotations
@@ -44,6 +47,8 @@ import struct
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from database_syncer_spark.arrow_map import map_arrow
 
 #: float64 values per operand matrix in one kernel step (8 MB): a tile
 #: is max(1, _TILE_FLOATS // width) rows, so memory is bounded at any dim.
@@ -115,12 +120,10 @@ def _map_rows(frame: DataFrame, vectors: list[str], drop: list[str],
     fn(*matrices), one matrix per column of ``vectors``; every other
     column passes through unchanged."""
     import numpy as np
-    import pyarrow as pa
 
     from pyspark.sql import types as T
 
     rest = [f for f in frame.schema.fields if f.name not in drop]
-    names = [f.name for f in rest] + [name]
     schema = T.StructType(rest + [T.StructField(name, T.DoubleType())])
 
     def gen(batches):
@@ -128,11 +131,9 @@ def _map_rows(frame: DataFrame, vectors: list[str], drop: list[str],
             for t in _row_tiles(b, dim * len(vectors)):
                 xs = [_list_matrix(t.column(c), dim).astype(np.float64)
                       for c in vectors]
-                yield pa.RecordBatch.from_arrays(
-                    [t.column(c) for c in names[:-1]] + [pa.array(fn(*xs))],
-                    names)
+                yield [t.column(f.name) for f in rest] + [fn(*xs)]
 
-    return frame.mapInArrow(gen, schema)
+    return map_arrow(frame, schema, gen)
 
 
 def _checked_cosines(x, y):
@@ -179,11 +180,10 @@ def _lsh_bucket_vectors(embeddings: DataFrame, n_planes: int, n_tables: int,
     table's bucket id in ONE row per vector, the embedding carried
     through. Bucket t holds table t's n_planes sign bits (plane p sets
     bit p when the projection is > 0) against :func:`_hyperplanes`. One
-    ``mapInArrow`` pass projects each row tile onto all n_tables·n_planes
+    ``map_arrow`` pass projects each row tile onto all n_tables·n_planes
     planes at once through :func:`tree_sum`, so a bucket id depends only
     on its own row (partition-count-independent)."""
     import numpy as np
-    import pyarrow as pa
 
     planes = np.array(
         [row for t in range(n_tables)
@@ -197,17 +197,11 @@ def _lsh_bucket_vectors(embeddings: DataFrame, n_planes: int, n_tables: int,
                 X = _list_matrix(b.column("embedding"), dim).astype(np.float64)
                 bits = tree_sum(X[:, None, :] * planes[None, :, :]) > 0
                 buckets = bits.reshape(n, n_tables, n_planes) @ weights
-                yield pa.RecordBatch.from_arrays(
-                    [b.column("vec_id"),
-                     pa.ListArray.from_arrays(
-                         pa.array(np.arange(0, n * n_tables + 1, n_tables,
-                                            dtype=np.int32)),
-                         pa.array(buckets.ravel())),
-                     b.column("embedding")],
-                    ["vec_id", "buckets", "embedding"])
+                yield [b.column("vec_id"), buckets, b.column("embedding")]
 
-    return embeddings.select("vec_id", "embedding").mapInArrow(
-        gen, "vec_id long, buckets array<long>, embedding array<float>")
+    return map_arrow(
+        embeddings.select("vec_id", "embedding"),
+        "vec_id long, buckets array<long>, embedding array<float>", gen)
 
 
 def _lsh_band_rows(bucketed: DataFrame) -> DataFrame:

@@ -1277,7 +1277,7 @@ def multimodal_audio_stats(spark, sf_dir):
 
 def udf_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-vectorized pandas UDF tokenizer (the dump tokenizer's B10
-    generalization, cf. sources/dump.py which uses mapInPandas)."""
+    generalization, cf. sources/dump.py which uses arrow_map.map_arrow)."""
     @F.pandas_udf("int")
     def n_tokens(s: pd.Series) -> pd.Series:
         return s.str.split(" ").str.len().astype("int32")

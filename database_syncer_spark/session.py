@@ -11,7 +11,7 @@ is correct on a real cluster:
   so code never depends on the exact value.
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle (DuckDB timestamps are UTC-naive).
-- Arrow enabled: every pandas_udf / applyInPandas / mapInPandas transfer is
+- Arrow enabled: every pandas_udf / applyInPandas / map_arrow transfer is
   Arrow-batched, never row-at-a-time pickle.
 - Codegen class cache sized to the working set: Spark keeps each
   Janino-compiled generated class in a JVM-wide cache whose default of 100

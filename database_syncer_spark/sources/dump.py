@@ -14,7 +14,7 @@ inside quoted strings (SURVEY §1.2 [verified]). This rebuild:
   single-column keys);
 - tokenizes INSERT rows with a real quote-aware scanner (handles ``''``
   and backslash escapes, parens/commas/semicolons inside strings) inside
-  ``mapInPandas`` — Arrow-batched, one Python pass, no row-at-a-time UDF.
+  ``map_arrow`` — Arrow-batched, one Python pass, no row-at-a-time UDF.
   This is the only row parse: a Catalyst-only tokenizer measured ~2×
   slower (7.5 s vs 3.3 s per side on a 3M-row dump, local[32]; SCALE.md);
 - casts raw SQL literals to typed columns JVM-side.
@@ -37,6 +37,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from database_syncer_spark.arrow_map import map_arrow
 from database_syncer_spark.core.sqlexpr import quote_ident, sql_string
 
 __all__ = [
@@ -723,7 +724,7 @@ def read_dump_statements(spark: SparkSession, path: str,
 
 
 def _parse_insert_batches(schemas: dict[str, TableSchema]):
-    """mapInPandas worker: statements -> (table, vals, seq_hi, seq_lo) rows.
+    """``map_arrow`` body: statements -> (table, vals, seq_hi, seq_lo) rows.
 
     ``(seq_hi, seq_lo)`` extends the statement-order key from
     ``read_dump_statements`` down to individual rows (statement position
@@ -736,15 +737,14 @@ def _parse_insert_batches(schemas: dict[str, TableSchema]):
     Sharded reads compose the shard index into ``seq_hi``, so last-wins
     is file order across shards too.
     """
-    import pandas as pd
-
     def run(batches):
-        for pdf in batches:
+        for b in batches:
             tables: list[str] = []
             values: list[list[str | None]] = []
             his: list[int] = []
             los: list[int] = []
-            for stmt, hi, lo in zip(pdf["stmt"], pdf["seq_hi"], pdf["seq_lo"]):
+            d = b.to_pydict()
+            for stmt, hi, lo in zip(d["stmt"], d["seq_hi"], d["seq_lo"]):
                 m = _INSERT_RE.match(stmt)
                 if not m:
                     continue
@@ -774,7 +774,7 @@ def _parse_insert_batches(schemas: dict[str, TableSchema]):
                         pos = {c: i for i, c in enumerate(listed)}
                         remap = [pos.get(c) for c in cols_l]
                     n_expect = len(listed)
-                base = int(lo) << 30
+                base = lo << 30
                 for row_idx, row in enumerate(tokenize_insert_rows(m.group(3))):
                     if len(row) == n_expect:
                         if remap is not None:
@@ -782,16 +782,9 @@ def _parse_insert_batches(schemas: dict[str, TableSchema]):
                                    for i in remap]
                         tables.append(table)
                         values.append(row)
-                        his.append(int(hi))
+                        his.append(hi)
                         los.append(base + row_idx)
-            # Explicit dtypes: an all-filtered batch would otherwise make
-            # empty float64 columns that Arrow can't cast to list<string>.
-            yield pd.DataFrame({
-                "table": pd.Series(tables, dtype=object),
-                "vals": pd.Series(values, dtype=object),
-                "seq_hi": pd.Series(his, dtype="int64"),
-                "seq_lo": pd.Series(los, dtype="int64"),
-            })
+            yield tables, values, his, los
 
     return run
 
@@ -804,7 +797,7 @@ def read_sql_dump(spark: SparkSession, path: str, typed: bool = True,
 
     The reference's parse_sql_dump (sync.py:29-72), distributed: DDL is
     parsed on the driver (tiny), DML rows are tokenized in parallel Arrow
-    batches (``mapInPandas``) and cast to the DDL-derived schema.
+    batches (``map_arrow``) and cast to the DDL-derived schema.
     ``typed=False`` keeps every value as its raw string (the reference's
     string-typed semantics, SURVEY §1.2) for bit-faithful parity.
     ``dedup_pk`` resolves duplicate PKs last-wins in file order
@@ -935,10 +928,9 @@ def _read_dump_body(spark, stmts, cache_statements, tables, ignore_missing,
         names = "|".join(re.escape(n) for n in sorted(schemas))
         inserts = inserts.where(F.col("stmt").rlike(
             rf"(?is)^INSERT\s+INTO\s+[`\"]?({names})[`\"]?\s*[(\sV]"))
-    parsed = inserts.mapInPandas(
-        _parse_insert_batches(schemas),
-        "table string, vals array<string>, seq_hi long, seq_lo long",
-    )
+    parsed = map_arrow(
+        inserts, "table string, vals array<string>, seq_hi long, seq_lo long",
+        _parse_insert_batches(schemas))
     # One pass over the parsed rows serves every table; per-table filter +
     # positional cast is pure Catalyst from here. With several tables the
     # per-table frames are independent consumers of the same parse
@@ -994,7 +986,7 @@ def write_sql_dump(df: DataFrame, table: str, pk_cols: list[str], path: str,
 
     Value tuples are rendered by the same JVM-side literal expressions as
     the sync-script sink; rows are batched into multi-row INSERT
-    statements inside ``mapInPandas`` (per partition, no shuffle) and
+    statements inside ``map_arrow`` (per partition, no shuffle) and
     written by the sync-script file writer (``write_script``: executor
     text parts streamed into one file with O(1) driver memory, published
     atomically). Statement order across partitions is arbitrary — fine
@@ -1015,20 +1007,18 @@ def write_sql_dump(df: DataFrame, table: str, pk_cols: list[str], path: str,
     head = f"INSERT INTO `{table}` ({col_list}) VALUES\n"
 
     def to_statements(batches):
-        import pandas as pd
-
         buf: list[str] = []
-        for pdf in batches:
+        for b in batches:
             out: list[str] = []
-            for r in pdf["r"]:
+            for r in b.column("r").to_pylist():
                 buf.append(f"({r})")
                 if len(buf) == rows_per_insert:
                     out.append(head + ",\n".join(buf) + ";")
                     buf = []
             if out:
-                yield pd.DataFrame({"statement": out})
+                yield [out]
         if buf:
-            yield pd.DataFrame({"statement": [head + ",\n".join(buf) + ";"]})
+            yield [[head + ",\n".join(buf) + ";"]]
 
     col_defs = []
     for f in df.schema.fields:
@@ -1046,7 +1036,7 @@ def write_sql_dump(df: DataFrame, table: str, pk_cols: list[str], path: str,
         ") ENGINE=InnoDB DEFAULT CHARSET=utf8mb4;",
         "",
     ])
-    write_script(rendered.mapInPandas(to_statements, "statement string"),
+    write_script(map_arrow(rendered, "statement string", to_statements),
                  path, header=header)
 
 

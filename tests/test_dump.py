@@ -693,19 +693,22 @@ def test_row_order_key_past_a_million_rows_per_statement():
     the long one (a ``lo * 1e6 + row`` key would put the long
     statement's late rows after the next statement's). Pure Python."""
     import pandas as pd
+    import pyarrow as pa
 
     from database_syncer_spark.sources.dump import (
         _parse_insert_batches, parse_create_table)
 
     schema = parse_create_table("CREATE TABLE t (a int, PRIMARY KEY (a))")
     n = 1_000_002
-    batch = pd.DataFrame({
+    batch = pa.RecordBatch.from_pydict({
         "stmt": ["INSERT INTO t VALUES " + ",".join(["(1)"] * n),
                  "INSERT INTO t VALUES (1)"],
         "seq_hi": [0, 0],
         "seq_lo": [0, 1],
     })
-    out = pd.concat(_parse_insert_batches({"t": schema})(iter([batch])))
+    out = pd.concat(
+        pd.DataFrame(dict(zip(["table", "vals", "seq_hi", "seq_lo"], cols)))
+        for cols in _parse_insert_batches({"t": schema})(iter([batch])))
     assert len(out) == n + 1
     assert out["seq_lo"].is_unique
     assert out["seq_lo"].iloc[-1] == out["seq_lo"].max()

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,7 +13,10 @@ from database_syncer_spark.pipeline.dedup import (
     simhash_dedup,
 )
 from database_syncer_spark.pipeline.multimodal import multimodal_join
-from database_syncer_spark.pipeline.similarity import brute_force_topk, lsh_ann_topk
+from database_syncer_spark.pipeline.similarity import (
+    _adc_scan, _with_cell_and_codes, _with_pq_codes, _with_probe_cells,
+    brute_force_topk, lsh_ann_topk,
+)
 from database_syncer_spark.pipeline.text import classify_lang, train_lang_profiles
 
 
@@ -1130,6 +1134,12 @@ def _bad_row_frames(spark, bad: str):
     return docs, emb
 
 
+#: fixed dim-8 IVF/PQ model state (4 centroids; 8 one-dim subspaces of
+#: 3 sub-centroids each), so the IVF/PQ kernels run without a training
+#: collect that would read the bad row first
+_CENTS = [[float(i == j) for j in range(8)] for i in range(4)]
+_BOOKS = [[[-1.0], [0.0], [1.0]]] * 8
+
 _VECTOR_PATHS = {
     "brute_force_topk": lambda docs, e: brute_force_topk(e, 5, 5, 8),
     "lsh_ann_topk": lambda docs, e: lsh_ann_topk(e, 5, 5, dim=8),
@@ -1137,6 +1147,14 @@ _VECTOR_PATHS = {
         lambda docs, e: embedding_incremental_near_dup(
             e.where("vec_id % 2 = 1"), e.where("vec_id % 2 = 0"), dim=8),
     "multimodal_join": lambda docs, e: multimodal_join(docs, e, dim=8),
+    "_with_probe_cells": lambda docs, e: _with_probe_cells(e, _CENTS, 2),
+    "_with_pq_codes": lambda docs, e: _with_pq_codes(e, _BOOKS, 8, 8),
+    "_with_cell_and_codes":
+        lambda docs, e: _with_cell_and_codes(e, _CENTS, _BOOKS, 8, 8),
+    # the scanned vectors are the 8 PQ codes, NULL or 9 wide like the row
+    "_adc_scan": lambda docs, e: _adc_scan(
+        e.selectExpr("vec_id", "transform(embedding, x -> 0) AS pq_codes"),
+        np.arange(2), np.eye(8)[:2], _BOOKS, 8, 5, None),
 }
 
 
@@ -1775,20 +1793,84 @@ def test_track_meta_u32_track_id_overflow_raises(spark):
         decode_track_meta(files).collect()
 
 
-def test_map_files_empty_result_has_declared_schema(spark):
+def _empty_map_files(spark, tmp_path):
     """map_files over zero input rows, and over rows whose decoder
-    emits nothing, returns an empty frame typed exactly as declared."""
-    from pyspark.sql.types import StructType
-
+    emits nothing."""
     from database_syncer_spark.pipeline.multimodal import (
         IMAGE_DIMS_SCHEMA, map_files)
 
     files = spark.createDataFrame([(1, b"x"), (2, b"yz")],
                                   "doc_id long, content binary")
-    for src in (files.where("doc_id < 0"), files):
-        out = map_files(src, "content", IMAGE_DIMS_SCHEMA, lambda data: [])
-        assert out.schema == StructType.fromDDL(IMAGE_DIMS_SCHEMA)
+    return [(map_files(src, "content", IMAGE_DIMS_SCHEMA, lambda data: []),
+             IMAGE_DIMS_SCHEMA) for src in (files.where("doc_id < 0"), files)]
+
+
+def _empty_dump_parse(spark, tmp_path):
+    """The dump tokenizer over a batch whose only INSERT fails the
+    arity check."""
+    from database_syncer_spark.arrow_map import map_arrow
+    from database_syncer_spark.sources.dump import (
+        _parse_insert_batches, parse_create_table)
+
+    schema = "table string, vals array<string>, seq_hi long, seq_lo long"
+    ts = parse_create_table("CREATE TABLE t (a text, b text, PRIMARY KEY (a))")
+    stmts = spark.createDataFrame(
+        [("INSERT INTO t VALUES ('only', 'two', 'three')", 0, 0)],
+        "stmt string, seq_hi long, seq_lo long")
+    return [(map_arrow(stmts, schema, _parse_insert_batches({"t": ts})),
+             schema)]
+
+
+def _empty_sql_dump(spark, tmp_path):
+    """write_sql_dump of an empty frame, read back."""
+    from database_syncer_spark.sources.dump import read_sql_dump, write_sql_dump
+
+    path = str(tmp_path / "empty.sql")
+    write_sql_dump(spark.createDataFrame([], "a int, b string"), "t", ["a"],
+                   path)
+    assert "INSERT" not in open(path).read()
+    return [(read_sql_dump(spark, path)["t"], "a int, b string")]
+
+
+@pytest.mark.parametrize("case", [_empty_map_files, _empty_dump_parse,
+                                  _empty_sql_dump],
+                         ids=["map_files", "dump_parse", "write_sql_dump"])
+def test_map_files_empty_result_has_declared_schema(spark, tmp_path, case):
+    """A map_arrow kernel that emits no row returns an empty frame typed
+    exactly as declared."""
+    from pyspark.sql.types import StructType
+
+    for out, schema in case(spark, tmp_path):
+        assert out.schema == StructType.fromDDL(schema)
         assert out.collect() == []
+
+
+def test_package_python_crossings_go_through_map_arrow():
+    """Every Python map over a frame's rows goes through
+    arrow_map.map_arrow: ``.mapInArrow(`` appears once in the package,
+    in the helper, and ``.mapInPandas(`` nowhere."""
+    import pathlib
+
+    import database_syncer_spark
+
+    root = pathlib.Path(database_syncer_spark.__file__).parent
+    hits = {call: [p.relative_to(root).as_posix()
+                   for p in sorted(root.rglob("*.py"))
+                   for line in p.read_text().splitlines() if call in line]
+            for call in (".mapInArrow(", ".mapInPandas(")}
+    assert hits == {".mapInArrow(": ["arrow_map.py"], ".mapInPandas(": []}
+
+
+def test_wav_sample_stats_empty_data_chunk(spark):
+    """A valid 16-bit WAV with an empty data chunk has a channel-0 sum
+    of 0 and no min/max: NULL, not a failed task."""
+    from database_syncer_spark.pipeline.multimodal import (
+        synth_wav, wav_sample_stats)
+
+    files = spark.createDataFrame([(3, synth_wav(8000, 1, 0))],
+                                  "doc_id long, content binary")
+    assert [tuple(r) for r in wav_sample_stats(files).collect()] == [
+        (3, 8000, 1, 0, 0, None, None)]
 
 
 def test_frame_sample_independent_of_partitioning(spark):

@@ -128,10 +128,3 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def load_tables(spark: SparkSession, sf_dir: str,
                 names: tuple[str, ...] = TABLE_NAMES) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str,
-                   names: tuple[str, ...] = TABLE_NAMES) -> None:
-    """Register fixture tables as temp views for the SQL API."""
-    for name, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(name)

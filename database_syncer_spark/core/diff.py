@@ -36,7 +36,7 @@ INSERT, UPDATE, DELETE = "INSERT", "UPDATE", "DELETE"
 
 def _classify_outer_join(
     prod: DataFrame, backup: DataFrame, pk_cols: list[str],
-    compare_cols: list[str],
+    value_cols: list[str],
 ) -> tuple[DataFrame, Column, list[Column]]:
     """Full-outer join of the two snapshots on PK, classified.
 
@@ -51,9 +51,9 @@ def _classify_outer_join(
     correctly rather than falling through as UPDATEs.
     """
     p = prod.select(
-        *pk_cols, *compare_cols, F.lit(True).alias("__pp")).alias("p")
+        *pk_cols, *value_cols, F.lit(True).alias("__pp")).alias("p")
     b = backup.select(
-        *pk_cols, *compare_cols, F.lit(True).alias("__bp")).alias("b")
+        *pk_cols, *value_cols, F.lit(True).alias("__bp")).alias("b")
 
     # Plain-equality join keys (not eqNullSafe): SQL MERGE/diff semantics
     # use `=` (so does the DuckDB oracle), and — decisive at scale — a
@@ -69,7 +69,7 @@ def _classify_outer_join(
     in_prod = F.col("p.__pp").isNotNull()
     in_backup = F.col("b.__bp").isNotNull()
     same = F.lit(True)
-    for c in compare_cols:
+    for c in value_cols:
         same = same & F.col(f"p.{c}").eqNullSafe(F.col(f"b.{c}"))
     change = (
         F.when(in_prod & ~in_backup, F.lit(INSERT))
@@ -85,7 +85,6 @@ def snapshot_diff(
     prod: DataFrame,
     backup: DataFrame,
     pk_cols: list[str],
-    compare_cols: list[str] | None = None,
 ) -> DataFrame:
     """Classify row-level changes that turn ``backup`` into ``prod``.
 
@@ -94,25 +93,24 @@ def snapshot_diff(
     pre-image for DELETE (the reference emits the backup record's PK for
     DELETE, sync.py:199-215, and production values for INSERT/UPDATE,
     sync.py:175-197 / :388-395). One full-outer join on PK; NULL-PK
-    rows follow the contract in ``_classify_outer_join``. Duplicate PKs
-    are not resolved here: ``snapshot_diff_fused`` fuses last-wins dedup
-    of both sides into the diff.
+    rows follow the contract in ``_classify_outer_join``. Every non-PK
+    column is compared. Duplicate PKs are not resolved here:
+    ``snapshot_diff_fused`` fuses last-wins dedup of both sides into the
+    diff.
     """
-    if compare_cols is None:
-        compare_cols = [c for c in prod.columns if c not in pk_cols]
+    value_cols = [c for c in prod.columns if c not in pk_cols]
     rows, change, pk_out = _classify_outer_join(
-        prod, backup, pk_cols, compare_cols)
+        prod, backup, pk_cols, value_cols)
     return rows.select(
         *pk_out, change.alias(CHANGE_TYPE),
         *[F.when(change == DELETE, F.col(f"b.{c}"))
-          .otherwise(F.col(f"p.{c}")).alias(c) for c in compare_cols])
+          .otherwise(F.col(f"p.{c}")).alias(c) for c in value_cols])
 
 
 def snapshot_diff_fused(
     prod: DataFrame,
     backup: DataFrame,
     pk_cols: list[str],
-    compare_cols: list[str] | None = None,
     order_cols: list[str] = ("__seq_hi", "__seq_lo"),
 ) -> DataFrame:
     """``snapshot_diff`` + last-wins dedup of BOTH sides in ONE shuffle.
@@ -149,11 +147,8 @@ def snapshot_diff_fused(
     column name works.
     """
     order_cols = list(order_cols)
-    if compare_cols is None:
-        compare_cols = [
-            c for c in prod.columns
-            if c not in pk_cols and c not in order_cols
-        ]
+    value_cols = [c for c in prod.columns
+                  if c not in pk_cols and c not in order_cols]
     keys = [f"__k{i}" for i in range(len(pk_cols))]
     any_null = " OR ".join(f"{quote_ident(c)} IS NULL" for c in pk_cols)
 
@@ -172,7 +167,7 @@ def snapshot_diff_fused(
             f"CASE WHEN {any_null or 'false'} THEN "
             f"monotonically_increasing_id() * 2 + {2 if is_prod else 1} "
             f"ELSE 0 END AS __nullsalt",
-            f"{named_struct(compare_cols)} AS __vals",
+            f"{named_struct(value_cols)} AS __vals",
             f"{named_struct(order_cols)} AS __ord",
             f"{'true' if is_prod else 'false'} AS __is_p",
         )
@@ -186,7 +181,7 @@ def snapshot_diff_fused(
     )
     same = " AND ".join(
         ["true"] + [f"__p.{quote_ident(c)} <=> __b.{quote_ident(c)}"
-                    for c in compare_cols])
+                    for c in value_cols])
     change = (f"CASE WHEN __p IS NOT NULL AND __b IS NULL THEN '{INSERT}' "
               f"WHEN __p IS NULL AND __b IS NOT NULL THEN '{DELETE}' "
               f"WHEN NOT ({same}) THEN '{UPDATE}' END")
@@ -199,7 +194,7 @@ def snapshot_diff_fused(
             ct,
             *[f"CASE WHEN {ct} = '{DELETE}' THEN __b.{quote_ident(c)} "
               f"ELSE __p.{quote_ident(c)} END AS {quote_ident(c)}"
-              for c in compare_cols])
+              for c in value_cols])
     )
 
 
@@ -207,7 +202,6 @@ def scd2_history(
     prod: DataFrame,
     backup: DataFrame,
     pk_cols: list[str],
-    compare_cols: list[str] | None = None,
     snapshot_ts: str = "2026-01-01 00:00:00",
 ) -> DataFrame:
     """Slowly-Changing-Dimension Type-2 projection of the snapshot diff.
@@ -228,18 +222,18 @@ def scd2_history(
     pass, no window. ``snapshot_ts`` is a caller-supplied literal so the
     output is deterministic and oracle-checkable. ``valid_from`` of a
     pre-image row is NULL (its open date lives in the previous history
-    increment, not in this snapshot pair).
+    increment, not in this snapshot pair). Every non-PK column is
+    versioned.
     """
-    if compare_cols is None:
-        compare_cols = [c for c in prod.columns if c not in pk_cols]
+    value_cols = [c for c in prod.columns if c not in pk_cols]
     rows, change, pk_out = _classify_outer_join(
-        prod, backup, pk_cols, compare_cols)
+        prod, backup, pk_cols, value_cols)
     snap = F.lit(snapshot_ts).cast("timestamp_ntz")
     null_ts = F.lit(None).cast("timestamp_ntz")
 
     def image(side: str, is_current: bool):
         return F.struct(
-            *[F.col(f"{side}.{c}").alias(c) for c in compare_cols],
+            *[F.col(f"{side}.{c}").alias(c) for c in value_cols],
             F.lit(is_current).alias("is_current"),
             (snap if is_current else null_ts).alias("valid_from"),
             (null_ts if is_current else snap).alias("valid_to"),
@@ -283,8 +277,7 @@ def diff_stats(changes: DataFrame) -> DataFrame:
     return changes.groupBy(CHANGE_TYPE).agg(F.count("*").alias("n"))
 
 
-def compact_cdc_log(log: DataFrame, pk_cols: list[str],
-                    seq_col: str = "seq") -> DataFrame:
+def compact_cdc_log(log: DataFrame, pk_cols: list[str]) -> DataFrame:
     """Net consecutive CDC batches into at most ONE change per PK —
     Debezium/Kafka-log-compaction semantics, the step a consumer runs
     before MERGEing a multi-batch backlog (applying a compacted log is
@@ -300,8 +293,9 @@ def compact_cdc_log(log: DataFrame, pk_cols: list[str],
     else                  UPDATE with the last image
     =========  =========  =========
 
-    Single-change keys pass through unchanged. ``log`` must hold at most
-    one change per (non-null pk, seq) — the invariant snapshot-diff
+    Single-change keys pass through unchanged. ``log`` orders its
+    changes by its ``seq`` column and must hold at most one change per
+    (non-null pk, seq) — the invariant snapshot-diff
     batches satisfy by construction. NULL-PK changes BYPASS compaction
     and pass through verbatim: a NULL key identifies nothing, so two
     NULL-PK changes are distinct rows about distinct entities, never a
@@ -319,7 +313,7 @@ def compact_cdc_log(log: DataFrame, pk_cols: list[str],
     O(changes), never O(table); arg-min/max by seq are partial-aggregable
     so the map side combines before the shuffle."""
     value_cols = [c for c in log.columns
-                  if c not in (*pk_cols, CHANGE_TYPE, seq_col)]
+                  if c not in (*pk_cols, CHANGE_TYPE, "seq")]
     some_null = F.lit(False)  # empty pk_cols degrades to a global group
     for c in pk_cols:
         some_null = some_null | F.col(c).isNull()
@@ -331,10 +325,10 @@ def compact_cdc_log(log: DataFrame, pk_cols: list[str],
         F.when(some_null, F.monotonically_increasing_id()).otherwise(
             F.lit(-1)))
     g = log.groupBy(*pk_cols, "__nkey").agg(
-        F.min_by(CHANGE_TYPE, seq_col).alias("__first_t"),
-        F.max_by(CHANGE_TYPE, seq_col).alias("__last_t"),
+        F.min_by(CHANGE_TYPE, "seq").alias("__first_t"),
+        F.max_by(CHANGE_TYPE, "seq").alias("__last_t"),
         F.count(F.lit(1)).alias("__n"),
-        *[F.max_by(c, seq_col).alias(c) for c in value_cols],
+        *[F.max_by(c, "seq").alias(c) for c in value_cols],
     )
     first_t, last_t = F.col("__first_t"), F.col("__last_t")
     net = (

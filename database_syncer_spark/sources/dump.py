@@ -22,10 +22,14 @@ inside quoted strings (SURVEY §1.2 [verified]). This rebuild:
 Known format assumptions (same family as mysqldump defaults): statements
 end with ``;`` at end of line. A literal ``;\\n`` inside a quoted value
 (never emitted by conforming mysqldump, which escapes ``\\n``) is
-detected by a codegen quote-parity check and either fails loudly
-(default) or is repaired distributedly — see ``read_dump_statements``'s
-``on_split_string``; the reference's whole-file regex silently
-mis-parses the analogous ``);`` case.
+detected by a codegen unterminated-string check and fails loudly, naming
+the dump — see ``read_dump_statements``; the reference's whole-file
+regex silently mis-parses the analogous ``);`` case.
+
+Every reader runs one configuration: values cast to the DDL types, and
+duplicate PKs resolved last-wins in file order — in the reader, or
+inside the diff's shuffle when the caller keeps the file-order key
+(``keep_seq``, ``snapshot_diff_fused``).
 """
 
 from __future__ import annotations
@@ -132,8 +136,8 @@ def _matching_paren_body(stmt: str) -> str:
     return stmt[start + 1:]
 
 
-def _split_top_level(body: str, sep: str = ",") -> list[str]:
-    """Split on ``sep`` at paren depth 0, honoring quotes."""
+def _split_top_level(body: str) -> list[str]:
+    """Split on ``,`` at paren depth 0, honoring quotes."""
     parts, buf, depth, in_q = [], [], 0, None
     for ch in body:
         if in_q:
@@ -150,7 +154,7 @@ def _split_top_level(body: str, sep: str = ",") -> list[str]:
         elif ch == ")":
             depth -= 1
             buf.append(ch)
-        elif ch == sep and depth == 0:
+        elif ch == "," and depth == 0:
             parts.append("".join(buf))
             buf = []
         else:
@@ -456,93 +460,6 @@ def _has_unterminated_string(col):
     return F.regexp_replace(col, _COMPLETE_STRING_RE, "").rlike("['\"]")
 
 
-def _fragment_quote_parity(col):
-    """Escape-aware single-quote parity of a statement fragment, for the
-    stitcher's cross-fragment state model.
-
-    ``\\\\`` pairs removed first (so ``\\'`` detection can't be fooled),
-    then ``\\'``; then complete quoted literals of BOTH families are
-    consumed in ONE left-to-right alternation pass — the first quote
-    char encountered owns its literal, so a ``"`` that is content
-    inside ``'...'`` can never start a bogus double-quoted match that
-    swallows the single quotes between two literals (r4 review: the
-    old strip-doubles-first order mis-counted ``'5" x','don''t','3"'``
-    and glued two conforming statements). Stripping a complete
-    single-quoted literal removes 2 quotes — parity unchanged — so the
-    surviving quote count's parity is exactly the open/closed state.
-    Finally, COMMENT lines are dropped: ``-- don't edit`` holds an odd
-    apostrophe count that is not a literal delimiter, and without this
-    a single comment line flipped the cumulative parity and glued every
-    later statement into one dropped group (r4 review).
-
-    Scope: a fragment cut inside a literal whose dangling text contains
-    ``"`` or ``\\n--`` can still mis-count — those stitches are caught
-    by the post-stitch ``_has_unterminated_string`` belt instead."""
-    eff = F.regexp_replace(
-        F.replace(F.replace(col, F.lit("\\\\"), F.lit("")),
-                  F.lit("\\'"), F.lit("")),
-        r"'(?:[^']|'')*+'|\"(?:[^\"]|\"\")*+\"", "")
-    eff = F.regexp_replace(eff, r"(?m)^\s*--[^\n]*", "")
-    return (F.length(eff) - F.length(F.replace(eff, F.lit("'"), F.lit("")))
-            ).bitwiseAND(F.lit(1)).cast("int")
-
-
-def _stitch_fragments(frags: DataFrame, line_sep: str) -> DataFrame:
-    """Re-join fragments that a ``lineSep`` split cut apart inside a
-    string literal (a dumped text column containing ``;\\n``).
-
-    Two-level reconstruction — NO global window, so it scales like the
-    read itself: (1) per-file-block window gives each fragment its
-    in-block cumulative parity and start-flag prefix counts; (2) the
-    block-level carry (incoming parity + statement-group base per block)
-    is a prefix scan over ONE small row per file block, done driver-side
-    (model-state scale: ~800k rows at 100 TB / 128 MB splits) and
-    broadcast back. A fragment starts a new statement iff the cumulative
-    parity before it is even; group = base + running start count; the
-    group's fragments are re-joined with the separator the split
-    consumed. Costs one extra scan (the block aggregate) and one shuffle
-    (the regroup) — the price of a malformed dump, paid only in
-    ``on_split_string="repair"`` mode."""
-    from pyspark.sql import Window
-
-    w = (Window.partitionBy("seq_hi").orderBy("seq_lo")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    w0 = (Window.partitionBy("seq_hi").orderBy("seq_lo")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    frag = (frags.withColumn("__par", _fragment_quote_parity(F.col("frag")))
-            .withColumn("__cumb",
-                        F.coalesce(F.sum("__par").over(w), F.lit(0))
-                        .bitwiseAND(F.lit(1))))
-    blk = (frag.groupBy("seq_hi").agg(
-        F.sum("__par").bitwiseAND(F.lit(1)).alias("p"),
-        F.sum(F.when(F.col("__cumb") == 0, 1).otherwise(0)).alias("s0"),
-        F.sum(F.when(F.col("__cumb") == 1, 1).otherwise(0)).alias("s1"),
-    ).collect())
-    run_off, run_base, meta_rows = 0, 0, []
-    for r in sorted(blk, key=lambda r: r.seq_hi):
-        meta_rows.append((r.seq_hi, run_off, run_base))
-        run_base += int(r.s0 if run_off == 0 else r.s1)
-        run_off = (run_off + int(r.p)) % 2
-    meta = frags.sparkSession.createDataFrame(
-        meta_rows, "seq_hi long, __off int, __base long")
-    is_start = (((F.col("__cumb") + F.col("__off")) % 2) == 0).cast("long")
-    ordered = F.array_sort(F.collect_list(F.struct("seq_hi", "seq_lo", "frag")))
-    return (
-        frag.join(F.broadcast(meta), "seq_hi")
-        .withColumn("__gid",
-                    F.col("__base") + F.sum(is_start).over(w0))
-        .groupBy("__gid")
-        .agg(ordered.alias("__frags"))
-        .select(
-            F.concat_ws(line_sep,
-                        F.transform(F.col("__frags"),
-                                    lambda s: s["frag"])).alias("frag"),
-            F.col("__frags")[0]["seq_hi"].alias("seq_hi"),
-            F.col("__frags")[0]["seq_lo"].alias("seq_lo"),
-        )
-    )
-
-
 def _dump_files(path: str) -> list[str]:
     """A dump's files in file order: ``path`` itself, or a shard
     directory's regular files in name order, skipping names that start
@@ -566,8 +483,7 @@ def _dump_head(path: str) -> bytes:
         return b""
 
 
-def read_dump_statements(spark: SparkSession, path: str,
-                         on_split_string: str = "error") -> DataFrame:
+def read_dump_statements(spark: SparkSession, path: str) -> DataFrame:
     """One row per SQL statement, split distributedly on ``;\\n``.
 
     Uses the native text source with a custom ``lineSep`` so a multi-GB
@@ -591,24 +507,14 @@ def read_dump_statements(spark: SparkSession, path: str,
     well-defined across shards too — a later shard's row overrides an
     earlier shard's (r4; single-file reads keep the plain offset).
 
-    ``on_split_string`` guards the one input the separator split cannot
-    handle: a string literal that itself contains ``;\\n`` (real
-    mysqldump escapes ``\\n`` so this never occurs in conforming dumps,
-    but the engine ingests third-party dumps). Modes:
-
-    - ``"error"`` (default): a codegen unterminated-string check on
-      each fragment raises at execution time with the offending text
-      instead of silently mis-parsing — zero extra scans, one linear
-      regex pass per statement.
-    - ``"repair"``: fragments are stitched back into whole statements
-      (``_stitch_fragments``) at the cost of one extra scan + one
-      shuffle, then re-checked (a split the stitcher's single-quote
-      model can't represent still fails loudly). Whitespace INSIDE the
-      re-joined literal is preserved (trim happens after stitching).
+    A string literal that itself contains ``;\\n`` is the one input
+    the separator split cannot handle (real mysqldump escapes ``\\n``
+    so this never occurs in conforming dumps, but the engine ingests
+    third-party dumps): a codegen unterminated-string check on each
+    statement raises at execution time, naming the dump and the
+    offending text, instead of silently mis-parsing — zero extra scans,
+    one linear regex pass per statement.
     """
-    if on_split_string not in ("error", "repair"):
-        raise ValueError(f"on_split_string={on_split_string!r}: expected "
-                         "'error' or 'repair'")
     # CRLF dumps (Windows mysqldump/editors) end statements with ";\r\n",
     # which a ";\n" lineSep never matches — the whole file would arrive
     # as ONE statement. Sniff the head driver-side (KBs, not a scan) and
@@ -684,8 +590,6 @@ def read_dump_statements(spark: SparkSession, path: str,
                 "seq_lo",
             )
         )
-    if on_split_string == "repair":
-        frags = _stitch_fragments(frags, line_sep)
     # A fragment carries the comment BLOCK that precedes its statement
     # ("-- Dumping data for table t\nINSERT INTO t ..."): comments don't
     # end with ";\n", so they glue onto the next statement. STRIP leading
@@ -705,20 +609,16 @@ def read_dump_statements(spark: SparkSession, path: str,
     out = frags.select(
         stmt.alias("stmt"), "seq_hi", "seq_lo",
     ).where(F.length("stmt") > 0)
-    # "error" mode catches the split; "repair" keeps the same check
-    # AFTER stitching as a belt (a split the stitcher's single-quote
-    # model can't represent must still fail loudly, never parse
-    # garbage). assert_true is NULL on pass, so the filter keeps every
-    # valid row, and being a filter (not an unused projection) it
-    # cannot be pruned by the optimizer. Leading comment lines (which
-    # may hold odd quote counts — "-- don't edit") are already stripped
-    # above, so the check sees pure statement text.
+    # assert_true is NULL on pass, so the filter keeps every valid row,
+    # and being a filter (not an unused projection) it cannot be pruned
+    # by the optimizer. Leading comment lines (which may hold odd quote
+    # counts — "-- don't edit") are already stripped above, so the
+    # check sees pure statement text.
     return out.where(F.assert_true(
         ~_has_unterminated_string(F.col("stmt")),
         F.concat(
-            F.lit("unterminated string literal in dump statement (a "
-                  "literal containing ';\\n' splits mid-string; "
-                  "re-read with on_split_string='repair'): "),
+            F.lit(f"unterminated string literal in dump {path} (a literal "
+                  "containing ';\\n' splits a statement mid-string): "),
             F.substring("stmt", 1, 120)),
     ).isNull())
 
@@ -789,33 +689,21 @@ def _parse_insert_batches(schemas: dict[str, TableSchema]):
     return run
 
 
-def read_sql_dump(spark: SparkSession, path: str, typed: bool = True,
-                  dedup_pk: bool = True,
-                  tables: list[str] | None = None,
-                  on_split_string: str = "error") -> dict[str, DataFrame]:
+def read_sql_dump(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     """Ingest a SQL dump into a dict of DataFrames (one per table).
 
     The reference's parse_sql_dump (sync.py:29-72), distributed: DDL is
     parsed on the driver (tiny), DML rows are tokenized in parallel Arrow
-    batches (``map_arrow``) and cast to the DDL-derived schema.
-    ``typed=False`` keeps every value as its raw string (the reference's
-    string-typed semantics, SURVEY §1.2) for bit-faithful parity.
-    ``dedup_pk`` resolves duplicate PKs last-wins in file order
-    (reference sync.py:67). ``tables``: ingest only these tables — table
-    PROJECTION pushed into the source (see read_sql_dump_with_schemas).
-    ``on_split_string``: see ``read_dump_statements``.
+    batches (``map_arrow``) and cast to the DDL-derived schema, and
+    duplicate PKs resolve last-wins in file order (reference
+    sync.py:67). ``read_sql_dump_with_schemas`` is the full form.
     """
-    out, _ = read_sql_dump_with_schemas(spark, path, typed=typed,
-                                        dedup_pk=dedup_pk, tables=tables,
-                                        on_split_string=on_split_string)
-    return out
+    return read_sql_dump_with_schemas(spark, path)[0]
 
 
 def read_sql_dump_with_schemas(
-    spark: SparkSession, path: str, typed: bool = True, dedup_pk: bool = True,
-    keep_seq: bool = False,
-    tables: list[str] | None = None, ignore_missing: bool = False,
-    on_split_string: str = "error", cache_statements: bool | None = False,
+    spark: SparkSession, path: str, keep_seq: bool = False,
+    tables: list[str] | None = None, cache_statements: bool | None = False,
 ) -> tuple[dict[str, DataFrame], dict[str, TableSchema]]:
     """`read_sql_dump` plus the parsed DDL, from ONE statement scan.
 
@@ -855,20 +743,21 @@ def read_sql_dump_with_schemas(
     with the diff's execution memory and erodes its own saving. The
     gate keeps the measured-win regime and skips the measured-loss one.
 
-    ``keep_seq``: retain the ``__seq_hi/__seq_lo`` file-order key on
-    undeduplicated frames so callers can fuse last-wins dedup into a
+    ``keep_seq``: retain the ``__seq_hi/__seq_lo`` file-order key and
+    skip the reader's last-wins dedup, so the caller fuses it into a
     downstream aggregation (see ``snapshot_diff_fused``).
 
-    ``tables``: ingest only the named tables. This is table PROJECTION
-    pushed into the source: unrequested tables' INSERT statements are
-    dropped by a JVM-side prefix filter BEFORE the Arrow tokenizer, so
-    a 100-table mysqldump read for one table tokenizes ~1/100th of the
-    DML (the Python crossing is the expensive stage). The tokenizer
-    independently skips tables absent from ``schemas``, so the filter is
-    purely an optimization — correctness never depends on it.
+    ``tables``: ingest only the named tables; a name the dump lacks is
+    skipped (``sync_dumps`` reports a table in neither dump). This is
+    table PROJECTION pushed into the source: unrequested tables' INSERT
+    statements are dropped by a JVM-side prefix filter BEFORE the Arrow
+    tokenizer, so a 100-table mysqldump read for one table tokenizes
+    ~1/100th of the DML (the Python crossing is the expensive stage).
+    The tokenizer independently skips tables absent from ``schemas``, so
+    the filter is purely an optimization — correctness never depends on
+    it.
     """
-    stmts = read_dump_statements(spark, path,
-                                 on_split_string=on_split_string)
+    stmts = read_dump_statements(spark, path)
     if cache_statements is None:
         cache_statements = _input_bytes(path) <= _CACHE_STMT_MAX_BYTES
     if cache_statements:
@@ -876,14 +765,12 @@ def read_sql_dump_with_schemas(
 
         stmts = stmts.persist(StorageLevel.MEMORY_AND_DISK)
     # Any raise between the persist above and the final return must not
-    # pin a dump-sized cache for the process lifetime (r8 advice: only
-    # the missing-tables path unpersisted; a DDL collect/parse failure
-    # leaked). Unpersist-and-reraise covers every exception path; the
-    # empty-schemas RETURN keeps its explicit unpersist below.
+    # pin a dump-sized cache for the process lifetime (r8 advice: a DDL
+    # collect/parse failure leaked it). Unpersist-and-reraise covers
+    # every exception path; the empty-schemas RETURN keeps its explicit
+    # unpersist below.
     try:
-        return _read_dump_body(
-            spark, stmts, cache_statements, tables, ignore_missing,
-            typed, dedup_pk, keep_seq)
+        return _read_dump_body(stmts, cache_statements, tables, keep_seq)
     except Exception:
         if cache_statements:
             stmts.unpersist()
@@ -901,18 +788,12 @@ def _collect_schemas(stmts: DataFrame) -> dict[str, TableSchema]:
     return schemas
 
 
-def _read_dump_body(spark, stmts, cache_statements, tables, ignore_missing,
-                    typed, dedup_pk, keep_seq):
+def _read_dump_body(stmts, cache_statements, tables, keep_seq):
     from database_syncer_spark.core.diff import dedup_last_wins
 
     schemas = _collect_schemas(stmts)
     if tables is not None:
         want = set(tables)
-        missing = want - set(schemas)
-        if missing and not ignore_missing:
-            raise ValueError(  # caller's except unpersists the cache
-                f"tables not in dump: {sorted(missing)} "
-                f"(dump has: {sorted(schemas)})")
         schemas = {n: ts for n, ts in schemas.items() if n in want}
     if not schemas:
         if cache_statements:  # nothing descends from it on this path
@@ -948,20 +829,14 @@ def _read_dump_body(spark, stmts, cache_statements, tables, ignore_missing,
     for name, ts in schemas.items():
         cols = ["seq_hi AS __seq_hi", "seq_lo AS __seq_lo"]
         for idx, (col, spark_t) in enumerate(ts.spark_types()):
-            raw = f"vals[{idx}]" if not typed else f"CAST(vals[{idx}] AS {spark_t})"
-            cols.append(f"{raw} AS {quote_ident(col)}")
+            cols.append(f"CAST(vals[{idx}] AS {spark_t}) AS {quote_ident(col)}")
         df = parsed.where(f"`table` = {sql_string(name)}").selectExpr(*cols)
-        if dedup_pk and ts.pk_cols:
-            df = dedup_last_wins(df, ts.pk_cols, ["__seq_hi", "__seq_lo"])
         if not keep_seq:
+            if ts.pk_cols:
+                df = dedup_last_wins(df, ts.pk_cols, ["__seq_hi", "__seq_lo"])
             df = df.drop("__seq_hi", "__seq_lo")
         out[name] = df
     return out, schemas
-
-
-def get_dump_schemas(spark: SparkSession, path: str) -> dict[str, TableSchema]:
-    """Parsed DDL only (driver-side)."""
-    return _collect_schemas(read_dump_statements(spark, path))
 
 
 # --- dump writer (tests / fixtures / round-trips) ---------------------------
@@ -1242,13 +1117,11 @@ def _sync_plans(spark: SparkSession, prod_path: str, backup_path: str,
     def read(path, dialect):
         if dialect == "postgres":
             return read_pg_dump_with_schemas(spark, path, tables=tables)
-        # a requested table may legitimately be absent from ONE side
-        # (the catalog diff reports it), so each side ignores missing
-        # names inside its own DDL scan; cache_statements=None is the
-        # size-gated statement cache (read_sql_dump_with_schemas)
+        # cache_statements=None is the size-gated statement cache
+        # (read_sql_dump_with_schemas)
         return read_sql_dump_with_schemas(
-            spark, path, dedup_pk=not fused, keep_seq=fused, tables=tables,
-            ignore_missing=True, cache_statements=None)
+            spark, path, keep_seq=fused, tables=tables,
+            cache_statements=None)
 
     prod, prod_schemas = read(prod_path, dialects[0])
     backup, _ = read(backup_path, dialects[1])

@@ -168,19 +168,15 @@ def _unescape(col: F.Column) -> F.Column:
     return F.replace(c, F.lit("\x01"), F.lit("\\"))
 
 
-def read_pg_dump(spark: SparkSession, path: str,
-                 typed: bool = True,
-                 tables: list[str] | None = None) -> dict[str, DataFrame]:
+def read_pg_dump(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     """Ingest a pg_dump plain-format file (or a directory of shard
-    files) -> {table_name: DataFrame}. See the module docstring for the
-    four-stage distributed shape."""
-    return read_pg_dump_with_schemas(spark, path, typed=typed,
-                                     tables=tables)[0]
+    files) -> {table_name: DataFrame}, each column cast to its DDL type.
+    See the module docstring for the four-stage distributed shape."""
+    return read_pg_dump_with_schemas(spark, path)[0]
 
 
 def read_pg_dump_with_schemas(
-    spark: SparkSession, path: str, typed: bool = True,
-    tables: list[str] | None = None,
+    spark: SparkSession, path: str, tables: list[str] | None = None,
 ) -> tuple[dict[str, DataFrame], dict[str, TableSchema]]:
     """``read_pg_dump`` plus each table's ``TableSchema`` (columns, PK
     from the inline constraint or pg_dump's post-data ALTER) — what
@@ -278,7 +274,7 @@ def read_pg_dump_with_schemas(
             .otherwise(_unescape(fields[i])).alias(name)
             for i, name in enumerate(col_names)]
         df = data.select(*raw_cols)
-        if typed and table in schemas:
+        if table in schemas:
             spark_types = dict(schemas[table].spark_types())
             df = df.select(*[
                 F.col(c).cast(spark_types[c]).alias(c)

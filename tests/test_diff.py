@@ -143,11 +143,15 @@ def test_executor_roundtrip(spark, sf_dir):
     assert prod.exceptAll(synced).count() == 0
 
 
+@pytest.mark.parametrize("bound", [{"max_script_statements": 10},
+                                   {"max_backup_rows": 0}],
+                         ids=["statements", "backup_rows"])
 def test_executor_size_gate_routes_to_distributed_merge(
-        spark, sf_dir, monkeypatch):
-    """Above the driver-residency bounds, sync_via_executor must SKIP the
-    script/DuckDB path (the backup wouldn't fit on the driver at scale)
-    and apply the changes with the distributed MERGE — same result."""
+        spark, sf_dir, monkeypatch, bound):
+    """Above either driver-residency bound (script statements or backup
+    rows), sync_via_executor must SKIP the script/DuckDB path (the
+    backup wouldn't fit on the driver at scale) and apply the changes
+    with the distributed MERGE — same result."""
     from database_syncer_spark.core import executor
 
     def boom(*a, **k):  # the gate must prevent this from being reached
@@ -156,8 +160,7 @@ def test_executor_size_gate_routes_to_distributed_merge(
     monkeypatch.setattr(executor, "apply_script_duckdb", boom)
     prod, backup = _pair(spark, sf_dir)
     synced = executor.sync_via_executor(
-        spark, prod, backup, "orders", ["o_orderkey"],
-        max_script_statements=10)
+        spark, prod, backup, "orders", ["o_orderkey"], **bound)
     assert synced.exceptAll(prod).count() == 0
     assert prod.exceptAll(synced).count() == 0
 

@@ -11,9 +11,9 @@ import textwrap
 import pytest
 
 from database_syncer_spark.sources.dump import (
-    get_dump_schemas,
     parse_create_table,
     read_sql_dump,
+    read_sql_dump_with_schemas,
     sync_dumps,
     tokenize_insert_rows,
     write_sql_dump,
@@ -195,19 +195,6 @@ def test_shuffle_partitions_sized_from_shard_bytes(spark, tmp_path,
         spark.conf.set(key, prev)
 
 
-def test_read_sql_dump_raw_mode(spark, tmp_path):
-    """typed=False keeps raw literal strings (reference semantics: '1' and
-    '1.0' differ, SURVEY §1.2)."""
-    dump = (
-        "CREATE TABLE `t` (`id` int, `v` double, PRIMARY KEY (`id`)) ENGINE=X;\n"
-        "INSERT INTO `t` VALUES (1,1.0);\n"
-    )
-    path = _write(tmp_path, "raw.sql", dump)
-    tables = read_sql_dump(spark, path, typed=False)
-    r = tables["t"].collect()[0]
-    assert r.v == "1.0"  # not coerced
-
-
 def test_reordered_and_partial_column_lists(spark, tmp_path):
     """An explicit column list is honored: reordered lists remap to table
     order, omitted columns become NULL. (The reference cannot parse
@@ -344,7 +331,7 @@ def test_write_sql_dump_golden_bytes(spark, tmp_path):
 
 def test_get_dump_schemas(spark, tmp_path):
     path = _write(tmp_path, "s.sql", USERS_DDL)
-    schemas = get_dump_schemas(spark, path)
+    _, schemas = read_sql_dump_with_schemas(spark, path)
     assert schemas["users"].pk_cols == ["id"]
 
 
@@ -669,8 +656,7 @@ def test_named_escapes_and_private_use_char(spark, tmp_path):
         f"INSERT INTO t VALUES ('k2', 'has {pua} marker');\n"
     )
     path = _write(tmp_path, "pua.sql", dump)
-    rows = {r.a: r.b for r in
-            read_sql_dump(spark, path, typed=False, dedup_pk=False)["t"].collect()}
+    rows = {r.a: r.b for r in read_sql_dump(spark, path)["t"].collect()}
     assert rows["k1"] == "a\nb\tc\rd\x00ezf"  # \z -> literal z
     assert rows["k2"] == f"has {pua} marker"
 
@@ -718,9 +704,7 @@ def test_table_projection_pushdown(spark, tmp_path):
     """tables=[...] ingests only the requested tables, matches the full
     read's values, survives keyword-case/identifier-form variety (the
     JVM prefilter must never drop a statement the tokenizer accepts),
-    and errors on unknown names."""
-    import pytest as _pytest
-
+    and skips names the dump lacks."""
     dump = (
         "CREATE TABLE t1 (a text, b text, PRIMARY KEY (a));\n"
         "CREATE TABLE t2 (a text, PRIMARY KEY (a));\n"
@@ -730,14 +714,14 @@ def test_table_projection_pushdown(spark, tmp_path):
         "INSERT INTO `t2` VALUES ('other');\n"
     )
     path = _write(tmp_path, "proj.sql", dump)
-    full = read_sql_dump(spark, path, typed=False)
-    only = read_sql_dump(spark, path, typed=False, tables=["t1"])
-    assert set(only) == {"t1"}
+    full = read_sql_dump(spark, path)
+    only, schemas = read_sql_dump_with_schemas(spark, path, tables=["t1"])
+    assert set(only) == set(schemas) == {"t1"}
     assert (sorted(map(tuple, only["t1"].collect()))
             == sorted(map(tuple, full["t1"].collect())))
     assert only["t1"].count() == 3
-    with _pytest.raises(ValueError, match="not in dump"):
-        read_sql_dump(spark, path, tables=["t1", "nope"])
+    ghost, _ = read_sql_dump_with_schemas(spark, path, tables=["t1", "nope"])
+    assert set(ghost) == {"t1"}
 
 
 def test_sync_dumps_table_restriction(spark, tmp_path):
@@ -782,8 +766,8 @@ SPLIT_DDL = textwrap.dedent("""\
 
 def test_embedded_stmt_separator_errors_loudly_by_default(spark, tmp_path):
     """A dumped text column containing ';\\n' splits a statement
-    mid-string; the default mode must FAIL LOUDLY (quote-parity check),
-    never silently mis-parse (VERDICT r3 item 4)."""
+    mid-string; the read must FAIL LOUDLY (unterminated-string check),
+    naming the dump, never silently mis-parse (VERDICT r3 item 4)."""
     from pyspark.errors import PySparkRuntimeError
 
     dump = SPLIT_DDL + (
@@ -792,62 +776,28 @@ def test_embedded_stmt_separator_errors_loudly_by_default(spark, tmp_path):
     path = _write(tmp_path, "split.sql", dump)
     with pytest.raises(Exception) as ei:
         read_sql_dump(spark, path)["notes"].collect()
-    assert "on_split_string" in str(ei.value)
-
-
-def test_embedded_stmt_separator_repair_mode(spark, tmp_path):
-    """repair mode stitches the fragments back, preserving the embedded
-    ';\\n' and the whitespace around it inside the literal."""
-    dump = SPLIT_DDL + (
-        "INSERT INTO notes VALUES (0,'plain','x');\n"
-        "INSERT INTO notes VALUES (1,'first line;\n  second line','a');\n"
-        "INSERT INTO notes VALUES (2,'a;\nb;\nc','b');\n"
-        "INSERT INTO notes VALUES (3,'after','c');\n"
-    )
-    path = _write(tmp_path, "split_repair.sql", dump)
-    got = {r.id: (r.body, r.tag)
-           for r in read_sql_dump(
-               spark, path, on_split_string="repair")["notes"].collect()}
-    assert got == {
-        0: ("plain", "x"),
-        1: ("first line;\n  second line", "a"),
-        2: ("a;\nb;\nc", "b"),
-        3: ("after", "c"),
-    }
+    assert "unterminated string literal" in str(ei.value)
+    assert path in str(ei.value)
 
 
 def test_clean_dump_identical_across_split_modes(spark, tmp_path):
-    """On a conforming dump both modes agree (repair is the identity
-    when no fragment has odd quote parity), including quoted values
-    with escaped quotes and semicolons NOT at line ends."""
+    """A conforming dump reads clean, including quoted values with
+    escaped quotes and semicolons NOT at line ends."""
     dump = USERS_DDL + (
         "INSERT INTO `users` VALUES (1,'o''brien; esq.',1.50);\n"
         "INSERT INTO `users` VALUES (2,'b\\'c',2.25);\n"
         "INSERT INTO `users` VALUES (3,NULL,0.00);\n"
     )
     path = _write(tmp_path, "clean.sql", dump)
-    frames = [read_sql_dump(spark, path, on_split_string=m)["users"]
-              for m in ("error", "repair")]
-    rows = [sorted((r.id, r.name) for r in f.collect()) for f in frames]
-    assert rows[0] == rows[1]
-    assert rows[0] == [(1, "o'brien; esq."), (2, "b'c"), (3, None)]
+    rows = sorted((r.id, r.name)
+                  for r in read_sql_dump(spark, path)["users"].collect())
+    assert rows == [(1, "o'brien; esq."), (2, "b'c"), (3, None)]
 
 
-def test_split_mode_ignore_rejected(spark, tmp_path):
-    """No mode turns the unterminated-string check off: the old
-    "ignore" mode is an unknown mode now, rejected before any scan."""
+def _stmts(spark, path):
     from database_syncer_spark.sources.dump import read_dump_statements
 
-    path = _write(tmp_path, "clean.sql", USERS_DDL)
-    for read in (read_dump_statements, read_sql_dump):
-        with pytest.raises(ValueError, match="on_split_string"):
-            read(spark, path, on_split_string="ignore")
-
-
-def _stmts(spark, path, mode):
-    from database_syncer_spark.sources.dump import read_dump_statements
-
-    rows = read_dump_statements(spark, str(path), on_split_string=mode)
+    rows = read_dump_statements(spark, str(path))
     return [r.stmt for r in
             sorted(rows.collect(), key=lambda r: (r.seq_hi, r.seq_lo))]
 
@@ -855,7 +805,7 @@ def _stmts(spark, path, mode):
 def test_comment_block_before_statement_kept(spark, tmp_path):
     """A fragment carries the comment block that precedes its statement
     (comments don't end with ';\\n'); the statement behind the comment
-    must survive in EVERY mode — the old comment filter dropped the
+    must survive — the old comment filter dropped the
     whole fragment, silently losing every statement that followed a
     mysqldump comment block (r4 review)."""
     p = tmp_path / "c.sql"
@@ -863,39 +813,22 @@ def test_comment_block_before_statement_kept(spark, tmp_path):
                  "-- Dumping data for table t\n--\n"
                  "INSERT INTO t VALUES (1);\n"
                  "INSERT INTO t VALUES (2);\n")
-    for mode in ("error", "repair"):
-        got = _stmts(spark, p, mode)
-        assert got == ["CREATE TABLE t (id INT)",
-                       "INSERT INTO t VALUES (1)",
-                       "INSERT INTO t VALUES (2)"], (mode, got)
-
-
-def test_repair_survives_apostrophe_in_comment(spark, tmp_path):
-    """A comment line holding an odd apostrophe count must not flip the
-    stitcher's quote parity: pre-fix, '-- don't' glued every later
-    statement into one dropped group (r4 review)."""
-    p = tmp_path / "a.sql"
-    p.write_text("INSERT INTO t VALUES (1,'a');\n"
-                 "-- don't edit below\n"
-                 "INSERT INTO t VALUES (2,'b');\n"
-                 "INSERT INTO t VALUES (3,'c');\n")
-    assert _stmts(spark, p, "repair") == [
-        "INSERT INTO t VALUES (1,'a')",
-        "INSERT INTO t VALUES (2,'b')",
-        "INSERT INTO t VALUES (3,'c')"]
+    got = _stmts(spark, p)
+    assert got == ["CREATE TABLE t (id INT)",
+                   "INSERT INTO t VALUES (1)",
+                   "INSERT INTO t VALUES (2)"], got
 
 
 def test_repair_survives_inch_marks_in_values(spark, tmp_path):
     """Double-quote characters that are CONTENT inside single-quoted
-    literals must not pair across literals: pre-fix, the
-    strip-doubles-first parity deleted the single quotes between '5\"'
-    and '3\"' and glued two conforming statements (r4 review)."""
+    literals must not pair across literals: the unterminated-string
+    check must pass both conforming statements (a strip-doubles-first
+    quote count deleted the single quotes between '5\"' and '3\"' and
+    glued them, r4 review)."""
     p = tmp_path / "i.sql"
     stmt1 = "INSERT INTO t VALUES (1,'5\" x','don''t','3\"')"
     p.write_text(stmt1 + ";\nINSERT INTO t VALUES (2,'y');\n")
-    for mode in ("error", "repair"):
-        assert _stmts(spark, p, mode) == [
-            stmt1, "INSERT INTO t VALUES (2,'y')"], mode
+    assert _stmts(spark, p) == [stmt1, "INSERT INTO t VALUES (2,'y')"]
 
 
 def test_multiblock_comments_with_blank_lines_and_apostrophe(spark, tmp_path):
@@ -907,10 +840,9 @@ def test_multiblock_comments_with_blank_lines_and_apostrophe(spark, tmp_path):
     p.write_text("--\n-- Section A\n--\n\n--\n-- don't edit\n--\n"
                  "INSERT INTO t VALUES (1,'a');\n"
                  "INSERT INTO t VALUES (2,'b');\n")
-    for mode in ("error", "repair"):
-        assert _stmts(spark, p, mode) == [
-            "INSERT INTO t VALUES (1,'a')",
-            "INSERT INTO t VALUES (2,'b')"], mode
+    assert _stmts(spark, p) == [
+        "INSERT INTO t VALUES (1,'a')",
+        "INSERT INTO t VALUES (2,'b')"]
 
 
 def test_sharded_dump_uri_encodable_file_name(spark, tmp_path):
@@ -922,6 +854,6 @@ def test_sharded_dump_uri_encodable_file_name(spark, tmp_path):
     d.mkdir()
     (d / "part 000.sql").write_text("INSERT INTO t VALUES (1,'a');\n")
     (d / "part-001.sql").write_text("INSERT INTO t VALUES (2,'b');\n")
-    got = _stmts(spark, d, "error")
+    got = _stmts(spark, d)
     assert got == ["INSERT INTO t VALUES (1,'a')",
                    "INSERT INTO t VALUES (2,'b')"]

@@ -237,20 +237,6 @@ def test_pg_missing_terminator_raises(spark, tmp_path):
         read_pg_dump(spark, path)
 
 
-def test_pg_raw_mode_skips_cast(spark, tmp_path):
-    path = _write(tmp_path, "raw.sql", textwrap.dedent("""\
-        CREATE TABLE public.t (
-            id bigint NOT NULL
-        );
-        COPY public.t (id) FROM stdin;
-        7
-        \\.
-        """))
-    back = read_pg_dump(spark, path, typed=False)["t"]
-    assert dict(back.dtypes) == {"id": "string"}
-    assert [r.id for r in back.collect()] == ["7"]
-
-
 # --- dialect sniff + cross-dialect sync ---------------------------------------
 
 PG_PROD = textwrap.dedent("""\
@@ -376,7 +362,7 @@ def test_sync_pg_to_mysql_key_does_not_leak_cache(spark, sf_dir):
 
 def test_cross_dialect_sync_last_wins(spark, tmp_path):
     """A duplicate PK on the mysql side of a cross-dialect sync
-    resolves last-INSERT-wins (the reader's dedup_pk, reference
+    resolves last-INSERT-wins (the reader's last-wins dedup, reference
     sync.py:67) BEFORE the diff classifies — id 2's final 'new' value
     equals prod, so no change row surfaces. (The r10 fused variant that
     moved this resolution inside the diff was A/B-rejected for the

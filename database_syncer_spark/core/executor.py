@@ -49,9 +49,12 @@ def apply_script_duckdb(
     """
     import duckdb
 
-    own = con is None
-    if own:
+    if con is None:  # a connection opened here is closed here, whatever fails
         con = duckdb.connect()
+        try:
+            return apply_script_duckdb(backup, table, statements, con, pk_cols)
+        finally:
+            con.close()
     arrow_backup = backup.toArrow()
     con.register("___dss_backup", arrow_backup)
     con.execute(f'CREATE OR REPLACE TABLE "{table}" AS SELECT * FROM ___dss_backup')
@@ -72,10 +75,7 @@ def apply_script_duckdb(
     except Exception:
         con.execute("ROLLBACK")
         raise
-    out = con.execute(f'SELECT * FROM "{table}"').arrow()
-    if own:
-        con.close()
-    return out
+    return con.execute(f'SELECT * FROM "{table}"').arrow()
 
 
 def merge_cdc_batch_duckdb(con, table: str, batch,

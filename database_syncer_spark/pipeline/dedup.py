@@ -63,6 +63,15 @@ def with_shingles(documents: DataFrame, k: int = 3) -> DataFrame:
 N_HASHES = 16
 N_BANDS = 4  # 4 rows per band
 
+#: Word-shingle width of every MinHash, n-gram and containment path.
+_SHINGLE_K = 3
+#: Bucket count of the at-rest band and digest index tables.
+_INDEX_BUCKETS = 16
+#: Jaccard a MinHash candidate pair must reach to count as a near-dup.
+_NEAR_DUP_JACCARD = 0.5
+#: Document-frequency cap of the exact shingle measures' prefix filter.
+_DF_CAP = 10_000
+
 
 def minhash_signatures(documents: DataFrame, k: int = 3) -> DataFrame:
     """K minhashes per doc: min over shingles of hash-family-i(shingle).
@@ -152,8 +161,8 @@ def lsh_candidate_pairs(signed: DataFrame) -> DataFrame:
     )
 
 
-def minhash_lsh_dedup(documents: DataFrame, threshold: float = 0.5,
-                      k: int = 3) -> DataFrame:
+def minhash_lsh_dedup(documents: DataFrame,
+                      threshold: float = _NEAR_DUP_JACCARD) -> DataFrame:
     """Near-dup pairs: LSH candidates verified by exact Jaccard.
 
     The band self-join is SKINNY — (doc_id, band_id, band_hash), 24
@@ -170,7 +179,7 @@ def minhash_lsh_dedup(documents: DataFrame, threshold: float = 0.5,
     never shuffles at all; when a pathological corpus makes candidates
     huge, the same plan degrades gracefully to two shuffled joins —
     still strictly less traffic than the 8× ride-along."""
-    signed = minhash_signatures(documents, k)
+    signed = minhash_signatures(documents, _SHINGLE_K)
     # The candidate pair set is referenced THREE times downstream (the
     # id set that prunes the corpus, and both sides of the verify
     # join); left lazy, Catalyst plans the whole signature + band-join
@@ -190,7 +199,7 @@ def minhash_lsh_dedup(documents: DataFrame, threshold: float = 0.5,
     cand_ids = (cand.select(F.explode(F.array("doc_a", "doc_b"))
                             .alias("doc_id")).distinct())
     shing = _doc_shingle_sets(
-        documents.join(cand_ids, "doc_id", "left_semi"), k)
+        documents.join(cand_ids, "doc_id", "left_semi"), _SHINGLE_K)
     pairs = (
         cand
         .join(shing.select(F.col("doc_id").alias("doc_a"),
@@ -208,7 +217,7 @@ def minhash_lsh_dedup(documents: DataFrame, threshold: float = 0.5,
     )
 
 
-def _corpus_band_rows(docs, k: int = 3) -> DataFrame:
+def _corpus_band_rows(docs, k: int = _SHINGLE_K) -> DataFrame:
     """(corpus_id, band_id, band_hash) band rows of a (doc_id, text)
     frame — THE at-rest band-index row shape. One definition shared by
     the index build, the append-only maintenance, and the inline
@@ -221,8 +230,7 @@ def _corpus_band_rows(docs, k: int = 3) -> DataFrame:
             .select("corpus_id", "band.band_id", "band.band_hash"))
 
 
-def build_corpus_band_index(corpus: DataFrame, table: str,
-                            k: int = 3, n_buckets: int = 16) -> DataFrame:
+def build_corpus_band_index(corpus: DataFrame, table: str) -> DataFrame:
     """ONE-TIME at-rest index build for ingest-time dedup: the corpus's
     exploded MinHash band keys, persisted as a parquet table BUCKETED by
     (band_id, band_hash) — the layout incremental_near_dups' docstring
@@ -237,13 +245,12 @@ def build_corpus_band_index(corpus: DataFrame, table: str,
     a storage chore, not a recompute)."""
     from database_syncer_spark.core.bucketing import write_bucketed_snapshot
 
-    ec = _corpus_band_rows(corpus, k)
+    ec = _corpus_band_rows(corpus)
     return write_bucketed_snapshot(
-        ec, table, ["band_id", "band_hash"], n_buckets)
+        ec, table, ["band_id", "band_hash"], _INDEX_BUCKETS)
 
 
-def append_band_index(admitted: DataFrame, table: str, k: int = 3,
-                      n_buckets: int = 16) -> DataFrame:
+def append_band_index(admitted: DataFrame, table: str) -> DataFrame:
     """APPEND-ONLY maintenance of the at-rest band index — the other
     half of the steady-state deployment build_corpus_band_index's
     docstring promises: after an ingest batch's novel docs are admitted
@@ -255,9 +262,9 @@ def append_band_index(admitted: DataFrame, table: str, k: int = 3,
     small appended files — a storage chore, not a recompute. Returns
     the refreshed table."""
     spark = admitted.sparkSession
-    ec = _corpus_band_rows(admitted, k)
+    ec = _corpus_band_rows(admitted)
     (ec.write.mode("append")
-       .bucketBy(n_buckets, "band_id", "band_hash")
+       .bucketBy(_INDEX_BUCKETS, "band_id", "band_hash")
        .sortBy("band_id", "band_hash")
        .format("parquet")
        .saveAsTable(table))
@@ -294,8 +301,7 @@ def append_band_index(admitted: DataFrame, table: str, k: int = 3,
     return spark.table(table)
 
 
-def build_corpus_digest_index(corpus: DataFrame, table: str,
-                              n_buckets: int = 16) -> DataFrame:
+def build_corpus_digest_index(corpus: DataFrame, table: str) -> DataFrame:
     """At-rest exact-dup gate: sha2(text) digests, bucketed by digest —
     the 64-byte probe table the exact-novelty semi-join reads instead
     of digesting the whole corpus per batch."""
@@ -303,7 +309,7 @@ def build_corpus_digest_index(corpus: DataFrame, table: str,
 
     return write_bucketed_snapshot(
         corpus.select(F.sha2("text", 256).alias("digest")),
-        table, ["digest"], n_buckets)
+        table, ["digest"], _INDEX_BUCKETS)
 
 
 def _band_candidates(batch: DataFrame, corpus: DataFrame, k: int,
@@ -326,7 +332,6 @@ def _band_candidates(batch: DataFrame, corpus: DataFrame, k: int,
 
 
 def incremental_near_dups(batch: DataFrame, corpus: DataFrame,
-                          threshold: float = 0.5, k: int = 3,
                           corpus_bands: DataFrame | None = None) -> DataFrame:
     """Ingest-time dedup: every BATCH doc checked for near-dups against
     the EXISTING corpus only — the daily-ingest question ("is this new
@@ -357,17 +362,12 @@ def incremental_near_dups(batch: DataFrame, corpus: DataFrame,
     # Same three-consumer shape as minhash_lsh_dedup (batch id set,
     # corpus id set, verify join): eager node-local checkpoint runs the
     # batch-signature + band-probe subtree once instead of once per
-    # reference (r12; candidate-sized by construction). The generator
-    # itself lives in _band_candidates so the stored-index-vs-inline
-    # plan guard (test_plans.py) can still read its plan pre-checkpoint.
-    # (r13: a lazy-candidates variant for the single-probe
-    # dedup_incremental key — VERDICT r12 item 5's "checkpoint tax" —
-    # was A/B'd INTERLEAVED in one session and measured parity
-    # (eager 1.34-1.69 s vs lazy 1.24-1.56 s at sf0.1); the r12
-    # before/after delta it was meant to recover was cross-session
-    # host drift. The checkpoint stays unconditional: at scale the
-    # lazy form re-executes the corpus-signature subtree per
-    # reference, which is strictly worse.)
+    # reference (candidate-sized by construction). The generator itself
+    # lives in _band_candidates so the stored-index-vs-inline plan guard
+    # (test_plans.py) can still read its plan pre-checkpoint. Lazy
+    # candidates measure the same on one probe, but at scale they
+    # re-execute the corpus-signature subtree per reference.
+    k = _SHINGLE_K
     cand = _band_candidates(
         batch, corpus, k, corpus_bands).localCheckpoint(eager=True)
     sh_b = _doc_shingle_sets(
@@ -383,7 +383,7 @@ def incremental_near_dups(batch: DataFrame, corpus: DataFrame,
         F.size(F.array_intersect("sh_b", "sh_c")).cast("double")
         / F.size(F.array_union("sh_b", "sh_c")), 6)
     verified = (pairs.select("doc_id", jac.alias("jaccard"))
-                .where(F.col("jaccard") >= threshold))
+                .where(F.col("jaccard") >= _NEAR_DUP_JACCARD))
     per_doc = verified.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_dups"),
         F.max("jaccard").alias("max_jaccard"))
@@ -583,7 +583,7 @@ def _shingle_intersections(documents: DataFrame, k: int,
 
 
 def ngram_jaccard_pairs(documents: DataFrame, threshold: float = 0.2,
-                        k: int = 3, df_cap: int = 10_000) -> DataFrame:
+                        df_cap: int = _DF_CAP) -> DataFrame:
     """EXACT Jaccard over word k-shingles via an inverted-index self-join:
     |A∩B| = count of shared shingles; sizes come from the per-doc shingle
     count, so no second pass over text. The self-join costs
@@ -607,7 +607,7 @@ def ngram_jaccard_pairs(documents: DataFrame, threshold: float = 0.2,
     job ABORTED (ENOSPC). This is the exactness/oracle tool for
     fixture-scale verification; every end-to-end dedup artifact
     (corpus_keep, soft_keep) defaults to minhash_lsh_dedup."""
-    inter = _shingle_intersections(documents, k, df_cap)
+    inter = _shingle_intersections(documents, _SHINGLE_K, df_cap)
     jac = F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))
     return (
         inter.select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
@@ -615,8 +615,8 @@ def ngram_jaccard_pairs(documents: DataFrame, threshold: float = 0.2,
     )
 
 
-def ngram_containment_pairs(documents: DataFrame, threshold: float = 0.5,
-                            k: int = 3, df_cap: int = 10_000) -> DataFrame:
+def ngram_containment_pairs(documents: DataFrame,
+                            threshold: float = 0.5) -> DataFrame:
     """EXACT shingle containment C(A→B) = |A∩B| / |A| — the asymmetric
     near-dup measure that catches SUB-document duplication (doc A mostly
     quoted/embedded inside doc B), which symmetric Jaccard misses when
@@ -627,7 +627,7 @@ def ngram_containment_pairs(documents: DataFrame, threshold: float = 0.5,
     :func:`ngram_jaccard_pairs`; the intersection count is computed ONCE
     per unordered pair and both directions are emitted by exploding two
     structs from it, so the asymmetry costs no second join."""
-    inter = _shingle_intersections(documents, k, df_cap)
+    inter = _shingle_intersections(documents, _SHINGLE_K, _DF_CAP)
     cont = F.round(F.col("c").cast("double") / F.col("n_src"), 6)
     both = inter.select(F.explode(F.array(
         F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"),
@@ -678,13 +678,16 @@ def soft_keep_weights(documents: DataFrame) -> DataFrame:
 
 # --- paragraph/line-level dedup ---------------------------------------------------
 
-def paragraph_dedup(documents: DataFrame,
-                    chunk_words: int = 10) -> DataFrame:
+#: Span length of paragraph_dedup, in words.
+_CHUNK_WORDS = 10
+
+
+def paragraph_dedup(documents: DataFrame) -> DataFrame:
     """Sub-document exact dedup — the C4/RefinedWeb granularity the
     doc-level family (exact/near/soft/incremental) doesn't cover:
     remove every repeated SPAN across the corpus, keeping only its
     first occurrence (ordered by doc_id, then position), and re-emit
-    the cleaned documents. Spans are consecutive ``chunk_words``-word
+    the cleaned documents. Spans are consecutive _CHUNK_WORDS-word
     chunks (the fixtures are single-line word streams; on newline-
     delimited corpora the same shape applies with split('\\n')).
 
@@ -706,11 +709,11 @@ def paragraph_dedup(documents: DataFrame,
     # otherwise yield size -1, NULL chunks, and a null-unsafe join that
     # silently DROPS the document — r8 review finding): treat NULL as ''
     words = F.split(F.coalesce(F.col("text"), F.lit("")), " ")
-    n = F.ceil(F.size(words) / F.lit(chunk_words)).cast("int")
+    n = F.ceil(F.size(words) / F.lit(_CHUNK_WORDS)).cast("int")
     chunks = F.transform(
         F.sequence(F.lit(0), n - 1),
         lambda i: F.array_join(
-            F.slice(words, i * chunk_words + 1, chunk_words), " "))
+            F.slice(words, i * _CHUNK_WORDS + 1, _CHUNK_WORDS), " "))
     ch = (documents
           .select("doc_id", F.posexplode(chunks).alias("pos", "chunk")))
     firsts = ch.groupBy("chunk").agg(
@@ -734,17 +737,20 @@ def paragraph_dedup(documents: DataFrame,
 
 # --- connected components over near-dup pairs -----------------------------------
 
-def connected_components(edges: DataFrame, src: str = "doc_a",
-                         dst: str = "doc_b", max_iter: int = 20) -> DataFrame:
-    """Cluster near-dup pairs into components: (doc_id, component) where
-    component = min doc_id reachable through any chain of pairs — the
-    step that turns pairwise dedup output into keep/drop decisions (keep
-    one doc per component).
+#: Round cap of the components loop (pathological chains).
+_CC_MAX_ITER = 20
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Cluster near-dup (doc_a, doc_b) pairs into components:
+    (doc_id, component) where component = min doc_id reachable through
+    any chain of pairs — the step that turns pairwise dedup output into
+    keep/drop decisions (keep one doc per component).
 
     Iterative min-label propagation: each round every node takes the min
     of its own label and its neighbors' labels; converges in
     O(cluster diameter) rounds (near-dup clusters are shallow — a few
-    rounds in practice, ``max_iter`` caps pathological chains). Each
+    rounds in practice, _CC_MAX_ITER caps pathological chains). Each
     round is one join + one partial-agg'd groupBy, all JVM-side; the
     per-round result is persisted so round N+1 doesn't recompute rounds
     1..N. At extreme scale the same loop with large-star/small-star
@@ -784,13 +790,14 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     # generateTreeString CPU, run killed) on a deep-chain probe that
     # the new shape finishes in 27 s (9 iterations, 1 M edges,
     # depth 8).
+    src, dst = F.col("doc_a"), F.col("doc_b")
     sym = (
-        edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
+        edges.where(src.isNotNull() & dst.isNotNull())
         .select(F.explode(F.array(
-            F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
-            F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
-            F.struct(F.col(src).alias("a"), F.col(src).alias("b")),
-            F.struct(F.col(dst).alias("a"), F.col(dst).alias("b")),
+            F.struct(src.alias("a"), dst.alias("b")),
+            F.struct(dst.alias("a"), src.alias("b")),
+            F.struct(src.alias("a"), src.alias("b")),
+            F.struct(dst.alias("a"), dst.alias("b")),
         )).alias("e"))
         .select("e.a", "e.b")
     )
@@ -807,7 +814,7 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     no_sum = object()
     prev_sum = no_sum
     cached = comp
-    for it in range(max_iter):
+    for it in range(_CC_MAX_ITER):
         nxt = (
             sym.join(comp, sym.b == comp.id)
             .groupBy(F.col("a").alias("id"))
@@ -897,25 +904,19 @@ def _first_collision(a: str, b: str, n_tables: int) -> Column:
     return cond
 
 
-def _lsh_params(frame: DataFrame, n_planes: int | None,
-                n_tables: int | None,
-                corpus_n: int | None) -> tuple[int, int, int | None]:
-    """One defaulting ladder for BOTH blocking callers
+def _lsh_params(frame: DataFrame,
+                corpus_n: int | None) -> tuple[int, int, int]:
+    """(n_planes, n_tables, corpus_n) for BOTH blocking callers
     (embedding_near_dup and embedding_incremental_near_dup must block
     identically or the shared recall pin stops covering the incremental
-    path): count once if needed, planes from _lsh_block_planes, tables
-    16 in the fixture regime / 8 at scale. Also returns the resolved
-    corpus count (None only when both params were passed explicitly
-    AND no count was supplied) so callers can size the probe-side
-    partitioning from it (:func:`_probe_partitions`)."""
-    if n_planes is None or n_tables is None:
-        if corpus_n is None:
-            corpus_n = frame.count()
-        if n_planes is None:
-            n_planes = _lsh_block_planes(corpus_n)
-        if n_tables is None:
-            n_tables = 16 if corpus_n < 50_000 else 8
-    return n_planes, n_tables, corpus_n
+    path): count the corpus unless the caller passed its size, planes
+    from _lsh_block_planes, tables 16 in the fixture regime / 8 at
+    scale. The count also sizes the probe-side partitioning
+    (:func:`_probe_partitions`)."""
+    if corpus_n is None:
+        corpus_n = frame.count()
+    return (_lsh_block_planes(corpus_n), 16 if corpus_n < 50_000 else 8,
+            corpus_n)
 
 
 def _probe_partitions(frame: DataFrame, n_planes: int, n_tables: int,
@@ -1044,9 +1045,7 @@ def _cosine_verify(keys: list[str], dim: int, threshold: float,
 
 
 def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.5,
-                       dim: int = 64, n_planes: int | None = None,
-                       n_tables: int | None = None,
-                       corpus_n: int | None = None,
+                       dim: int = 64, corpus_n: int | None = None,
                        block_col: str | None = None) -> DataFrame:
     """Vector near-dup pairs (round-6dp cosine >= threshold), blocked by
     random-hyperplane LSH buckets (vector.py's deterministic md5
@@ -1064,7 +1063,7 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.5,
     the high-similarity regime real dedup thresholds live in (cosine
     0.99 pairs: >=0.99 at 1 M; cosine ~0.5 pairs: effectively 0 — the
     inherent LSH trade; callers needing mid-similarity recall at scale
-    must raise n_tables or use the exact ``block_col`` variant).
+    use the exact ``block_col`` variant).
 
     SHAPE: one row per vector and band — (vec_id, buckets[n_tables],
     embedding, tbl, bucket) — is shuffled ONCE by (tbl, bucket), sorted
@@ -1092,15 +1091,14 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.5,
        threshold=0.9`` explicitly — with LSH blocking the emitted pair
        set is recall-total only in the regimes documented above."""
     if block_col is not None:
-        keys = ["block"]
+        keys, n_tables = ["block"], None
         rows = (embeddings.where(F.col(block_col).isNotNull())
                 .select("vec_id", "embedding",
                         F.col(block_col).alias("block"))
                 .repartition("block"))
     else:
         keys = ["tbl", "bucket"]
-        n_planes, n_tables, corpus_n = _lsh_params(
-            embeddings, n_planes, n_tables, corpus_n)
+        n_planes, n_tables, corpus_n = _lsh_params(embeddings, corpus_n)
         # All n_tables band buckets in ONE Arrow-batched pass (the
         # shared bucket kernel, vector._lsh_bucket_vectors). Explicit-count
         # repartition: user-specified counts survive AQE coalescing, so
@@ -1122,8 +1120,6 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.5,
 
 def embedding_incremental_near_dup(batch: DataFrame, corpus: DataFrame,
                                    threshold: float = 0.5, dim: int = 64,
-                                   n_planes: int | None = None,
-                                   n_tables: int | None = None,
                                    corpus_n: int | None = None) -> DataFrame:
     """Ingest-time embedding dedup — incremental_near_dups' shape for the
     vector modality: every BATCH vector checked against the EXISTING
@@ -1137,8 +1133,7 @@ def embedding_incremental_near_dup(batch: DataFrame, corpus: DataFrame,
     are blocking-independent wherever blocking recall is total (the
     fixture regime — pinned in tests) and the exhaustive batch×corpus
     SQL is a complete oracle."""
-    n_planes, n_tables, corpus_n = _lsh_params(
-        corpus, n_planes, n_tables, corpus_n)
+    n_planes, n_tables, corpus_n = _lsh_params(corpus, corpus_n)
     # First-collision emit instead of pair DISTINCT, the rule
     # embedding_near_dup's verify kernel applies: dedup is a
     # filter over the carried bucket vectors, never a candidate-volume-

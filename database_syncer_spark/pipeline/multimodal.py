@@ -871,24 +871,27 @@ def extract_features(with_payload: DataFrame) -> DataFrame:
 
 FRAME_SCHEMA = ("doc_id bigint, frame_id int, byte_offset int, "
                 "n_frame_bytes int, frame_md5 string")
+#: frame_sample's frame size in bytes and its sampling stride.
+_FRAME_BYTES, _FRAME_STRIDE = 64, 3
 
 
-def frame_sample(with_payload: DataFrame, frame_bytes: int = 64,
-                 stride: int = 3) -> DataFrame:
+def frame_sample(with_payload: DataFrame) -> DataFrame:
     """Frame sampling over binary payloads — the video-pipeline shape
     (decode container -> sample every Nth frame -> per-frame feature)
     with the codec stubbed: a "frame" is a fixed-size byte window of the
-    payload, sampling keeps every ``stride``-th frame, and the per-frame
-    feature is its md5. The Spark-side plumbing is exactly what a real
-    ffmpeg-backed sampler uses: one :func:`map_files` pass over
-    (doc_id, payload), frame fan-out INSIDE the worker (no row explosion
-    before the Python crossing), fixed output schema.
+    payload, sampling keeps every _FRAME_STRIDE-th frame, and the
+    per-frame feature is its md5. The Spark-side plumbing is exactly
+    what a real ffmpeg-backed sampler uses: one :func:`map_files` pass
+    over (doc_id, payload), frame fan-out INSIDE the worker (no row
+    explosion before the Python crossing), fixed output schema.
 
-    Scale: doc-local, zero shuffles; output rows ~ len/(frame_bytes·
-    stride) per doc. The DuckDB oracle recomputes frames from the TEXT
-    the payload encodes — byte-exact because the fixture text is ASCII
-    (one byte per char); a non-ASCII corpus would fail parity loudly,
-    not silently."""
+    Scale: doc-local, zero shuffles; output rows ~
+    len/(_FRAME_BYTES·_FRAME_STRIDE) per doc. The DuckDB oracle
+    recomputes frames from the TEXT the payload encodes — byte-exact
+    because the fixture text is ASCII (one byte per char); a non-ASCII
+    corpus would fail parity loudly, not silently."""
+    frame_bytes, stride = _FRAME_BYTES, _FRAME_STRIDE
+
     def frames(data: bytes) -> list[tuple]:
         out = []
         for f in range(0, -(-len(data) // frame_bytes), stride):
@@ -901,22 +904,16 @@ def frame_sample(with_payload: DataFrame, frame_bytes: int = 64,
                      "payload", FRAME_SCHEMA, frames)
 
 
-def check_dim(embeddings: DataFrame, col: str = "embedding") -> int:
-    """Probe AND validate: returns the corpus dim after one cheap
-    aggregate proves every row agrees (min(size) == max(size)). A ragged
-    or NULL-bearing corpus raises here, at plan-build time, before any
-    vector kernel runs (the kernels raise too, but only once a task
-    reaches the bad row). One size-only columnar scan, no data
-    movement."""
-    return check_dim_count(embeddings, col)[0]
-
-
-def check_dim_count(embeddings: DataFrame,
-                    col: str = "embedding") -> tuple[int, int]:
-    """check_dim plus the corpus row count from the same single-scan
-    probe — callers that size LSH blocking from N (pipeline/dedup.py)
-    shouldn't pay a second job for a number this aggregate already
-    computed."""
+def check_dim_count(embeddings: DataFrame) -> tuple[int, int]:
+    """Probe AND validate: (dim, row count) of the ``embedding`` column
+    after one cheap aggregate proves every row agrees (min(size) ==
+    max(size)). A ragged or NULL-bearing corpus raises here, at
+    plan-build time, before any vector kernel runs (the kernels raise
+    too, but only once a task reaches the bad row). One size-only
+    columnar scan, no data movement; the count comes from the same
+    scan, so callers that size LSH blocking from N (pipeline/dedup.py)
+    pay no second job."""
+    col = "embedding"
     row = embeddings.select(
         F.min(F.size(col)).alias("lo"), F.max(F.size(col)).alias("hi"),
         F.count(F.lit(1)).alias("n"), F.count(col).alias("nn")).first()
@@ -939,9 +936,10 @@ def multimodal_join(documents: DataFrame, embeddings: DataFrame,
                     dim: int) -> DataFrame:
     """Mixed text + vector + scalar table: documents ⋈ embeddings with
     the vector column's width and L2 norm (the :func:`vector.with_norm`
-    kernel). ``dim`` is the corpus width (pass :func:`check_dim`); the
-    kernel raises ``ValueError`` on a NULL embedding or one of another
-    width instead of yielding a wrong norm."""
+    kernel). ``dim`` is the corpus width (pass
+    ``check_dim_count(embeddings)[0]``); the kernel raises ``ValueError``
+    on a NULL embedding or one of another width instead of yielding a
+    wrong norm."""
     from database_syncer_spark.pipeline import vector as V
 
     joined = documents.join(

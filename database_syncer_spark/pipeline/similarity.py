@@ -17,15 +17,15 @@ and one round(cosine, 6) + row_number tail (:func:`_topk`).
 - ivf_ann_topk: inverted-file (IVF) partitioning. Deterministic seed
   centroids + one Lloyd refinement (assignment is an Arrow-batched
   numpy matmul, the per-cell mean one groupBy with per-dimension
-  F.sum). Queries probe their n_probe nearest cells; candidates =
+  F.sum). Queries probe their _N_PROBE nearest cells; candidates =
   corpus rows in those cells. At 100 TB the cell id is the storage
   partitioning key (write .partitionBy("cell")), so a probe reads
-  n_probe/n_cells of the corpus. Centroid state is C×dim floats —
+  _N_PROBE/_N_CELLS of the corpus. Centroid state is C×dim floats —
   driver-side model state, broadcast to executors (same shape as MLlib
   KMeans).
 - pq_ann_topk: product quantization. The corpus is stored as m small
   codes per vector; an asymmetric-distance scan (:func:`_adc_scan`)
-  keeps the top refine·k codes per query for the exact re-rank.
+  keeps the top _REFINE·_K codes per query for the exact re-rank.
 - ivfpq_ann_topk: IVF-PQ, the same ADC scan restricted to each query's
   probed cells.
 """
@@ -38,9 +38,20 @@ from pyspark.sql import functions as F
 from database_syncer_spark.arrow_map import map_arrow
 from database_syncer_spark.pipeline import vector as V
 
+# The one ANN configuration the registry keys, the bench and the pinned
+# recall rows (queries/pipeline.py ``_ANN_PINS``) run: queries are the
+# vec_id < _N_QUERIES rows, each keeps its top _K neighbors.
+_N_QUERIES = 10
+_K = 10
+_N_PLANES, _N_TABLES = 4, 2         # LSH: 2**4 buckets per table
+_N_CELLS, _N_PROBE = 16, 4          # IVF: cells trained, cells probed
+_PQ_M, _K_SUB = 8, 16               # PQ: subspaces, centroids each
+_REFINE = 8                         # PQ: _REFINE·_K ADC survivors per query
+_LLOYD_ITERS = 1                    # refinement passes of both trainers
 
-def brute_force_topk(embeddings: DataFrame, n_queries: int = 10,
-                     k: int = 10, dim: int = 64) -> DataFrame:
+
+def brute_force_topk(embeddings: DataFrame, n_queries: int = _N_QUERIES,
+                     k: int = _K, dim: int = 64) -> DataFrame:
     """Exact top-k cosine neighbors for the first ``n_queries`` vectors.
 
     The query rows broadcast into a cross join with the corpus, and
@@ -49,7 +60,7 @@ def brute_force_topk(embeddings: DataFrame, n_queries: int = 10,
     is stable across engines and shuffle orders.
 
     ``dim`` is the width of every embedding; pass
-    ``multimodal.check_dim(df)`` rather than hardcode it. The kernel
+    ``multimodal.check_dim_count(df)[0]`` rather than hardcode it. The kernel
     views each batch as an n×dim matrix, so a NULL row or a row of any
     other length raises ``ValueError`` there."""
     e = embeddings.select("vec_id", "embedding")
@@ -84,8 +95,8 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def ann_recall(embeddings: DataFrame, ann: DataFrame, n_queries: int = 10,
-               k: int = 10, dim: int = 64) -> DataFrame:
+def ann_recall(embeddings: DataFrame, ann: DataFrame,
+               dim: int = 64) -> DataFrame:
     """Score-threshold recall@k of an ANN result against the exact top-k.
 
     A retrieved neighbor counts as a hit when its round(cosine, 6) is >=
@@ -102,53 +113,46 @@ def ann_recall(embeddings: DataFrame, ann: DataFrame, n_queries: int = 10,
     pinned measured values (engine-independent recomputation of LSH/IVF/PQ
     internals in SQL isn't feasible; quality bounds are asserted in
     tests/test_pipeline.py)."""
-    exact = brute_force_topk(embeddings, n_queries=n_queries, k=k, dim=dim)
+    exact = brute_force_topk(embeddings, dim=dim)
     thr = exact.groupBy("query_id").agg(F.min("cosine").alias("__thr"))
-    # ONE consumption of the exact side (r12): LEFT-join the ANN rows
-    # onto the thresholds and count hits inside the same aggregation.
-    # The previous shape referenced ``thr`` twice (inner hits join +
-    # left join back from the query set, so zero-retrieval queries
-    # report recall 0 instead of vanishing) and Catalyst planned the
-    # whole O(Q×N) brute-force subtree TWICE — the before-plan of every
-    # sim_*_ann key shows two BroadcastNestedLoopJoin Cross + Window
-    # chains (OPTIMIZATION_r12.md). The left join from thr
-    # keeps the zero-retrieval guarantee: such queries yield one
-    # NULL-cosine row, when() scores it 0, and the sum is never NULL.
+    # ONE consumption of the exact side: LEFT-join the ANN rows onto the
+    # thresholds and count hits inside the same aggregation (a second
+    # reference to ``thr`` would plan the O(Q×N) brute-force subtree
+    # twice). The left join keeps zero-retrieval queries: such a query
+    # yields one NULL-cosine row, when() scores it 0, the sum is never
+    # NULL.
     n_hits = (F.sum(F.when(F.col("cosine") >= F.col("__thr"), 1)
                     .otherwise(0)).cast("int"))
     return (
         thr.join(ann.select("query_id", "cosine"), "query_id", "left")
         .groupBy("query_id")
         .agg(n_hits.alias("n_hits"))
-        .select("query_id", F.lit(k).alias("k"), "n_hits",
-                (F.col("n_hits") / F.lit(float(k))).alias("recall"))
+        .select("query_id", F.lit(_K).alias("k"), "n_hits",
+                (F.col("n_hits") / F.lit(float(_K))).alias("recall"))
     )
 
 
-def _lsh_rows(embeddings: DataFrame, n_planes: int, n_tables: int,
-              dim: int) -> DataFrame:
+def _lsh_rows(embeddings: DataFrame, dim: int) -> DataFrame:
     """(vec_id, embedding, tbl, bucket): one row per vector and LSH
     table, from the shared bucket kernel (vector._lsh_bucket_vectors)."""
     return V._lsh_band_rows(V._lsh_bucket_vectors(
-        embeddings, n_planes, n_tables, dim)).drop("buckets")
+        embeddings, _N_PLANES, _N_TABLES, dim)).drop("buckets")
 
 
-def build_lsh_index(embeddings: DataFrame, n_planes: int = 4,
-                    n_tables: int = 2, dim: int = 64) -> dict:
+def build_lsh_index(embeddings: DataFrame, dim: int = 64) -> dict:
     """The at-rest LSH layout: the corpus with per-table bucket ids —
     what a 100-TB deployment precomputes once and stores partitioned by
     (tbl, bucket). Pass the result as ``index=`` to :func:`lsh_ann_topk`
     to time/serve queries without re-bucketing the corpus per call
     (persist it first to actually pin the at-rest state)."""
-    # carry the build params: serving must bucket queries with the SAME
+    # carry the build dim: serving must bucket queries with the SAME
     # planes the corpus was bucketed with, whatever the caller passes
-    return {"bucketed": _lsh_rows(embeddings, n_planes, n_tables, dim),
-            "n_planes": n_planes, "n_tables": n_tables, "dim": dim}
+    return {"bucketed": _lsh_rows(embeddings, dim), "dim": dim}
 
 
-def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
-                 n_planes: int = 4, n_tables: int = 2,
-                 dim: int = 64, index: dict | None = None) -> DataFrame:
+def lsh_ann_topk(embeddings: DataFrame, n_queries: int = _N_QUERIES,
+                 k: int = _K, dim: int = 64,
+                 index: dict | None = None) -> DataFrame:
     """Approximate top-k: union of per-table bucket matches, exact re-rank.
 
     Returns the same schema as brute_force_topk (rank within retrieved
@@ -157,12 +161,9 @@ def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
     built inline when absent — results are identical either way (the
     build is deterministic), pinned by test."""
     if index is None:
-        index = build_lsh_index(embeddings, n_planes=n_planes,
-                                n_tables=n_tables, dim=dim)
-    # serve with the params the index was BUILT with (query buckets must
+        index = build_lsh_index(embeddings, dim=dim)
+    # serve with the dim the index was BUILT with (query buckets must
     # come from the same hyperplanes as the corpus buckets)
-    n_planes = index.get("n_planes", n_planes)
-    n_tables = index.get("n_tables", n_tables)
     dim = index.get("dim", dim)
 
     # Queries come from the EMBEDDINGS argument (bucket just the Q query
@@ -170,8 +171,7 @@ def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
     # prebuilt index, drawing queries from index["bucketed"] would
     # silently serve the wrong query set whenever the caller passes a
     # different embeddings frame (r4 review).
-    q = (_lsh_rows(embeddings.where(F.col("vec_id") < n_queries),
-                   n_planes, n_tables, dim)
+    q = (_lsh_rows(embeddings.where(F.col("vec_id") < n_queries), dim)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("q_emb"), "tbl", "bucket"))
     # Q·n_tables rows vs the corpus: broadcast the query side so the
@@ -187,16 +187,16 @@ def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
                  .dropDuplicates(["query_id", "neighbor_id"]), k)
 
 
-def train_pq_codebooks(embeddings: DataFrame, m: int = 8, dim: int = 64,
-                       k_sub: int = 16,
-                       lloyd_iters: int = 1) -> list[list[list[float]]]:
+def train_pq_codebooks(embeddings: DataFrame, m: int = _PQ_M,
+                       dim: int = 64,
+                       k_sub: int = _K_SUB) -> list[list[list[float]]]:
     """Product-quantization codebooks: ``m`` subspaces of dim/m dims,
     ``k_sub`` centroids each. Deterministic like IVF: seeds are the
     k_sub corpus vectors with smallest xxhash64(vec_id), sliced per
-    subspace; each Lloyd pass assigns every vector's m subvectors to
-    their nearest sub-centroid (one Arrow map pass) and re-averages
-    (ONE groupBy over the exploded (subspace, code) pairs — 2·m·k_sub
-    rows of dim/m sums cross the wire, corpus-size-independent).
+    subspace; each of the _LLOYD_ITERS passes assigns every vector's m
+    subvectors to their nearest sub-centroid (one Arrow map pass) and
+    re-averages (ONE groupBy over the exploded (subspace, code) pairs —
+    2·m·k_sub rows of dim/m sums cross the wire, corpus-size-independent).
 
     Everything PQ-side — seeds, assignment, re-average, the ADC LUT —
     operates in L2-NORMALIZED space (cosine setting), so the Lloyd sums
@@ -216,7 +216,7 @@ def train_pq_codebooks(embeddings: DataFrame, m: int = 8, dim: int = 64,
     base = np.stack([_normalize([float(v) for v in r.embedding])
                      for r in seeds])           # k_sub × dim
     books = [base[:, s * d_sub:(s + 1) * d_sub].copy() for s in range(m)]
-    for _ in range(lloyd_iters):
+    for _ in range(_LLOYD_ITERS):
         coded = V.with_norm(_with_pq_codes(
             embeddings.select("embedding"), books, m, dim),
             "embedding", dim, "__nrm")
@@ -238,8 +238,8 @@ def train_pq_codebooks(embeddings: DataFrame, m: int = 8, dim: int = 64,
     return [b.tolist() for b in books]
 
 
-def _with_pq_codes(df: DataFrame, books: list, m: int, dim: int,
-                   emb_col: str = "embedding") -> DataFrame:
+def _with_pq_codes(df: DataFrame, books: list, m: int,
+                   dim: int) -> DataFrame:
     """Append ``pq_codes``: per subspace, the nearest sub-centroid id
     (:func:`_pq_encode`), via one Arrow-batched numpy pass (same Janino
     rationale as `_with_probe_cells`)."""
@@ -254,7 +254,7 @@ def _with_pq_codes(df: DataFrame, books: list, m: int, dim: int,
 
     def assign(batches):
         for b in batches:
-            x = V._list_matrix(b.column(emb_col), dim).astype(np.float64)
+            x = V._list_matrix(b.column("embedding"), dim).astype(np.float64)
             yield b.columns + [_pq_encode(x, bmats, m, dim // m)]
 
     return map_arrow(df, out_schema, assign)
@@ -282,31 +282,27 @@ def _topk_cols_deterministic(approx, vids, keep):
     return out
 
 
-def build_pq_index(embeddings: DataFrame, m: int = 8, dim: int = 64,
-                   k_sub: int = 16) -> dict:
+def build_pq_index(embeddings: DataFrame, dim: int = 64) -> dict:
     """The at-rest PQ artifact: trained codebooks (model state,
     m×k_sub×(dim/m) floats) + the coded corpus (m uint8 codes per row —
     the 32× compression that IS the point of PQ). A deployment builds
     this once per corpus version; pass as ``index=`` to
     :func:`pq_ann_topk` to serve without retraining/recoding."""
-    if dim % m:
-        raise ValueError(f"dim={dim} not divisible by m={m}")
-    books = train_pq_codebooks(embeddings, m=m, dim=dim, k_sub=k_sub)
+    books = train_pq_codebooks(embeddings, dim=dim)
     coded = _with_pq_codes(
-        embeddings.select("vec_id", "embedding"), books, m, dim
+        embeddings.select("vec_id", "embedding"), books, _PQ_M, dim
     ).select("vec_id", "pq_codes")
     return {"books": books, "coded": coded}
 
 
-def pq_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
-                m: int = 8, dim: int = 64, k_sub: int = 16,
-                refine: int = 8, index: dict | None = None) -> DataFrame:
+def pq_ann_topk(embeddings: DataFrame, dim: int = 64,
+                index: dict | None = None) -> DataFrame:
     """Approximate top-k via product quantization + asymmetric distance
     (ADC): corpus vectors live as m uint8 codes (8 bytes vs 256 — the
     32× memory compression that fits a 100-TB embedding corpus in a
     cluster's RAM), each query builds an m×k_sub lookup table of
     subspace dot products, and the scan scores a row with m table
-    lookups instead of dim multiplies. The top refine·k candidates by
+    lookups instead of dim multiplies. The top _REFINE·_K candidates by
     ADC score are re-ranked exactly against the full vectors; output
     schema matches brute_force_topk.
 
@@ -314,23 +310,23 @@ def pq_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
     is read — at scale the two compose (IVF-PQ: probe cells, scan
     codes, re-rank survivors). The codes scan is one map pass over the
     code table (:func:`_adc_scan`), and the scorer keeps only each
-    BATCH's top refine·k per query, so the window that selects global
-    candidates shuffles ~refine·k·Q·n_batches rows, never the Q×N cross
-    product; the exact re-rank then joins refine·k·Q rows back to the
+    BATCH's top _REFINE·_K per query, so the window that selects global
+    candidates shuffles ~_REFINE·_K·Q·n_batches rows, never the Q×N cross
+    product; the exact re-rank then joins _REFINE·_K·Q rows back to the
     full vectors by vec_id."""
     if index is None:
-        index = build_pq_index(embeddings, m=m, dim=dim, k_sub=k_sub)
-    qarr, qmat = _query_matrix(embeddings, n_queries)
-    scored = _adc_scan(index["coded"], qarr, qmat, index["books"], m,
-                       refine * k, None)
-    return _exact_rerank(embeddings, scored, n_queries, k, refine, dim)
+        index = build_pq_index(embeddings, dim=dim)
+    qarr, qmat = _query_matrix(embeddings)
+    scored = _adc_scan(index["coded"], qarr, qmat, index["books"], _PQ_M,
+                       _REFINE * _K, None)
+    return _exact_rerank(embeddings, scored, dim)
 
 
-def _query_matrix(embeddings: DataFrame, n_queries: int):
+def _query_matrix(embeddings: DataFrame):
     """(query ids, Q×dim L2-normalized query matrix), driver-side."""
     import numpy as np
 
-    qrows = (embeddings.where(F.col("vec_id") < n_queries)
+    qrows = (embeddings.where(F.col("vec_id") < _N_QUERIES)
              .select("vec_id", "embedding").collect())
     return (np.asarray([int(r.vec_id) for r in qrows]),
             np.stack([_normalize([float(v) for v in r.embedding])
@@ -342,7 +338,7 @@ def _adc_scan(coded: DataFrame, qarr, qmat, books: list, m: int, keep: int,
     """(query_id, vec_id, adc) — the ADC scan of a code table. Each query
     builds LUT[q, s, j] = dot(q_s, c_sj) (Q·m·k_sub floats, broadcast
     state) and a code row scores round(Σ_s LUT[q, s, codes[s]], 9); the
-    9-dp round makes the refine·k boundary partition-independent. With
+    9-dp round makes the _REFINE·_K boundary partition-independent. With
     ``probe_ok`` (a Q×C bool mask over IVF cells) a row competes only
     for queries that probe its ``cell``: the at-rest partition pruning,
     expressed as a mask because the local fixture is one unpartitioned
@@ -387,46 +383,44 @@ def _adc_scan(coded: DataFrame, qarr, qmat, books: list, m: int, keep: int,
             .where(F.col("adc") != F.lit(float("-inf"))))
 
 
-def _exact_rerank(embeddings: DataFrame, scored: DataFrame, n_queries: int,
-                  k: int, refine: int, dim: int) -> DataFrame:
-    """Shared ADC tail: global top refine·k by approximate score, then
+def _exact_rerank(embeddings: DataFrame, scored: DataFrame,
+                  dim: int) -> DataFrame:
+    """Shared ADC tail: global top _REFINE·_K by approximate score, then
     exact cosine re-rank against the full vectors (schema matches
     brute_force_topk)."""
     w_adc = W.partitionBy("query_id").orderBy(
         F.col("adc").desc(), F.col("vec_id"))
     cands = (scored.withColumn("__r", F.row_number().over(w_adc))
-             .where(F.col("__r") <= refine * k)
+             .where(F.col("__r") <= _REFINE * _K)
              .select("query_id", "vec_id"))
     e = embeddings.select("vec_id", "embedding")
-    q = (embeddings.where(F.col("vec_id") < n_queries)
+    q = (embeddings.where(F.col("vec_id") < _N_QUERIES)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("q_emb")))
     joined = cands.join(e, "vec_id").join(F.broadcast(q), "query_id")
-    return _topk(_pair_cosines(joined, dim), k)
+    return _topk(_pair_cosines(joined, dim), _K)
 
 
-def build_ivfpq_index(embeddings: DataFrame, n_cells: int = 16, m: int = 8,
-                      dim: int = 64, k_sub: int = 16) -> dict:
+def build_ivfpq_index(embeddings: DataFrame, dim: int = 64) -> dict:
     """The at-rest IVF-PQ artifact: IVF centroids + PQ codebooks (model
     state) and the corpus coded in ONE Arrow pass with (cell, pq_codes)
     — exactly what a 100-TB deployment stores ``partitionBy("cell")``.
     Pass as ``index=`` to :func:`ivfpq_ann_topk` to serve without
     retraining or re-coding."""
-    if dim % m:
-        raise ValueError(f"dim={dim} not divisible by m={m}")
-    centroids = train_ivf_centroids(embeddings, n_cells=n_cells, dim=dim)
-    books = train_pq_codebooks(embeddings, m=m, dim=dim, k_sub=k_sub)
+    if dim % _PQ_M:
+        raise ValueError(f"dim={dim} not divisible by m={_PQ_M}")
+    centroids = train_ivf_centroids(embeddings, dim=dim)
+    books = train_pq_codebooks(embeddings, dim=dim)
     coded = _with_cell_and_codes(
-        embeddings.select("vec_id", "embedding"), centroids, books, m, dim)
+        embeddings.select("vec_id", "embedding"), centroids, books, _PQ_M,
+        dim)
     return {"centroids": centroids, "books": books, "coded": coded}
 
 
-def ivfpq_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
-                   n_cells: int = 16, n_probe: int = 4, m: int = 8,
-                   dim: int = 64, k_sub: int = 16,
-                   refine: int = 8, index: dict | None = None) -> DataFrame:
+def ivfpq_ann_topk(embeddings: DataFrame, dim: int = 64,
+                   index: dict | None = None) -> DataFrame:
     """IVF-PQ: the composed 100-TB serving shape — IVF prunes WHICH rows
-    are scanned (each query touches n_probe/n_cells of the corpus; at
+    are scanned (each query touches _N_PROBE/_N_CELLS of the corpus; at
     rest the code table partitions by cell so the pruning happens at the
     parquet scan), PQ compresses WHAT is scanned (m uint8 codes per row,
     ADC lookups instead of dim multiplies), and the survivors re-rank
@@ -441,18 +435,17 @@ def ivfpq_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
     import numpy as np
 
     if index is None:
-        index = build_ivfpq_index(embeddings, n_cells=n_cells, m=m,
-                                  dim=dim, k_sub=k_sub)
+        index = build_ivfpq_index(embeddings, dim=dim)
     centroids = index["centroids"]
-    qarr, qmat = _query_matrix(embeddings, n_queries)
+    qarr, qmat = _query_matrix(embeddings)
     # Per-query probed cells, driver-side (Q rows of model-state work).
     order = _nearest_cells(
-        qmat, np.asarray(centroids, dtype=np.float64).T, n_probe)
+        qmat, np.asarray(centroids, dtype=np.float64).T, _N_PROBE)
     probe_ok = np.zeros((len(qarr), len(centroids)), dtype=bool)
     np.put_along_axis(probe_ok, order, True, axis=1)  # Q × C mask
-    scored = _adc_scan(index["coded"], qarr, qmat, index["books"], m,
-                       refine * k, probe_ok)
-    return _exact_rerank(embeddings, scored, n_queries, k, refine, dim)
+    scored = _adc_scan(index["coded"], qarr, qmat, index["books"], _PQ_M,
+                       _REFINE * _K, probe_ok)
+    return _exact_rerank(embeddings, scored, dim)
 
 
 def _with_cell_and_codes(df: DataFrame, centroids: list[list[float]],
@@ -479,7 +472,7 @@ def _with_cell_and_codes(df: DataFrame, centroids: list[list[float]],
 
 
 def _with_probe_cells(df: DataFrame, centroids: list[list[float]],
-                      n_probe: int, emb_col: str = "embedding") -> DataFrame:
+                      n_probe: int) -> DataFrame:
     """Append ``probe_cells``: the n_probe nearest centroid ids per row,
     nearest first, via an Arrow-batched numpy matmul (``map_arrow``).
 
@@ -507,7 +500,8 @@ def _with_probe_cells(df: DataFrame, centroids: list[list[float]],
 
     def assign(batches):
         for b in batches:
-            x = V._list_matrix(b.column(emb_col), len(cmat)).astype(np.float64)
+            x = V._list_matrix(b.column("embedding"),
+                               len(cmat)).astype(np.float64)
             yield b.columns + [_nearest_cells(x, cmat, n_probe)]
 
     return map_arrow(df, out_schema, assign)
@@ -550,11 +544,11 @@ def _normalize(vec: list[float]) -> list[float]:
     return [v / n for v in vec]
 
 
-def train_ivf_centroids(embeddings: DataFrame, n_cells: int = 16,
-                        dim: int = 64, lloyd_iters: int = 1) -> list[list[float]]:
+def train_ivf_centroids(embeddings: DataFrame, n_cells: int = _N_CELLS,
+                        dim: int = 64) -> list[list[float]]:
     """Deterministic IVF centroids: seeds = the n_cells corpus vectors with
     the smallest xxhash64(vec_id) (a uniform, order-independent sample),
-    then ``lloyd_iters`` refinement passes. Each pass is one shuffle:
+    then _LLOYD_ITERS refinement passes. Each pass is one shuffle:
     groupBy(cell) with per-dimension F.sum — 2×C×dim doubles cross the
     wire, independent of corpus size. Centroid state (C×dim floats) lives
     on the driver like any broadcast model."""
@@ -564,7 +558,7 @@ def train_ivf_centroids(embeddings: DataFrame, n_cells: int = 16,
              .select("embedding")
              .collect())
     centroids = [_normalize([float(v) for v in r.embedding]) for r in seeds]
-    for _ in range(lloyd_iters):
+    for _ in range(_LLOYD_ITERS):
         assigned = _with_probe_cells(
             embeddings.select("embedding"), centroids, n_probe=1)
         sums = (assigned
@@ -585,14 +579,13 @@ def train_ivf_centroids(embeddings: DataFrame, n_cells: int = 16,
     return centroids
 
 
-def build_ivf_index(embeddings: DataFrame, n_cells: int = 16,
-                    dim: int = 64) -> dict:
+def build_ivf_index(embeddings: DataFrame, dim: int = 64) -> dict:
     """The at-rest IVF artifact: trained centroids (C×dim model state) +
     the corpus with its nearest-cell assignment — what a deployment
     stores ``partitionBy("cell")`` so probes prune at the scan. Pass as
     ``index=`` to :func:`ivf_ann_topk` to serve without retraining or
     re-assigning."""
-    centroids = train_ivf_centroids(embeddings, n_cells=n_cells, dim=dim)
+    centroids = train_ivf_centroids(embeddings, dim=dim)
     return {"centroids": centroids,
             "assigned": _assign_cells(embeddings, centroids)}
 
@@ -623,26 +616,25 @@ def append_ivf_index(index: dict, batch: DataFrame) -> dict:
                 _assign_cells(batch, centroids))}
 
 
-def ivf_ann_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 10,
-                 n_cells: int = 16, n_probe: int = 4,
-                 dim: int = 64, index: dict | None = None) -> DataFrame:
+def ivf_ann_topk(embeddings: DataFrame, dim: int = 64,
+                 index: dict | None = None) -> DataFrame:
     """Approximate top-k via IVF cells: assign corpus rows to their nearest
-    centroid, probe each query's n_probe nearest cells, exact re-rank of
+    centroid, probe each query's _N_PROBE nearest cells, exact re-rank of
     the candidates. Same output schema as brute_force_topk.
 
     Scale path: persist the corpus partitioned by cell
-    (df.write.partitionBy("cell")) so a probe prunes to n_probe/n_cells of
+    (df.write.partitionBy("cell")) so a probe prunes to _N_PROBE/_N_CELLS of
     the data at the parquet-scan level; the candidate join below then
     shuffles only candidates, never the corpus."""
     if index is None:
-        index = build_ivf_index(embeddings, n_cells=n_cells, dim=dim)
+        index = build_ivf_index(embeddings, dim=dim)
     centroids, e = index["centroids"], index["assigned"]
     q = (_with_probe_cells(
             embeddings.select("vec_id", "embedding")
-            .where(F.col("vec_id") < n_queries), centroids, n_probe=n_probe)
+            .where(F.col("vec_id") < _N_QUERIES), centroids, n_probe=_N_PROBE)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("q_emb"),
                  F.explode("probe_cells").alias("cell")))
     cand = (F.broadcast(q).join(e, "cell")
             .where(F.col("vec_id") != F.col("query_id")))
-    return _topk(_pair_cosines(cand, dim), k)
+    return _topk(_pair_cosines(cand, dim), _K)

@@ -13,6 +13,18 @@ from pyspark.sql import functions as F
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 
+# The one setting each operator runs with (the registry keys and their
+# DuckDB oracles use exactly these values).
+_NGRAM_K = 3                      # decontaminate, repetition_score grams
+_HIST_BUCKET_CHARS = 100          # length_histogram bucket width
+_LM_FLAG_BELOW = -6.0             # ngram_lm_score: flag a lower mean log2 P
+_PACK_CAPACITY, _PACK_SHARDS = 64, 8   # pack_greedy bin tokens, shards
+_CHUNK_TOKENS = 16                # chunk_split chunk length
+_LANG_PROFILE_TOP_N = 40          # bigrams per language profile
+# repetition_score flags a doc with >= _REP_MIN_NGRAMS grams whose
+# duplicate-gram fraction >= _REP_DUP or top-gram share >= _REP_TOP
+_REP_DUP, _REP_TOP, _REP_MIN_NGRAMS = 0.3, 0.2, 5
+
 #: BPE-ish token pattern: letter runs, digit runs, single non-alnum marks.
 TOKEN_PATTERN = "[a-z]+|[A-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
 
@@ -39,19 +51,18 @@ def lang_stats(documents: DataFrame) -> DataFrame:
     )
 
 
-def length_histogram(documents: DataFrame,
-                     bucket_chars: int = 100) -> DataFrame:
+def length_histogram(documents: DataFrame) -> DataFrame:
     """Per-domain document-length histogram — the corpus-audit / data-
     card staple (what share of each language is short snippets vs long
     documents, and where truncation thresholds would bite).
 
-    Buckets are INTEGER division (`n_chars DIV bucket_chars`), not
+    Buckets are INTEGER division (`n_chars DIV 100`), not
     float log buckets: exact in every engine, so the oracle matches
     bit-for-bit. At 100 TB this is one partial-aggregated groupBy whose
     key space is (languages × buckets) — a few hundred groups; the
     map-side combine reduces the shuffle to group-count rows per
     partition regardless of corpus size."""
-    bucket = F.expr(f"n_chars DIV {int(bucket_chars)}").cast("int")
+    bucket = F.expr(f"n_chars DIV {_HIST_BUCKET_CHARS}").cast("int")
     return documents.groupBy("lang", bucket.alias("bucket")).agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("sum_chars"),
@@ -189,8 +200,7 @@ def token_count_bpe(documents: DataFrame) -> DataFrame:
     )
 
 
-def ngram_lm_score(documents: DataFrame,
-                   flag_below: float = -6.0) -> DataFrame:
+def ngram_lm_score(documents: DataFrame) -> DataFrame:
     """Corpus-LM fluency scoring: train a bigram MLE model ON the corpus
     itself and score each doc by its mean log2 P(w2|w1) — the in-engine
     analog of the KenLM-perplexity filters every pre-training pipeline
@@ -224,26 +234,25 @@ def ngram_lm_score(documents: DataFrame,
     return (scored.groupBy("doc_id")
             .agg(F.count("*").alias("n_bigrams"),
                  F.round(F.avg("lp"), 6).alias("lm_score"))
-            .withColumn("flagged", F.col("lm_score") < flag_below))
+            .withColumn("flagged", F.col("lm_score") < _LM_FLAG_BELOW))
 
 
 PACK_SCHEMA = "doc_id long, shard int, bin_id long, n_tokens int"
 
 
-def pack_greedy(documents: DataFrame, capacity: int = 64,
-                n_shards: int = 8) -> DataFrame:
+def pack_greedy(documents: DataFrame) -> DataFrame:
     """Greedy sequence packing: assign docs to fixed-capacity token bins
     (the batching step after chunking — packing short sequences together
     is what keeps training batches dense). Packing is inherently
     SEQUENTIAL (each bin decision depends on the previous fill), which
     is exactly why the distributed design matters: docs hash into
-    ``n_shards`` independent shards (doc_id % n_shards), each shard
+    _PACK_SHARDS independent shards (doc_id % _PACK_SHARDS), each shard
     packs greedily in doc_id order inside ONE applyInPandas group, and
     bin ids are globalized as shard·2⁴¹ + local index. At 100 TB the
     shard count is sized so a shard's doc METADATA fits one task —
     parallelism × determinism, no global sequence.
 
-    Greedy rule: a doc joins the current bin iff fill + n ≤ capacity,
+    Greedy rule: a doc joins the current bin iff fill + n ≤ _PACK_CAPACITY,
     else it opens a new bin (an oversized doc owns its bin). The DuckDB
     oracle replays the same rule with a recursive CTE per shard, so the
     assignment is value-verified, not just shape-checked."""
@@ -251,7 +260,7 @@ def pack_greedy(documents: DataFrame, capacity: int = 64,
 
     d = (documents
          .select("doc_id",
-                 (F.col("doc_id") % n_shards).cast("int").alias("shard"),
+                 (F.col("doc_id") % _PACK_SHARDS).cast("int").alias("shard"),
                  F.size(tokens(F.col("text"))).cast("int").alias("n_tokens")))
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -259,7 +268,7 @@ def pack_greedy(documents: DataFrame, capacity: int = 64,
         bins, fill, local = [], 0, 0
         for n in pdf["n_tokens"]:
             n = int(n)
-            if local == 0 or fill + n > capacity:
+            if local == 0 or fill + n > _PACK_CAPACITY:
                 local += 1
                 fill = n
             else:
@@ -275,7 +284,7 @@ def pack_greedy(documents: DataFrame, capacity: int = 64,
     return d.groupBy("shard").applyInPandas(pack, PACK_SCHEMA)
 
 
-def chunk_split(documents: DataFrame, chunk_tokens: int = 16) -> DataFrame:
+def chunk_split(documents: DataFrame) -> DataFrame:
     """Context-window chunking: split each document's token stream into
     fixed-size non-overlapping chunks (the sequence-slicing step every
     training pipeline runs before packing/batching). Chunk i of a doc
@@ -290,11 +299,11 @@ def chunk_split(documents: DataFrame, chunk_tokens: int = 16) -> DataFrame:
          .select("doc_id", tokens(F.col("text")).alias("toks"))
          .withColumn("n_tokens", F.size("toks"))
          .where(F.col("n_tokens") > 0))
-    n_chunks = F.ceil(F.col("n_tokens") / F.lit(chunk_tokens)).cast("int")
+    n_chunks = F.ceil(F.col("n_tokens") / F.lit(_CHUNK_TOKENS)).cast("int")
     d = d.withColumn(
         "chunk_id", F.explode(F.sequence(F.lit(0), n_chunks - F.lit(1))))
-    start = (F.col("chunk_id") * chunk_tokens).cast("int")
-    length = F.least(F.lit(chunk_tokens),
+    start = (F.col("chunk_id") * _CHUNK_TOKENS).cast("int")
+    length = F.least(F.lit(_CHUNK_TOKENS),
                      F.col("n_tokens") - start).cast("int")
     return d.select(
         "doc_id",
@@ -371,10 +380,11 @@ _BIGRAMS_EXPR = (
 )
 
 
-def train_lang_profiles(documents: DataFrame, top_n: int = 40) -> DataFrame:
+def train_lang_profiles(documents: DataFrame) -> DataFrame:
     """Per-language top-N character bigrams by document frequency.
 
-    Profiles are tiny (n_langs x top_n) — they broadcast to classification.
+    Profiles are tiny (n_langs x _LANG_PROFILE_TOP_N) — they broadcast
+    to classification.
     """
     from pyspark.sql import Window as W
 
@@ -386,7 +396,7 @@ def train_lang_profiles(documents: DataFrame, top_n: int = 40) -> DataFrame:
     w = W.partitionBy("lang").orderBy(F.col("df").desc(), F.col("bg"))
     return (
         bigrams.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= top_n)
+        .where(F.col("rk") <= _LANG_PROFILE_TOP_N)
         .groupBy("lang")
         .agg(F.array_sort(F.collect_set("bg")).alias("profile"))
     )
@@ -424,10 +434,9 @@ def langid(spark: SparkSession, documents: DataFrame) -> DataFrame:
     return classify_lang(documents, train_lang_profiles(documents))
 
 
-def decontaminate(documents: DataFrame, eval_docs: DataFrame,
-                  k: int = 3) -> DataFrame:
+def decontaminate(documents: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing any
-    word k-gram with an evaluation set (the standard pre-training hygiene
+    word 3-gram with an evaluation set (the standard pre-training hygiene
     step — eval n-grams leaking into the corpus inflate benchmarks).
 
     Plan shape: the eval set's distinct shingles BROADCAST (eval sets are
@@ -438,6 +447,7 @@ def decontaminate(documents: DataFrame, eval_docs: DataFrame,
     subset is a `WHERE NOT contaminated` away."""
     from database_syncer_spark.pipeline.dedup import with_shingles
 
+    k = _NGRAM_K
     eval_sh = (with_shingles(eval_docs, k)
                .select(F.explode("shingles").alias("sh")).distinct())
     # Corpus side: positional explode + codegen'd slice/concat_ws (the
@@ -466,13 +476,10 @@ def decontaminate(documents: DataFrame, eval_docs: DataFrame,
                     (n > 0).alias("contaminated")))
 
 
-def repetition_score(documents: DataFrame, k: int = 3,
-                     dup_threshold: float = 0.3,
-                     top_threshold: float = 0.2,
-                     min_ngrams: int = 5) -> DataFrame:
+def repetition_score(documents: DataFrame) -> DataFrame:
     """Gopher-style within-document repetition filter: the fraction of
-    duplicate word k-grams and the share of the single most frequent
-    k-gram. Highly repetitive documents (boilerplate, scraped spam,
+    duplicate word 3-grams and the share of the single most frequent
+    3-gram. Highly repetitive documents (boilerplate, scraped spam,
     degenerate generations) are the classic pre-training removal class.
 
     One explode -> two-level hash aggregation (per-(doc, gram) counts,
@@ -489,10 +496,11 @@ def repetition_score(documents: DataFrame, k: int = 3,
     is 1 corpus-sized exchange + partition-local aggs. The repetitive
     flag compares UNROUNDED doubles (the reported fractions round to
     6 dp for display/hashing only). Documents with fewer than
-    ``min_ngrams`` k-grams are never flagged — a one-gram doc trivially
+    _REP_MIN_NGRAMS k-grams are never flagged — a one-gram doc trivially
     has top_frac 1.0, and repetition statistics on a handful of grams
     are noise, not signal (length gates are standard in the
     Gopher-family filters)."""
+    k = _NGRAM_K
     toks = (documents.select("doc_id", F.split("text", " ").alias("__toks"))
             .repartition("doc_id"))
     raw = F.expr(
@@ -511,8 +519,8 @@ def repetition_score(documents: DataFrame, k: int = 3,
         "doc_id", "n_ngrams",
         F.round(dup_frac, 6).alias("dup_ngram_frac"),
         F.round(top_frac, 6).alias("top_ngram_frac"),
-        ((F.col("n_ngrams") >= min_ngrams)
-         & ((dup_frac >= dup_threshold) | (top_frac >= top_threshold)))
+        ((F.col("n_ngrams") >= _REP_MIN_NGRAMS)
+         & ((dup_frac >= _REP_DUP) | (top_frac >= _REP_TOP)))
         .alias("repetitive"))
 
 
@@ -551,7 +559,7 @@ _HTML_ENTITIES = [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
                   ("&#39;", "'"), ("&nbsp;", " ")]
 
 
-def html_strip(documents: DataFrame, html_col: str = "html") -> DataFrame:
+def html_strip(documents: DataFrame) -> DataFrame:
     """HTML boilerplate removal — the first stage of a web-crawl
     curation pipeline (reference scope: the corpus-curation family;
     cf. trafilatura/jusText's extraction problem reduced to its
@@ -565,8 +573,8 @@ def html_strip(documents: DataFrame, html_col: str = "html") -> DataFrame:
 
     Scale: one codegen projection, corpus-linear, zero shuffles, zero
     Python — regexp_replace/replace are JVM built-ins, so this runs at
-    scan speed on a 100-TB crawl."""
-    s = F.regexp_replace(F.col(html_col),
+    scan speed on a 100-TB crawl. The markup is the ``html`` column."""
+    s = F.regexp_replace(F.col("html"),
                          "(?is)<script[^>]*>.*?</script>", " ")
     s = F.regexp_replace(s, "(?is)<style[^>]*>.*?</style>", " ")
     s = F.regexp_replace(s, "(?s)<!--.*?-->", " ")

@@ -549,6 +549,9 @@ def sample_token_budget(spark, sf_dir):
     return _token_budget_select(spark, d)
 
 
+#: the token budget is total_tokens DIV _BUDGET_DIV (~5%)
+_BUDGET_DIV = 20
+
 #: sub-bucket count for sample_token_budget's level-3 split: the worst
 #: case (ONE distinct score) still yields this many window partitions
 _BUDGET_BUCKETS = 1024
@@ -563,8 +566,7 @@ _BUDGET_BUCKETS = 1024
 _BUDGET_SCORE_CARDINALITY_CAP = 1_100_000
 
 
-def _token_budget_select(spark, d, budget_div: int = 20,
-                         n_buckets: int = _BUDGET_BUCKETS):
+def _token_budget_select(spark, d):
     """Three-level prefix-sum token-budget selection over ``d``
     (doc_id, quality_score, n_tokens) — see sample_token_budget.
     NULL scores (NULL-text docs) are excluded up front: they sort last
@@ -588,7 +590,7 @@ def _token_budget_select(spark, d, budget_div: int = 20,
             "the score (e.g. F.round(score, 6)) before selection.")
     levels = sorted(rows, key=lambda r: -r.quality_score)
     total = sum(r.toks for r in levels)
-    budget = total // budget_div
+    budget = total // _BUDGET_DIV
     offsets, cum = [], 0
     for r in levels:  # offset = tokens strictly above this score
         if cum > budget:
@@ -596,7 +598,7 @@ def _token_budget_select(spark, d, budget_div: int = 20,
         offsets.append((r.quality_score, cum))
         cum += r.toks
     max_id = max((r.max_id for r in levels), default=0)
-    width = max(1, max_id // n_buckets + 1)
+    width = max(1, max_id // _BUDGET_BUCKETS + 1)
     off = spark.createDataFrame(offsets, "quality_score double, off long")
     elig = (d.join(F.broadcast(off), "quality_score")
             .withColumn("bkt", F.expr(f"doc_id DIV {int(width)}L")))
@@ -679,7 +681,7 @@ _RESHARD_M = 1_000_003
 _RESHARD_SHARDS = 64
 
 
-def sample_reshard_seeded(spark, sf_dir, n_shards: int = _RESHARD_SHARDS):
+def sample_reshard_seeded(spark, sf_dir):
     """Reproducible training-order reshard — the deterministic global
     (shard, position) assignment a training run replays: shard =
     knuth(seed + doc_id) % S, within-shard order by (hash, doc_id).
@@ -689,7 +691,7 @@ def sample_reshard_seeded(spark, sf_dir, n_shards: int = _RESHARD_SHARDS):
     job, changing cluster size, or porting engines yields the SAME
     training order. Zero global sorts: positions come from per-shard
     row_number windows on the shard hash-partitioning — ONE exchange,
-    S-way parallel (plan-guarded). ``n_shards`` is fixture-sized here;
+    S-way parallel (plan-guarded). S = _RESHARD_SHARDS is fixture-sized here;
     a production reshard sets S so a shard is one task's worth, which
     is exactly how the parallelism scales to 100 TB."""
     docs = load_table(spark, sf_dir, "documents")
@@ -697,7 +699,7 @@ def sample_reshard_seeded(spark, sf_dir, n_shards: int = _RESHARD_SHARDS):
                * F.lit(2654435761), F.lit(_RESHARD_M))
     w = (W.partitionBy("shard").orderBy("h", "doc_id"))
     return (docs.select("doc_id", h.alias("h"))
-            .withColumn("shard", F.pmod(F.col("h"), F.lit(n_shards))
+            .withColumn("shard", F.pmod(F.col("h"), F.lit(_RESHARD_SHARDS))
                         .cast("int"))
             .withColumn("pos", F.row_number().over(w).cast("long"))
             .select("doc_id", "shard", "pos"))
@@ -833,7 +835,7 @@ def dedup_embedding_cosine(spark, sf_dir):
 
 
 # --- similarity ----------------------------------------------------------------
-# dim is PROBED AND VALIDATED from the data (multimodal.check_dim: one
+# dim is PROBED AND VALIDATED from the data (multimodal.check_dim_count: one
 # size-only aggregate proving the corpus is non-ragged), never
 # hardcoded, so a bad corpus fails before any vector kernel runs. It is
 # cached per fixture dir (dim is a table property; the read-only

@@ -57,18 +57,18 @@ def get_spark(app_name: str = "database_syncer_spark",
     # ONLY pyspark's own Arrow-serializer pandas-concat FutureWarning —
     # upstream pyspark/sql/pandas/serializers.py concats per-batch frames
     # and trips pandas' empty/all-NA deprecation once per batch, flooding
-    # bench/test stderr by the thousands and burying real ERROR lines
-    # (VERDICT r5 item 8). The filter is message-scoped, so our own code's
-    # FutureWarnings still surface.
+    # bench/test stderr by the thousands and burying real ERROR lines.
+    # The filter is message-scoped, so our own code's FutureWarnings
+    # still surface.
     # Only when the user hasn't set PYTHONWARNINGS themselves: appending
     # to an existing value would OVERRIDE their intent (later entries
     # take precedence — a user who escalated FutureWarning to error
     # would have it silently un-escalated in every child process). The
-    # env var is restored right after getOrCreate (r6 ADVICE): the
-    # gateway JVM snapshots its environment at launch — Python workers
-    # inherit from the JVM, not from this process — so scoping the
-    # mutation to the launch window keeps the filter out of every LATER
-    # non-Spark subprocess the host process spawns.
+    # env var is restored right after getOrCreate: the gateway JVM
+    # snapshots its environment at launch — Python workers inherit from
+    # the JVM, not from this process — so scoping the mutation to the
+    # launch window keeps the filter out of every LATER non-Spark
+    # subprocess the host process spawns.
     scrub_env_after = "PYTHONWARNINGS" not in os.environ
     if scrub_env_after:
         os.environ["PYTHONWARNINGS"] = (
@@ -101,32 +101,30 @@ def get_spark(app_name: str = "database_syncer_spark",
         # default for partitioning-compat reasons that don't apply
         # here): the iterative dedup keys persist per-round frames
         # whose plans end in shuffles, and without this every cache
-        # materializes at the raw shuffle partition count — measured
-        # r12 on the components keys: 993-1030 tasks/call -> 71-78,
-        # interleaved A/B wall -15-20% at sf0.1, and at scale it is
-        # strictly AQE's byte-sized partitioning instead of a constant
-        # (guide §2.2/§2.4). Results are partitioning-independent.
+        # materializes at the raw shuffle partition count (~1000 tasks
+        # per components call at sf0.1 instead of ~75) rather than at
+        # AQE's byte-sized partitioning (guide §2.2/§2.4). Results are
+        # partitioning-independent.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
                 "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Python UDTFs stay on the default pickle path DELIBERATELY:
-        # spark.sql.execution.pythonUDTF.arrow.enabled was A/B'd at the
-        # 200×/1 M-doc probe (r6, alternating runs, warm) and the Arrow
-        # UDTF evaluator measured ~2× SLOWER for the high-fanout
-        # statement-split UDTF (8.0-9.4 s vs 3.9-4.8 s) — per-yield
-        # Arrow conversion overhead dominates when a UDTF emits many
-        # tiny rows per input. The hygiene check in
-        # tests/test_oracle_parity.py allows BatchEvalPythonUDTF for
-        # exactly this reason while still forbidding row-at-a-time UDFs.
+        # with spark.sql.execution.pythonUDTF.arrow.enabled the
+        # high-fanout statement-split UDTF runs ~2× slower at a 1 M-doc
+        # probe (8.0-9.4 s vs 3.9-4.8 s) — per-yield Arrow conversion
+        # overhead dominates when a UDTF emits many tiny rows per
+        # input. The hygiene check in tests/test_oracle_parity.py allows
+        # BatchEvalPythonUDTF for exactly this reason while still
+        # forbidding row-at-a-time UDFs.
         .config("spark.sql.shuffle.spill.compress", "true")
         # static conf, read once per JVM: ≥7× the largest working set
         # measured above
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         # No [Stage N:===>] carriage-return bars on stderr: they bloat
-        # captured logs (the r5 bench stderr was ~1 MB of bars) and
-        # interleave with real ERROR lines, making them hard to grep.
+        # captured logs (~1 MB of bars per bench run) and interleave
+        # with real ERROR lines, making them hard to grep.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", _driver_memory())
     )

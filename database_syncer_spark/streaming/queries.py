@@ -18,14 +18,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _ltz_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
-    """Coerce the event-time column to TIMESTAMP (LTZ) for watermarking.
+def _ltz_event_time(df: DataFrame) -> DataFrame:
+    """Coerce the event-time column ``ts`` to TIMESTAMP (LTZ) for
+    watermarking.
 
     Parquet fixtures may carry TIMESTAMP_NTZ, which EventTimeWatermark
     rejects. The session timezone is pinned to UTC (session.py), so the
     cast is wall-clock-identical."""
-    if isinstance(df.schema[col].dataType, T.TimestampNTZType):
-        df = df.withColumn(col, F.col(col).cast("timestamp"))
+    if isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
@@ -86,15 +87,7 @@ def watermarked_tumbling(events: DataFrame, watermark: str = "10 minutes") -> Da
     )
 
 
-def stream_distinct(events: DataFrame, watermark: str | None = None) -> DataFrame:
-    """Stateful dedup on (user_id, event_type).
-
-    Streaming mode keeps one state entry per key; with a watermark, use
-    dropDuplicatesWithinWatermark to bound state for keys keyed by time.
-    """
-    df = events
-    if watermark is not None:
-        df = _ltz_event_time(df).withWatermark("ts", watermark)
-        return df.select("user_id", "event_type", "ts").dropDuplicatesWithinWatermark(
-            ["user_id", "event_type"]).drop("ts")
-    return df.select("user_id", "event_type").dropDuplicates()
+def stream_distinct(events: DataFrame) -> DataFrame:
+    """Stateful dedup on (user_id, event_type): streaming mode keeps one
+    state entry per key."""
+    return events.select("user_id", "event_type").dropDuplicates()

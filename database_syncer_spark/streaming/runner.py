@@ -106,12 +106,12 @@ def run_stream_to_memory(
     shape: Callable[[DataFrame], DataFrame],
     query_name: str,
     output_mode: str = "complete",
-    max_files_per_trigger: int = 1,
     shuffle_partitions: int | None = None,
     state_store_provider: str | None = ROCKSDB_PROVIDER,
 ) -> DataFrame:
     """Replay a staged parquet dir through ``shape`` as a real streaming
-    query (memory sink), synchronously to completion; return the sink.
+    query (memory sink), one staged file per micro-batch, synchronously
+    to completion; return the sink.
 
     ``shuffle_partitions``: stateful operators build one state-store
     instance PER shuffle partition PER micro-batch; replaying a tiny
@@ -123,7 +123,7 @@ def run_stream_to_memory(
     afterwards."""
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(source_path)
     )
     drain(spark,

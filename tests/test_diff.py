@@ -187,6 +187,40 @@ def test_executor_rolls_back_atomically(spark, sf_dir):
     con.close()
 
 
+def test_executor_closes_own_connection_on_failure(spark, monkeypatch):
+    """A failing statement re-raises after the rollback AND closes the
+    DuckDB connection the apply opened itself: it must not outlive the
+    call on the error path any more than on the success path."""
+    import duckdb
+    import pytest as _pytest
+
+    from database_syncer_spark.core.executor import apply_script_duckdb
+
+    opened = []
+
+    class Recording:
+        def __init__(self, con):
+            self._con, self.closed = con, False
+            opened.append(self)
+
+        def __getattr__(self, name):
+            return getattr(self._con, name)
+
+        def close(self):
+            self.closed = True
+            self._con.close()
+
+    connect = duckdb.connect
+    monkeypatch.setattr(duckdb, "connect",
+                        lambda *a, **k: Recording(connect(*a, **k)))
+    backup = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    stmts = ['DELETE FROM "t_x" WHERE "id" = 1;',
+             'INSERT INTO "t_x" VALUES (broken']
+    with _pytest.raises(duckdb.Error):
+        apply_script_duckdb(backup, "t_x", stmts)
+    assert [c.closed for c in opened] == [True]
+
+
 def test_merge_cdc_batch_idempotent_and_sequenced(spark, sf_dir):
     """The set-based incremental MERGE (core/executor.py): two
     consecutive batches land on v2 exactly, and replaying EITHER batch

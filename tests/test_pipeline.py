@@ -845,20 +845,20 @@ def test_pq_ann_recall_and_compression(spark, sf_dir):
 
 def test_dim_probed_not_hardcoded_and_ragged_fails_loudly(spark):
     """A non-64-dim corpus must WORK (dim is probed+validated from the
-    data, multimodal.check_dim), and a ragged corpus must FAIL LOUDLY at
+    data, multimodal.check_dim_count), and a ragged corpus must FAIL LOUDLY at
     plan-build time — silent NULL norms from out-of-range GetArrayItem
     were a landmine for any real corpus (ADVICE r2)."""
     import pytest as _pytest
 
-    from database_syncer_spark.pipeline.multimodal import check_dim
+    from database_syncer_spark.pipeline.multimodal import check_dim_count
     from database_syncer_spark.pipeline.similarity import brute_force_topk
 
     # dim=4 corpus: e1 is closest to q=vec 0, e3 orthogonal.
     rows = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.9, 0.1, 0.0, 0.0]),
             (2, [0.5, 0.5, 0.0, 0.0]), (3, [0.0, 0.0, 1.0, 0.0])]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    dim = check_dim(emb)
-    assert dim == 4
+    dim, n = check_dim_count(emb)
+    assert (dim, n) == (4, 4)
     top = brute_force_topk(emb, n_queries=1, k=3, dim=dim).collect()
     assert [r.neighbor_id for r in top] == [1, 2, 3]
     assert top[0].cosine > 0.99
@@ -867,7 +867,7 @@ def test_dim_probed_not_hardcoded_and_ragged_fails_loudly(spark):
         [(0, [1.0, 0.0, 0.0, 0.0]), (1, [1.0, 0.0])],
         "vec_id long, embedding array<float>")
     with pytest.raises(ValueError, match="ragged"):
-        check_dim(ragged)
+        check_dim_count(ragged)
 
 
 def test_ivfpq_composition(spark, sf_dir):

@@ -11,6 +11,12 @@ never executed, and checked against the imported package:
 - every keyword passed to such a name is in its signature;
 - every ``(module, "attr", wrapper)`` patch target that
   ``e2e_bench/workloads.py`` returns from ``traced_calls`` exists.
+
+A second guard reads every Python file of the repo the same way: each
+defaulted parameter of a ``def`` in the package's ``pipeline``,
+``streaming`` and ``queries`` directories must be set by some call, so
+an option that nothing runs with a non-default value shows up here
+instead of growing untested branches.
 """
 
 from __future__ import annotations
@@ -165,3 +171,120 @@ def test_benchmark_patch_targets_exist():
     assert len(targets) >= 10, targets  # dump_sync 5, cdc 2, curate 6
     gone = [f"{m.__name__}.{a}" for m, a in targets if not hasattr(m, a)]
     assert gone == []
+
+
+# --- every operator default is set somewhere -------------------------------
+
+_GUARDED = tuple(f"{PKG}/{d}/" for d in ("pipeline", "streaming", "queries"))
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _defaulted(fn: ast.AST) -> list[str]:
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    return ([p.arg for p in pos[len(pos) - len(a.defaults):]]
+            + [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults)
+               if d is not None])
+
+
+def _passed(call: ast.Call, fn: ast.AST) -> dict | None:
+    """{parameter: argument node} of a call to ``fn``; ``None`` when
+    ``*args`` or ``**kwargs`` may set any parameter."""
+    if (any(isinstance(a, ast.Starred) for a in call.args)
+            or any(k.arg is None for k in call.keywords)):
+        return None
+    pos = [p.arg for p in fn.args.posonlyargs + fn.args.args]
+    if pos[:1] in (["self"], ["cls"]):
+        pos = pos[1:]
+    got = dict(zip(pos, call.args))
+    got.update((k.arg, k.value) for k in call.keywords)
+    return got
+
+
+def unset_defaults(sources: dict[str, str]) -> list[str]:
+    """``path:line name(param)`` for each defaulted parameter of a
+    ``def`` under the guarded directories that no call in ``sources``
+    (``{repo-relative path: source}``) sets. Calls match defs by name.
+    An argument that only passes on an enclosing def's own default
+    (``f(k=k)``) sets the parameter only once that default is set."""
+    trees = {path: ast.parse(src, path) for path, src in sources.items()}
+    where, by_name = {}, {}
+    for path, tree in trees.items():
+        if path.startswith(_GUARDED):
+            for fn in ast.walk(tree):
+                if isinstance(fn, _DEFS) and _defaulted(fn):
+                    where[fn] = path
+                    by_name.setdefault(fn.name, []).append(fn)
+    calls = []  # (call, the defs and lambdas around it, innermost last)
+
+    def visit(node: ast.AST, scopes: list) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = getattr(f, "id", None) or getattr(f, "attr", None)
+                if name in by_name:
+                    calls.append((child, by_name[name], scopes))
+            visit(child, scopes + [child]
+                  if isinstance(child, (*_DEFS, ast.Lambda)) else scopes)
+
+    for tree in trees.values():
+        visit(tree, [])
+    done = set()
+
+    def sets(arg: ast.expr, scopes: list) -> bool:
+        if isinstance(arg, ast.Name):
+            for fn in reversed(scopes):
+                a = fn.args
+                if arg.id in [p.arg for p in (a.posonlyargs + a.args
+                                              + a.kwonlyargs)]:
+                    return (arg.id not in _defaulted(fn)
+                            or (fn, arg.id) in done)
+        return True
+
+    grew = True
+    while grew:
+        grew = False
+        for call, fns, scopes in calls:
+            for fn in fns:
+                got = _passed(call, fn)
+                for p in _defaulted(fn):
+                    if (fn, p) not in done and (
+                            got is None or p in got and sets(got[p], scopes)):
+                        done.add((fn, p))
+                        grew = True
+    return sorted(f"{where[fn]}:{fn.lineno} {fn.name}({p})"
+                  for fn in where for p in _defaulted(fn)
+                  if (fn, p) not in done)
+
+
+def test_every_operator_default_is_set_by_a_caller():
+    """A default that no caller, script, benchmark or test overrides is
+    a constant: it belongs in the module as ``_NAME``, not in the
+    signature."""
+    sources = {
+        p.relative_to(ROOT).as_posix(): p.read_text()
+        for p in ROOT.rglob("*.py")
+        if not any(part.startswith(".") or part == "spark-warehouse"
+                   for part in p.relative_to(ROOT).parts)}
+    assert any(p.startswith(_GUARDED) for p in sources)
+    assert unset_defaults(sources) == []
+
+
+def test_unset_defaults_flags_unset_and_passed_on_defaults():
+    """The setter guard is not vacuous: a default set by no call is
+    named, so is one set only by passing on another unset default, and
+    setting the outer one (or a ``**kwargs`` call) clears both."""
+    lib = (f"{PKG}/pipeline/m.py",
+           "def f(x, a=1, b=2, c=3):\n"
+           "    return x\n"
+           "\n"
+           "def g(y, b=2):\n"
+           "    return f(y, 5, b=b)\n")
+    use = ("tests/t.py", "f(0, c=1)\n")
+    got = unset_defaults(dict([lib, use]))
+    assert got == [f"{PKG}/pipeline/m.py:1 f(b)",
+                   f"{PKG}/pipeline/m.py:4 g(b)"], got
+    assert unset_defaults(dict([lib, ("tests/t.py", "f(0, c=1)\ng(0, 7)\n")])
+                          ) == []
+    assert unset_defaults(dict([lib, ("tests/t.py", "g(0, **kw)\n")])) == [
+        f"{PKG}/pipeline/m.py:1 f(c)"]
